@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .assess import PENALTIES
 from .mapping import map_db2_type
 from .model import ConversionStatus, TableDef
 
@@ -144,20 +145,22 @@ def schema_catalog_df(spark: SparkSession, tables: list[TableDef]) -> DataFrame:
 def assess_catalog(catalog: DataFrame) -> DataFrame:
     """Assessment as DataFrame aggregation — per-table readiness from the
     schema catalog, mirroring the penalty model (assessor.py:167-180, :427).
+    The weights are read from ``assess.PENALTIES`` when the plan is built.
 
     One shuffle on (table_schema, table_name); at catalog scale the keys are
     near-unique so AQE coalescing keeps this cheap. Returns one row per table:
     column counts, penalty total, readiness score and traffic-light level.
     """
     st = F.col("status")
+    pen = PENALTIES
     col_penalty = (
-        F.when(st == ConversionStatus.UNSUPPORTED.value, 25)
-        .when(st == ConversionStatus.LOSSY.value, 10)
+        F.when(st == ConversionStatus.UNSUPPORTED.value, pen["unsupported_type"])
+        .when(st == ConversionStatus.LOSSY.value, pen["lossy_conversion"])
         .when((st == ConversionStatus.COMPATIBLE.value)
-              & F.col("ewi_code").isNotNull(), 2)
+              & F.col("ewi_code").isNotNull(), pen["compatible_type"])
         .otherwise(0)
-        + F.when(F.col("fieldproc").isNotNull(), 50).otherwise(0)
-        + F.when(F.col("generated").isNotNull(), 15).otherwise(0)
+        + F.when(F.col("fieldproc").isNotNull(), pen["fieldproc"]).otherwise(0)
+        + F.when(F.col("generated").isNotNull(), pen["generated_column"]).otherwise(0)
     )
     per_table = (
         catalog
@@ -165,14 +168,15 @@ def assess_catalog(catalog: DataFrame) -> DataFrame:
         .agg(
             F.count("*").alias("n_columns"),
             F.sum(col_penalty).alias("column_penalty"),
-            F.max(F.when(F.col("table_editproc").isNotNull(), 50).otherwise(0))
-             .alias("editproc_penalty"),
-            F.max(F.when(F.col("table_validproc").isNotNull(), 40).otherwise(0))
-             .alias("validproc_penalty"),
-            F.max(F.when(F.col("partition_kind") == "HASH", 20).otherwise(0))
-             .alias("partition_penalty"),
-            (F.first("n_foreign_keys") * 5).alias("fk_penalty"),
-            (F.first("n_check_constraints") * 5).alias("check_penalty"),
+            F.max(F.when(F.col("table_editproc").isNotNull(), pen["editproc"])
+                  .otherwise(0)).alias("editproc_penalty"),
+            F.max(F.when(F.col("table_validproc").isNotNull(), pen["validproc"])
+                  .otherwise(0)).alias("validproc_penalty"),
+            F.max(F.when(F.col("partition_kind") == "HASH", pen["complex_partition"])
+                  .otherwise(0)).alias("partition_penalty"),
+            (F.first("n_foreign_keys") * pen["foreign_key"]).alias("fk_penalty"),
+            (F.first("n_check_constraints") * pen["check_constraint"])
+            .alias("check_penalty"),
             F.max((st == ConversionStatus.UNSUPPORTED.value).cast("int"))
              .alias("has_unsupported"),
             F.max(F.col("fieldproc").isNotNull().cast("int")).alias("has_fieldproc"),

@@ -20,6 +20,18 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap default: half of the host's ``MemTotal``, capped at 16g;
+    16g when ``meminfo`` cannot be read."""
+    try:
+        with open(meminfo) as fh:
+            kib = next(int(line.split()[1]) for line in fh
+                       if line.startswith("MemTotal:"))
+    except (OSError, ValueError, IndexError, StopIteration):
+        return "16g"
+    return f"{min(16 << 10, kib >> 11)}m"
+
+
 def get_spark(app_name: str = "db2ice-spark", master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine."""
@@ -56,8 +68,10 @@ def get_spark(app_name: str = "db2ice-spark", master: str | None = None,
         # Don't let tiny local files under-parallelize wide stages.
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # Single-JVM local mode: driver heap IS the executor heap; size it
-        # so 32 concurrent tasks don't trigger multi-second GC stalls.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # so 32 concurrent tasks don't trigger multi-second GC stalls, but
+        # never past half the host's memory.
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         # Keep stdout/stderr machine-readable: harness output (bench.py's
         # JSON line, the parity checker) is parsed from a captured tail,

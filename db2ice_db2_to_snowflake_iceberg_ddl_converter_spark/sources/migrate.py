@@ -13,9 +13,9 @@ TABLE, this module actually moves the rows, honoring the parsed intent:
   no Python in the row path.
 
 Scale notes: each table migration is one embarrassingly-parallel Spark job;
-a catalog of tables can be submitted concurrently from the driver (FAIR
-scheduler) since jobs share no state. JDBC sources read partitioned on a
-numeric column so a 1000-executor cluster doesn't serialize on one connection.
+``migrate_catalog`` runs the tables one after another. JDBC sources read
+partitioned on a numeric column so a 1000-executor cluster doesn't serialize
+on one connection.
 """
 
 from __future__ import annotations

@@ -73,6 +73,26 @@ def test_assess_catalog_matches_driver_scores(spark, corpus_catalog):
         assert got[key].can_auto_convert == ta.can_auto_convert, key
 
 
+def test_penalty_weights_have_one_source(spark, monkeypatch):
+    """Both scorers read ``assess.PENALTIES``: moving one weight moves both."""
+    from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark import assess
+
+    tables = DB2DdlParser().parse(
+        "CREATE TABLE S.T (A INTEGER, B CHAR(5) FIELDPROC FP);")
+
+    def scores():
+        driver = assess.Assessor().assess_table(tables[0]).readiness_score
+        catalog = assess_catalog(schema_catalog_df(spark, tables)).collect()
+        return driver, catalog[0].readiness_score
+
+    before = scores()
+    monkeypatch.setitem(assess.PENALTIES, "fieldproc",
+                        assess.PENALTIES["fieldproc"] - 20)
+    after = scores()
+    assert before[0] == before[1]
+    assert after[0] == after[1] == before[0] + 20
+
+
 def test_type_distribution(corpus_catalog):
     dist = {r.base_type: r.n for r in type_distribution(corpus_catalog).collect()}
     assert dist["INTEGER"] >= 5

@@ -144,6 +144,124 @@ def test_db2_statement_split_respects_strings():
     assert tables[0].columns[0].default == "'x;y'"
 
 
+# ---- DB2 scanner and linking contract ---------------------------------------
+
+def test_db2_terminators_inside_strings_and_parens():
+    parser = DB2DdlParser()
+    tables = parser.parse(
+        "CREATE TABLE S.T1 (A VARCHAR(10) DEFAULT 'x@y;z', B INTEGER) @\n"
+        "CREATE TABLE S.T2 (C INTEGER, CONSTRAINT CK CHECK (C IN (1;2@3)));\n"
+        "CREATE TABLE S.T3 (D DATE)")
+    assert [t.name for t in tables] == ["T1", "T2", "T3"]
+    assert [c.name for c in tables[0].columns] == ["A", "B"]
+    assert tables[0].columns[0].default == "'x@y;z'"
+    check = next(c for c in tables[1].constraints if c.kind == "CHECK")
+    assert check.check_condition == "C IN (1;2@3)"
+    assert parser.errors == [] and parser.warnings == []
+
+
+def test_db2_escaped_quote_does_not_close_string():
+    parser = DB2DdlParser()
+    tables = parser.parse(
+        "CREATE TABLE S.T (A VARCHAR(10) DEFAULT 'it\\'s;(x', B INTEGER);\n"
+        "CREATE TABLE S.U (C DATE);")
+    assert [t.name for t in tables] == ["T", "U"]
+    assert [c.name for c in tables[0].columns] == ["A", "B"]
+    assert tables[0].columns[0].default == "'it\\'s;(x'"
+
+
+def test_db2_inline_comment_inside_and_after_string():
+    parser = DB2DdlParser()
+    tables = parser.parse(
+        "CREATE TABLE S.T (\n"
+        "  A VARCHAR(10) DEFAULT '--x', -- note, with a comma\n"
+        "  B CHAR(2) DEFAULT 'y' -- trailing note\n"
+        ")")
+    cols = tables[0].columns
+    assert [c.name for c in cols] == ["A", "B"]
+    assert cols[0].default == "'--x'"
+    assert cols[1].default == "'y'"
+    assert cols[1].raw_definition == "B CHAR(2) DEFAULT 'y'"
+
+
+def test_db2_unbalanced_paren_is_an_error():
+    parser = DB2DdlParser()
+    tables = parser.parse("CREATE TABLE S.T (A INTEGER, B DECIMAL(10,2);")
+    assert tables == []
+    assert parser.errors == ["Could not find end of column definitions"]
+
+
+def test_db2_schemaless_alter_binds_first_declared():
+    parser = DB2DdlParser()
+    tables = parser.parse(
+        "CREATE TABLE B.T (X INTEGER);\n"
+        "CREATE TABLE A.T (X INTEGER);\n"
+        "ALTER TABLE t ADD CONSTRAINT PK_T PRIMARY KEY (X);\n"
+        "ALTER TABLE a.T PARTITION BY RANGE (X);\n"
+        "ALTER TABLE C.T ADD CONSTRAINT PK_C PRIMARY KEY (X);")
+    b, a = tables
+    assert [(c.kind, c.name) for c in b.constraints] == [("PRIMARY KEY", "PK_T")]
+    assert b.partition is None
+    assert a.constraints == []
+    assert a.partition.kind == "RANGE" and a.partition.columns == ["X"]
+    assert parser.warnings == ["ALTER TABLE references unknown table: C.T"]
+
+
+def test_db2_second_alter_pk_keeps_first():
+    parser = DB2DdlParser()
+    tables = parser.parse(
+        "CREATE TABLE A.B (X INTEGER NOT NULL, Y INTEGER NOT NULL);\n"
+        "ALTER TABLE A.B ADD CONSTRAINT P1 PRIMARY KEY (X);\n"
+        "ALTER TABLE A.B ADD CONSTRAINT P2 PRIMARY KEY (Y);")
+    pks = [c for c in tables[0].constraints if c.kind == "PRIMARY KEY"]
+    assert [(c.name, c.columns) for c in pks] == [("P1", ["X"])]
+
+
+def test_db2_distribute_between_alters_binds_last_table():
+    parser = DB2DdlParser()
+    t1, t2 = parser.parse(
+        "CREATE TABLE A.T1 (X INTEGER);\n"
+        "DISTRIBUTE BY HASH (X);\n"
+        "CREATE TABLE A.T2 (Y INTEGER);\n"
+        "ALTER TABLE A.T1 ADD CONSTRAINT P1 PRIMARY KEY (X);\n"
+        "DISTRIBUTE BY HASH (Y);\n"
+        "ALTER TABLE A.T2 ADD CONSTRAINT P2 PRIMARY KEY (Y);")
+    # pass 2 runs after every table exists, so each DISTRIBUTE binds to the
+    # last table of the script and the later one wins
+    assert t1.distribute_by_hash is None
+    assert t2.distribute_by_hash == "Y"
+    assert [c.name for c in t1.constraints] == ["P1"]
+    assert [c.name for c in t2.constraints] == ["P2"]
+
+
+def _db2look_export(n_tables: int) -> str:
+    creates = [f"CREATE TABLE S{i % 7}.T{i:05d} (ID INTEGER NOT NULL, "
+               f"NAME VARCHAR(20)) IN TS1;" for i in range(n_tables)]
+    alters = [f"ALTER TABLE S{i % 7}.T{i:05d} ADD CONSTRAINT PK{i} "
+              f"PRIMARY KEY (ID);" for i in range(n_tables)]
+    return "\n".join(["-- db2look export", "CONNECT TO DB;"] + creates + alters)
+
+
+def test_db2_parse_time_is_linear_in_tables():
+    """8x the tables costs about 8-10x the time; a per-ALTER table scan
+    makes it about 30x."""
+    import gc
+    import time
+
+    def best_of_3(text):
+        best = float("inf")
+        for _ in range(3):
+            gc.collect()
+            t0 = time.perf_counter()
+            tables = DB2DdlParser().parse(text)
+            best = min(best, time.perf_counter() - t0)
+        assert all(t.constraints for t in tables)
+        return best
+
+    small, large = _db2look_export(1000), _db2look_export(8000)
+    assert best_of_3(large) / best_of_3(small) < 20
+
+
 # ---- Snowflake dialect ----------------------------------------------------
 
 def parse_sf():
