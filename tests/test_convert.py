@@ -1,6 +1,9 @@
 """Converter tests: golden DDL outputs, EWI markers, routing
 (reference semantics: db2ice/converter.py, db2ice/snowflake_converter.py)."""
 
+import json
+import os
+
 from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark.convert import (
     IcebergDdlGenerator,
     SnowflakeToIcebergGenerator,
@@ -174,3 +177,33 @@ def test_sf_assessment_synthesis():
                if t.table_name == "DIM_ACCOUNT")
     assert dim.readiness_score == 85
     assert dim.readiness_level == ReadinessLevel.YELLOW
+
+
+# ---- Golden pins over the whole fixture corpora -----------------------------
+# The files under tests/golden/ hold the exact output for the DB2 and
+# Snowflake fixture corpora: temp tables, keep/skip routing, PK lines, EWI
+# markers and constraint comments. Any byte of drift fails here.
+
+GOLDEN = os.path.join(os.path.dirname(__file__), "golden")
+
+
+def _golden(name: str) -> str:
+    with open(os.path.join(GOLDEN, name), encoding="utf-8") as f:
+        return f.read()
+
+
+def test_golden_db2_corpus():
+    result = convert_ddl(DB2_CORPUS)
+    assert result.iceberg_ddl == _golden("db2_corpus.iceberg.sql")
+    assert result.ewi_count == 11
+    assert result.assessment.to_json() == _golden("db2_corpus.assessment.json")
+
+
+def test_golden_snowflake_corpus():
+    result = SnowflakeToIcebergGenerator().convert(SNOWFLAKE_CORPUS)
+    assert result.iceberg_ddl == _golden("snowflake_corpus.iceberg.sql")
+    assert result.ewi_count == 15
+    issues = json.dumps([i.to_dict() for i in result.issues], indent=2)
+    assert issues == _golden("snowflake_corpus.issues.json")
+    report = snowflake_assessment_report(result, SNOWFLAKE_CORPUS)
+    assert report.to_json() == _golden("snowflake_corpus.report.json")
