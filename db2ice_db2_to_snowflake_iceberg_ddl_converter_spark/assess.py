@@ -7,9 +7,10 @@ weighted overall score (0.40/0.20/0.15/0.25), and GREEN≥80 / YELLOW≥50 / RED
 traffic-light bucketing.
 
 Two deliberate engineering differences from the reference:
-- type mappings are computed once per column and shared with the converter and
-  the Spark migration planner (the reference re-maps every column per phase,
-  assessor.py:295-302 vs converter.py:260-267);
+- each column's type mapping is read from ``ColumnDef.mapping``, resolved once
+  and shared with the converter and the Spark catalog and migration planner
+  (the reference re-maps every column per phase, assessor.py:295-302 vs
+  converter.py:260-267);
 - the same assessment is also available as DataFrame aggregations over the
   schema-catalog/issues DataFrames (see catalog.py) for catalog-scale inputs.
 """
@@ -17,7 +18,7 @@ Two deliberate engineering differences from the reference:
 from __future__ import annotations
 
 from .ddl.db2_parser import DB2DdlParser
-from .mapping import EWI, map_db2_type
+from .mapping import EWI
 from .model import (
     AssessmentReport,
     ConversionStatus,
@@ -143,9 +144,7 @@ class Assessor:
             base_type = col.data_type.split("(")[0].strip()
             ta.type_distribution[base_type] = ta.type_distribution.get(base_type, 0) + 1
 
-            mapping = map_db2_type(col.data_type, col.length, col.precision,
-                                   col.scale, col.for_bit_data, col.ccsid)
-
+            mapping = col.mapping
             if mapping.status == ConversionStatus.UNSUPPORTED:
                 penalties += PENALTIES["unsupported_type"]
                 ta.can_auto_convert = False

@@ -8,6 +8,7 @@ parameters (SURVEY.md §1.4): a parsed ``TableDef`` turns into
 - rows of a ``schema_catalog`` DataFrame (one row per column) so that the
   reference's assessment aggregations (assessor.py:186-274) can also run as
   ordinary ``groupBy().agg()`` over a catalog of millions of columns.
+All three read each column's one ``ColumnDef.mapping``.
 
 Iceberg target-type strings (mapper.py:43-52) map to Spark types as follows;
 TIME(6) has no Spark type, so it becomes microseconds-since-midnight LongType
@@ -23,7 +24,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .assess import PENALTIES
-from .mapping import map_db2_type
 from .model import ConversionStatus, TableDef
 
 _NUMBER_RE = re.compile(r"NUMBER\((\d+),(\d+)\)")
@@ -64,8 +64,7 @@ def struct_type_for(table: TableDef) -> T.StructType:
     """TableDef → StructType with provenance metadata per field."""
     fields = []
     for col in table.columns:
-        mapping = map_db2_type(col.data_type, col.length, col.precision,
-                               col.scale, col.for_bit_data, col.ccsid)
+        mapping = col.mapping
         meta = {"source_type": mapping.source_type,
                 "conversion_status": mapping.status.value}
         if mapping.ewi_code:
@@ -84,19 +83,15 @@ def struct_type_for(table: TableDef) -> T.StructType:
 
 
 def cast_plan(table: TableDef) -> list:
-    """Per-column Catalyst cast expressions for the migration job.
+    """Per-column Catalyst cast expressions for the migration job, one per
+    field of :func:`struct_type_for`, so the casts and the schema agree.
 
     All native ``cast`` calls — no Python UDFs — so whole-stage codegen stays
     intact on the 100 TB path. Column resolution is case-insensitive (DB2
     identifiers are upper-cased; source files are often lower-cased).
     """
-    exprs = []
-    for col in table.columns:
-        mapping = map_db2_type(col.data_type, col.length, col.precision,
-                               col.scale, col.for_bit_data, col.ccsid)
-        exprs.append(F.col(col.name).cast(spark_type_for(mapping.target_type))
-                     .alias(col.name))
-    return exprs
+    return [F.col(f.name).cast(f.dataType).alias(f.name)
+            for f in struct_type_for(table).fields]
 
 
 _CATALOG_SCHEMA = T.StructType([
@@ -132,8 +127,7 @@ def schema_catalog_df(spark: SparkSession, tables: list[TableDef]) -> DataFrame:
         n_ck = sum(1 for c in t.constraints if c.kind == "CHECK")
         pkind = t.partition.kind if t.partition else None
         for i, col in enumerate(t.columns):
-            m = map_db2_type(col.data_type, col.length, col.precision,
-                             col.scale, col.for_bit_data, col.ccsid)
+            m = col.mapping
             rows.append((t.schema, t.name, col.name, i, m.source_type,
                          col.data_type.split("(")[0].strip(), m.target_type,
                          m.status.value, m.ewi_code, col.nullable,

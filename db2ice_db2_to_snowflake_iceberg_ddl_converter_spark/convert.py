@@ -11,6 +11,13 @@ db2ice/converter.py:25-408 and db2ice/snowflake_converter.py:340-776):
   snowflake_converter.py:547-613); DYNAMIC/EXTERNAL/HYBRID → skipped with a
   critical issue counting as 1 EWI (snowflake_converter.py:615-649).
 
+DB2 column types are read from each column's ``ColumnDef.mapping``, the same
+object the assessment and the Spark catalog read. Both generators build the
+comma-joined column list with its trailing PRIMARY KEY line, and the
+CATALOG/EXTERNAL_VOLUME/BASE_LOCATION clauses, through one helper each. Comment
+lines and EWI markers are always emitted; the only settings are the deployment
+ones, ``external_volume`` and ``base_location_pattern``.
+
 The matching *data-plane* writer (read source → cast per mapping → write
 Parquet/Iceberg, honoring partition/cluster intent) lives in sources/migrate.py.
 """
@@ -28,7 +35,6 @@ from .mapping import (
     SF_TEMPORAL_TYPES,
     SF_UNSUPPORTED_FEATURES,
     SF_UNSUPPORTED_TYPES,
-    map_db2_type,
 )
 from .model import (
     AssessmentReport,
@@ -75,16 +81,38 @@ def _ewi(code: str, message: str) -> str:
     return EWI_MARKER.format(code=code, message=message)
 
 
+def _column_line(parts: list[str], markers: list[str]) -> str:
+    """Space-joined column definition, then one indented line per marker."""
+    return "\n".join([" ".join(parts)] + [f"        {m}" for m in markers])
+
+
+def _column_list(lines: list[str], pk: Optional[list]) -> list[str]:
+    """Column lines plus a trailing PRIMARY KEY line, comma-joined."""
+    if pk is not None:
+        lines = lines + [
+            f"    PRIMARY KEY ({', '.join(format_identifier(c) for c in pk)})"]
+    return [line + "," for line in lines[:-1]] + lines[-1:]
+
+
+def _iceberg_clauses(table, external_volume: str,
+                     base_location_pattern: str) -> list[str]:
+    """CATALOG / EXTERNAL_VOLUME / BASE_LOCATION; the location is the pattern
+    with {schema} and {table} substituted, lowercased (converter.py:345-353)."""
+    location = (base_location_pattern
+                .replace("{schema}", (table.schema or "default").lower())
+                .replace("{table}", table.name.lower()))
+    return ["CATALOG = 'SNOWFLAKE'",
+            f"EXTERNAL_VOLUME = '{external_volume}'",
+            f"BASE_LOCATION = '{location}'"]
+
+
 class IcebergDdlGenerator:
     """DB2 model → Snowflake-managed Iceberg DDL text (converter.py:25-394)."""
 
     def __init__(self, external_volume: str = "<EXTERNAL_VOLUME>",
-                 base_location_pattern: str = "{schema}/{table}",
-                 include_comments: bool = True, include_ewi: bool = True) -> None:
+                 base_location_pattern: str = "{schema}/{table}") -> None:
         self.external_volume = external_volume
         self.base_location_pattern = base_location_pattern
-        self.include_comments = include_comments
-        self.include_ewi = include_ewi
         self.parser = DB2DdlParser()
         self.assessor = Assessor()
 
@@ -118,37 +146,26 @@ class IcebergDdlGenerator:
         if table.volatile or table.global_temporary:
             return self._temp_table_ddl(table)
 
-        lines: list[str] = []
-        ewi_count = 0
-        if self.include_comments:
-            lines.append(f"-- Converted from DB2: {table.full_name}")
-            if table.editproc:
-                lines.append(f"-- WARNING: Original table had EDITPROC: {table.editproc}")
-            if table.validproc:
-                lines.append(f"-- WARNING: Original table had VALIDPROC: {table.validproc}")
-
-        lines.append(f"CREATE OR REPLACE ICEBERG TABLE "
-                     f"{format_identifier(table.full_name)} (")
-        body, n = self._column_block(table)
-        ewi_count += n
-        lines.extend(body)
-        lines.append(")")
+        body, ewi_count = self._column_block(table)
+        lines = [f"-- Converted from DB2: {table.full_name}"]
+        if table.editproc:
+            lines.append(f"-- WARNING: Original table had EDITPROC: {table.editproc}")
+        if table.validproc:
+            lines.append(f"-- WARNING: Original table had VALIDPROC: {table.validproc}")
+        lines += [f"CREATE OR REPLACE ICEBERG TABLE "
+                  f"{format_identifier(table.full_name)} (", *body, ")"]
 
         if table.partition and table.partition.columns:
             cols = ", ".join(format_identifier(c) for c in table.partition.columns)
             lines.append(f"PARTITION BY ({cols})")
         if table.distribute_by_hash:
             lines.append(f"CLUSTER BY ({format_identifier(table.distribute_by_hash)})")
+        lines += _iceberg_clauses(table, self.external_volume,
+                                  self.base_location_pattern)
 
-        lines.append("CATALOG = 'SNOWFLAKE'")
-        lines.append(f"EXTERNAL_VOLUME = '{self.external_volume}'")
-        lines.append(f"BASE_LOCATION = '{self._base_location(table)}'")
-
-        if self.include_comments:
-            comments = self._constraint_comments(table.constraints)
-            if comments:
-                lines.append("")
-                lines.extend(comments)
+        comments = self._constraint_comments(table.constraints)
+        if comments:
+            lines += ["", *comments]
         lines.append(";")
         return "\n".join(lines), ewi_count
 
@@ -156,43 +173,30 @@ class IcebergDdlGenerator:
         """VOLATILE / GTT → Snowflake TEMPORARY, non-Iceberg
         (converter.py:185-242)."""
         origin = "VOLATILE" if table.volatile else "GLOBAL TEMPORARY"
-        lines: list[str] = []
-        ewi_count = 0
-        if self.include_comments:
-            lines.append(f"-- Converted from DB2 {origin} table: {table.full_name}")
-            lines.append("-- Kept as Snowflake TEMPORARY (Iceberg doesn't support "
-                         "temporary tables)")
-            lines.append("-- Table will remain session-scoped as originally intended")
-        lines.append(f"CREATE OR REPLACE TEMPORARY TABLE "
-                     f"{format_identifier(table.full_name)} (")
-        body, n = self._column_block(table)
-        ewi_count += n
-        lines.extend(body)
-        lines.append(");")
-        if self.include_ewi:
-            lines.append("")
-            lines.append("-- " + _ewi(
-                "SSC-EWI-DB2ICE-0030",
-                f"{origin} table kept as Snowflake TEMPORARY - Iceberg doesn't "
-                "support temporary tables"))
-            ewi_count += 1
-        return "\n".join(lines), ewi_count
+        body, ewi_count = self._column_block(table)
+        lines = [
+            f"-- Converted from DB2 {origin} table: {table.full_name}",
+            "-- Kept as Snowflake TEMPORARY (Iceberg doesn't support "
+            "temporary tables)",
+            "-- Table will remain session-scoped as originally intended",
+            f"CREATE OR REPLACE TEMPORARY TABLE "
+            f"{format_identifier(table.full_name)} (",
+            *body,
+            ");",
+            "",
+            "-- " + _ewi("SSC-EWI-DB2ICE-0030",
+                         f"{origin} table kept as Snowflake TEMPORARY - Iceberg "
+                         "doesn't support temporary tables"),
+        ]
+        return "\n".join(lines), ewi_count + 1
 
     def _column_block(self, table: TableDef) -> tuple[list[str], int]:
-        """Column lines + trailing PK line, comma-joined."""
-        out: list[str] = []
-        ewi_count = 0
-        pk = next((c for c in table.constraints if c.kind == "PRIMARY KEY"), None)
-        for i, col in enumerate(table.columns):
-            line, n = self.column_ddl(col)
-            ewi_count += n
-            if i < len(table.columns) - 1 or pk is not None:
-                line += ","
-            out.append(line)
-        if pk is not None:
-            cols = ", ".join(format_identifier(c) for c in pk.columns)
-            out.append(f"    PRIMARY KEY ({cols})")
-        return out, ewi_count
+        """Column lines + trailing PK line, and their EWI marker count."""
+        cols = [self.column_ddl(col) for col in table.columns]
+        pk = next((c.columns for c in table.constraints
+                   if c.kind == "PRIMARY KEY"), None)
+        return (_column_list([line for line, _ in cols], pk),
+                sum(n for _, n in cols))
 
     def column_ddl(self, col: ColumnDef) -> tuple[str, int]:
         """One column line with EWI markers (converter.py:244-307).
@@ -201,33 +205,22 @@ class IcebergDdlGenerator:
         GENERATED; COMPATIBLE-with-EWI issues surface in the assessment but not
         inline — a reference quirk preserved (converter.py:272-278).
         """
-        mapping = map_db2_type(col.data_type, col.length, col.precision,
-                               col.scale, col.for_bit_data, col.ccsid)
+        mapping = col.mapping
         parts = [f"    {format_identifier(col.name)}", mapping.target_type]
         markers: list[str] = []
-        if self.include_ewi and mapping.ewi_code and mapping.status in (
+        if mapping.ewi_code and mapping.status in (
                 ConversionStatus.UNSUPPORTED, ConversionStatus.LOSSY):
             markers.append(_ewi(mapping.ewi_code, mapping.ewi_message))
         if not col.nullable:
             parts.append("NOT NULL")
-        if col.fieldproc and self.include_ewi:
+        if col.fieldproc:
             markers.append(_ewi(EWI["FIELDPROC"],
                                 f"FIELDPROC {col.fieldproc} - data may be "
                                 "encrypted/transformed"))
-        if col.generated and self.include_ewi:
+        if col.generated:
             markers.append(_ewi(EWI["GENERATED_COL"],
                                 f"GENERATED {col.generated} not supported in Iceberg"))
-        line = " ".join(parts)
-        if markers:
-            line += "\n" + "\n".join(f"        {m}" for m in markers)
-        return line, len(markers)
-
-    def _base_location(self, table: TableDef) -> str:
-        """{schema}/{table} substitution, lowercased (converter.py:345-353)."""
-        loc = self.base_location_pattern
-        loc = loc.replace("{schema}", (table.schema or "default").lower())
-        loc = loc.replace("{table}", table.name.lower())
-        return loc
+        return _column_line(parts, markers), len(markers)
 
     @staticmethod
     def _constraint_comments(constraints: list[ConstraintDef]) -> list[str]:
@@ -258,12 +251,9 @@ class SnowflakeToIcebergGenerator:
     (snowflake_converter.py:340-649)."""
 
     def __init__(self, external_volume: str = "<EXTERNAL_VOLUME>",
-                 base_location_pattern: str = "{schema}/{table}",
-                 include_comments: bool = True, include_ewi: bool = True) -> None:
+                 base_location_pattern: str = "{schema}/{table}") -> None:
         self.external_volume = external_volume
         self.base_location_pattern = base_location_pattern
-        self.include_comments = include_comments
-        self.include_ewi = include_ewi
         self.parser = SnowflakeDdlParser()
 
     def convert(self, ddl: str) -> SnowflakeConversionResult:
@@ -305,63 +295,46 @@ class SnowflakeToIcebergGenerator:
                               "Iceberg tables have different performance "
                               "characteristics for mixed workloads.")
 
-        lines: list[str] = []
-        issues: list[Issue] = []
-        ewi_count = 0
-        if self.include_comments:
-            lines.append(f"-- Converted from Snowflake Standard: {table.full_name}")
-        lines.append(f"CREATE OR REPLACE ICEBERG TABLE {table.full_name.upper()} (")
+        cols = [self.column_ddl(col, table.full_name) for col in table.columns]
+        issues = [issue for _, _, col_issues in cols for issue in col_issues]
+        lines = [f"-- Converted from Snowflake Standard: {table.full_name}",
+                 f"CREATE OR REPLACE ICEBERG TABLE {table.full_name.upper()} (",
+                 *_column_list([line for line, _, _ in cols],
+                               table.primary_key or None),
+                 ")",
+                 *_iceberg_clauses(table, self.external_volume,
+                                   self.base_location_pattern)]
 
-        column_lines = []
-        for i, col in enumerate(table.columns):
-            line, n, col_issues = self.column_ddl(col, table.full_name)
-            ewi_count += n
-            issues.extend(col_issues)
-            if i < len(table.columns) - 1 or table.primary_key:
-                line += ","
-            column_lines.append(line)
-        if table.primary_key:
-            pk = ", ".join(format_identifier(c) for c in table.primary_key)
-            column_lines.append(f"    PRIMARY KEY ({pk})")
-        lines.extend(column_lines)
-        lines.append(")")
-        lines.append("CATALOG = 'SNOWFLAKE'")
-        lines.append(f"EXTERNAL_VOLUME = '{self.external_volume}'")
-        lines.append(f"BASE_LOCATION = '{self._base_location(table)}'")
-
-        if self.include_comments:
-            notes: list[str] = []
-            if table.cluster_by:
-                notes.append(f"-- Original CLUSTER BY: ({', '.join(table.cluster_by)})")
-                notes.append("-- NOTE: Iceberg uses automatic optimization instead "
-                             "of explicit clustering")
-                if self.include_ewi:
-                    code, msg = SF_UNSUPPORTED_FEATURES["cluster_by"]
-                    issues.append(Issue(
-                        code=code, severity=Severity.INFO, message=msg,
-                        suggestion="Consider Iceberg table optimization strategies",
-                        table_name=table.full_name))
-            if table.data_retention_days:
-                notes.append(f"-- Original DATA_RETENTION_TIME_IN_DAYS: "
-                             f"{table.data_retention_days}")
-            if table.change_tracking:
-                notes.append("-- Original CHANGE_TRACKING: TRUE")
-            for fk in table.foreign_keys:
-                notes.append(f"-- FOREIGN KEY ({', '.join(fk['columns'])}) "
-                             f"REFERENCES {fk['ref_table']}"
-                             f"({', '.join(fk['ref_columns'])})")
-                notes.append("-- NOTE: Foreign keys are not enforced in Iceberg tables")
-            for uk in table.unique_keys:
-                notes.append(f"-- UNIQUE ({', '.join(uk)})")
-                notes.append("-- NOTE: UNIQUE constraints are not enforced in "
-                             "Iceberg tables")
-            if table.comment:
-                notes.append(f"-- Table comment: {table.comment}")
-            if notes:
-                lines.append("")
-                lines.extend(notes)
+        notes: list[str] = []
+        if table.cluster_by:
+            notes.append(f"-- Original CLUSTER BY: ({', '.join(table.cluster_by)})")
+            notes.append("-- NOTE: Iceberg uses automatic optimization instead "
+                         "of explicit clustering")
+            code, msg = SF_UNSUPPORTED_FEATURES["cluster_by"]
+            issues.append(Issue(
+                code=code, severity=Severity.INFO, message=msg,
+                suggestion="Consider Iceberg table optimization strategies",
+                table_name=table.full_name))
+        if table.data_retention_days:
+            notes.append(f"-- Original DATA_RETENTION_TIME_IN_DAYS: "
+                         f"{table.data_retention_days}")
+        if table.change_tracking:
+            notes.append("-- Original CHANGE_TRACKING: TRUE")
+        for fk in table.foreign_keys:
+            notes.append(f"-- FOREIGN KEY ({', '.join(fk['columns'])}) "
+                         f"REFERENCES {fk['ref_table']}"
+                         f"({', '.join(fk['ref_columns'])})")
+            notes.append("-- NOTE: Foreign keys are not enforced in Iceberg tables")
+        for uk in table.unique_keys:
+            notes.append(f"-- UNIQUE ({', '.join(uk)})")
+            notes.append("-- NOTE: UNIQUE constraints are not enforced in "
+                         "Iceberg tables")
+        if table.comment:
+            notes.append(f"-- Table comment: {table.comment}")
+        if notes:
+            lines += ["", *notes]
         lines.append(";")
-        return "\n".join(lines), ewi_count, issues
+        return "\n".join(lines), sum(n for _, n, _ in cols), issues
 
     def _keep_standard(self, table: SnowflakeTableDef,
                        kind: str) -> tuple[str, int, list[Issue]]:
@@ -381,25 +354,15 @@ class SnowflakeToIcebergGenerator:
                 "Table will remain transient (no Fail-safe). Consider if transient "
                 "behavior is needed or if Iceberg durability is acceptable."),
         }
-        why, detail, code, suggestion = reasons.get(kind, reasons["TEMPORARY"])
-        lines: list[str] = []
-        if self.include_comments:
-            lines.append(f"-- {kind} table kept as Snowflake Standard "
-                         "(not converted to Iceberg)")
-            lines.append(f"-- Reason: {why}")
-            lines.append(f"-- {detail}")
-        lines.append(f"CREATE OR REPLACE {kind} TABLE {table.full_name.upper()} (")
-        column_lines = []
-        for i, col in enumerate(table.columns):
-            line = self._standard_column(col)
-            if i < len(table.columns) - 1 or table.primary_key:
-                line += ","
-            column_lines.append(line)
-        if table.primary_key:
-            pk = ", ".join(format_identifier(c) for c in table.primary_key)
-            column_lines.append(f"    PRIMARY KEY ({pk})")
-        lines.extend(column_lines)
-        lines.append(");")
+        why, detail, code, suggestion = reasons[kind]
+        lines = [f"-- {kind} table kept as Snowflake Standard "
+                 "(not converted to Iceberg)",
+                 f"-- Reason: {why}",
+                 f"-- {detail}",
+                 f"CREATE OR REPLACE {kind} TABLE {table.full_name.upper()} (",
+                 *_column_list([self._standard_column(c) for c in table.columns],
+                               table.primary_key or None),
+                 ");"]
         issue = Issue(code=code, severity=Severity.INFO,
                       message=f"{kind} table kept as Snowflake Standard - {why}",
                       suggestion=suggestion, table_name=table.full_name)
@@ -412,14 +375,11 @@ class SnowflakeToIcebergGenerator:
         codes = {"DYNAMIC": "SSC-EWI-SF2ICE-0022",
                  "EXTERNAL": "SSC-EWI-SF2ICE-0023",
                  "HYBRID": "SSC-EWI-SF2ICE-0024"}
-        lines: list[str] = []
-        if self.include_comments:
-            lines.append(f"-- !!!! {kind} TABLE SKIPPED - Cannot convert to "
-                         "Iceberg !!!!")
-            lines.append(f"-- Table: {table.full_name}")
-            lines.append(f"-- Reason: {reason}")
-            lines.append("-- Action required: Review and handle this table manually")
-        issue = Issue(code=codes.get(kind, "SSC-EWI-SF2ICE-0025"),
+        lines = [f"-- !!!! {kind} TABLE SKIPPED - Cannot convert to Iceberg !!!!",
+                 f"-- Table: {table.full_name}",
+                 f"-- Reason: {reason}",
+                 "-- Action required: Review and handle this table manually"]
+        issue = Issue(code=codes[kind],
                       severity=Severity.CRITICAL,
                       message=f"{kind} table cannot be converted to Iceberg: "
                               f"{table.full_name}",
@@ -442,7 +402,6 @@ class SnowflakeToIcebergGenerator:
         """One SF column → Iceberg line (snowflake_converter.py:667-748)."""
         issues: list[Issue] = []
         markers: list[str] = []
-        ewi_count = 0
         parts = [f"    {format_identifier(col.name)}"]
 
         data_type = col.data_type
@@ -451,22 +410,19 @@ class SnowflakeToIcebergGenerator:
 
         if base in SF_UNSUPPORTED_TYPES:
             data_type, code, msg = SF_UNSUPPORTED_TYPES[base]
-            if self.include_ewi:
-                markers.append(_ewi(code, msg))
-                issues.append(Issue(code=code, severity=Severity.CRITICAL,
-                                    message=msg, table_name=table_name,
-                                    column_name=col.name))
-                ewi_count += 1
+            markers.append(_ewi(code, msg))
+            issues.append(Issue(code=code, severity=Severity.CRITICAL,
+                                message=msg, table_name=table_name,
+                                column_name=col.name))
         elif base in SF_TEMPORAL_TYPES:
             pm = re.search(r"\((\d+)\)", data_type)
             current = int(pm.group(1)) if pm else None
             data_type, code, msg = SF_TEMPORAL_TYPES[base]
-            if current is not None and current != 6 and self.include_ewi:
+            if current is not None and current != 6:
                 markers.append(_ewi(code, msg))
                 issues.append(Issue(code=code, severity=Severity.INFO,
                                     message=msg, table_name=table_name,
                                     column_name=col.name))
-                ewi_count += 1
 
         parts.append(data_type)
         if not col.nullable:
@@ -478,25 +434,15 @@ class SnowflakeToIcebergGenerator:
                 (col.masking_policy, "masking_policy", Severity.WARNING,
                  f"Re-apply masking policy {col.masking_policy} after conversion"),
                 (col.collate, "collate", Severity.INFO, None)):
-            if flag and self.include_ewi:
+            if flag:
                 code, msg = SF_UNSUPPORTED_FEATURES[feature]
                 marker_msg = msg if feature == "identity" else f"{msg}: {flag}"
                 markers.append(_ewi(code, marker_msg))
                 issues.append(Issue(code=code, severity=sev, message=msg,
                                     suggestion=suggestion, table_name=table_name,
                                     column_name=col.name))
-                ewi_count += 1
 
-        line = " ".join(parts)
-        if markers:
-            line += "\n" + "\n".join(f"        {m}" for m in markers)
-        return line, ewi_count, issues
-
-    def _base_location(self, table: SnowflakeTableDef) -> str:
-        loc = self.base_location_pattern
-        loc = loc.replace("{schema}", (table.schema or "default").lower())
-        loc = loc.replace("{table}", table.name.lower())
-        return loc
+        return _column_line(parts, markers), len(markers), issues
 
 
 def snowflake_assessment_report(result: SnowflakeConversionResult,

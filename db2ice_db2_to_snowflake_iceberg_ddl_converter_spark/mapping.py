@@ -1,23 +1,48 @@
 """Type-mapping rules: DB2 → Iceberg/Spark and Snowflake → Iceberg/Spark.
 
 Semantics are bit-for-bit faithful to the reference's rule set
-(reference: db2ice/mapper.py:43-449 for DB2, db2ice/snowflake_converter.py:357-388
+(reference: db2ice/mapper.py:10-26 for ``ConversionStatus`` and
+``TypeMapping``, db2ice/mapper.py:43-449 for DB2, db2ice/snowflake_converter.py:357-388
 for Snowflake), including its documented quirks (SURVEY.md §4): SMALLINT widens
 to INTEGER, CHAR/VARCHAR emit bare STRING, DECIMAL defaults to (5,0), TIME
 defaults precision 0 while TIMESTAMP defaults 6, FLOAT(p>24) → DOUBLE.
 
 Design differs from the reference on purpose: instead of one method per type,
-the rules live in a dispatch table of small pure functions, so the same table
-drives (a) DDL text generation, (b) StructType construction, and (c) the
-per-column ``cast`` expressions of the Spark migration job — computed once,
-reused everywhere (the reference re-runs its mapper per column per phase).
+the rules live in a dispatch table of small pure functions. Each parsed column
+is mapped once, through ``ColumnDef.mapping`` (model.py), and that one
+``TypeMapping`` drives (a) the readiness assessment, (b) DDL text generation,
+(c) StructType construction and (d) the per-column ``cast`` expressions of the
+Spark migration job (the reference re-runs its mapper per column per phase).
+This module imports nothing from the package, so ``model.py`` can import it.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+from enum import Enum
 from typing import Callable, Optional
 
-from .model import ConversionStatus, TypeMapping
+
+class ConversionStatus(Enum):
+    """How faithful a source→Iceberg type mapping is (mapper.py:10-15)."""
+
+    DIRECT = "direct"
+    COMPATIBLE = "compatible"
+    LOSSY = "lossy"
+    UNSUPPORTED = "unsupported"
+
+
+@dataclass(frozen=True)
+class TypeMapping:
+    """Outcome of mapping one source column type (mapper.py:18-26)."""
+
+    source_type: str
+    target_type: str
+    status: ConversionStatus
+    ewi_code: Optional[str] = None
+    ewi_message: Optional[str] = None
+    notes: Optional[str] = None
+
 
 # --- EWI catalog (mapper.py:55-76) -----------------------------------------
 
@@ -264,12 +289,11 @@ _RULES: dict[str, Callable] = {
 
 def map_db2_type(db2_type: str, length: Optional[int] = None,
                  precision: Optional[int] = None, scale: Optional[int] = None,
-                 for_bit_data: bool = False,
-                 ccsid: Optional[str] = None) -> TypeMapping:
+                 for_bit_data: bool = False) -> TypeMapping:
     """Map one DB2 column type to its Iceberg target (mapper.py:87-185).
 
-    Pure function — same inputs always give the same TypeMapping, so callers
-    may cache the result and reuse it across assess/convert/migrate phases.
+    Pure function. Parsed columns reach it through ``ColumnDef.mapping``,
+    which calls it once per column and keeps the result.
     """
     t = db2_type.upper().strip()
 

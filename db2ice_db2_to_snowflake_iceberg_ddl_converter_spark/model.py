@@ -2,26 +2,22 @@
 
 This is the Spark-native re-expression of the reference's dataclass model
 (reference: db2ice/parser.py:57-117, db2ice/snowflake_converter.py:19-84,
-db2ice/mapper.py:10-26, db2ice/assessor.py:29-149). These objects live on
-the driver (they are KB-scale schema artifacts); the data plane consumes
-them as StructTypes / cast plans / DataFrame rows (see catalog.py).
+db2ice/assessor.py:29-149). These objects live on the driver (they are
+KB-scale schema artifacts); the data plane consumes them as StructTypes /
+cast plans / DataFrame rows (see catalog.py). ``ConversionStatus`` and
+``TypeMapping`` are defined next to the rules in mapping.py and re-exported
+here.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 from enum import Enum
+from functools import cached_property
 from typing import Optional
 import json
 
-
-class ConversionStatus(Enum):
-    """How faithful a source→Iceberg type mapping is (mapper.py:10-15)."""
-
-    DIRECT = "direct"
-    COMPATIBLE = "compatible"
-    LOSSY = "lossy"
-    UNSUPPORTED = "unsupported"
+from .mapping import ConversionStatus, TypeMapping, map_db2_type
 
 
 class ReadinessLevel(Enum):
@@ -41,18 +37,6 @@ class Severity(Enum):
 
 
 @dataclass
-class TypeMapping:
-    """Outcome of mapping one source column type (mapper.py:18-26)."""
-
-    source_type: str
-    target_type: str
-    status: ConversionStatus
-    ewi_code: Optional[str] = None
-    ewi_message: Optional[str] = None
-    notes: Optional[str] = None
-
-
-@dataclass
 class ColumnDef:
     """One parsed DB2 column (parser.py:57-72)."""
 
@@ -68,6 +52,15 @@ class ColumnDef:
     for_bit_data: bool = False
     fieldproc: Optional[str] = None
     raw_definition: str = ""
+
+    @cached_property
+    def mapping(self) -> TypeMapping:
+        """This column's Iceberg mapping, resolved on first use and shared by
+        the assessment, the DDL text, the StructType and the cast plan.
+        It is not recomputed, so the type fields must be final before the
+        first read (the parser sets them all before it returns)."""
+        return map_db2_type(self.data_type, self.length, self.precision,
+                            self.scale, self.for_bit_data)
 
 
 @dataclass

@@ -592,7 +592,7 @@ def migrate_type_fit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL(5,2) column holding 9999.99 migrates into an overflow, and
     a VARCHAR(12) holding 18-char keys breaks the downstream contract
     even though Iceberg STRING physically accepts it. One parsed DDL
-    (``ddl/db2_parser.py``) drives ``mapping.map_db2_type`` and this
+    (``ddl/db2_parser.py``) drives ``ColumnDef.mapping`` and this
     audit, so the schema plane and the data plane read the same truth.
     The fixture DDL declares deliberately tight capacities: C_NAME
     VARCHAR(12) and C_ACCTBAL DECIMAL(5,2) really overflow, the rest
@@ -606,7 +606,6 @@ def migrate_type_fit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts exact; observed_max is a MAX of per-row doubles (order-free).
     """
     from ..assess import Assessor
-    from ..mapping import map_db2_type
 
     table = next(t for t in Assessor().parser.parse(_AUDIT_DDL)
                  if t.name == "CUSTOMER")
@@ -617,9 +616,7 @@ def migrate_type_fit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         src = lower.get(col.name.lower())
         if src is None:
             continue
-        mapped = map_db2_type(col.data_type, length=col.length,
-                              precision=col.precision, scale=col.scale)
-        tgt = mapped.target_type
+        tgt = col.mapping.target_type
         c = F.col(src)
         if tgt in ("INTEGER", "BIGINT"):
             cap = 2147483647 if tgt == "INTEGER" else (2**63 - 1)

@@ -12,6 +12,10 @@ from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark.catalog import (
     struct_type_for,
     type_distribution,
 )
+from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark.convert import (
+    IcebergDdlGenerator,
+    format_identifier,
+)
 from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark.ddl import DB2DdlParser
 from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark.sources.migrate import (
     migrate_table,
@@ -93,6 +97,41 @@ def test_penalty_weights_have_one_source(spark, monkeypatch):
     assert after[0] == after[1] == before[0] + 20
 
 
+def test_each_column_is_mapped_once(spark, monkeypatch):
+    """Assessment, DDL text, StructType, cast plan and schema catalog all
+    read ``ColumnDef.mapping``: one ``map_db2_type`` call per parsed column."""
+    import sys
+
+    from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark import mapping
+    from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark.assess import Assessor
+
+    real = mapping.map_db2_type
+    calls = []
+
+    def counted(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    # count through every package module that holds the function by name,
+    # so a consumer importing it directly is counted too
+    for mod in list(sys.modules.values()):
+        if (getattr(mod, "__name__", "").startswith(mapping.__package__)
+                and getattr(mod, "map_db2_type", None) is real):
+            monkeypatch.setattr(mod, "map_db2_type", counted)
+
+    tables = DB2DdlParser().parse(DB2_CORPUS)
+    Assessor().assess_tables(tables)
+    gen = IcebergDdlGenerator()
+    for t in tables:
+        gen.table_ddl(t)
+        struct_type_for(t)
+        cast_plan(t)
+    schema_catalog_df(spark, tables)
+    n_columns = sum(len(t.columns) for t in tables)
+    assert n_columns > 0
+    assert len(calls) == n_columns
+
+
 def test_type_distribution(corpus_catalog):
     dist = {r.base_type: r.n for r in type_distribution(corpus_catalog).collect()}
     assert dist["INTEGER"] >= 5
@@ -120,6 +159,15 @@ def test_migrate_customer_end_to_end(spark, sf_dir, tmp_path):
     assert out.count() == spark.read.parquet(f"{sf_dir}/customer.parquet").count()
     assert dict(out.dtypes)["C_ACCTBAL"] == "decimal(12,2)"
     assert dict(out.dtypes)["C_MKTSEGMENT"] == "string"
+
+    # the DDL text, the migrated files and struct_type_for agree per column
+    text, _ = IcebergDdlGenerator().table_ddl(table)
+    ddl_types = {line.split()[0]: line.rstrip(",").split()[1]
+                 for line in text.splitlines() if line.startswith("    ")}
+    want = struct_type_for(table)
+    for col in table.columns:
+        assert ddl_types[format_identifier(col.name)] == col.mapping.target_type
+        assert out.schema[col.name].dataType == want[col.name].dataType
 
 
 def test_migrate_partitioned_write(spark, sf_dir, tmp_path):

@@ -668,7 +668,7 @@ class TestRankStatsProperties:
                 [("k", i, x, y) for i, (x, y) in enumerate(xy)],
                 "p string, i long, x double, y double")
             r = spearman_rho_from(df, part_col="p", x_col="x",
-                                  y_col="y", tie_break="i").collect()[0]
+                                  y_col="y").collect()[0]
             rx, ry = avg_ranks(xs), avg_ranks(ys)
             n = len(xy)
             mean = (n + 1) / 2
@@ -900,7 +900,7 @@ class TestDegenerateInputsReturnNull:
         constx = spark.createDataFrame(
             [("k", 1, 1.0, 5.0), ("k", 2, 1.0, 6.0)],
             "p string, i long, x double, y double")
-        assert spearman_rho_from(constx, "p", "x", "y", "i") \
+        assert spearman_rho_from(constx, "p", "x", "y") \
             .collect()[0].spearman_rho is None
 
         cells = spark.createDataFrame(

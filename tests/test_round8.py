@@ -102,9 +102,9 @@ class TestSpearmanNullGuard:
                 ("p", 4.0, None, 4), ("p", 5.0, 50.0, 5)]
         df = spark.createDataFrame(rows, "p string, x double, y double, "
                                          "i long")
-        out = spearman_rho_from(df, "p", "x", "y", "i").collect()[0]
+        out = spearman_rho_from(df, "p", "x", "y").collect()[0]
         clean = df.filter(F.col("x").isNotNull() & F.col("y").isNotNull())
-        ref = spearman_rho_from(clean, "p", "x", "y", "i").collect()[0]
+        ref = spearman_rho_from(clean, "p", "x", "y").collect()[0]
         assert out.n_rows == 4 == ref.n_rows
         assert out.spearman_rho == pytest.approx(ref.spearman_rho)
 
