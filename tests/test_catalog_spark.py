@@ -1,6 +1,9 @@
 """Spark data-plane tests: StructType bridge, schema-catalog aggregation
 assessment, and the end-to-end migrate job on real parquet fixtures."""
 
+import json
+import os
+
 import pytest
 from pyspark.sql import types as T
 
@@ -136,6 +139,34 @@ def test_type_distribution(corpus_catalog):
     dist = {r.base_type: r.n for r in type_distribution(corpus_catalog).collect()}
     assert dist["INTEGER"] >= 5
     assert dist["XML"] == 1
+
+
+# tests/golden/db2_corpus.catalog.json pins the catalog of DB2_CORPUS: its
+# schema, its rows, the per-table assessment and the type histogram.
+
+GOLDEN_CATALOG = os.path.join(os.path.dirname(__file__), "golden",
+                              "db2_corpus.catalog.json")
+
+
+def _catalog_pins(catalog):
+    def rows(df):
+        return [r.asDict() for r in df.collect()]
+
+    return {
+        "schema": catalog.schema.json(),
+        "rows": sorted(rows(catalog),
+                       key=lambda r: (r["table_name"], r["ordinal"])),
+        "assess_catalog": sorted(rows(assess_catalog(catalog)),
+                                 key=lambda r: (r["table_schema"],
+                                                r["table_name"])),
+        "type_distribution": rows(type_distribution(catalog)),
+    }
+
+
+def test_golden_db2_corpus_catalog(corpus_catalog):
+    with open(GOLDEN_CATALOG, encoding="utf-8") as f:
+        want = json.load(f)
+    assert _catalog_pins(corpus_catalog) == want
 
 
 def test_migrate_customer_end_to_end(spark, sf_dir, tmp_path):
