@@ -2456,7 +2456,9 @@ def spearman_rho_from(df: DataFrame, part_col: str, x_col: str,
     # first census row — min over the group of (prefix − own count)
     off = (pref.groupBy("__g", "__pk")
            .agg(F.min(F.col("__cum") - F.col("__t")).alias("__off")))
-    dxy = (pref.join(F.broadcast(off), ["__g", "__pk"])
+    # no forced broadcast: off has one row per (tag, group), so AQE
+    # broadcasts it when small and shuffles for a high-cardinality part_col
+    dxy = (pref.join(off, ["__g", "__pk"])
            .withColumn("__d", 2 * F.col("__cum") - 2 * F.col("__off")
                        - F.col("__t") + 1))
     dxt = (dxy.filter(F.col("__g") == 0)

@@ -52,6 +52,12 @@ def get_spark(app_name: str = "db2ice-spark", master: str | None = None,
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Arrow for any pandas-UDF boundary (vectorized, batched).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # createDataFrame(pyarrow.Table) keeps the Arrow batches as an RDD
+        # decoded in the JVM. Below this threshold (48 MB by default) Spark
+        # builds a LocalRelation instead, which copies every row into each
+        # task's plan: catalog.schema_catalog_df at 100k columns then costs
+        # more CPU than parallelizing the same rows as pickled tuples.
+        .config("spark.sql.execution.arrow.localRelationThreshold", "0")
         # Deterministic timestamp semantics; matches the DuckDB oracle.
         .config("spark.sql.session.timeZone", "UTC")
         # Reliable-checkpoint hygiene (r10, ADVICE item closed): the

@@ -169,6 +169,26 @@ def test_golden_db2_corpus_catalog(corpus_catalog):
     assert _catalog_pins(corpus_catalog) == want
 
 
+def test_catalog_pass_plans_without_shuffle(corpus_catalog):
+    """The catalog is one Arrow partition decoded in the JVM: both
+    aggregations run without an Exchange, and no LocalRelation copies the
+    rows into the task plans."""
+    optimized = corpus_catalog._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" not in optimized
+    for df in (assess_catalog(corpus_catalog), type_distribution(corpus_catalog)):
+        assert df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, plan
+
+
+def test_empty_catalog(spark, corpus_catalog):
+    empty = schema_catalog_df(spark, [])
+    assert empty.schema == corpus_catalog.schema
+    assert empty.collect() == []
+    assert assess_catalog(empty).collect() == []
+    assert type_distribution(empty).collect() == []
+
+
 def test_migrate_customer_end_to_end(spark, sf_dir, tmp_path):
     """Parse DDL for the customer fixture → cast plan → write → re-read."""
     ddl = """
