@@ -169,6 +169,21 @@ def test_golden_db2_corpus_catalog(corpus_catalog):
     assert _catalog_pins(corpus_catalog) == want
 
 
+# The row pins above compare values only, so an int -> bigint drift in an
+# aggregation would pass them; these pin both aggregations' schemas.
+
+GOLDEN_CATALOG_SCHEMAS = os.path.join(os.path.dirname(__file__), "golden",
+                                      "db2_corpus.catalog_schemas.json")
+
+
+def test_golden_db2_corpus_aggregation_schemas(corpus_catalog):
+    with open(GOLDEN_CATALOG_SCHEMAS, encoding="utf-8") as f:
+        want = json.load(f)
+    assert {"assess_catalog": assess_catalog(corpus_catalog).schema.json(),
+            "type_distribution": type_distribution(corpus_catalog).schema.json(),
+            } == want
+
+
 def test_catalog_pass_plans_without_shuffle(corpus_catalog):
     """The catalog is one Arrow partition decoded in the JVM: both
     aggregations run without an Exchange, and no LocalRelation copies the

@@ -8,6 +8,9 @@ contract a real viewer relies on — no PDF library exists in this
 container to check it for us.
 """
 
+import hashlib
+import json
+import os
 import re
 import zlib
 
@@ -138,3 +141,82 @@ def test_cli_writes_pdf(tmp_path, capsys):
     data = out.read_bytes()
     assert data.startswith(b"%PDF-1.4")
     capsys.readouterr()
+
+
+# tests/golden/report_pdf.json pins the exact bytes (sha256 and length) of
+# the DB2 fixture corpus report and of a MiniPdf sampler document.
+
+GOLDEN_PDF = os.path.join(os.path.dirname(__file__), "golden",
+                          "report_pdf.json")
+
+
+class _Sampler(MiniPdf):
+    """Header and footer that change font and colour, so every page break
+    must restore the body's state."""
+
+    def header(self) -> None:
+        self.set_font("B", 14)
+        self.set_text_color(99, 102, 241)
+        self.cell(0, 8, "Sampler (head) \\ {nb}", ln=True, align="C")
+
+    def footer(self) -> None:
+        self.set_y(-15)
+        self.set_font("I", 8)
+        self.set_text_color(148, 163, 184)
+        self.cell(0, 10, f"Page {self.page_no()}/{{nb}}", align="R")
+
+
+def _sampler_pdf() -> bytes:
+    pdf = _Sampler()
+    pdf.add_page()
+    styles = ("", "B", "I", "BI", "ib")
+    colours = ((15, 23, 42), (239, 68, 68), (22, 101, 52), (128,))
+    fills = ((16, 185, 129), (245, 158, 11), (240,))
+    texts = ("plain text", "paren ( ) and backslash \\", "café crème",
+             "arrow → and 中", "", "{nb} pages", "Résumé (v2)")
+    for i in range(260):
+        pdf.set_font(styles[i % len(styles)],
+                     None if i % 7 == 3 else 6 + i % 9)
+        pdf.set_text_color(*colours[i % len(colours)])
+        pdf.set_fill_color(*fills[i % len(fills)])
+        align = "LCR"[i % 3]
+        fill = i % 4 == 1
+        if i % 5 == 4:
+            pdf.cell(40, 5, texts[i % len(texts)], align=align, fill=fill)
+            pdf.cell(0, 5, texts[(i + 1) % len(texts)], ln=1, align=align,
+                     fill=not fill)
+        else:
+            pdf.cell(0, 4.5 + i % 3, texts[i % len(texts)], ln=True,
+                     align=align, fill=fill)
+        if i % 50 == 49:
+            pdf.ln(3)
+    return pdf.output()
+
+
+def _pdf_pins() -> dict:
+    from fixtures import DB2_CORPUS
+
+    docs = {
+        "db2_corpus": generate_assessment_pdf(
+            Assessor().assess(DB2_CORPUS), generated_at="2026-01-01 00:00:00"),
+        "minipdf_sampler": _sampler_pdf(),
+    }
+    return {name: {"sha256": hashlib.sha256(data).hexdigest(),
+                   "bytes": len(data)}
+            for name, data in docs.items()}
+
+
+def test_golden_pdf_bytes():
+    with open(GOLDEN_PDF, encoding="utf-8") as f:
+        want = json.load(f)
+    assert _pdf_pins() == want
+
+
+def test_sampler_covers_the_writer():
+    data = _sampler_pdf()
+    assert int(re.search(rb"/Count (\d+)", data).group(1)) >= 3
+    text = b"".join(_streams(data))
+    for needle in (rb"\( \) and backslash \\", b"caf\xe9", b"arrow ? and ?",
+                   b"/F1 ", b"/F2 ", b"/F3 ", b"/F4 ", b"re f"):
+        assert needle in text, needle
+    assert b"{nb}" not in text
