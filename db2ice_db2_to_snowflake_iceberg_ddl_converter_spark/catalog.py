@@ -5,9 +5,10 @@ This is where the reference's driver-side objects become data-plane
 parameters (SURVEY.md §1.4): a parsed ``TableDef`` turns into
 - a ``StructType`` for reads/writes,
 - a list of ``cast`` expressions for the migration job (sources/migrate.py),
-- rows of a ``schema_catalog`` DataFrame (one row per column) so that the
-  reference's assessment aggregations (assessor.py:186-274) can also run as
-  ordinary ``groupBy().agg()``. The catalog is one Arrow partition.
+- rows of a ``schema_catalog`` DataFrame (one row per column, one Arrow
+  partition) so that the reference's assessment aggregations
+  (assessor.py:186-274) also run in Spark: the per-table assessment as one
+  generated SQL text, the type histogram as a ``groupBy().agg()``.
 All three read each column's one ``ColumnDef.mapping``.
 
 Iceberg target-type strings (mapper.py:43-52) map to Spark types as follows;
@@ -150,66 +151,65 @@ def schema_catalog_df(spark: SparkSession, tables: list[TableDef]) -> DataFrame:
 
 
 def assess_catalog(catalog: DataFrame) -> DataFrame:
-    """Assessment as DataFrame aggregation — per-table readiness from the
+    """Assessment as one SQL aggregation — per-table readiness from the
     schema catalog, mirroring the penalty model (assessor.py:167-180, :427).
-    The weights are read from ``assess.PENALTIES`` when the plan is built.
 
-    Over :func:`schema_catalog_df`'s one partition the groupBy on
-    (table_schema, table_name) is a partial and a final hash aggregate in
-    one task, with no shuffle. Returns one row per table: column counts,
-    penalty total, readiness score and traffic-light level.
+    Each call generates the text from ``assess.PENALTIES`` and
+    ``ConversionStatus`` (the weights' one source) and hands it to one
+    ``sql`` call, which parses and analyses the plan once; ``{catalog}``
+    binds to a temp view that ``sql`` drops before it returns. Over the
+    catalog's one partition the aggregate runs in one task, no shuffle.
+    Returns one row per table: column count, penalty parts and total,
+    readiness score and traffic-light level.
     """
-    st = F.col("status")
-    pen = PENALTIES
-    col_penalty = (
-        F.when(st == ConversionStatus.UNSUPPORTED.value, pen["unsupported_type"])
-        .when(st == ConversionStatus.LOSSY.value, pen["lossy_conversion"])
-        .when((st == ConversionStatus.COMPATIBLE.value)
-              & F.col("ewi_code").isNotNull(), pen["compatible_type"])
-        .otherwise(0)
-        + F.when(F.col("fieldproc").isNotNull(), pen["fieldproc"]).otherwise(0)
-        + F.when(F.col("generated").isNotNull(), pen["generated_column"]).otherwise(0)
-    )
-    per_table = (
-        catalog
-        .groupBy("table_schema", "table_name")
-        .agg(
-            F.count("*").alias("n_columns"),
-            F.sum(col_penalty).alias("column_penalty"),
-            F.max(F.when(F.col("table_editproc").isNotNull(), pen["editproc"])
-                  .otherwise(0)).alias("editproc_penalty"),
-            F.max(F.when(F.col("table_validproc").isNotNull(), pen["validproc"])
-                  .otherwise(0)).alias("validproc_penalty"),
-            F.max(F.when(F.col("partition_kind") == "HASH", pen["complex_partition"])
-                  .otherwise(0)).alias("partition_penalty"),
-            (F.first("n_foreign_keys") * pen["foreign_key"]).alias("fk_penalty"),
-            (F.first("n_check_constraints") * pen["check_constraint"])
-            .alias("check_penalty"),
-            F.max((st == ConversionStatus.UNSUPPORTED.value).cast("int"))
-             .alias("has_unsupported"),
-            F.max(F.col("fieldproc").isNotNull().cast("int")).alias("has_fieldproc"),
-        )
-        .withColumn("penalty_total",
-                    F.col("column_penalty") + F.col("editproc_penalty")
-                    + F.col("validproc_penalty") + F.col("partition_penalty")
-                    + F.col("fk_penalty") + F.col("check_penalty"))
-        .withColumn("readiness_score",
-                    F.greatest(F.lit(0), F.lit(100) - F.col("penalty_total")))
-        .withColumn("readiness_level",
-                    F.when(F.col("readiness_score") >= 80, "green")
-                    .when(F.col("readiness_score") >= 50, "yellow")
-                    .otherwise("red"))
-        .withColumn("can_auto_convert",
-                    (F.col("has_unsupported") + F.col("has_fieldproc")
-                     + (F.col("editproc_penalty") > 0).cast("int")
-                     + (F.col("validproc_penalty") > 0).cast("int")) == 0)
-        .drop("has_unsupported", "has_fieldproc")
-    )
-    return per_table
+    pen, cs = PENALTIES, ConversionStatus
+    unsupported = f"status = '{cs.UNSUPPORTED.value}'"
+    return catalog.sparkSession.sql(f"""
+        SELECT table_schema, table_name, n_columns, column_penalty,
+          editproc_penalty, validproc_penalty, partition_penalty, fk_penalty,
+          check_penalty,
+          column_penalty + editproc_penalty + validproc_penalty
+            + partition_penalty + fk_penalty + check_penalty AS penalty_total,
+          greatest(0, 100 - penalty_total) AS readiness_score,
+          CASE WHEN readiness_score >= 80 THEN 'green'
+               WHEN readiness_score >= 50 THEN 'yellow'
+               ELSE 'red' END AS readiness_level,
+          has_unsupported + has_fieldproc + CAST(editproc_penalty > 0 AS INT)
+            + CAST(validproc_penalty > 0 AS INT) = 0 AS can_auto_convert
+        FROM (
+          SELECT table_schema, table_name, count(*) AS n_columns,
+            sum(CASE WHEN {unsupported} THEN {pen['unsupported_type']}
+                     WHEN status = '{cs.LOSSY.value}'
+                       THEN {pen['lossy_conversion']}
+                     WHEN status = '{cs.COMPATIBLE.value}'
+                       AND ewi_code IS NOT NULL THEN {pen['compatible_type']}
+                     ELSE 0 END
+                + CASE WHEN fieldproc IS NOT NULL
+                       THEN {pen['fieldproc']} ELSE 0 END
+                + CASE WHEN generated IS NOT NULL
+                       THEN {pen['generated_column']} ELSE 0 END)
+              AS column_penalty,
+            max(CASE WHEN table_editproc IS NOT NULL THEN {pen['editproc']}
+                     ELSE 0 END) AS editproc_penalty,
+            max(CASE WHEN table_validproc IS NOT NULL THEN {pen['validproc']}
+                     ELSE 0 END) AS validproc_penalty,
+            max(CASE WHEN partition_kind = 'HASH'
+                     THEN {pen['complex_partition']} ELSE 0 END)
+              AS partition_penalty,
+            first(n_foreign_keys) * {pen['foreign_key']} AS fk_penalty,
+            first(n_check_constraints) * {pen['check_constraint']}
+              AS check_penalty,
+            max(CAST({unsupported} AS INT)) AS has_unsupported,
+            max(CAST(fieldproc IS NOT NULL AS INT)) AS has_fieldproc
+          FROM {{catalog}} GROUP BY table_schema, table_name)""",
+        catalog=catalog)
 
 
 def type_distribution(catalog: DataFrame) -> DataFrame:
     """Corpus-wide base-type histogram (assessor.py:290-292, :226-227).
-    Like :func:`assess_catalog`, it runs in one task without a shuffle."""
+
+    Three DataFrame calls build it; a plan this small gains nothing from a
+    SQL text. Like :func:`assess_catalog`, it runs in one task without a
+    shuffle."""
     return catalog.groupBy("base_type").agg(F.count("*").alias("n")) \
                   .orderBy(F.desc("n"), "base_type")

@@ -409,6 +409,11 @@ def graph_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count — the minhash treatment (r13, guide §2.4: both probe sides
     # read one materialization; lazy persist, no extra blocking job,
     # concurrent consumers coordinate through BlockManager block locks).
+    # Neither ``deg`` nor ``adj`` below is unpersisted: the returned frame
+    # is lazy and reads both. Like the local checkpoint of ``edges``,
+    # their DISK_ONLY blocks are freed by the ContextCleaner (reference
+    # tracking is on by default) once these frames and every frame built
+    # on them are garbage-collected.
     deg = (edges.select(F.explode(F.array("s1", "s2")).alias("s"))
            .groupBy("s").agg(F.count(F.lit(1)).alias("d"))
            .persist(StorageLevel.DISK_ONLY))

@@ -24,6 +24,7 @@ This is driver-side presentation code like JSON/markdown in ``model.py``
 from __future__ import annotations
 
 import zlib
+from functools import lru_cache
 
 from .model import AssessmentReport, ReadinessLevel
 
@@ -67,8 +68,27 @@ _FONTS = {  # style → (resource name, base font, width table)
 
 def _esc(text: str) -> str:
     """Escape a PDF literal string; non-Latin-1 chars degrade to '?'."""
+    if (text.isascii() and "(" not in text and ")" not in text
+            and "\\" not in text):
+        return text
     out = text.encode("latin-1", "replace").decode("latin-1")
     return (out.replace("\\", r"\\").replace("(", r"\(").replace(")", r"\)"))
+
+
+# The report draws in a handful of colours and fonts, so the operator for
+# each state is formatted once and then looked up.
+
+@lru_cache(maxsize=64)
+def _rg(r: int, g: int, b: int) -> str:
+    """The ``rg`` (fill colour) operator for 0-255 RGB."""
+    return f"{r / 255.0:.3f} {g / 255.0:.3f} {b / 255.0:.3f} rg"
+
+
+@lru_cache(maxsize=64)
+def _font_state(style: str, size: float) -> tuple[str, str]:
+    """fpdf style string and size → (normalised style, ``Tf`` operator)."""
+    style = "".join(sorted(style.upper())).replace("IB", "BI")
+    return style, f"/{_FONTS[style][0]} {size:.2f} Tf"
 
 
 class MiniPdf:
@@ -80,6 +100,11 @@ class MiniPdf:
     page breaks. Streams are Flate-compressed. Subclass and override
     ``header``/``footer`` exactly like fpdf; ``{nb}`` in footer text is
     replaced with the total page count at output time.
+
+    The setters look up the colour (``rg``) and font (``Tf``) operators of
+    the new state, formatted once per distinct state, and ``cell`` emits
+    them as stored, so a cell formats only its positions. Every cell still
+    writes its own colour and font operators: the output is unchanged.
     """
 
     def __init__(self) -> None:
@@ -93,8 +118,8 @@ class MiniPdf:
         self.y = self.t_margin
         self._style = ""
         self._size = 10.0
-        self._text_rgb = (0, 0, 0)
-        self._fill_rgb = (0, 0, 0)
+        self._font_op = "/F1 10.00 Tf"
+        self._text_op = self._fill_op = _rg(0, 0, 0)
         self._in_footer = False
 
     # -- state ------------------------------------------------------------
@@ -107,19 +132,19 @@ class MiniPdf:
         return len(self._pages)
 
     def set_font(self, style: str = "", size: float | None = None) -> None:
-        self._style = "".join(sorted(style.upper())).replace("IB", "BI")
         if size is not None:
             self._size = float(size)
+        self._style, self._font_op = _font_state(style, self._size)
 
     def set_text_color(self, r: int, g: int = None, b: int = None) -> None:  # type: ignore[assignment]
         if g is None:
             g = b = r
-        self._text_rgb = (r, g, b)
+        self._text_op = _rg(r, g, b)
 
     def set_fill_color(self, r: int, g: int = None, b: int = None) -> None:  # type: ignore[assignment]
         if g is None:
             g = b = r
-        self._fill_rgb = (r, g, b)
+        self._fill_op = _rg(r, g, b)
 
     def get_y(self) -> float:
         return self.y
@@ -146,11 +171,13 @@ class MiniPdf:
         self.header()
 
     def _close_page(self) -> None:
-        saved = (self.x, self.y, self._style, self._size, self._text_rgb)
+        saved = (self.x, self.y, self._style, self._size, self._font_op,
+                 self._text_op)
         self._in_footer = True
         self.footer()
         self._in_footer = False
-        self.x, self.y, self._style, self._size, self._text_rgb = saved
+        (self.x, self.y, self._style, self._size, self._font_op,
+         self._text_op) = saved
 
     def ln(self, h: float | None = None) -> None:
         self.y += h if h is not None else self._size / _K
@@ -168,13 +195,11 @@ class MiniPdf:
             self.add_page()
         if w == 0:
             w = self.epw - (self.x - self.l_margin)
-        ops = []
+        # one buffer entry may hold several lines: pages join on "\n"
         if fill:
-            fr, fg, fb = (c / 255.0 for c in self._fill_rgb)
-            ops.append(f"{fr:.3f} {fg:.3f} {fb:.3f} rg")
-            ops.append(f"{self.x * _K:.2f} "
-                       f"{(_PAGE_H_MM - self.y - h) * _K:.2f} "
-                       f"{w * _K:.2f} {h * _K:.2f} re f")
+            self._buf.append(f"{self._fill_op}\n{self.x * _K:.2f} "
+                             f"{(_PAGE_H_MM - self.y - h) * _K:.2f} "
+                             f"{w * _K:.2f} {h * _K:.2f} re f")
         if txt:
             if align == "C":
                 tx = self.x + (w - self._text_width(txt)) / 2.0
@@ -184,16 +209,10 @@ class MiniPdf:
                 tx = self.x + 1.0
             # baseline: vertical center plus the usual 0.3em descender shim
             ty = self.y + 0.5 * h + 0.3 * self._size / _K
-            tr, tg, tb = (c / 255.0 for c in self._text_rgb)
-            font = _FONTS[self._style][0]
-            ops.append("BT")
-            ops.append(f"{tr:.3f} {tg:.3f} {tb:.3f} rg")
-            ops.append(f"/{font} {self._size:.2f} Tf")
-            ops.append(f"1 0 0 1 {tx * _K:.2f} "
-                       f"{(_PAGE_H_MM - ty) * _K:.2f} Tm")
-            ops.append(f"({_esc(txt)}) Tj")
-            ops.append("ET")
-        self._buf.extend(ops)
+            self._buf.append(f"BT\n{self._text_op}\n{self._font_op}\n"
+                             f"1 0 0 1 {tx * _K:.2f} "
+                             f"{(_PAGE_H_MM - ty) * _K:.2f} Tm\n"
+                             f"({_esc(txt)}) Tj\nET")
         if ln:
             self.y += h
             self.x = self.l_margin

@@ -80,12 +80,41 @@ def test_assess_catalog_matches_driver_scores(spark, corpus_catalog):
         assert got[key].can_auto_convert == ta.can_auto_convert, key
 
 
-def test_penalty_weights_have_one_source(spark, monkeypatch):
-    """Both scorers read ``assess.PENALTIES``: moving one weight moves both."""
+# Each case triggers one weight ``hits`` times and nothing else that the
+# move could touch; both scorers must move by ``hits`` per point of weight.
+_ONE_WEIGHT = {
+    "unsupported_type": ("CREATE TABLE S.T (A INTEGER, B XML, C XML);", 2),
+    "lossy_conversion": (
+        "CREATE TABLE S.T (A NUMERIC(42,5), B DECFLOAT(16));", 2),
+    "compatible_type": (
+        "CREATE TABLE S.T (A GRAPHIC(64), B VARGRAPHIC(20));", 2),
+    "editproc": ("CREATE TABLE S.T (A INTEGER) EDITPROC EP;", 1),
+    "validproc": ("CREATE TABLE S.T (A INTEGER) VALIDPROC VP;", 1),
+    "fieldproc": ("CREATE TABLE S.T (A INTEGER, B CHAR(5) FIELDPROC FP);", 1),
+    "foreign_key": (
+        "CREATE TABLE S.T (A INTEGER, B INTEGER, "
+        "CONSTRAINT F1 FOREIGN KEY (A) REFERENCES S.P (A), "
+        "CONSTRAINT F2 FOREIGN KEY (B) REFERENCES S.Q (B));", 2),
+    "check_constraint": (
+        "CREATE TABLE S.T (A INTEGER, B INTEGER, "
+        "CONSTRAINT C1 CHECK (A > 0), CONSTRAINT C2 CHECK (B > 0));", 2),
+    "complex_partition": (
+        "CREATE TABLE S.T (A INTEGER) PARTITION BY HASH (A);", 1),
+    "generated_column": (
+        "CREATE TABLE S.T (A INTEGER GENERATED ALWAYS AS IDENTITY, "
+        "B INTEGER GENERATED BY DEFAULT AS IDENTITY);", 2),
+}
+
+
+@pytest.mark.parametrize("key", sorted(_ONE_WEIGHT))
+def test_penalty_weights_have_one_source(spark, monkeypatch, key):
+    """Both scorers read ``assess.PENALTIES``: moving one weight moves both,
+    for every weight ``assess_catalog`` reads."""
     from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark import assess
 
-    tables = DB2DdlParser().parse(
-        "CREATE TABLE S.T (A INTEGER, B CHAR(5) FIELDPROC FP);")
+    ddl, hits = _ONE_WEIGHT[key]
+    tables = DB2DdlParser().parse(ddl)
+    assert len(tables) == 1
 
     def scores():
         driver = assess.Assessor().assess_table(tables[0]).readiness_score
@@ -93,11 +122,38 @@ def test_penalty_weights_have_one_source(spark, monkeypatch):
         return driver, catalog[0].readiness_score
 
     before = scores()
-    monkeypatch.setitem(assess.PENALTIES, "fieldproc",
-                        assess.PENALTIES["fieldproc"] - 20)
+    monkeypatch.setitem(assess.PENALTIES, key, assess.PENALTIES[key] + 3)
     after = scores()
     assert before[0] == before[1]
-    assert after[0] == after[1] == before[0] + 20
+    assert after[0] == after[1] == before[0] - 3 * hits
+
+
+def test_assess_catalog_leaves_no_views(spark):
+    """Two catalogs assessed in one session each get their own result, and
+    no temp view registered for the SQL text outlives the call."""
+    from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark.assess import Assessor
+
+    def views():
+        return sorted((t.name, t.tableType) for t in spark.catalog.listTables())
+
+    before = views()
+    scripts = (DB2_CORPUS,
+               "CREATE TABLE S.A (X XML, Y INTEGER);\n"
+               "CREATE TABLE S.B (Z INTEGER) EDITPROC E;")
+    built = []
+    for ddl in scripts:
+        tables = DB2DdlParser().parse(ddl)
+        built.append((tables, assess_catalog(schema_catalog_df(spark, tables))))
+    for tables, df in built:
+        want = {(t.schema, t.name): Assessor().assess_table(t)
+                for t in tables}
+        got = {(r.table_schema, r.table_name): r for r in df.collect()}
+        assert set(got) == set(want)
+        for key, ta in want.items():
+            assert got[key].n_columns == ta.column_count, key
+            assert got[key].readiness_score == ta.readiness_score, key
+            assert got[key].can_auto_convert == ta.can_auto_convert, key
+    assert views() == before
 
 
 def test_each_column_is_mapped_once(spark, monkeypatch):
