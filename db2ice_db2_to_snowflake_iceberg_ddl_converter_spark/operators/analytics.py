@@ -302,23 +302,6 @@ FROM pairs GROUP BY blk, brand ORDER BY blk, brand
 """
 
 
-QUERIES = {
-    "agg_corr_regr": agg_corr_regr,
-    "agg_percentiles": agg_percentiles,
-    "scalar_array_fns": scalar_array_fns,
-    "sample_hash_stratified": sample_hash_stratified,
-    "dedup_levenshtein_blocked": dedup_levenshtein_blocked,
-}
-
-ORACLES = {
-    "agg_corr_regr": ORACLE_AGG_CORR_REGR,
-    "agg_percentiles": ORACLE_AGG_PERCENTILES,
-    "scalar_array_fns": ORACLE_SCALAR_ARRAY,
-    "sample_hash_stratified": ORACLE_SAMPLE_HASH,
-    "dedup_levenshtein_blocked": ORACLE_DEDUP_LEVENSHTEIN,
-}
-
-
 def agg_histogram_equi_width(spark, sf_dir, n_bins: int = 10):
     """Equi-width histogram of order totals: bin edges from the global
     min/max (a broadcast 1-row aggregate — no driver action), bin id =

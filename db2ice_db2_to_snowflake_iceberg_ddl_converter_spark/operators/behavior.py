@@ -255,23 +255,6 @@ ORDER BY event_id
 """
 
 
-QUERIES = {
-    "events_funnel_conversion": events_funnel_conversion,
-    "events_retention_cohorts": events_retention_cohorts,
-    "events_rolling_stats": events_rolling_stats,
-    "events_transition_matrix": events_transition_matrix,
-    "events_value_zscore": events_value_zscore,
-}
-
-ORACLES = {
-    "events_funnel_conversion": ORACLE_FUNNEL,
-    "events_retention_cohorts": ORACLE_RETENTION,
-    "events_rolling_stats": ORACLE_ROLLING,
-    "events_transition_matrix": ORACLE_TRANSITIONS,
-    "events_value_zscore": ORACLE_ZSCORE,
-}
-
-
 def audience_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audience overlap between event-type segments: for every unordered
     type pair, how many distinct users belong to both — plus each pair's
@@ -524,8 +507,6 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str,
     return spark.createDataFrame(
         out, "event_type string, stationary_p double, observed_share "
              "double, gap double")
-
-
 
 
 def events_markov_stationary_checked(spark: SparkSession, sf_dir: str,

@@ -297,21 +297,6 @@ ORDER BY event_type, win_end
 """
 
 
-QUERIES = {
-    "events_ohlc_bars": events_ohlc_bars,
-    "events_twap": events_twap,
-    "events_interval_islands": events_interval_islands,
-    "events_active_users_7d": events_active_users_7d,
-}
-
-ORACLES = {
-    "events_ohlc_bars": ORACLE_EVENTS_OHLC,
-    "events_twap": ORACLE_EVENTS_TWAP,
-    "events_interval_islands": ORACLE_EVENTS_ISLANDS,
-    "events_active_users_7d": ORACLE_EVENTS_ACTIVE_7D,
-}
-
-
 def events_ema(spark: SparkSession, sf_dir: str,
                alpha: float = 0.2) -> DataFrame:
     """Exponential moving average of each event type's value stream —

@@ -692,17 +692,6 @@ FROM walk WHERE anc = 0 ORDER BY c_custkey
 """
 
 
-QUERIES = {"graph_pagerank_top": graph_pagerank_top,
-           "graph_hierarchy_depths": graph_hierarchy_depths,
-           "graph_triangle_stats": graph_triangle_stats,
-           "graph_kcore": graph_kcore,
-           "sql_recursive_hierarchy": sql_recursive_hierarchy}
-
-ORACLES = {"graph_hierarchy_depths": ORACLE_HIERARCHY_DEPTHS,
-           "graph_triangle_stats": ORACLE_TRIANGLE_STATS,
-           "sql_recursive_hierarchy": ORACLE_SQL_RECURSIVE}
-
-
 def graph_degree_distribution(spark: SparkSession, sf_dir: str
                               ) -> DataFrame:
     """Degree distribution of the supplier co-sourcing graph plus the

@@ -729,51 +729,6 @@ ORDER BY o_orderkey
 """
 
 
-QUERIES = {
-    "q4_order_priority": q4_order_priority,
-    "q7_volume_shipping": q7_volume_shipping,
-    "q9_product_profit": q9_product_profit,
-    "q12_priority_by_status": q12_priority_by_status,
-    "q13_customer_distribution": q13_customer_distribution,
-    "q14_promo_revenue": q14_promo_revenue,
-    "q15_top_supplier": q15_top_supplier,
-    "q17_small_quantity_revenue": q17_small_quantity_revenue,
-    "q19_disjunctive_predicates": q19_disjunctive_predicates,
-    "q22_dormant_customers": q22_dormant_customers,
-    "corr_above_nation_avg": corr_above_nation_avg,
-    "having_global_share": having_global_share,
-    "window_range_frame": window_range_frame,
-    "q16_supplier_variety": q16_supplier_variety,
-    "q20_part_share_suppliers": q20_part_share_suppliers,
-    "q2_min_cost_supplier": q2_min_cost_supplier,
-    "q8_market_share": q8_market_share,
-    "q11_important_stock": q11_important_stock,
-    "q21_waiting_suppliers": q21_waiting_suppliers,
-}
-
-ORACLES = {
-    "q4_order_priority": ORACLE_Q4,
-    "q7_volume_shipping": ORACLE_Q7,
-    "q9_product_profit": ORACLE_Q9,
-    "q12_priority_by_status": ORACLE_Q12,
-    "q13_customer_distribution": ORACLE_Q13,
-    "q14_promo_revenue": ORACLE_Q14,
-    "q15_top_supplier": ORACLE_Q15,
-    "q17_small_quantity_revenue": ORACLE_Q17,
-    "q19_disjunctive_predicates": ORACLE_Q19,
-    "q22_dormant_customers": ORACLE_Q22,
-    "corr_above_nation_avg": ORACLE_CORR_AVG,
-    "having_global_share": ORACLE_HAVING_SHARE,
-    "window_range_frame": ORACLE_WINDOW_RANGE_FRAME,
-    "q16_supplier_variety": ORACLE_Q16,
-    "q20_part_share_suppliers": ORACLE_Q20,
-    "q2_min_cost_supplier": ORACLE_Q2,
-    "q8_market_share": ORACLE_Q8,
-    "q11_important_stock": ORACLE_Q11,
-    "q21_waiting_suppliers": ORACLE_Q21,
-}
-
-
 def scalar_null_semantics(spark, sf_dir) -> DataFrame:
     """Three-valued-logic battery: the NOT IN vs NOT EXISTS vs ANTI JOIN
     divergence every SQL migration trips over. A NULL in the NOT IN

@@ -120,17 +120,6 @@ ORDER BY event_type, win_start
 """
 
 
-QUERIES = {
-    "events_gapfill_hourly": events_gapfill_hourly,
-    "events_sliding_hourly": events_sliding_hourly,
-}
-
-ORACLES = {
-    "events_gapfill_hourly": ORACLE_EVENTS_GAPFILL,
-    "events_sliding_hourly": ORACLE_EVENTS_SLIDING,
-}
-
-
 def rollup_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental materialized-view maintenance: an (event_type, hour)
     rollup built from the table's first days (the "materialized" state),

@@ -266,8 +266,6 @@ ORDER BY train_doc, eval_doc
 """
 
 
-
-
 def dedup_incremental_exact(spark: SparkSession, sf_dir: str,
                             new_source: str = "src19") -> DataFrame:
     """Incremental ingest dedup: which documents of an arriving batch
@@ -443,30 +441,6 @@ FROM ranked
 WHERE cum_tokens::DOUBLE <= 0.6 * total_tokens::DOUBLE
 ORDER BY avg_ttr DESC, source
 """
-
-
-
-QUERIES = {
-    "data_split_assign": data_split_assign,
-    "dedup_incremental_exact": dedup_incremental_exact,
-    "sample_per_group_topn": sample_per_group_topn,
-    "corpus_mix_weights": corpus_mix_weights,
-    "corpus_token_budget_cut": corpus_token_budget_cut,
-    "corpus_pack_sequences": corpus_pack_sequences,
-    "embedding_quantize_int8": embedding_quantize_int8,
-    "contamination_ngram_overlap": contamination_ngram_overlap,
-}
-
-ORACLES = {
-    "data_split_assign": ORACLE_DATA_SPLIT,
-    "dedup_incremental_exact": ORACLE_DEDUP_INCREMENTAL,
-    "sample_per_group_topn": ORACLE_SAMPLE_TOPN,
-    "corpus_mix_weights": ORACLE_MIX_WEIGHTS,
-    "corpus_token_budget_cut": ORACLE_TOKEN_BUDGET,
-    "corpus_pack_sequences": ORACLE_PACK_SEQUENCES,
-    "embedding_quantize_int8": ORACLE_QUANTIZE,
-    "contamination_ngram_overlap": ORACLE_CONTAMINATION,
-}
 
 
 def export_training_shards(spark: SparkSession, sf_dir: str,

@@ -344,21 +344,6 @@ ORDER BY check_name
 """
 
 
-QUERIES = {
-    "validate_customer_constraints": validate_customer_constraints,
-    "snapshot_diff_customers": snapshot_diff_customers,
-    "migrate_reconcile_customers": migrate_reconcile_customers,
-    "validate_star_expectations": validate_star_expectations,
-}
-
-ORACLES = {
-    "validate_customer_constraints": ORACLE_VALIDATE_CUSTOMER,
-    "snapshot_diff_customers": ORACLE_SNAPSHOT_DIFF,
-    "migrate_reconcile_customers": ORACLE_RECONCILE,
-    "validate_star_expectations": ORACLE_STAR_EXPECTATIONS,
-}
-
-
 def observe_scan_metrics(spark, sf_dir) -> "DataFrame":
     """Data-quality metrics via Spark's Observation API: the counters
     ride the SAME pass as a real consuming action (here a noop-ish count

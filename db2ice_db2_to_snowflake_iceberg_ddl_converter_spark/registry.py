@@ -1,17 +1,18 @@
-"""Query registry: every implemented operator exposed as a (spark, sf_dir) →
-DataFrame callable, with a DuckDB oracle SQL twin for EVERY entry.
+"""Query registry: the data-plane operators as ``(spark, sf_dir) ->
+DataFrame`` callables, each with a DuckDB oracle SQL twin.
 
-This is the single source of truth behind ``__spark_entry__.py`` — the
-driver's correctness gate runs each entry against its oracle at sf0.01
-(row count + schema + order-insensitive value hash). Since round 9 the
-registry carries ZERO rows-only entries: operators whose core outputs are
-non-SQL-expressible (LSH candidate generation, iterative float fits,
-stateful streaming, binary codecs) are registered through ``_checked``
-wrappers that hash-gate their exact deterministic anchors (counts,
-censuses, SQL-recomputable columns) and collapse the engine-specific part
-to oracle-asserted invariant booleans — while each RAW core keeps its
-value-pinning pytest (numpy/pure-Python replays, recall vs brute force,
-batch-stream equivalence)."""
+:func:`build_table` is the registry: one ordered row
+``(name, query, oracle_sql)`` per entry. :func:`build_queries` and
+:func:`build_oracles` are its two projections, and ``__spark_entry__.py``
+hands them to the driver. The driver runs the first 50 entries (the
+driver window) against their oracles at sf0.01 and compares row count,
+column names and an order-insensitive value hash; the remaining entries
+follow in the same table. Operators whose core output has no SQL twin
+(LSH candidates, iterative float fits, sketches, binary codecs) are
+registered through ``*_checked`` wrappers: the exact anchors (counts,
+censuses, SQL-recomputable columns) ride the hash gate and the
+engine-specific part collapses to invariant booleans the oracle asserts,
+while each raw core keeps its value-pinning pytest."""
 
 from __future__ import annotations
 
@@ -173,12 +174,23 @@ SELECT base_type, CAST(n AS BIGINT) AS n FROM (VALUES
 ORDER BY n DESC, base_type
 """
 
+#: The migration read→cast slice: the DDL types CUSTOMER as (BIGINT,
+#: VARCHAR, INTEGER, DECIMAL(12,2), CHAR); correctly-rounded double→decimal
+#: conversion matches across engines.
+ORACLE_MIGRATE_CUSTOMER_CAST = """
+            SELECT c_custkey, c_name, c_nationkey,
+                   CAST(CAST(c_acctbal AS DECIMAL(12,2)) AS DOUBLE)
+                     AS c_acctbal,
+                   c_mktsegment
+            FROM customer ORDER BY c_custkey
+        """
+
 
 def _streaming_queries():
     """Structured Streaming pipelines drained with Trigger.AvailableNow.
-    Genuinely non-SQL-expressible as a DuckDB oracle (stateful event-time
-    processing) → rows-only driver check; tests/test_streaming.py asserts
-    batch/stream equivalence, which the batch twins' oracles then cover."""
+    Each drain's oracle is a batch DuckDB twin of its exact output or of
+    its exact anchors plus invariant booleans (see each docstring);
+    tests/test_streaming.py asserts batch/stream equivalence."""
     import tempfile
     import uuid
 
@@ -740,2290 +752,614 @@ def _source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return source_roundtrip_formats(spark, sf_dir)
 
 
-from .sources.registry import ORACLE_SOURCE_ROUNDTRIP as _ORACLE_SOURCE_ROUNDTRIP  # noqa: E402
+def build_table() -> list[tuple[str, Callable[[SparkSession, str], DataFrame],
+                                str]]:
+    """Every registry entry as ``(name, query, oracle_sql)``, in driver
+    order: the first 50 rows are the driver window. A ``*_checked`` query's
+    comment says why its operator has no SQL twin. A repeated name raises
+    ``ValueError``."""
+    from .functions import tablefns
+    from .operators import behavior, eventtime, rerank, traindata, validate
+    from .sources import pydatasource
+    from .sources import registry as sources
+    from .streaming import events as ev
+
+    sq, cq = _streaming_queries(), _catalog_queries()
+    return _unique_names([
+        # ---- the driver window: entries 1-50 ----
+        ("corpus_curriculum_phases", traindata.corpus_curriculum_phases,
+         traindata.ORACLE_CURRICULUM_PHASES),
+        ("privacy_k_anonymity", validate.privacy_k_anonymity,
+         validate.ORACLE_K_ANONYMITY),
+        # Lloyd's fit is iterative float math
+        ("embedding_kmeans_clusters",
+         similarity.embedding_kmeans_clusters_checked,
+         similarity.ORACLE_KMEANS_CHECKED),
+        # float energy profile of a decoded WAV
+        ("multimodal_audio_energy", multimodal.multimodal_audio_energy_checked,
+         multimodal.ORACLE_AUDIO_ENERGY_CHECKED),
+        ("corpus_temperature_mixture", traindata.corpus_temperature_mixture,
+         traindata.ORACLE_TEMPERATURE_MIXTURE),
+        # xxhash64 KMV sketch, no DuckDB twin
+        ("vocab_kmv_distinct", approx.vocab_kmv_distinct_checked,
+         approx.ORACLE_VOCAB_KMV_CHECKED),
+        ("corpus_ngram_novelty", corpus.corpus_ngram_novelty,
+         corpus.ORACLE_NGRAM_NOVELTY),
+        ("udaf_trimmed_sum", tablefns.udaf_trimmed_sum,
+         tablefns.ORACLE_UDAF_TRIMMED_SUM),
+        ("streaming_static_enrich", sq["streaming_static_enrich"],
+         ev.ORACLE_STREAMING_STATIC_ENRICH),
+        # float statistics of a decoded BMP
+        ("multimodal_image_stats", multimodal.multimodal_image_stats_checked,
+         multimodal.ORACLE_IMAGE_STATS_CHECKED),
+        # the k-core peel is a driver-looped fixpoint
+        ("graph_kcore", graph.graph_kcore_checked, graph.ORACLE_KCORE_CHECKED),
+        ("sql_recursive_hierarchy", graph.sql_recursive_hierarchy,
+         graph.ORACLE_SQL_RECURSIVE),
+        ("sink_pydatasource_roundtrip",
+         pydatasource.sink_pydatasource_roundtrip,
+         pydatasource.ORACLE_SINK_PYDATASOURCE),
+        ("retrieval_bm25_topk", corpus.retrieval_bm25_topk,
+         corpus.ORACLE_BM25_TOPK),
+        ("diag_join_key_skew", scale.diag_join_key_skew,
+         scale.ORACLE_DIAG_JOIN_KEY_SKEW),
+        ("events_acf_daily", timeseries.events_acf_daily,
+         timeseries.ORACLE_EVENTS_ACF),
+        ("events_interarrival_stats", eventtime.events_interarrival_stats,
+         eventtime.ORACLE_EVENTS_INTERARRIVAL),
+        ("diag_blocking_pair_census", scale.diag_blocking_pair_census,
+         scale.ORACLE_DIAG_BLOCKING_PAIRS),
+        ("corpus_token_cooccurrence", corpus.corpus_token_cooccurrence,
+         corpus.ORACLE_TOKEN_COOCCURRENCE),
+        ("forecast_seasonal_naive_eval",
+         timeseries.forecast_seasonal_naive_eval,
+         timeseries.ORACLE_FORECAST_SEASONAL_NAIVE),
+        ("quality_quantile_calibrate", traindata.quality_quantile_calibrate,
+         traindata.ORACLE_QUANTILE_CALIBRATE),
+        ("events_trigram_journeys", behavior.events_trigram_journeys,
+         behavior.ORACLE_TRIGRAM_JOURNEYS),
+        ("diag_layout_zonemap", scale.diag_layout_zonemap,
+         scale.ORACLE_DIAG_LAYOUT_ZONEMAP),
+        ("assoc_cramers_v", analytics.assoc_cramers_v,
+         analytics.ORACLE_CRAMERS_V),
+        # Holt smoothing is a float recurrence
+        ("events_holt_linear", eventtime.events_holt_linear_checked,
+         eventtime.ORACLE_EVENTS_HOLT_CHECKED),
+        ("revenue_gini_lorenz", analytics.revenue_gini_lorenz,
+         analytics.ORACLE_GINI_LORENZ),
+        ("corpus_heaps_law", corpus.corpus_heaps_law, corpus.ORACLE_HEAPS_LAW),
+        ("events_peak_concurrency", eventtime.events_peak_concurrency,
+         eventtime.ORACLE_PEAK_CONCURRENCY),
+        ("agg_weighted_percentiles", analytics.agg_weighted_percentiles,
+         analytics.ORACLE_WEIGHTED_PERCENTILES),
+        ("benford_price_audit", analytics.benford_price_audit,
+         analytics.ORACLE_BENFORD),
+        ("events_user_predictability", behavior.events_user_predictability,
+         behavior.ORACLE_USER_PREDICTABILITY),
+        # approximate top-k: the wrapper gates recall
+        ("ann_lsh_topk", similarity.ann_lsh_topk_checked,
+         similarity.ORACLE_ANN_RECALL_GATE),
+        # HLL estimates are approximate
+        ("approx_distinct_counts", approx.approx_distinct_counts_checked,
+         approx.ORACLE_APPROX_DISTINCT_CHECKED),
+        ("case_when_bucketing", rel.case_when_bucketing, rel.ORACLE_CASE_WHEN),
+        ("dedup_clusters", dedup.dedup_clusters, dedup.ORACLE_DEDUP_CLUSTERS),
+        # blocked float-cosine pair set
+        ("dedup_embedding_blocked", similarity.dedup_embedding_blocked_checked,
+         similarity.ORACLE_EMBEDDING_BLOCKED_CHECKED),
+        ("dedup_exact_docs", dedup.dedup_exact_docs, dedup.ORACLE_DEDUP_EXACT),
+        ("dedup_ngram_jaccard", dedup.dedup_ngram_jaccard,
+         dedup.ORACLE_DEDUP_NGRAM),
+        # xxhash64 fingerprints, no DuckDB twin
+        ("dedup_simhash", dedup.dedup_simhash_checked,
+         dedup.ORACLE_SIMHASH_CHECKED),
+        ("distinct_pairs", rel.distinct_pairs, rel.ORACLE_DISTINCT),
+        ("events_asof_last_click", asof.events_asof_last_click,
+         asof.ORACLE_EVENTS_ASOF),
+        ("filter_null_safe", rel.filter_null_safe, rel.ORACLE_FILTER_NULLSAFE),
+        ("streaming_p2_quantile", _streaming_p2_quantile, ORACLE_STREAMING_P2),
+        # the stationary vector is power-iterated
+        ("events_markov_stationary", behavior.events_markov_stationary_checked,
+         behavior.ORACLE_MARKOV_STATIONARY_CHECKED),
+        # DCT pHash has no DuckDB twin
+        ("multimodal_phash_neardup",
+         multimodal.multimodal_phash_neardup_checked,
+         multimodal.ORACLE_PHASH_NEARDUP_CHECKED),
+        # the Hilbert curve has no DuckDB twin
+        ("diag_curve_locality", scale.diag_curve_locality_checked,
+         scale.ORACLE_CURVE_LOCALITY_CHECKED),
+        # xxhash64 KMV sketches, no DuckDB twin
+        ("kmv_set_ops", approx.kmv_set_ops_checked,
+         approx.ORACLE_KMV_SET_OPS_CHECKED),
+        # float cosine aggregates
+        ("embedding_triplet_margin",
+         similarity.embedding_triplet_margin_checked,
+         similarity.ORACLE_TRIPLET_MARGIN_CHECKED),
+        # xxhash64 Bloom probes, no DuckDB twin
+        ("dedup_bloom_prefilter", dedup.dedup_bloom_prefilter_checked,
+         dedup.ORACLE_BLOOM_PREFILTER_CHECKED),
+        # pyarrow footer stats have no stable DuckDB twin
+        ("diag_parquet_rowgroup_stats",
+         scale.diag_parquet_rowgroup_stats_checked,
+         scale.ORACLE_ROWGROUP_STATS_CHECKED),
+        # ---- past the driver window ----
+        ("cdc_apply_customers", cdc.cdc_apply_customers, cdc.ORACLE_CDC_APPLY),
+        ("scd2_apply_customers", cdc.scd2_apply_customers,
+         cdc.ORACLE_SCD2_APPLY),
+        ("profile_customer_stats", cdc.profile_customer_stats,
+         cdc.ORACLE_PROFILE_CUSTOMER),
+        ("scd2_point_in_time_join", cdc.scd2_point_in_time_join,
+         cdc.ORACLE_SCD2_PIT),
+        ("events_asof_tolerance", asof.events_asof_tolerance,
+         asof.ORACLE_EVENTS_ASOF_TOLERANCE),
+        ("events_gapfill_hourly", timeseries.events_gapfill_hourly,
+         timeseries.ORACLE_EVENTS_GAPFILL),
+        ("events_sliding_hourly", timeseries.events_sliding_hourly,
+         timeseries.ORACLE_EVENTS_SLIDING),
+        ("sample_hash_stratified", analytics.sample_hash_stratified,
+         analytics.ORACLE_SAMPLE_HASH),
+        ("dedup_levenshtein_blocked", analytics.dedup_levenshtein_blocked,
+         analytics.ORACLE_DEDUP_LEVENSHTEIN),
+        ("corpus_top_tokens", corpus.corpus_top_tokens,
+         corpus.ORACLE_TOP_TOKENS),
+        ("corpus_tfidf_top_terms", corpus.corpus_tfidf_top_terms,
+         corpus.ORACLE_TFIDF_TOP_TERMS),
+        ("unpivot_nation_metrics", rel.unpivot_nation_metrics,
+         rel.ORACLE_UNPIVOT),
+        ("scalar_regex_fns", rel.scalar_regex_fns, rel.ORACLE_SCALAR_REGEX),
+        ("scalar_variant_fns", rel.scalar_variant_fns,
+         rel.ORACLE_SCALAR_VARIANT),
+        ("scalar_xml_fns", rel.scalar_xml_fns, rel.ORACLE_SCALAR_XML),
+        ("agg_string_concat", rel.agg_string_concat,
+         rel.ORACLE_AGG_STRING_CONCAT),
+        ("source_pydatasource_agg", _source_pydatasource_agg,
+         pydatasource.ORACLE_PYDATASOURCE),
+        ("udtf_sentence_split", _udtf_sentence_split,
+         tablefns.ORACLE_UDTF_SENTENCES),
+        ("dedup_sentences_exact", _dedup_sentences_exact,
+         tablefns.ORACLE_DEDUP_SENTENCES),
+        ("streaming_hourly_rollup", sq["streaming_hourly_rollup"],
+         ev.ORACLE_STREAMING_HOURLY),
+        ("streaming_sliding_rollup", sq["streaming_sliding_rollup"],
+         ev.ORACLE_STREAMING_SLIDING),
+        ("streaming_session_windows", sq["streaming_session_windows"],
+         ev.ORACLE_STREAMING_SESSIONS),
+        ("ddl_schema_catalog", cq["ddl_schema_catalog"],
+         ORACLE_DDL_SCHEMA_CATALOG),
+        ("ddl_assess_catalog", cq["ddl_assess_catalog"],
+         ORACLE_DDL_ASSESS_CATALOG),
+        ("ddl_type_distribution", cq["ddl_type_distribution"],
+         ORACLE_DDL_TYPE_DISTRIBUTION),
+        ("streaming_dedup", sq["streaming_dedup"], ORACLE_STREAMING_DEDUP),
+        ("streaming_user_stats", sq["streaming_user_stats"],
+         ORACLE_STREAMING_USER_STATS),
+        ("streaming_cusum_alerts", sq["streaming_cusum_alerts"],
+         ORACLE_STREAMING_CUSUM),
+        ("streaming_heavy_hitters", sq["streaming_heavy_hitters"],
+         ORACLE_STREAMING_MG),
+        # approximate top-k: the wrapper gates recall
+        ("ann_ivf_topk", similarity.ann_ivf_topk_checked,
+         similarity.ORACLE_ANN_RECALL_GATE),
+        # float features of a decoded payload
+        ("multimodal_features", _multimodal_features_checked,
+         ORACLE_MULTIMODAL_FEATURES),
+        # PageRank is iterative float math
+        ("graph_pagerank_top", graph.graph_pagerank_top_checked,
+         graph.ORACLE_PAGERANK_CHECKED),
+        ("events_funnel_conversion", behavior.events_funnel_conversion,
+         behavior.ORACLE_FUNNEL),
+        ("events_retention_cohorts", behavior.events_retention_cohorts,
+         behavior.ORACLE_RETENTION),
+        ("events_rolling_stats", behavior.events_rolling_stats,
+         behavior.ORACLE_ROLLING),
+        ("events_transition_matrix", behavior.events_transition_matrix,
+         behavior.ORACLE_TRANSITIONS),
+        ("events_value_zscore", behavior.events_value_zscore,
+         behavior.ORACLE_ZSCORE),
+        ("data_split_assign", traindata.data_split_assign,
+         traindata.ORACLE_DATA_SPLIT),
+        ("corpus_pack_sequences", traindata.corpus_pack_sequences,
+         traindata.ORACLE_PACK_SEQUENCES),
+        ("embedding_quantize_int8", traindata.embedding_quantize_int8,
+         traindata.ORACLE_QUANTIZE),
+        ("contamination_ngram_overlap", traindata.contamination_ngram_overlap,
+         traindata.ORACLE_CONTAMINATION),
+        ("validate_customer_constraints",
+         validate.validate_customer_constraints,
+         validate.ORACLE_VALIDATE_CUSTOMER),
+        ("snapshot_diff_customers", validate.snapshot_diff_customers,
+         validate.ORACLE_SNAPSHOT_DIFF),
+        ("migrate_reconcile_customers", validate.migrate_reconcile_customers,
+         validate.ORACLE_RECONCILE),
+        ("validate_star_expectations", validate.validate_star_expectations,
+         validate.ORACLE_STAR_EXPECTATIONS),
+        # approximate top-k: the wrapper gates recall
+        ("ann_pq_topk", similarity.ann_pq_topk_checked,
+         similarity.ORACLE_ANN_RECALL_GATE),
+        ("text_gopher_filters", textstats.text_gopher_filters,
+         textstats.ORACLE_TEXT_GOPHER),
+        ("text_repetition_metrics", textstats.text_repetition_metrics,
+         textstats.ORACLE_TEXT_REPETITION),
+        ("agg_histogram_equi_width", analytics.agg_histogram_equi_width,
+         analytics.ORACLE_AGG_HISTOGRAM),
+        ("join_salted_hot_key", scale.join_salted_hot_key,
+         scale.ORACLE_JOIN_SALTED_HOT),
+        ("q1_pricing_summary", rel.q1_pricing_summary, rel.ORACLE_Q1),
+        ("q9_product_profit", rext.q9_product_profit, rext.ORACLE_Q9),
+        ("agg_rollup", rel.agg_rollup, rel.ORACLE_AGG_ROLLUP),
+        ("window_ntile_scalable", scale.window_ntile_scalable,
+         rel.ORACLE_WINDOW_NTILE),
+        ("streaming_interval_join", sq["streaming_interval_join"],
+         rel.ORACLE_STREAMING_INTERVAL_JOIN),
+        ("dedup_ngram_jaccard_pruned", dedup.dedup_ngram_jaccard_pruned,
+         dedup.ORACLE_DEDUP_NGRAM_PRUNED),
+        ("corpus_curate", corpus.corpus_curate, corpus.ORACLE_CORPUS_CURATE),
+        ("text_quality_score", textstats.text_quality_score,
+         textstats.ORACLE_TEXT_QUALITY),
+        ("migrate_customer_cast", cq["migrate_customer_cast"],
+         ORACLE_MIGRATE_CUSTOMER_CAST),
+        ("dedup_incremental_exact", traindata.dedup_incremental_exact,
+         traindata.ORACLE_DEDUP_INCREMENTAL),
+        ("sample_per_group_topn", traindata.sample_per_group_topn,
+         traindata.ORACLE_SAMPLE_TOPN),
+        ("corpus_mix_weights", traindata.corpus_mix_weights,
+         traindata.ORACLE_MIX_WEIGHTS),
+        ("corpus_token_budget_cut", traindata.corpus_token_budget_cut,
+         traindata.ORACLE_TOKEN_BUDGET),
+        ("streaming_zscore_alerts", sq["streaming_zscore_alerts"],
+         behavior.ORACLE_ZSCORE),
+        ("streaming_user_stats_v2", sq["streaming_user_stats_v2"],
+         ORACLE_STREAMING_USER_STATS),
+        # Misra-Gries counters depend on merge order
+        ("corpus_frequent_tokens_mg", approx.frequent_tokens_mg_checked,
+         approx.ORACLE_FREQUENT_TOKENS_MG_CHECKED),
+        ("customer_rfm_segments", analytics.customer_rfm_segments,
+         analytics.ORACLE_CUSTOMER_RFM),
+        ("part_abc_analysis", analytics.part_abc_analysis,
+         analytics.ORACLE_PART_ABC),
+        ("orders_open_backlog_daily", analytics.orders_open_backlog_daily,
+         analytics.ORACLE_ORDERS_BACKLOG),
+        ("audience_overlap_matrix", behavior.audience_overlap_matrix,
+         behavior.ORACLE_AUDIENCE_OVERLAP),
+        ("geo_nearest_site_assignment", analytics.geo_nearest_site_assignment,
+         analytics.ORACLE_GEO_NEAREST),
+        ("supplier_on_time_scorecard", analytics.supplier_on_time_scorecard,
+         analytics.ORACLE_SUPPLIER_SCORECARD),
+        ("events_dow_hour_profile", analytics.events_dow_hour_profile,
+         analytics.ORACLE_EVENTS_DOW_HOUR),
+        ("events_mad_outliers", analytics.events_mad_outliers,
+         analytics.ORACLE_EVENTS_MAD),
+        ("observe_scan_metrics", validate.observe_scan_metrics,
+         validate.ORACLE_OBSERVE_METRICS),
+        ("orders_monthly_growth", analytics.orders_monthly_growth,
+         analytics.ORACLE_ORDERS_MONTHLY_GROWTH),
+        ("text_langid_eval", textstats.text_langid_eval,
+         textstats.ORACLE_TEXT_LANGID_EVAL),
+        ("part_pareto_frontier", analytics.part_pareto_frontier,
+         analytics.ORACLE_PART_PARETO),
+        ("basket_part_affinity", analytics.basket_part_affinity,
+         analytics.ORACLE_BASKET_AFFINITY),
+        ("events_locf_daily", timeseries.events_locf_daily,
+         timeseries.ORACLE_EVENTS_LOCF),
+        ("events_pattern_vshape", eventtime.events_pattern_vshape,
+         eventtime.ORACLE_PATTERN_VSHAPE),
+        ("orders_keyset_page", analytics.orders_keyset_page,
+         analytics.ORACLE_ORDERS_KEYSET),
+        ("customers_adoption_curve", analytics.customers_adoption_curve,
+         analytics.ORACLE_CUSTOMERS_ADOPTION),
+        ("events_activity_streaks", eventtime.events_activity_streaks,
+         eventtime.ORACLE_ACTIVITY_STREAKS),
+        ("events_ohlc_bars", eventtime.events_ohlc_bars,
+         eventtime.ORACLE_EVENTS_OHLC),
+        ("events_twap", eventtime.events_twap, eventtime.ORACLE_EVENTS_TWAP),
+        ("events_interval_islands", eventtime.events_interval_islands,
+         eventtime.ORACLE_EVENTS_ISLANDS),
+        ("events_active_users_7d", eventtime.events_active_users_7d,
+         eventtime.ORACLE_EVENTS_ACTIVE_7D),
+        ("graph_hierarchy_depths", graph.graph_hierarchy_depths,
+         graph.ORACLE_HIERARCHY_DEPTHS),
+        ("corpus_bigram_counts", corpus.corpus_bigram_counts,
+         corpus.ORACLE_BIGRAM_COUNTS),
+        ("text_pii_redact", textstats.text_pii_redact,
+         textstats.ORACLE_TEXT_PII),
+        ("sink_partitioned_prune", sources.sink_partitioned_prune,
+         sources.ORACLE_SINK_PARTITIONED),
+        ("dedup_substring_spans", dedup.dedup_substring_spans,
+         dedup.ORACLE_DEDUP_SUBSTRING),
+        ("scd2_history_from_events", cdc.scd2_history_from_events,
+         cdc.ORACLE_SCD2_FROM_EVENTS),
+        ("rollup_incremental_refresh", timeseries.rollup_incremental_refresh,
+         timeseries.ORACLE_ROLLUP_REFRESH),
+        ("corpus_bpe_merge_pairs", corpus.corpus_bpe_merge_pairs,
+         corpus.ORACLE_BPE_MERGE_PAIRS),
+        ("events_session_attribution", eventtime.events_session_attribution,
+         eventtime.ORACLE_SESSION_ATTRIBUTION),
+        ("scale_zorder_zvalues", scale.scale_zorder_zvalues,
+         scale.ORACLE_ZORDER),
+        ("window_running_distinct", analytics.window_running_distinct,
+         analytics.ORACLE_WINDOW_RUNNING_DISTINCT),
+        ("sink_compact_small_files", sources.sink_compact_small_files,
+         sources.ORACLE_SINK_COMPACT),
+        ("source_schema_evolution", sources.source_schema_evolution,
+         sources.ORACLE_SCHEMA_EVOLUTION),
+        ("sink_dynamic_partition_overwrite",
+         sources.sink_dynamic_partition_overwrite,
+         sources.ORACLE_SINK_DYNPART),
+        # the EMA is a per-key float recurrence
+        ("events_ema", eventtime.events_ema_checked,
+         eventtime.ORACLE_EVENTS_EMA_CHECKED),
+        ("q4_order_priority", rext.q4_order_priority, rext.ORACLE_Q4),
+        ("q7_volume_shipping", rext.q7_volume_shipping, rext.ORACLE_Q7),
+        ("q12_priority_by_status", rext.q12_priority_by_status,
+         rext.ORACLE_Q12),
+        ("q13_customer_distribution", rext.q13_customer_distribution,
+         rext.ORACLE_Q13),
+        ("q14_promo_revenue", rext.q14_promo_revenue, rext.ORACLE_Q14),
+        ("q15_top_supplier", rext.q15_top_supplier, rext.ORACLE_Q15),
+        ("q17_small_quantity_revenue", rext.q17_small_quantity_revenue,
+         rext.ORACLE_Q17),
+        ("q19_disjunctive_predicates", rext.q19_disjunctive_predicates,
+         rext.ORACLE_Q19),
+        ("q22_dormant_customers", rext.q22_dormant_customers, rext.ORACLE_Q22),
+        ("corr_above_nation_avg", rext.corr_above_nation_avg,
+         rext.ORACLE_CORR_AVG),
+        ("having_global_share", rext.having_global_share,
+         rext.ORACLE_HAVING_SHARE),
+        ("window_range_frame", rext.window_range_frame,
+         rext.ORACLE_WINDOW_RANGE_FRAME),
+        ("q16_supplier_variety", rext.q16_supplier_variety, rext.ORACLE_Q16),
+        ("q20_part_share_suppliers", rext.q20_part_share_suppliers,
+         rext.ORACLE_Q20),
+        ("q2_min_cost_supplier", rext.q2_min_cost_supplier, rext.ORACLE_Q2),
+        ("q8_market_share", rext.q8_market_share, rext.ORACLE_Q8),
+        ("q11_important_stock", rext.q11_important_stock, rext.ORACLE_Q11),
+        ("q21_waiting_suppliers", rext.q21_waiting_suppliers, rext.ORACLE_Q21),
+        ("q3_shipping_priority", rel.q3_shipping_priority, rel.ORACLE_Q3),
+        ("q5_nation_revenue", rel.q5_nation_revenue, rel.ORACLE_Q5),
+        ("q6_forecast_revenue", rel.q6_forecast_revenue, rel.ORACLE_Q6),
+        ("q10_returned_items", rel.q10_returned_items, rel.ORACLE_Q10),
+        ("q18_large_orders", rel.q18_large_orders, rel.ORACLE_Q18),
+        ("join_inner_broadcast", rel.join_inner_broadcast,
+         rel.ORACLE_JOIN_INNER),
+        ("events_tumbling_hourly", rel.events_tumbling_hourly,
+         rel.ORACLE_EVENTS_HOURLY),
+        ("events_sessionize", rel.events_sessionize,
+         rel.ORACLE_EVENTS_SESSIONIZE),
+        ("text_token_stats", textstats.text_token_stats,
+         textstats.ORACLE_TEXT_TOKENS),
+        ("text_normalize", textstats.text_normalize,
+         textstats.ORACLE_TEXT_NORMALIZE),
+        ("text_langid", textstats.text_langid, textstats.ORACLE_TEXT_LANGID),
+        ("text_fingerprint", textstats.text_fingerprint,
+         textstats.ORACLE_TEXT_FINGERPRINT),
+        ("multimodal_metadata", multimodal.multimodal_metadata,
+         multimodal.ORACLE_MULTIMODAL_META),
+        ("dedup_embedding_cosine", dedup.dedup_embedding_cosine,
+         dedup.ORACLE_DEDUP_EMBEDDING),
+        # GK estimates are approximate
+        ("approx_quantiles", approx.approx_quantiles_checked,
+         approx.ORACLE_APPROX_QUANTILES_CHECKED),
+        ("corpus_token_histogram", corpus.corpus_token_histogram,
+         corpus.ORACLE_TOKEN_HISTOGRAM),
+        ("embedding_covariance", corpus.embedding_covariance,
+         corpus.ORACLE_EMBEDDING_COVARIANCE),
+        ("dedup_keep_representatives", dedup.dedup_keep_representatives,
+         dedup.ORACLE_DEDUP_KEEP_REPRESENTATIVES),
+        ("set_intersect_all", rel.set_intersect_all,
+         rel.ORACLE_SET_INTERSECT_ALL),
+        ("set_except_all", rel.set_except_all, rel.ORACLE_SET_EXCEPT_ALL),
+        ("source_roundtrip_formats", _source_roundtrip,
+         sources.ORACLE_SOURCE_ROUNDTRIP),
+        ("agg_corr_regr", analytics.agg_corr_regr,
+         analytics.ORACLE_AGG_CORR_REGR),
+        ("agg_percentiles", analytics.agg_percentiles,
+         analytics.ORACLE_AGG_PERCENTILES),
+        ("scalar_array_fns", analytics.scalar_array_fns,
+         analytics.ORACLE_SCALAR_ARRAY),
+        ("ann_brute_force_topk", similarity.ann_brute_force_topk,
+         similarity.ORACLE_ANN_BRUTE),
+        ("scan_filter_projection", rel.scan_filter_projection,
+         rel.ORACLE_SCAN),
+        ("join_left_outer", rel.join_left_outer, rel.ORACLE_JOIN_LEFT),
+        ("join_semi", rel.join_semi, rel.ORACLE_JOIN_SEMI),
+        ("join_anti", rel.join_anti, rel.ORACLE_JOIN_ANTI),
+        ("join_full_outer", rel.join_full_outer, rel.ORACLE_JOIN_FULL),
+        ("join_cross", rel.join_cross, rel.ORACLE_JOIN_CROSS),
+        ("join_range_nonequi", rel.join_range_nonequi, rel.ORACLE_JOIN_RANGE),
+        ("agg_distinct_counts", rel.agg_distinct_counts,
+         rel.ORACLE_AGG_DISTINCT),
+        ("agg_cube", rel.agg_cube, rel.ORACLE_AGG_CUBE),
+        ("agg_grouping_sets", rel.agg_grouping_sets,
+         rel.ORACLE_AGG_GROUPING_SETS),
+        ("agg_stats", rel.agg_stats, rel.ORACLE_AGG_STATS),
+        ("agg_pivot", rel.agg_pivot, rel.ORACLE_AGG_PIVOT),
+        ("window_topk_per_group", rel.window_topk_per_group,
+         rel.ORACLE_WINDOW_TOPK),
+        ("window_rank_dense", rel.window_rank_dense, rel.ORACLE_WINDOW_RANK),
+        ("window_lag_lead", rel.window_lag_lead, rel.ORACLE_WINDOW_LAG),
+        ("window_running_sum", rel.window_running_sum,
+         rel.ORACLE_WINDOW_RUNNING),
+        ("window_ntile_percent", rel.window_ntile_percent,
+         rel.ORACLE_WINDOW_NTILE_BOUNDED),
+        ("sort_limit_topk", rel.sort_limit_topk, rel.ORACLE_SORT_TOPK),
+        ("set_union_all", rel.set_union_all, rel.ORACLE_SET_UNION),
+        ("set_intersect", rel.set_intersect, rel.ORACLE_SET_INTERSECT),
+        ("set_except", rel.set_except, rel.ORACLE_SET_EXCEPT),
+        ("scalar_string_fns", rel.scalar_string_fns, rel.ORACLE_SCALAR_STRING),
+        ("scalar_date_fns", rel.scalar_date_fns, rel.ORACLE_SCALAR_DATE),
+        ("scalar_math_fns", rel.scalar_math_fns, rel.ORACLE_SCALAR_MATH),
+        ("scalar_json_fns", rel.scalar_json_fns, rel.ORACLE_SCALAR_JSON),
+        # HLL estimates are approximate
+        ("approx_hll_union", approx.approx_hll_union_checked,
+         approx.ORACLE_APPROX_HLL_UNION_CHECKED),
+        ("multimodal_resize", _multimodal_resize, ORACLE_MULTIMODAL_RESIZE),
+        ("multimodal_frame_sample", _multimodal_frame_sample,
+         ORACLE_MULTIMODAL_FRAME_SAMPLE),
+        # xxhash64 MinHash bands, no DuckDB twin
+        ("dedup_minhash_lsh", dedup.dedup_minhash_lsh_checked,
+         dedup.ORACLE_MINHASH_LSH_CHECKED),
+        ("rerank_ann_shortlist", rerank.rerank_ann_shortlist,
+         rerank.ORACLE_RERANK_ANN),
+        ("corpus_curation_report", corpus.corpus_curation_report,
+         corpus.ORACLE_CURATION_REPORT),
+        ("export_training_shards", traindata.export_training_shards,
+         traindata.ORACLE_EXPORT_SHARDS),
+        ("corpus_mixture_sample", traindata.corpus_mixture_sample,
+         traindata.ORACLE_MIXTURE_SAMPLE),
+        # merges after the first are driver-looped
+        ("bpe_train_merges", corpus.bpe_train_merges_checked,
+         corpus.ORACLE_BPE_TRAIN_CHECKED),
+        ("merge_into_customers", cdc.merge_into_customers,
+         cdc.ORACLE_MERGE_INTO),
+        ("streaming_cdc_upsert", ev.streaming_cdc_upsert,
+         ev.ORACLE_STREAMING_CDC_UPSERT),
+        ("corpus_neardup_report", dedup.corpus_neardup_report,
+         dedup.ORACLE_NEARDUP_REPORT),
+        ("corpus_chunk_overlap", corpus.corpus_chunk_overlap,
+         corpus.ORACLE_CHUNK_OVERLAP),
+        ("corpus_doc_lm_coverage", corpus.corpus_doc_lm_coverage,
+         corpus.ORACLE_DOC_LM_COVERAGE),
+        ("events_linear_interp_daily", timeseries.events_linear_interp_daily,
+         timeseries.ORACLE_EVENTS_LINEAR_INTERP),
+        ("source_dpp_star_join", sources.source_dpp_star_join,
+         sources.ORACLE_DPP_STAR_JOIN),
+        # encodings follow the driver-looped merges
+        ("bpe_encode_stats", corpus.bpe_encode_stats_checked,
+         corpus.ORACLE_BPE_ENCODE_CHECKED),
+        # the keep-set follows float k-means cells
+        ("dedup_semdedup", dedup.dedup_semdedup_checked,
+         dedup.ORACLE_SEMDEDUP_CHECKED),
+        ("streaming_left_outer_join", sq["streaming_left_outer_join"],
+         ORACLE_STREAMING_LOJ),
+        ("events_winsorize_clip", analytics.events_winsorize_clip,
+         analytics.ORACLE_EVENTS_WINSORIZE),
+        # Count-Min estimates are approximate
+        ("corpus_token_countmin", approx.token_counts_countmin_checked,
+         approx.ORACLE_COUNTMIN_CHECKED),
+        ("embedding_standardize", traindata.embedding_standardize,
+         traindata.ORACLE_EMBEDDING_STANDARDIZE),
+        ("corpus_build_pipeline", corpus.corpus_build_pipeline,
+         corpus.ORACLE_BUILD_PIPELINE),
+        ("corpus_decontaminate", corpus.corpus_decontaminate,
+         corpus.ORACLE_DECONTAMINATE),
+        ("corpus_gopher_rules", corpus.corpus_gopher_rules,
+         corpus.ORACLE_GOPHER_RULES),
+        # codes come from float k-means codebooks
+        ("ann_pq_encode", similarity.ann_pq_encode_checked,
+         similarity.ORACLE_PQ_ENCODE_CHECKED),
+        ("corpus_pack_global_stream", traindata.corpus_pack_global_stream,
+         traindata.ORACLE_PACK_GLOBAL_STREAM),
+        ("source_bloom_runtime_filter", sources.source_bloom_runtime_filter,
+         sources.ORACLE_BLOOM_RUNTIME_FILTER),
+        ("agg_histogram_equi_depth", scale.agg_histogram_equi_depth,
+         scale.ORACLE_HISTOGRAM_EQUI_DEPTH),
+        # CUSUM is a per-key float recurrence
+        ("events_cusum_drift", eventtime.events_cusum_drift_checked,
+         eventtime.ORACLE_EVENTS_CUSUM_CHECKED),
+        # xxhash64 MinHash bands, no DuckDB twin
+        ("dedup_incremental_minhash", dedup.dedup_incremental_minhash_checked,
+         dedup.ORACLE_INCREMENTAL_MINHASH_CHECKED),
+        ("gdpr_delete_cascade", validate.gdpr_delete_cascade,
+         validate.ORACLE_GDPR_CASCADE),
+        ("corpus_lang_drift_chi2", corpus.corpus_lang_drift_chi2,
+         corpus.ORACLE_LANG_DRIFT_CHI2),
+        ("classifier_quality_linear", textstats.classifier_quality_linear,
+         textstats.ORACLE_CLASSIFIER_QUALITY),
+        ("classifier_gains_deciles", textstats.classifier_gains_deciles,
+         textstats.ORACLE_CLASSIFIER_GAINS),
+        ("corpus_source_ks_drift", corpus.corpus_source_ks_drift,
+         corpus.ORACLE_SOURCE_KS_DRIFT),
+        ("split_leakage_safe", traindata.split_leakage_safe,
+         traindata.ORACLE_SPLIT_LEAKAGE_SAFE),
+        ("corpus_source_similarity", corpus.corpus_source_similarity,
+         corpus.ORACLE_SOURCE_SIMILARITY),
+        # the eigendecomposition is iterative float math
+        ("embedding_pca_project", similarity.embedding_pca_project_checked,
+         similarity.ORACLE_PCA_PROJECT_CHECKED),
+        ("orders_cohort_retention", analytics.orders_cohort_retention,
+         analytics.ORACLE_ORDERS_COHORT_RETENTION),
+        ("events_user_lifecycle", analytics.events_user_lifecycle,
+         analytics.ORACLE_EVENTS_USER_LIFECYCLE),
+        ("graph_triangle_stats", graph.graph_triangle_stats,
+         graph.ORACLE_TRIANGLE_STATS),
+        ("text_readability_scores", textstats.text_readability_scores,
+         textstats.ORACLE_TEXT_READABILITY),
+        ("corpus_doc_commonness", corpus.corpus_doc_commonness,
+         corpus.ORACLE_DOC_COMMONNESS),
+        # approximate top-k: the wrapper gates recall
+        ("ann_ivf_pq_topk", similarity.ann_ivf_pq_topk_checked,
+         similarity.ORACLE_ANN_RECALL_GATE),
+        ("dedup_containment", dedup.dedup_containment,
+         dedup.ORACLE_DEDUP_CONTAINMENT),
+        ("corpus_dsir_importance", corpus.corpus_dsir_importance,
+         corpus.ORACLE_DSIR_IMPORTANCE),
+        ("graph_degree_distribution", graph.graph_degree_distribution,
+         graph.ORACLE_DEGREE_DISTRIBUTION),
+        ("corpus_distinctive_terms", corpus.corpus_distinctive_terms,
+         corpus.ORACLE_DISTINCTIVE_TERMS),
+        ("embedding_source_drift", similarity.embedding_source_drift,
+         similarity.ORACLE_EMBEDDING_SOURCE_DRIFT),
+        ("migrate_type_fit_audit", validate.migrate_type_fit_audit,
+         validate.ORACLE_TYPE_FIT_AUDIT),
+        ("orders_fulfillment_latency", analytics.orders_fulfillment_latency,
+         analytics.ORACLE_FULFILLMENT_LATENCY),
+        ("orders_mom_contribution", analytics.orders_mom_contribution,
+         analytics.ORACLE_MOM_CONTRIBUTION),
+        ("sql_scalar_udf_battery", tablefns.sql_scalar_udf_battery,
+         tablefns.ORACLE_SQL_SCALAR_UDF),
+        ("privacy_l_diversity", validate.privacy_l_diversity,
+         validate.ORACLE_L_DIVERSITY),
+        ("scalar_null_semantics", rext.scalar_null_semantics,
+         rext.ORACLE_NULL_SEMANTICS),
+        ("events_id_gap_audit", eventtime.events_id_gap_audit,
+         eventtime.ORACLE_ID_GAP_AUDIT),
+        ("ivm_join_view_delta", cdc.ivm_join_view_delta,
+         cdc.ORACLE_IVM_JOIN_VIEW),
+        ("agg_median_ci", analytics.agg_median_ci, analytics.ORACLE_MEDIAN_CI),
+        ("events_error_conversion", behavior.events_error_conversion,
+         behavior.ORACLE_ERROR_CONVERSION),
+        ("orders_theilsen_trend", analytics.orders_theilsen_trend,
+         analytics.ORACLE_THEILSEN),
+        ("events_weekly_seasonality_strength",
+         eventtime.events_weekly_seasonality_strength,
+         eventtime.ORACLE_WEEKLY_SEASONALITY),
+        ("orders_cohort_ltv", analytics.orders_cohort_ltv,
+         analytics.ORACLE_COHORT_LTV),
+        ("events_multitouch_attribution",
+         behavior.events_multitouch_attribution, behavior.ORACLE_MULTITOUCH),
+        ("diag_join_size_forecast", scale.diag_join_size_forecast,
+         scale.ORACLE_JOIN_SIZE_FORECAST),
+        ("udtf_table_arg_sessionize", tablefns.udtf_table_arg_sessionize,
+         rel.ORACLE_EVENTS_SESSIONIZE),
+        ("stat_mann_whitney_u", analytics.stat_mann_whitney_u,
+         analytics.ORACLE_MANN_WHITNEY),
+        ("stat_spearman_corr", analytics.stat_spearman_corr,
+         analytics.ORACLE_SPEARMAN),
+        ("stat_mann_kendall_trend", analytics.stat_mann_kendall_trend,
+         analytics.ORACLE_MANN_KENDALL),
+        ("stat_kendall_tau", analytics.stat_kendall_tau,
+         analytics.ORACLE_KENDALL_TAU),
+        ("sql_pipe_syntax_battery", rext.sql_pipe_syntax_battery,
+         rext.ORACLE_SQL_PIPE),
+    ])
 
 
-class _ShadowGuardDict(dict):
-    """Registry accumulator that REFUSES silent shadowing: the registry is
-    composed from ~20 ``update`` calls across operator modules, and a
-    name collision used to overwrite quietly (it happened once, 2754aaf —
-    a window entry silently replaced by a later family update). Every
-    insert goes through ``__setitem__``; re-inserting an existing key
-    raises at import/build time instead of shipping the wrong callable
-    under a driver-checked name. Deliberate re-registration must ``pop``
-    first (the existing streaming/migrate idiom) or filter ``if k not in
-    q`` (the rext idiom)."""
-
-    def __setitem__(self, key, value):
-        if key in self:
-            raise ValueError(
-                f"registry name collision: {key!r} is already registered "
-                "— rename the entry or pop the old one explicitly")
-        super().__setitem__(key, value)
-
-    def update(self, other=(), **kw):  # dict.update bypasses __setitem__
-        items = other.items() if hasattr(other, "items") else other
-        for k, v in items:
-            self[k] = v
-        for k, v in kw.items():
-            self[k] = v
+def _unique_names(table: list[tuple]) -> list[tuple]:
+    """``table`` itself, after checking that no name repeats."""
+    seen = set()
+    for name, _, _ in table:
+        if name in seen:
+            raise ValueError(f"registry name collision: {name!r} is "
+                             "registered twice")
+        seen.add(name)
+    return table
 
 
 def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Entry order is load-bearing: the driver's CORRECTNESS pass checks the
-    FIRST 50 entries per round (r01 and r02 both stopped exactly at entry
-    #50). Entries are therefore ordered by evidence need, not by topic.
-
-    ROUND-3 ROTATION (executes the plan recorded here last round, per the
-    r02 verdict): the 49 r02-green entries move past the cap; the window
-    now holds (1) the 22 oracle-backed entries only judge-verified so far
-    (cdc/scd2/pit/profile, streaming rollups, udtf + sentence dedup,
-    pydatasource, regex/variant/xml/listagg batteries, gapfill/sliding,
-    tfidf/top-tokens, asof-tolerance, unpivot, levenshtein, stratified
-    sample), (2) the 8 rows-only entries that have never had a driver row
-    (ann_ivf, pagerank, multimodal_features, ddl_* ×3, streaming_dedup/
-    user_stats), (3) new round-3 entries, and (4) r02-green canaries to
-    fill to 50. approx_quantiles (err:"no_oracle" in r02) moves past the
-    cap — its exact twin agg_percentiles is driver-green and its error
-    bound is pytest-pinned, so it stops burning a window slot.
-
-    ROUND-4 ROTATION (executes the plan recorded here last round, per the
-    r03 verdict): the entire dict is still built in the round-3 layout
-    below, then REORDERED at the end of this function by ``_WINDOW_R04`` —
-    the 41 r03-green window entries move past the cap, and the window now
-    holds exactly the 47 entries that have never had a driver CORRECTNESS
-    row (the 44 late-r03 parked entries in their recorded order, plus
-    approx_hll_union / multimodal_resize / multimodal_frame_sample, which
-    the r03 audit found were also never in any driver window), topped up
-    to 50 with 3 fresh family-spanning canaries (join_full_outer,
-    agg_grouping_sets, text_fingerprint) that were last driver-checked in
-    r01. New round-4 entries go past the cap and form the start of the
-    round-5 window.
-
-    ROUND-5 ROTATION (executes the plan recorded here last round, per the
-    r04 verdict): reorder now happens via ``_window_r05()`` — the 18
-    entries with no driver row in r01–r04 (``_NEVER_CHECKED_R04``), then
-    every new round-5 entry (``_ROUND5_NEW``), then oldest-first r01/r02
-    canaries (``_CANARIES_R05``) filling to 50. Closing note on the
-    original plan text (kept for the audit trail): (1) the new round-4
-    entries, which had no driver row
-    then — rerank_ann_shortlist, corpus_curation_report,
-    export_training_shards, corpus_mixture_sample, merge_into_customers,
-    streaming_cdc_upsert, corpus_neardup_report, corpus_chunk_overlap,
-    corpus_doc_lm_coverage, events_linear_interp_daily,
-    source_dpp_star_join (all oracle-backed, locally green) and
-    bpe_train_merges / bpe_encode_stats / dedup_semdedup (rows-only,
-    pytest-pinned vs pure-Python BPE twins and a brute-force numpy
-    sweep) — then (2) fresh canaries last in-window in r01/r02 (e.g.
-    window_lag_lead, set_except_all, q3_shipping_priority,
-    q5_nation_revenue, q10_returned_items, events_asof_last_click,
-    dedup_exact_docs, agg_pivot), filling to exactly 50; keep everything
-    r04-green past the cap. Verify with
-    ``python tools/check_oracle_parity.py --first 50`` before committing.
-
-    ROUND-6 ROTATION PLAN: after r5's window lands, EVERY registry entry
-    has at least one driver CORRECTNESS row — cumulative coverage is
-    complete, so the window's job shifts from debuts to regression
-    rotation. Build ``_window_r06()`` as (1) any entry whose r5 row came
-    back red/error (fix first, re-window), (2) new round-6 entries,
-    (3) canaries rotating oldest-checked-first (after r5, that's the
-    r02-checked block ``_CANARIES_R05`` did not reach — q-series
-    q2/q4/q7/q8/q11..q22, scalar_array_fns, set_intersect_all,
-    text_normalize/quality/token_stats, events_tumbling_hourly,
-    streaming_interval_join, migrate_customer_cast, multimodal_metadata,
-    source_roundtrip_formats, corpus_token_histogram — then r03; note
-    the six late-r5 additions shrank the r5 canary fill to 12
-    (50 - 18 never-checked - 20 round-5 entries), so
-    window_topk_per_group, window_running_sum, window_ntile_percent,
-    set_except, set_intersect, set_union_all, and sort_limit_topk also
-    rotated out and stay due). Same verification command before
-    committing.
-
-    ROUND-6 ROTATION (executes the plan above, per the r5 verdict): no
-    r5 entry came back red, so ``_window_r06()`` is (1) every new
-    round-6 entry (``_ROUND6_NEW``), then (2) the 71 entries last
-    driver-checked in r01/r02 rotating oldest-checked-first
-    (``_CANARIES_R06``: the 25 r01-checked entries, then r02-checked)
-    filling to 50. The stale tail that misses this window stays due
-    for round 7, again oldest-first.
-
-    ROUND-7 ROTATION PLAN: the 39 round-6 debuts left an 11-canary fill,
-    so 59 of ``_CANARIES_R06`` missed this window and are first in line
-    for round 7 (in list order): dedup_embedding_cosine,
-    dedup_keep_representatives, dedup_ngram_jaccard_pruned,
-    embedding_covariance,
-    events_sessionize, having_global_share, join_inner_broadcast,
-    q10_returned_items, q12_priority_by_status, q13_customer_distribution,
-    q14_promo_revenue, q15_top_supplier, q20_part_share_suppliers,
-    q3_shipping_priority, q5_nation_revenue, q6_forecast_revenue,
-    set_except_all, streaming_interval_join, text_langid,
-    text_quality_score, text_token_stats, window_ntile_scalable,
-    window_range_frame, corpus_token_histogram, events_tumbling_hourly,
-    migrate_customer_cast, multimodal_metadata, q11_important_stock,
-    q16_supplier_variety, q17_small_quantity_revenue,
-    q19_disjunctive_predicates, q21_waiting_suppliers,
-    q22_dormant_customers, q2_min_cost_supplier, q4_order_priority,
-    q7_volume_shipping, q8_market_share, scalar_array_fns,
-    set_intersect_all, source_roundtrip_formats, text_normalize,
-    corpus_curate, corr_above_nation_avg, sort_limit_topk,
-    window_running_sum, agg_corr_regr, agg_percentiles,
-    window_topk_per_group, ann_brute_force_topk, dedup_minhash_lsh,
-    set_intersect, set_union_all, window_ntile_percent,
-    scalar_math_fns, scalar_string_fns, set_except,
-    q18_large_orders, scalar_date_fns, scalar_json_fns
-    (the last eighteen — window_topk_per_group onward — displaced as the
-    late debuts — retrieval_bm25_topk,
-    diag_join_key_skew, events_acf_daily, events_interarrival_stats,
-    diag_blocking_pair_census, corpus_token_cooccurrence,
-    forecast_seasonal_naive_eval, quality_quantile_calibrate,
-    events_trigram_journeys, diag_layout_zonemap, assoc_cramers_v,
-    events_holt_linear, revenue_gini_lorenz, corpus_heaps_law,
-    events_peak_concurrency, agg_weighted_percentiles,
-    benford_price_audit, events_user_predictability — shrank the fill
-    29→11; the debut list then FROZE at 39 — later round-6 entries go
-    to ``_ROUND6_LATE`` past the window instead of eating the last
-    canary slots). Build
-    ``_window_r07()`` as (1) any red r6 entry (fix first), (2) new
-    round-7 entries, (3) ``_ROUND6_LATE`` (never driver-checked — they
-    debut in r7), (4) these 59, then (5) r03-checked entries,
-    oldest-first, filling to 50. All 59 were judged green locally this
-    round (full sf0.01 sweep + the r5 judge's 22-entry sample), so the
-    displacement is a scheduling note, not a coverage gap. Same
-    verification command before committing.
-
-    ROUND-7 ROTATION (executes the plan above, per the r6 verdict): no
-    r6 entry came back red (CORRECTNESS_r06: 44 hash-matches + 6
-    by-design rows-only, zero errors), so ``_window_r07()`` is
-    (1) every new round-7 entry (``_ROUND7_NEW``), then (2) the 27
-    never-driver-checked ``_ROUND6_LATE`` entries earning their debut
-    rows, then (3) the 59 displaced r01/r02-stale canaries in the
-    recorded order (``_CANARIES_R07``) filling to exactly 50. Adding a
-    round-7 entry to ``_ROUND7_NEW`` automatically displaces the
-    trailing canary. Arithmetic with the frozen debut list:
-    len(_ROUND7_NEW) debuts + 27 late-r6 + (23 - len(_ROUND7_NEW))
-    canaries = 50; after this window lands, cumulative driver coverage
-    is complete again (zero never-checked entries).
-
-    ROUND-8 ROTATION PLAN: the canary fill above reaches only the first
-    (23 - len(_ROUND7_NEW)) of ``_CANARIES_R07``; the remaining
-    (36 + len(_ROUND7_NEW)) r01/r02-stale entries stay due and are
-    first in line for round 8 in list order, followed by the 50
-    entries last driver-checked in r03 (agg_histogram_equi_width,
-    agg_rollup, agg_string_concat, ann_ivf_topk, ann_pq_topk,
-    cdc_apply_customers, contamination_ngram_overlap,
-    corpus_pack_sequences, corpus_tfidf_top_terms, corpus_top_tokens,
-    data_split_assign, ddl_* ×3, dedup_levenshtein_blocked,
-    dedup_sentences_exact, embedding_quantize_int8,
-    events_asof_tolerance, events_funnel_conversion,
-    events_gapfill_hourly, events_retention_cohorts,
-    events_rolling_stats, events_sliding_hourly,
-    events_transition_matrix, events_value_zscore, graph_pagerank_top,
-    join_salted_hot_key, migrate_reconcile_customers,
-    multimodal_features, profile_customer_stats, q1_pricing_summary,
-    q9_product_profit, sample_hash_stratified, scalar_regex/variant/
-    xml_fns, scd2_apply_customers, scd2_point_in_time_join,
-    snapshot_diff_customers, source_pydatasource_agg, streaming_dedup,
-    streaming_hourly_rollup, streaming_session_windows,
-    streaming_sliding_rollup, streaming_user_stats,
-    text_gopher_filters, text_repetition_metrics, udtf_sentence_split,
-    unpivot_nation_metrics, validate_customer_constraints),
-    oldest-first, filling to 50. Build ``_window_r08()`` as (1) any red
-    r7 entry (fix first), (2) new round-8 entries, (3) that due list.
-    Same verification command before committing.
-
-    ROUND-8 ROTATION (executes the plan above, per the r7 verdict): no
-    r7 entry came back red (CORRECTNESS_r07: 42 hash-matches + 8
-    by-design rows-only, zero errors), so ``_window_r08()`` is (1) every
-    new round-8 entry (``_ROUND8_NEW`` — the r6 debut-freeze discipline
-    applies: every debut displaces one stale canary, and coverage
-    freshness outranks surface growth, so the list stays a handful at
-    most), then (2) the recorded due list ``_CANARIES_R08`` filling to
-    exactly 50. ``_CANARIES_R08`` is built BY CONSTRUCTION as
-    ``_CANARIES_R07[18:]`` (the 41 r01/r02-stale canaries the r7 fill
-    could not reach; 18 = 50 − len(_ROUND7_NEW)=5 − len(_ROUND6_LATE)=27)
-    followed by ``_R03_CHECKED`` (the 50 entries last driver-checked in
-    round 3, in their exact CORRECTNESS_r03.json window order = oldest
-    first) — a 91-entry due list. Arithmetic:
-    len(_ROUND8_NEW) debuts + (50 − len(_ROUND8_NEW)) due entries = 50;
-    the due tail (41 + len(_ROUND8_NEW) entries, all r03-checked) stays
-    due for round 9.
-
-    ROUND-9 ROTATION PLAN: the fill above reaches only the first
-    (50 − len(_ROUND8_NEW)) entries of ``_CANARIES_R08``; the remaining
-    (41 + len(_ROUND8_NEW)) r03-checked entries stay due and are first
-    in line for round 9 in list order, followed by the entries last
-    driver-checked in round 4 (the ``CORRECTNESS_r04.json`` window,
-    oldest-first), filling to 50. Build ``_window_r09()`` as (1) any red
-    r8 entry (fix first), (2) new round-9 entries, (3) that due list.
-    Same verification command before committing.
-
-    ROUND-9 ROTATION (executes the plan above, per the r8 verdict): no
-    r8 entry came back red (CORRECTNESS_r08: 49 hash-matches + 1
-    by-design rows-only ``dedup_minhash_lsh``, zero errors), so
-    ``_window_r09()`` is (1) every new round-9 entry (``_ROUND9_NEW`` —
-    the debut-freeze discipline continues; round 9 again ships ZERO
-    debuts so the full 50-slot window keeps clearing staleness), then
-    (2) the recorded due list ``_CANARIES_R09`` filling to exactly 50.
-    ``_CANARIES_R09`` is built BY CONSTRUCTION as
-    ``_CANARIES_R08[50 − len(_ROUND8_NEW):]`` (with len(_ROUND8_NEW)=0
-    that is the 41 r03-checked entries the r8 fill could not reach, =
-    ``_R03_CHECKED[9:]``) followed by ``_R04_CHECKED`` (the 50 entries
-    last driver-checked in round 4, in their exact
-    CORRECTNESS_r04.json window order = oldest first; verified this
-    round that none of the 50 was re-checked in any r05–r08 window and
-    that the two blocks are disjoint) — a 91-entry due list.
-    Arithmetic: len(_ROUND9_NEW) debuts + (50 − len(_ROUND9_NEW)) due
-    entries = 50; the due tail (41 + len(_ROUND9_NEW) entries, all
-    r04-checked) stays due for round 10.
-
-    ROUND-10 ROTATION PLAN: the fill above reaches only the first
-    (50 − len(_ROUND9_NEW)) entries of ``_CANARIES_R09``; the remaining
-    (41 + len(_ROUND9_NEW)) r04-checked entries stay due and are first
-    in line for round 10 in list order — after they land, every registry
-    entry has a driver row from round 5 or later and the staleness debt
-    is fully cleared; the rotation then restarts oldest-first from the
-    round-5 window (``CORRECTNESS_r05.json`` order). Build
-    ``_window_r10()`` as (1) any red r9 entry (fix first), (2) new
-    round-10 entries, (3) that due list. Same verification command
-    before committing.
-
-    ROUND-10 ROTATION (executes the plan above, per the r9 verdict): no
-    r9 entry came back red (CORRECTNESS_r09: 50/50 hash-matches — the
-    first fully green window), so ``_window_r10()`` is (1) every new
-    round-10 entry (``_ROUND10_NEW`` — zero debuts, third consecutive
-    debut-freeze round), then (2) the recorded due list
-    ``_CANARIES_R10`` filling to exactly 50. ``_CANARIES_R10`` is built
-    BY CONSTRUCTION as ``_CANARIES_R09[50 − len(_ROUND9_NEW):]`` (with
-    len(_ROUND9_NEW)=0 that is the 41 r04-checked entries the r9 fill
-    could not reach, = ``_R04_CHECKED[9:]``), then ONE plan correction
-    found at build time — ``approx_quantiles``, whose most recent
-    driver row is the r02 ``err: no_oracle`` marker (parked past the
-    cap since; oracle-backed since r9 but never re-windowed), is the
-    single oldest entry and slots before the restart — then
-    ``_R05_CHECKED`` (the 50 entries last driver-checked in round 5, in
-    their exact CORRECTNESS_r05.json order; verified this round that
-    none of the 50 was re-checked in any r06–r09 window). Arithmetic:
-    0 debuts + 41 due-tail + approx_quantiles + _R05_CHECKED[:8] = 50;
-    the due tail (42 + len(_ROUND10_NEW) entries: _R05_CHECKED[8:] =
-    42 r05-checked) stays due for round 11.
-
-    ROUND-11 ROTATION PLAN: the fill above reaches only
-    approx_quantiles + the first (8 − len(_ROUND10_NEW)) entries of
-    ``_R05_CHECKED`` (approx_quantiles itself takes one of the 9 fill
-    slots, so the r05 block contributes 8 with zero debuts — verified:
-    ``_window_r10()[42:] == _R05_CHECKED[:8]``); the remaining
-    (42 + len(_ROUND10_NEW)) r05-checked entries (``_R05_CHECKED[8 −
-    len(_ROUND10_NEW):]``, starting at ``corpus_chunk_overlap``) stay
-    due and are first in line for round 11 in list order, followed by
-    the entries last driver-checked in round 6 (the
-    ``CORRECTNESS_r06.json`` window, oldest-first, minus any re-checked
-    in r07–r10), filling to 50. Build ``_window_r11()`` as (1) any red
-    r10 entry (fix first), (2) new round-11 entries, (3) that due list.
-    Same verification command before committing.
-
-    ROUND-11 ROTATION (executes the plan above, per the r10 verdict): no
-    r10 entry came back red (CORRECTNESS_r10: 50/50 hash-matches — the
-    second consecutive fully green window), so ``_window_r11()`` is
-    (1) every new round-11 entry (``_ROUND11_NEW`` — zero debuts, fourth
-    consecutive debut-freeze round), then (2) the recorded due list
-    ``_CANARIES_R11`` filling to exactly 50. ``_CANARIES_R11`` is built
-    BY CONSTRUCTION as ``_CANARIES_R10[50 − len(_ROUND10_NEW):]`` (with
-    len(_ROUND10_NEW)=0 that is the 42 r05-checked entries the r10 fill
-    could not reach, = ``_R05_CHECKED[8:]``, starting at
-    ``corpus_chunk_overlap``), then ``_R06_CHECKED`` (the 50 entries
-    last driver-checked in round 6, in their exact CORRECTNESS_r06.json
-    order; verified at build time that none of the 50 was re-checked in
-    any r07–r10 window — no plan corrections needed this round).
-    Arithmetic: 0 debuts + 42 due-tail + _R06_CHECKED[:8] = 50; the due
-    tail (42 + len(_ROUND11_NEW) entries: _R06_CHECKED[8:] = 42
-    r06-checked) stays due for round 12.
-
-    ROUND-12 ROTATION PLAN: the fill above reaches only the first
-    (8 − len(_ROUND11_NEW)) entries of ``_R06_CHECKED`` (verified:
-    ``_window_r11()[42:] == _R06_CHECKED[:8]``); the remaining
-    (42 + len(_ROUND11_NEW)) r06-checked entries (``_R06_CHECKED[8 −
-    len(_ROUND11_NEW):]``, starting at ``corpus_curriculum_phases``
-    with zero debuts — in list order), followed by the entries last
-    driver-checked in round 7 (the ``CORRECTNESS_r07.json`` window,
-    oldest-first, minus any re-checked in r08–r11), fill round 12 to
-    50. Build ``_window_r12()`` as (1) any red r11 entry (fix first),
-    (2) new round-12 entries, (3) that due list. Same verification
-    command before committing.
-
-    ROUND-12 ROTATION (executes the plan above, per the r11 verdict): no
-    r11 entry came back red (CORRECTNESS_r11: 50/50 hash-matches — the
-    third consecutive fully green window), so ``_window_r12()`` is
-    (1) every new round-12 entry (``_ROUND12_NEW`` — zero debuts, fifth
-    consecutive debut-freeze round; the round's work is the
-    corrupted-facts (nullfact) gate, the streaming-drain 30× tier, and
-    the pagerank checkpoint-cadence profile on EXISTING keys), then
-    (2) the recorded due list ``_CANARIES_R12`` filling to exactly 50.
-    ``_CANARIES_R12`` is built BY CONSTRUCTION as
-    ``_CANARIES_R11[50 − len(_ROUND11_NEW):]`` (with len(_ROUND11_NEW)=0
-    that is the 42 r06-checked entries the r11 fill could not reach,
-    = ``_R06_CHECKED[8:]``, starting at ``corpus_curriculum_phases``),
-    then the round-7 restart block: ``_R07_CHECKED`` (the 50 entries
-    last driver-checked in round 7; verified at build time via the
-    latest-round map over CORRECTNESS_r01..r11 that none of the 50 was
-    re-checked in any r08–r11 window) with one documented deviation
-    from plain file order — the 8 entries whose newest driver row is
-    still the r07 ``no_oracle`` marker (``_R07_STALE``) are promoted to
-    the block's head, because the r11 verdict's task-1 Done criterion
-    ("stale set down to 1") requires exactly those 8 to take the fill
-    slots; the 42 non-stale entries follow in unchanged
-    CORRECTNESS_r07.json order. Arithmetic: 0 debuts + 42 due-tail +
-    _R07_STALE = 50; the due tail (42 + len(_ROUND12_NEW) entries: the
-    42 non-stale r07-checked, starting ``stat_mann_whitney_u``) stays
-    due for round 13. This window flushes 18 of the 19 stale
-    ``no_oracle`` driver rows named in the r11 verdict; the nineteenth,
-    ``dedup_minhash_lsh`` (last windowed r08), lands in the r13 window.
-
-    ROUND-13 ROTATION PLAN: the fill above reaches exactly the 8
-    ``_R07_STALE`` entries (verified: ``_window_r12()[42:] ==
-    _R07_STALE``); the remaining (42 + len(_ROUND12_NEW)) r07-checked
-    entries (the non-stale block, starting at ``stat_mann_whitney_u``
-    with zero debuts — in CORRECTNESS_r07.json order), followed by the
-    entries last driver-checked in round 8 (the ``CORRECTNESS_r08.json``
-    window, oldest-first, minus any re-checked in r09–r12 — this is
-    where ``dedup_minhash_lsh`` lands), fill round 13 to 50. Build
-    ``_window_r13()`` as (1) any red r12 entry (fix first), (2) new
-    round-13 entries, (3) that due list. Same verification command
-    before committing.
-    """
-    q = _ShadowGuardDict()
-    # ---- window 1-22: oracle-backed, judge-verified, first driver row ----
-    q.update({
-        "cdc_apply_customers": cdc.cdc_apply_customers,
-        "scd2_apply_customers": cdc.scd2_apply_customers,
-        "profile_customer_stats": cdc.profile_customer_stats,
-        "scd2_point_in_time_join": cdc.scd2_point_in_time_join,
-        "events_asof_tolerance": asof.events_asof_tolerance,
-        "events_gapfill_hourly": timeseries.events_gapfill_hourly,
-        "events_sliding_hourly": timeseries.events_sliding_hourly,
-        "sample_hash_stratified": analytics.sample_hash_stratified,
-        "dedup_levenshtein_blocked": analytics.dedup_levenshtein_blocked,
-        "corpus_top_tokens": corpus.corpus_top_tokens,
-        "corpus_tfidf_top_terms": corpus.corpus_tfidf_top_terms,
-        "unpivot_nation_metrics": rel.unpivot_nation_metrics,
-        "scalar_regex_fns": rel.scalar_regex_fns,
-        "scalar_variant_fns": rel.scalar_variant_fns,
-        "scalar_xml_fns": rel.scalar_xml_fns,
-        "agg_string_concat": rel.agg_string_concat,
-        "source_pydatasource_agg": _source_pydatasource_agg,
-        "udtf_sentence_split": _udtf_sentence_split,
-        "dedup_sentences_exact": _dedup_sentences_exact,
-    })
-    sq = _streaming_queries()
-    q["streaming_hourly_rollup"] = sq.pop("streaming_hourly_rollup")
-    q["streaming_sliding_rollup"] = sq.pop("streaming_sliding_rollup")
-    q["streaming_session_windows"] = sq.pop("streaming_session_windows")
-    ivj = sq.pop("streaming_interval_join")   # held back for the canaries
-    szs = sq.pop("streaming_zscore_alerts")   # parked past cap (round 4)
-    us2 = sq.pop("streaming_user_stats_v2")   # parked past cap (round 4)
-    loj = sq.pop("streaming_left_outer_join")  # NEW round 4 → past cap
-    # ---- window 23-30: rows-only entries earning their first driver row --
-    cq = _catalog_queries()
-    mig = cq.pop("migrate_customer_cast")
-    q.update(cq)                       # ddl_* ×3
-    q.update(sq)                       # streaming_dedup, streaming_user_stats
-    q.update({
-        # partial-oracle (r9): exact brute-force pair count hash-gated +
-        # recall-floor / shared-score-exactness booleans (raw cores keep
-        # their recall pytests)
-        "ann_ivf_topk": similarity.ann_ivf_topk_checked,
-        # partial-oracle (r9): exact byte length hash-gated + norm
-        # invariants; raw core keeps its determinism pytest
-        "multimodal_features": _multimodal_features_checked,
-        # partial-oracle (r9): exact node/edge counts hash-gated, the
-        # iterative float ranks collapse to mass/floor/dominance booleans;
-        # the raw (node, rank) core keeps its numpy power-iter pytest
-        "graph_pagerank_top": graph.graph_pagerank_top_checked,
-    })
-    # ---- window 31-...: NEW round-3 entries (oracle-backed) ----
-    q.update(_round3_queries())
-    # ---- window fill to 50: r02-green canaries (regression sentinels
-    # spanning the plan families: agg, join, window, streaming, dedup,
-    # corpus, text, migration) ----
-    q.update({
-        "q1_pricing_summary": rel.q1_pricing_summary,
-        "q9_product_profit": rext.QUERIES["q9_product_profit"],
-        "agg_rollup": rel.agg_rollup,
-        "window_ntile_scalable": scale.window_ntile_scalable,
-        "streaming_interval_join": ivj,
-        "dedup_ngram_jaccard_pruned": dedup.dedup_ngram_jaccard_pruned,
-        "corpus_curate": corpus.corpus_curate,
-        "text_quality_score": textstats.text_quality_score,
-        "migrate_customer_cast": mig,
-    })
-    # -- past the 50-entry window from here --
-    # late round-3 additions awaiting their round-4 window slot:
-    from .operators import eventtime
-    from .operators import traindata as _td
-    from .sources.registry import (sink_compact_small_files,
-                                   sink_dynamic_partition_overwrite,
-                                   sink_partitioned_prune,
-                                   source_schema_evolution)
-    q["dedup_incremental_exact"] = _td.dedup_incremental_exact
-    q["sample_per_group_topn"] = _td.sample_per_group_topn
-    q["corpus_mix_weights"] = _td.corpus_mix_weights
-    q["corpus_token_budget_cut"] = _td.corpus_token_budget_cut
-    q["streaming_zscore_alerts"] = szs
-    # Spark 4 transformWithStateInPandas twin of streaming_user_stats
-    q["streaming_user_stats_v2"] = us2
-    # mergeable Misra-Gries heavy-hitter sketch; partial-oracle (r9):
-    # exact token total + guaranteed-heavy count hash-gated, the three
-    # MG invariants as oracle-asserted booleans
-    q["corpus_frequent_tokens_mg"] = approx.frequent_tokens_mg_checked
-    q["customer_rfm_segments"] = analytics.customer_rfm_segments
-    q["part_abc_analysis"] = analytics.part_abc_analysis
-    q["orders_open_backlog_daily"] = analytics.orders_open_backlog_daily
-    from .operators import behavior as _bh
-    q["audience_overlap_matrix"] = _bh.audience_overlap_matrix
-    q["geo_nearest_site_assignment"] = analytics.geo_nearest_site_assignment
-    q["supplier_on_time_scorecard"] = analytics.supplier_on_time_scorecard
-    q["events_dow_hour_profile"] = analytics.events_dow_hour_profile
-    q["events_mad_outliers"] = analytics.events_mad_outliers
-    from .operators import validate as _vd
-    q["observe_scan_metrics"] = _vd.observe_scan_metrics
-    q["orders_monthly_growth"] = analytics.orders_monthly_growth
-    q["text_langid_eval"] = textstats.text_langid_eval
-    q["part_pareto_frontier"] = analytics.part_pareto_frontier
-    q["basket_part_affinity"] = analytics.basket_part_affinity
-    q["events_locf_daily"] = timeseries.events_locf_daily
-    q["events_pattern_vshape"] = eventtime.events_pattern_vshape
-    q["orders_keyset_page"] = analytics.orders_keyset_page
-    q["customers_adoption_curve"] = analytics.customers_adoption_curve
-    q["events_activity_streaks"] = eventtime.events_activity_streaks
-    q.update(eventtime.QUERIES)        # ohlc / twap / islands / 7d-actives
-    q["graph_hierarchy_depths"] = graph.graph_hierarchy_depths
-    q["corpus_bigram_counts"] = corpus.corpus_bigram_counts
-    q["text_pii_redact"] = textstats.text_pii_redact
-    q["sink_partitioned_prune"] = sink_partitioned_prune
-    q["dedup_substring_spans"] = dedup.dedup_substring_spans
-    q["scd2_history_from_events"] = cdc.scd2_history_from_events
-    q["rollup_incremental_refresh"] = timeseries.rollup_incremental_refresh
-    q["corpus_bpe_merge_pairs"] = corpus.corpus_bpe_merge_pairs
-    q["events_session_attribution"] = eventtime.events_session_attribution
-    q["scale_zorder_zvalues"] = scale.scale_zorder_zvalues
-    q["window_running_distinct"] = analytics.window_running_distinct
-    q["sink_compact_small_files"] = sink_compact_small_files
-    q["source_schema_evolution"] = source_schema_evolution
-    q["sink_dynamic_partition_overwrite"] = sink_dynamic_partition_overwrite
-    # per-key sequential recurrence via applyInPandas; partial-oracle
-    # (r9): exact n/min/max/last anchors hash-gated, EMA collapses to
-    # convexity + one-step recurrence booleans (numpy pytest pins the
-    # raw core's values)
-    q["events_ema"] = eventtime.events_ema_checked
-    # proven green in r01/r02:
-    q.update({k: v for k, v in rext.QUERIES.items() if k not in q})
-    q.update({
-        "q3_shipping_priority": rel.q3_shipping_priority,
-        "q5_nation_revenue": rel.q5_nation_revenue,
-        "q6_forecast_revenue": rel.q6_forecast_revenue,
-        "q10_returned_items": rel.q10_returned_items,
-        "q18_large_orders": rel.q18_large_orders,
-        "join_inner_broadcast": rel.join_inner_broadcast,
-        "events_tumbling_hourly": rel.events_tumbling_hourly,
-        "events_sessionize": rel.events_sessionize,
-        "events_asof_last_click": asof.events_asof_last_click,
-        "text_token_stats": textstats.text_token_stats,
-        "text_normalize": textstats.text_normalize,
-        "text_langid": textstats.text_langid,
-        "text_fingerprint": textstats.text_fingerprint,
-        "multimodal_metadata": multimodal.multimodal_metadata,
-        "dedup_embedding_cosine": dedup.dedup_embedding_cosine,
-        # partial-oracle (r9): quantile probes + exact min/max hash-gated,
-        # GK estimates collapse to their rank-window guarantee boolean
-        "approx_quantiles": approx.approx_quantiles_checked,
-        "corpus_token_histogram": corpus.corpus_token_histogram,
-        "embedding_covariance": corpus.embedding_covariance,
-        "dedup_keep_representatives": dedup.dedup_keep_representatives,
-        "set_intersect_all": rel.set_intersect_all,
-        "set_except_all": rel.set_except_all,
-        "source_roundtrip_formats": _source_roundtrip,
-        "agg_corr_regr": analytics.agg_corr_regr,
-        "agg_percentiles": analytics.agg_percentiles,
-        "scalar_array_fns": analytics.scalar_array_fns,
-        "dedup_clusters": dedup.dedup_clusters,
-        "ann_brute_force_topk": similarity.ann_brute_force_topk,
-        "scan_filter_projection": rel.scan_filter_projection,
-        "filter_null_safe": rel.filter_null_safe,
-        "join_left_outer": rel.join_left_outer,
-        "join_semi": rel.join_semi,
-        "join_anti": rel.join_anti,
-        "join_full_outer": rel.join_full_outer,
-        "join_cross": rel.join_cross,
-        "join_range_nonequi": rel.join_range_nonequi,
-        "agg_distinct_counts": rel.agg_distinct_counts,
-        "agg_cube": rel.agg_cube,
-        "agg_grouping_sets": rel.agg_grouping_sets,
-        "agg_stats": rel.agg_stats,
-        "agg_pivot": rel.agg_pivot,
-        "case_when_bucketing": rel.case_when_bucketing,
-        "window_topk_per_group": rel.window_topk_per_group,
-        "window_rank_dense": rel.window_rank_dense,
-        "window_lag_lead": rel.window_lag_lead,
-        "window_running_sum": rel.window_running_sum,
-        "window_ntile_percent": rel.window_ntile_percent,
-        "sort_limit_topk": rel.sort_limit_topk,
-        "set_union_all": rel.set_union_all,
-        "set_intersect": rel.set_intersect,
-        "set_except": rel.set_except,
-        "distinct_pairs": rel.distinct_pairs,
-        "scalar_string_fns": rel.scalar_string_fns,
-        "scalar_date_fns": rel.scalar_date_fns,
-        "scalar_math_fns": rel.scalar_math_fns,
-        "scalar_json_fns": rel.scalar_json_fns,
-        "approx_distinct_counts": approx.approx_distinct_counts_checked,
-        "approx_hll_union": approx.approx_hll_union_checked,
-        "multimodal_resize": _multimodal_resize,
-        "multimodal_frame_sample": _multimodal_frame_sample,
-        "dedup_exact_docs": dedup.dedup_exact_docs,
-        "dedup_ngram_jaccard": dedup.dedup_ngram_jaccard,
-        # partial-oracle (r9): exact identical-text pair count hash-gated
-        # + structural recall booleans; the raw pair core keeps its
-        # brute-force pair-set pytest
-        "dedup_minhash_lsh": dedup.dedup_minhash_lsh_checked,
-        # partial-oracle (r9): exact identical-text pair count hash-gated
-        # + structural recall booleans; raw pair core keeps its pytest
-        "dedup_simhash": dedup.dedup_simhash_checked,
-        # partial-oracle (r9): exact identical-embedding pair count
-        # hash-gated + recall/range booleans; pair-set == exact-path
-        # equality stays pytest-pinned
-        "dedup_embedding_blocked":
-            similarity.dedup_embedding_blocked_checked,
-        "ann_lsh_topk": similarity.ann_lsh_topk_checked,
-    })
-    # ---- NEW round-4 entries: past the cap by construction (the reorder
-    # below keeps non-window entries in this order), forming the start of
-    # the round-5 window ----
-    from .operators import rerank
-    q["rerank_ann_shortlist"] = rerank.rerank_ann_shortlist
-    q["corpus_curation_report"] = corpus.corpus_curation_report
-    from .operators import traindata as _td4
-    q["export_training_shards"] = _td4.export_training_shards
-    q["corpus_mixture_sample"] = _td4.corpus_mixture_sample
-    # iterative tokenizer training (driver-looped over the vocab table);
-    # partial-oracle (r9): SQL-exact first merge + census anchors; pytest
-    # still pins the full merge sequence vs a pure-Python BPE
-    q["bpe_train_merges"] = corpus.bpe_train_merges_checked
-    q["merge_into_customers"] = cdc.merge_into_customers
-    from .streaming.events import streaming_cdc_upsert
-    q["streaming_cdc_upsert"] = streaming_cdc_upsert
-    q["corpus_neardup_report"] = dedup.corpus_neardup_report
-    q["corpus_chunk_overlap"] = corpus.corpus_chunk_overlap
-    q["corpus_doc_lm_coverage"] = corpus.corpus_doc_lm_coverage
-    q["events_linear_interp_daily"] = timeseries.events_linear_interp_daily
-    from .sources.registry import source_dpp_star_join
-    q["source_dpp_star_join"] = source_dpp_star_join
-    # tokenizer application; partial-oracle (r9): exact per-doc
-    # token/char counts hash-gated + compression-bounds boolean; pytest
-    # still pins per-token encodings vs a pure-Python BPE
-    q["bpe_encode_stats"] = corpus.bpe_encode_stats_checked
-    # k-means-scoped greedy semantic dedup; partial-oracle (r9):
-    # exact cardinality + greedy-sweep invariants; pytest still pins
-    # both greedy invariants vs brute force
-    q["dedup_semdedup"] = dedup.dedup_semdedup_checked
-    # outer streaming join: final-watermark-bounded emission → rows-only;
-    # pytest pins matched ≡ inner batch join + horizon completeness
-    q["streaming_left_outer_join"] = loj
-    q["events_winsorize_clip"] = analytics.events_winsorize_clip
-    # CM point estimates are approximate by construction → rows-only;
-    # pytest pins est >= true and the 2N/width overcount bound
-    q["corpus_token_countmin"] = approx.token_counts_countmin_checked
-    q["embedding_standardize"] = _td4.embedding_standardize
-    # ---- new ROUND-5 entries (each also listed in _ROUND5_NEW so the
-    # reorder below places it inside the driver window immediately) ----
-    q.update(_round5_queries())
-    # ---- NEW round-6 entries ----
-    q.update(_round6_queries())
-    # ---- NEW round-7 entries ----
-    q.update(_round7_queries())
-    # ---- ROUND-12 REORDER: window first, everything else keeps its
-    # relative order past the cap (see docstring) ----
-    window = _window_r12()
-    missing = [k for k in window if k not in q]
-    assert not missing, f"window entries absent from registry: {missing}"
-    in_window = set(window)
-    return {k: q[k] for k in [*window, *(k for k in q if k not in in_window)]}
-
-
-def _window_r05() -> list:
-    """The round-5 driver window (first 50 ``queries()`` keys), executing
-    the rotation plan recorded in the r4 verdict: (1) the 18 entries that
-    have never had a driver CORRECTNESS row in r01–r04, (2) every new
-    round-5 entry, (3) regression canaries last driver-checked in r01/r02
-    — oldest first — filling to exactly 50. Adding a round-5 entry to
-    ``_ROUND5_NEW`` automatically displaces the trailing canary."""
-    window = [*_NEVER_CHECKED_R04, *_ROUND5_NEW]
-    fill = _WINDOW_SIZE - len(window)
-    assert fill >= 0, "round-5 additions overflow the 50-slot window"
-    return [*window, *_CANARIES_R05[:fill]]
-
-
-def _window_r06() -> list:
-    """The round-6 driver window (first 50 ``queries()`` keys), executing
-    the rotation plan recorded in the r5 verdict: no r5 entry came back
-    red, so the window is (1) every new round-6 entry (``_ROUND6_NEW``),
-    then (2) regression canaries rotating oldest-driver-checked-first
-    (``_CANARIES_R06``) filling to exactly 50. Adding a round-6 entry to
-    ``_ROUND6_NEW`` automatically displaces the trailing canary."""
-    window = [*_ROUND6_NEW]
-    fill = _WINDOW_SIZE - len(window)
-    assert fill >= 0, "round-6 additions overflow the 50-slot window"
-    return [*window, *_CANARIES_R06[:fill]]
-
-
-def _window_r07() -> list:
-    """The round-7 driver window (first 50 ``queries()`` keys), executing
-    the rotation plan recorded in the r6 verdict: no r6 entry came back
-    red, so the window is (1) every new round-7 entry (``_ROUND7_NEW``),
-    (2) the 27 never-driver-checked late-r6 entries (``_ROUND6_LATE``)
-    earning their debut rows, then (3) the 59 displaced r01/r02-stale
-    canaries in the recorded order (``_CANARIES_R07``) filling to
-    exactly 50. Adding a round-7 entry to ``_ROUND7_NEW`` automatically
-    displaces the trailing canary."""
-    window = [*_ROUND7_NEW, *_ROUND6_LATE]
-    fill = _WINDOW_SIZE - len(window)
-    assert fill >= 0, "round-7 additions overflow the 50-slot window"
-    return [*window, *_CANARIES_R07[:fill]]
-
-
-def _window_r08() -> list:
-    """The round-8 driver window (first 50 ``queries()`` keys), executing
-    the rotation plan recorded in the r7 verdict: no r7 entry came back
-    red, so the window is (1) every new round-8 entry (``_ROUND8_NEW``,
-    debut-freeze discipline — a handful at most), then (2) the recorded
-    due list (``_CANARIES_R08`` = the 41 unreached ``_CANARIES_R07``
-    stale canaries + the 50 r03-checked entries, oldest first) filling
-    to exactly 50. Adding a round-8 entry to ``_ROUND8_NEW``
-    automatically displaces the trailing due entry."""
-    window = [*_ROUND8_NEW]
-    fill = _WINDOW_SIZE - len(window)
-    assert fill >= 0, "round-8 additions overflow the 50-slot window"
-    return [*window, *_CANARIES_R08[:fill]]
-
-
-def _window_r09() -> list:
-    """The round-9 driver window (first 50 ``queries()`` keys), executing
-    the rotation plan recorded in the r8 verdict: no r8 entry came back
-    red (49 hash-matches + the by-design rows-only ``dedup_minhash_lsh``),
-    so the window is (1) every new round-9 entry (``_ROUND9_NEW``,
-    debut-freeze discipline — round 9 ships zero debuts by design), then
-    (2) the recorded due list (``_CANARIES_R09`` = the 41 unreached
-    r03-checked entries + the 50 r04-checked entries, oldest first)
-    filling to exactly 50. Adding a round-9 entry to ``_ROUND9_NEW``
-    automatically displaces the trailing due entry."""
-    window = [*_ROUND9_NEW]
-    fill = _WINDOW_SIZE - len(window)
-    assert fill >= 0, "round-9 additions overflow the 50-slot window"
-    return [*window, *_CANARIES_R09[:fill]]
-
-
-def _window_r10() -> list:
-    """The round-10 driver window (first 50 ``queries()`` keys),
-    executing the rotation plan recorded in the r9 verdict: no r9 entry
-    came back red (CORRECTNESS_r09: 50/50 hash-matches, the first fully
-    green window), so the window is (1) every new round-10 entry
-    (``_ROUND10_NEW`` — zero debuts again by design; the round's work is
-    the corrupted-events NULL-semantics closure on EXISTING keys), then
-    (2) the recorded due list ``_CANARIES_R10`` filling to exactly 50.
-    Adding a round-10 entry to ``_ROUND10_NEW`` automatically displaces
-    the trailing due entry."""
-    window = [*_ROUND10_NEW]
-    fill = _WINDOW_SIZE - len(window)
-    assert fill >= 0, "round-10 additions overflow the 50-slot window"
-    return [*window, *_CANARIES_R10[:fill]]
-
-
-def _window_r11() -> list:
-    """The round-11 driver window (first 50 ``queries()`` keys),
-    executing the rotation plan recorded in the r10 verdict: no r10
-    entry came back red (CORRECTNESS_r10: 50/50 hash-matches, the
-    second consecutive fully green window), so the window is (1) every
-    new round-11 entry (``_ROUND11_NEW`` — zero debuts, fourth
-    consecutive debut-freeze; the round's work is the
-    corrupted-documents gate, streaming-drain profiling, and the
-    collapse-rail memo seam on EXISTING keys), then (2) the recorded
-    due list ``_CANARIES_R11`` filling to exactly 50. Adding a
-    round-11 entry to ``_ROUND11_NEW`` automatically displaces the
-    trailing due entry."""
-    window = [*_ROUND11_NEW]
-    fill = _WINDOW_SIZE - len(window)
-    assert fill >= 0, "round-11 additions overflow the 50-slot window"
-    return [*window, *_CANARIES_R11[:fill]]
-
-
-def _window_r12() -> list:
-    """The round-12 driver window (first 50 ``queries()`` keys),
-    executing the rotation plan recorded in the r11 verdict: no r11
-    entry came back red (CORRECTNESS_r11: 50/50 hash-matches, the
-    third consecutive fully green window), so the window is (1) every
-    new round-12 entry (``_ROUND12_NEW`` — zero debuts, fifth
-    consecutive debut-freeze; the round's work is the corrupted-facts
-    gate, the streaming-drain 30× tier, and the pagerank
-    checkpoint-cadence profile on EXISTING keys), then (2) the recorded
-    due list ``_CANARIES_R12`` filling to exactly 50. Adding a
-    round-12 entry to ``_ROUND12_NEW`` automatically displaces the
-    trailing due entry."""
-    window = [*_ROUND12_NEW]
-    fill = _WINDOW_SIZE - len(window)
-    assert fill >= 0, "round-12 additions overflow the 50-slot window"
-    return [*window, *_CANARIES_R12[:fill]]
-
-
-#: New round-12 entries. Zero debuts (fifth consecutive debut-freeze
-#: round): the 92-entry r11 due list needs two windows to clear (42
-#: r06-checked entries remain), and the round's engineering goes into
-#: the corrupted-facts adversarial gate, the streaming-drain 30× tier,
-#: and the pagerank checkpoint profile — same keys, no new slots
-#: needed.
-_ROUND12_NEW: list = []
-
-#: New round-11 entries. Zero debuts (fourth consecutive debut-freeze
-#: round): the 92-entry r10 due list needs two windows to clear (42
-#: r05-checked entries remain), and the round's engineering goes into
-#: the corrupted-documents adversarial gate, the streaming-drain cost
-#: breakdown, and the collapse-rail shared seam — same keys, no new
-#: slots needed.
-_ROUND11_NEW: list = []
-
-#: New round-10 entries. Zero debuts (third consecutive debut-freeze
-#: round): landing the 41-entry r04-checked due tail fully clears the
-#: staleness debt this round, and the round's engineering went into the
-#: corrupted-events residue closure — same keys, no new slots needed.
-_ROUND10_NEW: list = []
-
-#: New round-9 entries. Zero debuts by design (second consecutive
-#: debut-freeze round): the 91-entry due list needs two full windows to
-#: clear, and coverage freshness outranks surface growth. Round-9
-#: surface work goes into partial-oracle upgrades of existing rows-only
-#: entries instead (same keys, no new slots needed).
-_ROUND9_NEW: list = []
-
-#: New round-8 entries. The r7 verdict caps r8 debuts at "a handful":
-#: every debut displaces one stale due entry below, and coverage
-#: freshness outranks surface growth — round 8 deliberately ships ZERO
-#: debuts so the full 50-slot window clears staleness (the due list
-#: shrinks by exactly 50, the verdict's done-criterion). The round's
-#: surface work went into upgrading seven existing rows-only entries to
-#: partial-oracle instead (same keys, no new slots needed).
-_ROUND8_NEW: list = []
-
-#: The 50 entries last driver-checked in round 3, in their exact
-#: CORRECTNESS_r03.json window order (= oldest driver row first). This
-#: is the second half of the round-8 due list.
-_R03_CHECKED: list = [
-    "cdc_apply_customers",
-    "scd2_apply_customers",
-    "profile_customer_stats",
-    "scd2_point_in_time_join",
-    "events_asof_tolerance",
-    "events_gapfill_hourly",
-    "events_sliding_hourly",
-    "sample_hash_stratified",
-    "dedup_levenshtein_blocked",
-    "corpus_top_tokens",
-    "corpus_tfidf_top_terms",
-    "unpivot_nation_metrics",
-    "scalar_regex_fns",
-    "scalar_variant_fns",
-    "scalar_xml_fns",
-    "agg_string_concat",
-    "source_pydatasource_agg",
-    "udtf_sentence_split",
-    "dedup_sentences_exact",
-    "streaming_hourly_rollup",
-    "streaming_sliding_rollup",
-    "streaming_session_windows",
-    "ddl_schema_catalog",
-    "ddl_assess_catalog",
-    "ddl_type_distribution",
-    "streaming_dedup",
-    "streaming_user_stats",
-    "ann_ivf_topk",
-    "multimodal_features",
-    "graph_pagerank_top",
-    "events_funnel_conversion",
-    "events_retention_cohorts",
-    "events_rolling_stats",
-    "events_transition_matrix",
-    "events_value_zscore",
-    "data_split_assign",
-    "corpus_pack_sequences",
-    "embedding_quantize_int8",
-    "contamination_ngram_overlap",
-    "validate_customer_constraints",
-    "snapshot_diff_customers",
-    "migrate_reconcile_customers",
-    "ann_pq_topk",
-    "text_gopher_filters",
-    "text_repetition_metrics",
-    "agg_histogram_equi_width",
-    "join_salted_hot_key",
-    "q1_pricing_summary",
-    "q9_product_profit",
-    "agg_rollup",
-]
-
-#: New round-7 entries — kept in sync with ``_round7_queries()`` so each
-#: earns a driver row in its debut round. The r6 verdict caps r7 debuts
-#: at "the handful needed": every debut displaces one of the 59 stale
-#: canaries below, and coverage freshness now outranks surface growth.
-_ROUND7_NEW: list = [
-    # nonparametric rank-statistics trio (the hypothesis-testing gap
-    # beside chi²/Cramér's V/KS/Theil–Sen) — all oracle-backed
-    "stat_mann_whitney_u",
-    "stat_spearman_corr",
-    "stat_mann_kendall_trend",
-    # Kendall tau-b completes the rank family (tau beside rho); pipe
-    # syntax is the Spark 4.1 SQL surface twin of classic q1 — both
-    # oracle-backed
-    "stat_kendall_tau",
-    "sql_pipe_syntax_battery",
-]
-
-#: Regression canaries for round 7: the 59 r01/r02-stale entries the
-#: 11-slot r6 fill could not reach, in the exact order recorded in the
-#: ROUND-7 ROTATION PLAN docstring above (last eighteen = the entries
-#: the frozen late-r6 debuts displaced). The tail that misses this
-#: window stays due for round 8 in this order, ahead of the r03 block.
-_CANARIES_R07 = [
-    "dedup_embedding_cosine",
-    "dedup_keep_representatives",
-    "dedup_ngram_jaccard_pruned",
-    "embedding_covariance",
-    "events_sessionize",
-    "having_global_share",
-    "join_inner_broadcast",
-    "q10_returned_items",
-    "q12_priority_by_status",
-    "q13_customer_distribution",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q20_part_share_suppliers",
-    "q3_shipping_priority",
-    "q5_nation_revenue",
-    "q6_forecast_revenue",
-    "set_except_all",
-    "streaming_interval_join",
-    "text_langid",
-    "text_quality_score",
-    "text_token_stats",
-    "window_ntile_scalable",
-    "window_range_frame",
-    "corpus_token_histogram",
-    "events_tumbling_hourly",
-    "migrate_customer_cast",
-    "multimodal_metadata",
-    "q11_important_stock",
-    "q16_supplier_variety",
-    "q17_small_quantity_revenue",
-    "q19_disjunctive_predicates",
-    "q21_waiting_suppliers",
-    "q22_dormant_customers",
-    "q2_min_cost_supplier",
-    "q4_order_priority",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "scalar_array_fns",
-    "set_intersect_all",
-    "source_roundtrip_formats",
-    "text_normalize",
-    "corpus_curate",
-    "corr_above_nation_avg",
-    "sort_limit_topk",
-    "window_running_sum",
-    "agg_corr_regr",
-    "agg_percentiles",
-    "window_topk_per_group",
-    "ann_brute_force_topk",
-    "dedup_minhash_lsh",
-    "set_intersect",
-    "set_union_all",
-    "window_ntile_percent",
-    "scalar_math_fns",
-    "scalar_string_fns",
-    "set_except",
-    "q18_large_orders",
-    "scalar_date_fns",
-    "scalar_json_fns",
-]
-
-
-def _round7_queries():
-    """New round-7 entries; grows as the round progresses. Every key added
-    here must also be appended to ``_ROUND7_NEW`` (debut-in-window rule:
-    round 7 must end with zero never-driver-checked entries)."""
-    return {
-        # Wilcoxon rank-sum over pooled global_ranks (tie-corrected z)
-        "stat_mann_whitney_u": analytics.stat_mann_whitney_u,
-        # per-nation Spearman rho on tie-averaged doubled ranks
-        "stat_spearman_corr": analytics.stat_spearman_corr,
-        # Mann-Kendall S / var / continuity-corrected z on monthly cents
-        "stat_mann_kendall_trend": analytics.stat_mann_kendall_trend,
-        # tau-b concordance census on the months-bounded series
-        "stat_kendall_tau": analytics.stat_kendall_tau,
-        # Spark 4.1 |> pipe-syntax program == classic-SQL oracle
-        "sql_pipe_syntax_battery": rext.sql_pipe_syntax_battery,
-    }
-
-
-#: New round-6 entries — kept in sync with ``_round6_queries()`` so each
-#: earns a driver row in its debut round.
-_ROUND6_NEW: list = [
-    "orders_cohort_retention",
-    "events_user_lifecycle",
-    "graph_triangle_stats",
-    "text_readability_scores",
-    "corpus_doc_commonness",
-    # IVFPQ composes two float-k-means codebooks -> rows-only; pytest
-    # pins recall@k vs the exact brute force
-    "ann_ivf_pq_topk",
-    "dedup_containment",
-    "corpus_dsir_importance",
-    "corpus_curriculum_phases",
-    "privacy_k_anonymity",
-    # distributed-Lloyd fit + WAV energy triage: iterative float fit /
-    # binary decode -> rows-only; pytests pin numpy/pure-python replays
-    "embedding_kmeans_clusters",
-    "multimodal_audio_energy",
-    "corpus_temperature_mixture",
-    # KMV = 5th mergeable-sketch class; xxhash64 has no DuckDB twin ->
-    # rows-only, pytest pins the (k-1)/u_k error bound
-    "vocab_kmv_distinct",
-    "corpus_ngram_novelty",
-    "udaf_trimmed_sum",
-    "streaming_static_enrich",
-    # real-BMP decode triage (image twin of multimodal_audio_energy);
-    # binary decode -> rows-only, pure-numpy replay pytest
-    "multimodal_image_stats",
-    # iterative peel fixpoint -> rows-only, pure-python replay pytest
-    "graph_kcore",
-    "sql_recursive_hierarchy",
-    "sink_pydatasource_roundtrip",
-    "retrieval_bm25_topk",
-    "diag_join_key_skew",
-    "events_acf_daily",
-    "events_interarrival_stats",
-    "diag_blocking_pair_census",
-    "corpus_token_cooccurrence",
-    "forecast_seasonal_naive_eval",
-    "quality_quantile_calibrate",
-    "events_trigram_journeys",
-    "diag_layout_zonemap",
-    "assoc_cramers_v",
-    "events_holt_linear",
-    "revenue_gini_lorenz",
-    "corpus_heaps_law",
-    "events_peak_concurrency",
-    "agg_weighted_percentiles",
-    "benford_price_audit",
-    "events_user_predictability",
-]
-
-#: Round-6 entries added AFTER the debut list froze at 39 — deliberately
-#: NOT in ``_ROUND6_NEW`` so they do not displace the last 11 canary
-#: slots (the r5 verdict's top ask was rotating the stale r01/r02 tail;
-#: late debuts had already shrunk the fill 29→11). They sit past the
-#: 50-entry window, are parity-checked at BOTH scales locally on
-#: landing, and are FIRST in line for the round-7 window ahead of the
-#: displaced canaries.
-_ROUND6_LATE: list = [
-    "graph_degree_distribution",
-    "corpus_distinctive_terms",
-    "embedding_source_drift",
-    "migrate_type_fit_audit",
-    "orders_fulfillment_latency",
-    "orders_mom_contribution",
-    "sql_scalar_udf_battery",
-    "streaming_p2_quantile",
-    "privacy_l_diversity",
-    "scalar_null_semantics",
-    "events_markov_stationary",
-    "events_id_gap_audit",
-    "multimodal_phash_neardup",
-    "ivm_join_view_delta",
-    "diag_curve_locality",
-    "kmv_set_ops",
-    "agg_median_ci",
-    "events_error_conversion",
-    "embedding_triplet_margin",
-    "orders_theilsen_trend",
-    "events_weekly_seasonality_strength",
-    "orders_cohort_ltv",
-    "events_multitouch_attribution",
-    "dedup_bloom_prefilter",
-    "diag_join_size_forecast",
-    "udtf_table_arg_sessionize",
-    "diag_parquet_rowgroup_stats",
-]
-
-#: Regression canaries for round 6: all 70 entries last driver-checked in
-#: r01/r02 (approx_quantiles stays parked past the cap — by-design
-#: no_oracle, its exact twin agg_percentiles IS listed). Oldest driver
-#: check first; within a round, entries the r5 judge did NOT independently
-#: re-verify precede the 22 it did. The tail that misses this window
-#: stays due for round 7 in this order.
-_CANARIES_R06 = [
-    "ann_lsh_topk",
-    "approx_distinct_counts",
-    "case_when_bucketing",
-    "dedup_clusters",
-    "dedup_embedding_blocked",
-    "dedup_exact_docs",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "distinct_pairs",
-    "events_asof_last_click",
-    "filter_null_safe",
-    "q18_large_orders",
-    "scalar_date_fns",
-    "scalar_json_fns",
-    "scalar_math_fns",
-    "scalar_string_fns",
-    "set_except",
-    "set_intersect",
-    "set_union_all",
-    "window_ntile_percent",
-    "window_topk_per_group",
-    "ann_brute_force_topk",
-    "dedup_minhash_lsh",
-    "sort_limit_topk",
-    "window_running_sum",
-    "agg_corr_regr",
-    "agg_percentiles",
-    "corpus_curate",
-    "corr_above_nation_avg",
-    "dedup_embedding_cosine",
-    "dedup_keep_representatives",
-    "dedup_ngram_jaccard_pruned",
-    "embedding_covariance",
-    "events_sessionize",
-    "having_global_share",
-    "join_inner_broadcast",
-    "q10_returned_items",
-    "q12_priority_by_status",
-    "q13_customer_distribution",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q20_part_share_suppliers",
-    "q3_shipping_priority",
-    "q5_nation_revenue",
-    "q6_forecast_revenue",
-    "set_except_all",
-    "streaming_interval_join",
-    "text_langid",
-    "text_quality_score",
-    "text_token_stats",
-    "window_ntile_scalable",
-    "window_range_frame",
-    "corpus_token_histogram",
-    "events_tumbling_hourly",
-    "migrate_customer_cast",
-    "multimodal_metadata",
-    "q11_important_stock",
-    "q16_supplier_variety",
-    "q17_small_quantity_revenue",
-    "q19_disjunctive_predicates",
-    "q21_waiting_suppliers",
-    "q22_dormant_customers",
-    "q2_min_cost_supplier",
-    "q4_order_priority",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "scalar_array_fns",
-    "set_intersect_all",
-    "source_roundtrip_formats",
-    "text_normalize",
-]
-
-
-def _round6_queries():
-    """New round-6 entries; grows as the round progresses. Every key added
-    here must also be appended to ``_ROUND6_NEW``."""
-    from .functions import tablefns as _fn6
-    from .operators import analytics as _an6
-    from .operators import behavior as _bh6
-    from .operators import relational_ext as _re6
-    from .operators import similarity as _sim6
-    from .operators import validate as _va6
-    from .operators import corpus as _co6
-    from .operators import eventtime as _et6
-    from .operators import scale as _sc6
-    from .operators import timeseries as _ts6
-    from .operators import traindata as _td6
-    from .sources import pydatasource as _pds6
-    from .operators import graph as _gr6
-    from .operators import multimodal as _mm6
-    from .operators import similarity as _si6
-    from .operators import traindata as _td6
-    from .operators import validate as _vd6
-
-    return {
-        # monthly acquisition-cohort retention triangle
-        "orders_cohort_retention": analytics.orders_cohort_retention,
-        # daily growth accounting: new / retained / resurrected users
-        "events_user_lifecycle": analytics.events_user_lifecycle,
-        # triangle census of the supplier co-part graph (self-scaling
-        # relative edge threshold; oriented s1<s2 triangle join)
-        "graph_triangle_stats": _gr6.QUERIES["graph_triangle_stats"],
-        # per-doc lexical complexity / readability battery (pure codegen)
-        "text_readability_scores": textstats.text_readability_scores,
-        # unigram-LM commonness + rare-token share per doc
-        "corpus_doc_commonness": _co6.corpus_doc_commonness,
-        # FAISS-style IVFPQ: probe cells, ADC-score codes, exact re-rank
-        # partial-oracle (r9): the shared ANN recall gate
-        "ann_ivf_pq_topk": _si6.ann_ivf_pq_topk_checked,
-        # directional containment pairs — the asymmetric twin of Jaccard
-        "dedup_containment": dedup.dedup_containment,
-        # DSIR-style importance weights: target-vs-corpus bigram mass ratio
-        "corpus_dsir_importance": _co6.corpus_dsir_importance,
-        # curriculum phases via global_ranks — no un-partitioned window
-        "corpus_curriculum_phases": _td6.corpus_curriculum_phases,
-        # k-anonymity governance audit over quasi-identifiers
-        "privacy_k_anonymity": _vd6.privacy_k_anonymity,
-        # distributed Lloyd over the full embedding table (MLlib shape)
-        # partial-oracle (r9): census anchors + Lloyd invariants
-        "embedding_kmeans_clusters":
-            _si6.embedding_kmeans_clusters_checked,
-        # WAV frame-RMS / silence / VAD-segment triage via mapInPandas
-        # partial-oracle (r9): exact synth-shape anchors + range booleans
-        "multimodal_audio_energy": _mm6.multimodal_audio_energy_checked,
-        # mT5-style T=2 sampling mixture (sqrt is the one portable power)
-        "corpus_temperature_mixture": _td6.corpus_temperature_mixture,
-        # KMV distinct sketch per source with auditable error
-        "vocab_kmv_distinct": approx.vocab_kmv_distinct_checked,
-        # first-occurrence bigram novelty — the diminishing-returns curve
-        "corpus_ngram_novelty": _co6.corpus_ngram_novelty,
-        # pandas GROUPED_AGG UDAF — the last uncovered pandas-UDF class
-        "udaf_trimmed_sum": _fn6.udaf_trimmed_sum,
-        # real-BMP decode stats — image twin of the audio energy triage
-        # partial-oracle (r9): exact BMP-dims anchors + byte-range booleans
-        "multimodal_image_stats": _mm6.multimodal_image_stats_checked,
-        # k-core peel over the shared supplier co-sourcing edge list
-        # partial-oracle (r9): census node/edge counts hash-gated +
-        # degree-floor/handshake/containment invariants; the raw
-        # (node, core_degree) core keeps its peel-replay pytest
-        "graph_kcore": _gr6.graph_kcore_checked,
-        # native Spark 4 WITH RECURSIVE — engine-level recursion, the
-        # O(depth) twin of the pointer-doubling hierarchy walk
-        "sql_recursive_hierarchy": _gr6.QUERIES["sql_recursive_hierarchy"],
-        # Python DataSource WRITE path: task-commit/manifest protocol,
-        # loss-free kvlines round trip proven against the parquet oracle
-        "sink_pydatasource_roundtrip": _pds6.sink_pydatasource_roundtrip,
-        # query-side BM25 top-k: tf-saturation + length normalization,
-        # log-free rational idf, decimal-protocol per-doc sum
-        "retrieval_bm25_topk": _co6.retrieval_bm25_topk,
-        # hot-key census: the diagnosis whose remediation is
-        # join_salted_hot_key (same synthesized ~30% hot key)
-        "diag_join_key_skew": _sc6.diag_join_key_skew,
-        # sample autocorrelation of the densified daily series, lags
-        # 1..7 — the lag is an equi-join on day_num + k, no ordered
-        # window; seasonality shows as the lag-7 peak
-        "events_acf_daily": _ts6.events_acf_daily,
-        # inter-arrival burstiness profile (mean/std/CV of whole-second
-        # gaps) — micro-batch sizing + rate-anomaly thresholds
-        "events_interarrival_stats": _et6.events_interarrival_stats,
-        # pre-flight candidate-pair forecast for a (lang, length-bucket)
-        # blocked dedup self-join — prices the O(sum c^2) stage with one
-        # O(blocks) aggregation
-        "diag_blocking_pair_census": _sc6.diag_blocking_pair_census,
-        # doc-level co-occurrence lift over the top-100 vocabulary,
-        # log-free rational PMI core, broadcast-pinned vocab
-        "corpus_token_cooccurrence": _co6.corpus_token_cooccurrence,
-        # seasonal-naive vs naive-1 backtest (MASE ratio) on the shared
-        # dense daily grid — forecast go/no-go readout
-        "forecast_seasonal_naive_eval": _ts6.forecast_seasonal_naive_eval,
-        # cross-source quantile normalization of the composite quality
-        # score via scale.global_ranks — one bar for every source
-        "quality_quantile_calibrate": _td6.quality_quantile_calibrate,
-        # top three-step user journeys with exact shares — order-2
-        # sequence census beyond the transition matrix
-        "events_trigram_journeys": _bh6.events_trigram_journeys,
-        # per-file zone-map ranges under arrival vs sorted layout —
-        # the before/after evidence for "sort before write"
-        "diag_layout_zonemap": _sc6.diag_layout_zonemap,
-        # chi-square independence + Cramér's V on nation × segment —
-        # categorical-redundancy readout before one-hot blowup
-        "assoc_cramers_v": _an6.assoc_cramers_v,
-        # Holt level+trend smoothing per event type; partial-oracle (r9):
-        # exact dense-grid anchors hash-gated + emission-invariant
-        # booleans (pure-Python replay pytest pins the raw core)
-        "events_holt_linear": _et6.events_holt_linear_checked,
-        # exact Gini + Lorenz deciles of customer revenue — the key-skew
-        # inequality census riding scale.global_ranks
-        "revenue_gini_lorenz": _an6.revenue_gini_lorenz,
-        # Heaps'-law vocabulary-growth curve: new/cumulative token types
-        # per document decile, exact first-appearance ordinals
-        "corpus_heaps_law": _co6.corpus_heaps_law,
-        # sweep-line peak concurrent sessions per day via the global
-        # prefix sum — never a single-partition window
-        "events_peak_concurrency": _et6.events_peak_concurrency,
-        # volume-weighted global percentiles riding the global prefix
-        # sum — exact ceil(q·W) rank rule, no interpolation
-        "agg_weighted_percentiles": _an6.agg_weighted_percentiles,
-        # Benford first-digit audit on price cents — expectations as
-        # parsed double literals, no query-time log10
-        "benford_price_audit": _an6.benford_price_audit,
-        # per-user Gini impurity of the event-type mix — log-free
-        # rational predictability census
-        "events_user_predictability": _bh6.events_user_predictability,
-        # ---- _ROUND6_LATE (past the window; r7-first, see list) ----
-        # degree census + CCDF tail of the co-sourcing graph — the
-        # hub-dominance readout that prices edge-keyed join salting
-        "graph_degree_distribution": _gr6.graph_degree_distribution,
-        # per-source keyness via exact add-one odds ratio — log-free
-        "corpus_distinctive_terms": _co6.corpus_distinctive_terms,
-        # pairwise source-centroid cosine/L2 drift in embedding space —
-        # one corpus pass, catalog-sized everything after
-        "embedding_source_drift": _sim6.embedding_source_drift,
-        # does the ACTUAL data fit the MAPPED Iceberg type — one parsed
-        # DDL drives mapping AND this audit (schema↔data plane loop)
-        "migrate_type_fit_audit": _va6.migrate_type_fit_audit,
-        # per-month fulfillment SLA: rank-rule p50/p95 ship lag, mean,
-        # late share — one month-keyed window sort
-        "orders_fulfillment_latency": _an6.orders_fulfillment_latency,
-        # month-over-month revenue-delta decomposition by nation —
-        # consecutive CALENDAR months via grid equi-join, never lag
-        "orders_mom_contribution": _an6.orders_mom_contribution,
-        # Spark 4 SQL scalar UDFs (CREATE TEMPORARY FUNCTION … RETURN
-        # expr) — Catalyst-inlined, zero Python in the plan
-        "sql_scalar_udf_battery": _fn6.sql_scalar_udf_battery,
-        # streaming P² quantile: O(1) five-marker state per key forever;
-        # floating recurrence → rows-only, exact pure-Python replay pytest
-        "streaming_p2_quantile": _streaming_p2_quantile,
-        # l-diversity audit — the leak k-anonymity cannot see (uniform
-        # sensitive values inside a big QI group)
-        "privacy_l_diversity": _va6.privacy_l_diversity,
-        # NOT IN vs NOT EXISTS vs ANTI JOIN three-valued-logic battery
-        # over a NULL-poisoned key set — migration regression canary
-        "scalar_null_semantics": _re6.scalar_null_semantics,
-        # stationary distribution of the journey Markov chain (power
-        # iteration on the types²-bounded matrix) — rows-only + numpy
-        # partial-oracle (r9): observed_share exact + unit/identity/sum
-        # invariants; numpy eigenvector pytest pins the raw core
-        "events_markov_stationary": _bh6.events_markov_stationary_checked,
-        # id sequence-gap audit with NO global window: bucketed lead +
-        # algebraic cross-bucket remainder (span − count)
-        "events_id_gap_audit": _et6.events_id_gap_audit,
-        # DCT perceptual-hash image near-dup over the REAL BMP codec —
-        # banded 16-bit candidate join + codegen bit_count verify
-        "multimodal_phash_neardup": _mm6.multimodal_phash_neardup_checked,
-        # two-sided delta-join view maintenance: ΔA⋈B ∪ A⋈ΔB ∪ ΔA⋈ΔB
-        # merged by re-agg; the full-recompute oracle proves the algebra
-        "ivm_join_view_delta": cdc.ivm_join_view_delta,
-        # lexicographic vs Z-order vs Hilbert write layouts, scored by
-        # expected files touched per predicate — Hilbert no SQL twin →
-        # rows-only, pure-Python d(x,y) replay pytest
-        # partial-oracle (r9): layout/file-count literals + geometric
-        # bbox invariants; Hilbert replay pytest pins the raw core
-        "diag_curve_locality": _sc6.diag_curve_locality_checked,
-        # KMV/theta set algebra: union AND intersection estimates from
-        # two mergeable sketches (HLL cannot intersect) — rows-only
-        "kmv_set_ops": approx.kmv_set_ops_checked,
-        # exact median + distribution-free binomial-rank 95% CI riding
-        # global_ranks ordinal joins
-        "agg_median_ci": _an6.agg_median_ci,
-        # 2×2 session census: error × conversion with risk ratio,
-        # add-one odds ratio, and the closed-form 2×2 chi²
-        "events_error_conversion": _bh6.events_error_conversion,
-        # per-label triplet margin (nearest friend − nearest impostor
-        # cosine) — embedding-quality audit; float chains → rows-only
-        # partial-oracle (r9): per-label anchor census exact + range
-        # invariants; numpy replay pytest pins the raw core
-        "embedding_triplet_margin": _sim6.embedding_triplet_margin_checked,
-        # Theil–Sen vs OLS revenue trend — median of months²-bounded
-        # pairwise slopes beside the outlier-sensitive line
-        "orders_theilsen_trend": _an6.orders_theilsen_trend,
-        # STL-lite: variance explained by the day-of-week MEDIAN profile
-        # — decides seasonal-naive vs naive-1 as the forecast baseline
-        "events_weekly_seasonality_strength":
-            _et6.events_weekly_seasonality_strength,
-        # cumulative LTV curve per acquisition cohort — the money twin
-        # of the retention triangle
-        "orders_cohort_ltv": _an6.orders_cohort_ltv,
-        # linear multi-touch attribution over a 7-day lookback — credit
-        # conservation: Σcredit = attributed purchases
-        "events_multitouch_attribution":
-            _bh6.events_multitouch_attribution,
-        # relational Bloom prefilter for ingest dedup: k seeded probes,
-        # filter = distinct bit-position table; no-FN guarantee pinned
-        "dedup_bloom_prefilter": dedup.dedup_bloom_prefilter_checked,
-        # exact Σc² self-join size forecast from the O(keys) census —
-        # prices the quadratic blowup before paying it
-        "diag_join_size_forecast": _sc6.diag_join_size_forecast,
-        # Spark 4 polymorphic UDTF: TABLE(...) PARTITION BY/ORDER BY
-        # argument routing — same oracle as events_sessionize
-        "udtf_table_arg_sessionize": _fn6.udtf_table_arg_sessionize,
-        # real parquet row-group zone maps from the file footers —
-        # pyarrow stat typing has no stable DuckDB twin → rows-only,
-        # pytest cross-checks duckdb parquet_metadata()
-        # partial-oracle (r9): footer totals vs the table itself
-        "diag_parquet_rowgroup_stats":
-            _sc6.diag_parquet_rowgroup_stats_checked,
-    }
-
-
-_WINDOW_SIZE = 50
-
-#: The round-8 due list, BY CONSTRUCTION per the recorded plan: the r7
-#: canary fill stopped at _CANARIES_R07[18] (18 = 50 − 5 debuts − 27
-#: late-r6), so the unreached 41 stale r01/r02 canaries come first (in
-#: list order), then the 50 r03-checked entries (oldest driver rows
-#: after them). The tail that misses the r8 window stays due for
-#: round 9 in this order, ahead of the r04-checked block.
-_CANARIES_R08: list = (
-    _CANARIES_R07[_WINDOW_SIZE - len(_ROUND7_NEW) - len(_ROUND6_LATE):]
-    + _R03_CHECKED
-)
-
-#: The 50 entries last driver-checked in round 4, in their exact
-#: CORRECTNESS_r04.json window order (= oldest driver row first).
-#: Verified at round-9 build time: none of these appears in any of the
-#: r05–r08 CORRECTNESS windows, so "checked in r4" is each one's most
-#: recent driver row. This is the second half of the round-9 due list.
-_R04_CHECKED: list = [
-    "dedup_incremental_exact",
-    "sample_per_group_topn",
-    "corpus_mix_weights",
-    "corpus_token_budget_cut",
-    "streaming_zscore_alerts",
-    "streaming_user_stats_v2",
-    "corpus_frequent_tokens_mg",
-    "customer_rfm_segments",
-    "part_abc_analysis",
-    "orders_open_backlog_daily",
-    "audience_overlap_matrix",
-    "geo_nearest_site_assignment",
-    "supplier_on_time_scorecard",
-    "events_dow_hour_profile",
-    "events_mad_outliers",
-    "observe_scan_metrics",
-    "orders_monthly_growth",
-    "text_langid_eval",
-    "part_pareto_frontier",
-    "basket_part_affinity",
-    "events_locf_daily",
-    "events_pattern_vshape",
-    "orders_keyset_page",
-    "customers_adoption_curve",
-    "events_activity_streaks",
-    "events_ohlc_bars",
-    "events_twap",
-    "events_interval_islands",
-    "events_active_users_7d",
-    "graph_hierarchy_depths",
-    "corpus_bigram_counts",
-    "text_pii_redact",
-    "sink_partitioned_prune",
-    "dedup_substring_spans",
-    "scd2_history_from_events",
-    "rollup_incremental_refresh",
-    "corpus_bpe_merge_pairs",
-    "events_session_attribution",
-    "scale_zorder_zvalues",
-    "window_running_distinct",
-    "sink_compact_small_files",
-    "source_schema_evolution",
-    "sink_dynamic_partition_overwrite",
-    "events_ema",
-    "approx_hll_union",
-    "multimodal_resize",
-    "multimodal_frame_sample",
-    "join_full_outer",
-    "agg_grouping_sets",
-    "text_fingerprint",
-]
-
-#: The round-9 due list, BY CONSTRUCTION per the recorded plan: the r8
-#: canary fill stopped at _CANARIES_R08[50] (len(_ROUND8_NEW)=0 debuts),
-#: so the unreached 41 r03-checked entries come first (in list order =
-#: _R03_CHECKED[9:]), then the 50 r04-checked entries (oldest driver
-#: rows after them). The two blocks are disjoint (verified at build
-#: time). The tail that misses the r9 window stays due for round 10 in
-#: this order; after round 10 lands, the staleness debt is fully
-#: cleared.
-_CANARIES_R09: list = (
-    _CANARIES_R08[_WINDOW_SIZE - len(_ROUND8_NEW):] + _R04_CHECKED
-)
-
-#: The 50 entries last driver-checked in round 5, in their exact
-#: CORRECTNESS_r05.json window order. Verified at round-10 build time
-#: (tools-free: latest-round map over CORRECTNESS_r01..r09): none of
-#: these was re-checked in any r06–r09 window, so r5 is each one's most
-#: recent driver row — the restart block once the r04 tail lands.
-_R05_CHECKED: list = [
-    "rerank_ann_shortlist",
-    "corpus_curation_report",
-    "export_training_shards",
-    "corpus_mixture_sample",
-    "bpe_train_merges",
-    "merge_into_customers",
-    "streaming_cdc_upsert",
-    "corpus_neardup_report",
-    "corpus_chunk_overlap",
-    "corpus_doc_lm_coverage",
-    "events_linear_interp_daily",
-    "source_dpp_star_join",
-    "bpe_encode_stats",
-    "dedup_semdedup",
-    "streaming_left_outer_join",
-    "events_winsorize_clip",
-    "corpus_token_countmin",
-    "embedding_standardize",
-    "corpus_build_pipeline",
-    "corpus_decontaminate",
-    "corpus_gopher_rules",
-    "ann_pq_encode",
-    "corpus_pack_global_stream",
-    "validate_star_expectations",
-    "source_bloom_runtime_filter",
-    "agg_histogram_equi_depth",
-    "events_cusum_drift",
-    "dedup_incremental_minhash",
-    "streaming_cusum_alerts",
-    "gdpr_delete_cascade",
-    "corpus_lang_drift_chi2",
-    "classifier_quality_linear",
-    "classifier_gains_deciles",
-    "corpus_source_ks_drift",
-    "split_leakage_safe",
-    "corpus_source_similarity",
-    "embedding_pca_project",
-    "streaming_heavy_hitters",
-    "scan_filter_projection",
-    "join_left_outer",
-    "join_anti",
-    "join_semi",
-    "join_cross",
-    "join_range_nonequi",
-    "agg_cube",
-    "agg_pivot",
-    "agg_stats",
-    "agg_distinct_counts",
-    "window_lag_lead",
-    "window_rank_dense",
-]
-
-#: The round-10 due list, BY CONSTRUCTION per the recorded plan: the r9
-#: canary fill stopped at _CANARIES_R09[50] (len(_ROUND9_NEW)=0 debuts),
-#: so the unreached 41 r04-checked entries come first (in list order =
-#: _R04_CHECKED[9:]) — after they land, the r03/r04 staleness debt is
-#: fully cleared. One correction to the recorded plan discovered at
-#: build time: ``approx_quantiles``'s most recent driver row is the r02
-#: ``err: no_oracle`` by-design marker (parked past the cap ever since;
-#: it gained a full oracle wrapper in r9 but never re-entered a window),
-#: so it is the single oldest entry in the registry and precedes the
-#: round-5 restart block (``_R05_CHECKED``, oldest driver rows after it,
-#: in CORRECTNESS_r05.json order). The tail that misses the r10 window
-#: stays due for round 11 in this order.
-_CANARIES_R10: list = (
-    _CANARIES_R09[_WINDOW_SIZE - len(_ROUND9_NEW):]
-    + ["approx_quantiles"] + _R05_CHECKED
-)
-
-#: The 50 entries last driver-checked in round 6, in their exact
-#: CORRECTNESS_r06.json window order. Verified at round-11 build time
-#: (latest-round map over CORRECTNESS_r01..r10): none of these was
-#: re-checked in any r07–r10 window, so r6 is each one's most recent
-#: driver row — the restart block once the r05 tail lands.
-_R06_CHECKED: list = [
-    "orders_cohort_retention",
-    "events_user_lifecycle",
-    "graph_triangle_stats",
-    "text_readability_scores",
-    "corpus_doc_commonness",
-    "ann_ivf_pq_topk",
-    "dedup_containment",
-    "corpus_dsir_importance",
-    "corpus_curriculum_phases",
-    "privacy_k_anonymity",
-    "embedding_kmeans_clusters",
-    "multimodal_audio_energy",
-    "corpus_temperature_mixture",
-    "vocab_kmv_distinct",
-    "corpus_ngram_novelty",
-    "udaf_trimmed_sum",
-    "streaming_static_enrich",
-    "multimodal_image_stats",
-    "graph_kcore",
-    "sql_recursive_hierarchy",
-    "sink_pydatasource_roundtrip",
-    "retrieval_bm25_topk",
-    "diag_join_key_skew",
-    "events_acf_daily",
-    "events_interarrival_stats",
-    "diag_blocking_pair_census",
-    "corpus_token_cooccurrence",
-    "forecast_seasonal_naive_eval",
-    "quality_quantile_calibrate",
-    "events_trigram_journeys",
-    "diag_layout_zonemap",
-    "assoc_cramers_v",
-    "events_holt_linear",
-    "revenue_gini_lorenz",
-    "corpus_heaps_law",
-    "events_peak_concurrency",
-    "agg_weighted_percentiles",
-    "benford_price_audit",
-    "events_user_predictability",
-    "ann_lsh_topk",
-    "approx_distinct_counts",
-    "case_when_bucketing",
-    "dedup_clusters",
-    "dedup_embedding_blocked",
-    "dedup_exact_docs",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "distinct_pairs",
-    "events_asof_last_click",
-    "filter_null_safe",
-]
-
-#: The round-11 due list, BY CONSTRUCTION per the recorded plan: the
-#: r10 canary fill stopped at _CANARIES_R10[50] (len(_ROUND10_NEW)=0
-#: debuts), so the unreached 42 r05-checked entries come first (in list
-#: order = _R05_CHECKED[8:], starting at ``corpus_chunk_overlap``) —
-#: after they land, every r05 row is refreshed — then the round-6
-#: restart block (``_R06_CHECKED``, oldest driver rows after them, in
-#: CORRECTNESS_r06.json order). The tail that misses the r11 window
-#: stays due for round 12 in this order.
-_CANARIES_R11: list = (
-    _CANARIES_R10[_WINDOW_SIZE - len(_ROUND10_NEW):] + _R06_CHECKED
-)
-
-#: The 50 entries last driver-checked in round 7, in their exact
-#: CORRECTNESS_r07.json window order. Verified at round-12 build time
-#: (latest-round map over CORRECTNESS_r01..r11): none of these was
-#: re-checked in any r08–r11 window, so r7 is each one's most recent
-#: driver row — the restart block once the r06 tail lands.
-_R07_CHECKED: list = [
-    "stat_mann_whitney_u",
-    "stat_spearman_corr",
-    "stat_mann_kendall_trend",
-    "stat_kendall_tau",
-    "sql_pipe_syntax_battery",
-    "graph_degree_distribution",
-    "corpus_distinctive_terms",
-    "embedding_source_drift",
-    "migrate_type_fit_audit",
-    "orders_fulfillment_latency",
-    "orders_mom_contribution",
-    "sql_scalar_udf_battery",
-    "streaming_p2_quantile",
-    "privacy_l_diversity",
-    "scalar_null_semantics",
-    "events_markov_stationary",
-    "events_id_gap_audit",
-    "multimodal_phash_neardup",
-    "ivm_join_view_delta",
-    "diag_curve_locality",
-    "kmv_set_ops",
-    "agg_median_ci",
-    "events_error_conversion",
-    "embedding_triplet_margin",
-    "orders_theilsen_trend",
-    "events_weekly_seasonality_strength",
-    "orders_cohort_ltv",
-    "events_multitouch_attribution",
-    "dedup_bloom_prefilter",
-    "diag_join_size_forecast",
-    "udtf_table_arg_sessionize",
-    "diag_parquet_rowgroup_stats",
-    "dedup_embedding_cosine",
-    "dedup_keep_representatives",
-    "dedup_ngram_jaccard_pruned",
-    "embedding_covariance",
-    "events_sessionize",
-    "having_global_share",
-    "join_inner_broadcast",
-    "q10_returned_items",
-    "q12_priority_by_status",
-    "q13_customer_distribution",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q20_part_share_suppliers",
-    "q3_shipping_priority",
-    "q5_nation_revenue",
-    "q6_forecast_revenue",
-    "set_except_all",
-    "streaming_interval_join",
-]
-
-#: The 8 ``_R07_CHECKED`` entries whose newest driver row is still the
-#: r07 ``err: no_oracle`` marker (they earned real oracles in r8/r9 but
-#: were never re-windowed; verified against CORRECTNESS_r01..r11 at
-#: round-12 build time, in their exact CORRECTNESS_r07.json relative
-#: order). The r11 verdict's task-1 Done criterion is "stale set down
-#: to 1 (dedup_minhash_lsh)", which requires these 8 — not the file's
-#: first 8 — to take the r12 fill slots, so the restart block below
-#: promotes them to its head (a documented stale-first promotion; the
-#: 42 non-stale entries follow in unchanged file order).
-_R07_STALE: list = [
-    "streaming_p2_quantile",
-    "events_markov_stationary",
-    "multimodal_phash_neardup",
-    "diag_curve_locality",
-    "kmv_set_ops",
-    "embedding_triplet_margin",
-    "dedup_bloom_prefilter",
-    "diag_parquet_rowgroup_stats",
-]
-
-#: The round-12 due list, BY CONSTRUCTION per the recorded plan: the
-#: r11 canary fill stopped at _CANARIES_R11[50] (len(_ROUND11_NEW)=0
-#: debuts), so the unreached 42 r06-checked entries come first (in list
-#: order = _R06_CHECKED[8:], starting at ``corpus_curriculum_phases``) —
-#: after they land, every r06 row is refreshed — then the round-7
-#: restart block: ``_R07_CHECKED`` with its 8 stale ``no_oracle``
-#: entries promoted to the head (see ``_R07_STALE``; the r11 verdict's
-#: task-1 Done criterion), the remaining 42 in CORRECTNESS_r07.json
-#: order. The tail that misses the r12 window stays due for round 13
-#: in this order.
-_CANARIES_R12: list = (
-    _CANARIES_R11[_WINDOW_SIZE - len(_ROUND11_NEW):]
-    + _R07_STALE
-    + [k for k in _R07_CHECKED if k not in _R07_STALE]
-)
-
-#: The 18 registry entries with no CORRECTNESS row in any of r01–r04
-#: (computed from the four driver files; r4 verdict item 1). Green locally
-#: via ``python tools/check_oracle_parity.py --first 50``.
-_NEVER_CHECKED_R04 = [
-    "rerank_ann_shortlist",
-    "corpus_curation_report",
-    "export_training_shards",
-    "corpus_mixture_sample",
-    "bpe_train_merges",
-    "merge_into_customers",
-    "streaming_cdc_upsert",
-    "corpus_neardup_report",
-    "corpus_chunk_overlap",
-    "corpus_doc_lm_coverage",
-    "events_linear_interp_daily",
-    "source_dpp_star_join",
-    "bpe_encode_stats",
-    "dedup_semdedup",
-    "streaming_left_outer_join",
-    "events_winsorize_clip",
-    "corpus_token_countmin",
-    "embedding_standardize",
-]
-
-#: New round-5 entries — kept in sync with ``_round5_queries()`` so each
-#: earns a driver row in its debut round.
-_ROUND5_NEW: list = [
-    "corpus_build_pipeline",
-    "corpus_decontaminate",
-    "corpus_gopher_rules",
-    "ann_pq_encode",
-    "corpus_pack_global_stream",
-    # registered via validate.QUERIES (round-3 layout position); listed
-    # here so its debut lands inside the round-5 window
-    "validate_star_expectations",
-    "source_bloom_runtime_filter",
-    "agg_histogram_equi_depth",
-    "events_cusum_drift",
-    "dedup_incremental_minhash",
-    # registered via _streaming_queries (round-1 layout position); listed
-    # here so its debut lands inside the round-5 window
-    "streaming_cusum_alerts",
-    "gdpr_delete_cascade",
-    "corpus_lang_drift_chi2",
-    "classifier_quality_linear",
-    "classifier_gains_deciles",
-    "corpus_source_ks_drift",
-    "split_leakage_safe",
-    "corpus_source_similarity",
-    "embedding_pca_project",
-    # registered via _streaming_queries (round-1 layout position); listed
-    # here so its debut lands inside the round-5 window
-    "streaming_heavy_hitters",
-]
-
-#: Family-spanning regression canaries, oldest-checked first (all r01
-#: except the last four, r02); the window takes the first
-#: ``50 - 18 - len(_ROUND5_NEW)``.
-_CANARIES_R05 = [
-    "scan_filter_projection",
-    "join_left_outer",
-    "join_anti",
-    "join_semi",
-    "join_cross",
-    "join_range_nonequi",
-    "agg_cube",
-    "agg_pivot",
-    "agg_stats",
-    "agg_distinct_counts",
-    "window_lag_lead",
-    "window_rank_dense",
-    "window_topk_per_group",
-    "window_running_sum",
-    "window_ntile_percent",
-    "set_except",
-    "set_intersect",
-    "set_union_all",
-    "sort_limit_topk",
-    "distinct_pairs",
-    "filter_null_safe",
-    "case_when_bucketing",
-    "scalar_string_fns",
-    "scalar_date_fns",
-    "scalar_math_fns",
-    "scalar_json_fns",
-    "dedup_exact_docs",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_ngram_jaccard",
-    "dedup_clusters",
-    "dedup_embedding_blocked",
-    "ann_brute_force_topk",
-    "ann_lsh_topk",
-    "events_asof_last_click",
-    "approx_distinct_counts",
-    "q18_large_orders",
-    "q3_shipping_priority",
-    "q5_nation_revenue",
-    "q10_returned_items",
-    "set_except_all",
-]
-
-
-def _round5_queries():
-    """New round-5 entries; grows as the round progresses. Every key added
-    here must also be appended to ``_ROUND5_NEW``."""
-    from .operators import corpus, similarity
-    from .operators import dedup as _dd5
-    from .operators import eventtime as _ev5
-    from .operators import validate as _vl5
-    from .operators import scale as _sc5
-    from .operators import traindata as _td5
-    from .sources.registry import source_bloom_runtime_filter as _bloom_rt
-
-    return {
-        # end-to-end curation: gates ∘ dedup ∘ mixture ∘ chunk ∘ shard
-        # manifest in ONE job (r4 verdict item 9) — proves the standalone
-        # stages compose without a driver round-trip between them
-        "corpus_build_pipeline": corpus.corpus_build_pipeline,
-        # benchmark n-gram decontamination (broadcast eval-gram probe)
-        "corpus_decontaminate": corpus.corpus_decontaminate,
-        # Gopher-style rule-based quality pre-filter (pure scan pass)
-        "corpus_gopher_rules": corpus.corpus_gopher_rules,
-        # product-quantization encode (float k-means codebooks →
-        # rows-only; codes + errors pinned vs numpy in pytest)
-        # partial-oracle (r9): vec_id set exact + code/error range booleans
-        "ann_pq_encode": similarity.ann_pq_encode_checked,
-        # global-stream concat-and-chunk packing manifest riding the
-        # scalable prefix scan (no single-partition window)
-        "corpus_pack_global_stream": _td5.corpus_pack_global_stream,
-        # runtime bloom-filter join (row-level complement to DPP)
-        "source_bloom_runtime_filter": _bloom_rt,
-        # exact equi-depth histogram on the scalable global rank
-        "agg_histogram_equi_depth": _sc5.agg_histogram_equi_depth,
-        # CUSUM change-point monitor (max-clamp recurrence → grouped
-        # applyInPandas like events_ema); partial-oracle (r9): per-type
-        # counts hash-gated + peak/first-alarm consistency booleans
-        # (numpy-loop pytests still pin the raw core's alarm values)
-        "events_cusum_drift": _ev5.events_cusum_drift_checked,
-        # incremental batch-vs-corpus near-dup via the shared LSH bands;
-        # partial-oracle (r9): exact batch/verbatim-dup counts hash-gated
-        # + structural recall booleans (pytest still pins the flagged set
-        # vs brute-force Jaccard on the raw core)
-        "dedup_incremental_minhash": _dd5.dedup_incremental_minhash_checked,
-        # right-to-be-forgotten cascade impact plan (FK-driven semi/anti
-        # joins + zero-orphan audit)
-        "gdpr_delete_cascade": _vl5.gdpr_delete_cascade,
-        # snapshot-over-snapshot language drift (exact chi-square — no
-        # log, so bitwise-portable unlike KL)
-        "corpus_lang_drift_chi2": corpus.corpus_lang_drift_chi2,
-        # feature-hashed linear quality classifier (fastText scale shape:
-        # broadcast weight dim + one integer-weighted hash agg per doc)
-        "classifier_quality_linear": textstats.classifier_quality_linear,
-        # decile gains/lift calibration of that score vs the lang gold
-        # label, riding scale.global_ranks (no single-partition window)
-        "classifier_gains_deciles": textstats.classifier_gains_deciles,
-        # exact two-sample KS length-drift per source on the compacted
-        # (source, n_chars) frame — numeric twin of the chi2 lang drift
-        "corpus_source_ks_drift": corpus.corpus_source_ks_drift,
-        # near-dup-cluster-aware train/val/test split: docs inherit their
-        # cluster representative's split, closing the paraphrase-leakage
-        # channel a per-doc content-hash split leaves open
-        "split_leakage_safe": _td5.split_leakage_safe,
-        # pairwise source-level trigram Jaccard/containment matrix on the
-        # distinct (source, gram) compaction — the redundancy map mixture
-        # weighting consults (source-level twin of dedup_ngram_jaccard)
-        "corpus_source_similarity": corpus.corpus_source_similarity,
-        # top-k PCA projection: per-partition sufficient-stat partials →
-        # driver d×d eigh (bounded-collect contract) → broadcast-matmul
-        # Arrow projection; eigendecomposition is iterative float math →
-        # rows-only, pytest-pinned vs full-batch numpy PCA
-        # partial-oracle (r9): vec_id set exact + in-plan Bessel gate;
-        # numpy PCA pytest pins the raw core
-        "embedding_pca_project": similarity.embedding_pca_project_checked,
-    }
-
-
-#: The driver checks the FIRST 50 ``queries()`` entries each round. This list
-#: IS the round-4 window: the 47 entries with no driver CORRECTNESS row in
-#: r01–r03 (recorded order), then 3 fresh canaries last checked in r01.
-_WINDOW_R04 = [
-    "dedup_incremental_exact",
-    "sample_per_group_topn",
-    "corpus_mix_weights",
-    "corpus_token_budget_cut",
-    "streaming_zscore_alerts",
-    "streaming_user_stats_v2",
-    "corpus_frequent_tokens_mg",
-    "customer_rfm_segments",
-    "part_abc_analysis",
-    "orders_open_backlog_daily",
-    "audience_overlap_matrix",
-    "geo_nearest_site_assignment",
-    "supplier_on_time_scorecard",
-    "events_dow_hour_profile",
-    "events_mad_outliers",
-    "observe_scan_metrics",
-    "orders_monthly_growth",
-    "text_langid_eval",
-    "part_pareto_frontier",
-    "basket_part_affinity",
-    "events_locf_daily",
-    "events_pattern_vshape",
-    "orders_keyset_page",
-    "customers_adoption_curve",
-    "events_activity_streaks",
-    "events_ohlc_bars",
-    "events_twap",
-    "events_interval_islands",
-    "events_active_users_7d",
-    "graph_hierarchy_depths",
-    "corpus_bigram_counts",
-    "text_pii_redact",
-    "sink_partitioned_prune",
-    "dedup_substring_spans",
-    "scd2_history_from_events",
-    "rollup_incremental_refresh",
-    "corpus_bpe_merge_pairs",
-    "events_session_attribution",
-    "scale_zorder_zvalues",
-    "window_running_distinct",
-    "sink_compact_small_files",
-    "source_schema_evolution",
-    "sink_dynamic_partition_overwrite",
-    "events_ema",
-    "approx_hll_union",
-    "multimodal_resize",
-    "multimodal_frame_sample",
-    # fresh canaries (join / multi-set agg / text families, r01-green):
-    "join_full_outer",
-    "agg_grouping_sets",
-    "text_fingerprint",
-]
-
-
-def _round3_queries():
-    """New round-3 entries; grows as the round progresses. Placed INSIDE
-    the window so each earns a driver row immediately."""
-    from .operators import behavior, traindata, validate
-
-    q = {}
-    q.update(behavior.QUERIES)
-    q.update(traindata.QUERIES)
-    # late round-3 additions parked past the cap — ROUND-4 ROTATION: move
-    # these two into the window for their first driver rows (both oracle-
-    # backed, locally green), swapping out two of this round's canaries
-    del q["dedup_incremental_exact"], q["sample_per_group_topn"]
-    del q["corpus_mix_weights"], q["corpus_token_budget_cut"]
-    q.update(validate.QUERIES)
-    # PQ/ADC ANN: approximate by construction → rows-only driver check;
-    # recall-vs-brute-force pinned in tests/test_behavior.py
-    # partial-oracle (r9): the shared ANN recall gate
-    q["ann_pq_topk"] = similarity.ann_pq_topk_checked
-    q.update({
-        "text_gopher_filters": textstats.text_gopher_filters,
-        "text_repetition_metrics": textstats.text_repetition_metrics,
-        "agg_histogram_equi_width": analytics.agg_histogram_equi_width,
-        "join_salted_hot_key": scale.join_salted_hot_key,
-    })
-    return q
+    """Name -> ``(spark, sf_dir) -> DataFrame``, in driver order."""
+    return {name: query for name, query, _ in build_table()}
 
 
 def build_oracles() -> dict[str, str]:
-    from .operators import behavior, eventtime, graph, traindata, validate
-    from .operators import multimodal as _mm6
-    from .sources.registry import (ORACLE_SCHEMA_EVOLUTION,
-                                   ORACLE_SINK_COMPACT,
-                                   ORACLE_SINK_DYNPART,
-                                   ORACLE_SINK_PARTITIONED)
-
-    oracles = dict(rext.ORACLES)
-    oracles.update(eventtime.ORACLES)
-    oracles["graph_hierarchy_depths"] = graph.ORACLE_HIERARCHY_DEPTHS
-    # partial-oracle (r9): exact graph census + invariant booleans
-    oracles["graph_pagerank_top"] = graph.ORACLE_PAGERANK_CHECKED
-    oracles["corpus_bigram_counts"] = corpus.ORACLE_BIGRAM_COUNTS
-    oracles["text_pii_redact"] = textstats.ORACLE_TEXT_PII
-    oracles["sink_partitioned_prune"] = ORACLE_SINK_PARTITIONED
-    oracles["dedup_substring_spans"] = dedup.ORACLE_DEDUP_SUBSTRING
-    oracles["scd2_history_from_events"] = cdc.ORACLE_SCD2_FROM_EVENTS
-    oracles["rollup_incremental_refresh"] = timeseries.ORACLE_ROLLUP_REFRESH
-    oracles["corpus_bpe_merge_pairs"] = corpus.ORACLE_BPE_MERGE_PAIRS
-    oracles["events_session_attribution"] = \
-        eventtime.ORACLE_SESSION_ATTRIBUTION
-    oracles["scale_zorder_zvalues"] = scale.ORACLE_ZORDER
-    oracles["window_running_distinct"] = \
-        analytics.ORACLE_WINDOW_RUNNING_DISTINCT
-    oracles["customer_rfm_segments"] = analytics.ORACLE_CUSTOMER_RFM
-    oracles["part_abc_analysis"] = analytics.ORACLE_PART_ABC
-    oracles["orders_open_backlog_daily"] = analytics.ORACLE_ORDERS_BACKLOG
-    oracles["audience_overlap_matrix"] = behavior.ORACLE_AUDIENCE_OVERLAP
-    oracles["geo_nearest_site_assignment"] = analytics.ORACLE_GEO_NEAREST
-    oracles["supplier_on_time_scorecard"] = \
-        analytics.ORACLE_SUPPLIER_SCORECARD
-    oracles["events_dow_hour_profile"] = analytics.ORACLE_EVENTS_DOW_HOUR
-    oracles["events_mad_outliers"] = analytics.ORACLE_EVENTS_MAD
-    oracles["observe_scan_metrics"] = validate.ORACLE_OBSERVE_METRICS
-    oracles["orders_monthly_growth"] = \
-        analytics.ORACLE_ORDERS_MONTHLY_GROWTH
-    oracles["text_langid_eval"] = textstats.ORACLE_TEXT_LANGID_EVAL
-    oracles["part_pareto_frontier"] = analytics.ORACLE_PART_PARETO
-    oracles["basket_part_affinity"] = analytics.ORACLE_BASKET_AFFINITY
-    oracles["events_locf_daily"] = timeseries.ORACLE_EVENTS_LOCF
-    oracles["events_pattern_vshape"] = eventtime.ORACLE_PATTERN_VSHAPE
-    oracles["orders_keyset_page"] = analytics.ORACLE_ORDERS_KEYSET
-    oracles["customers_adoption_curve"] = \
-        analytics.ORACLE_CUSTOMERS_ADOPTION
-    oracles["events_activity_streaks"] = \
-        eventtime.ORACLE_ACTIVITY_STREAKS
-    oracles["sink_compact_small_files"] = ORACLE_SINK_COMPACT
-    oracles["source_schema_evolution"] = ORACLE_SCHEMA_EVOLUTION
-    oracles["sink_dynamic_partition_overwrite"] = ORACLE_SINK_DYNPART
-    oracles.update(analytics.ORACLES)
-    oracles.update(timeseries.ORACLES)
-    oracles.update(behavior.ORACLES)
-    oracles.update(traindata.ORACLES)
-    oracles.update(validate.ORACLES)
-    oracles["text_gopher_filters"] = textstats.ORACLE_TEXT_GOPHER
-    oracles["text_repetition_metrics"] = textstats.ORACLE_TEXT_REPETITION
-    oracles["agg_histogram_equi_width"] = analytics.ORACLE_AGG_HISTOGRAM
-    oracles["join_salted_hot_key"] = scale.ORACLE_JOIN_SALTED_HOT
-    # ---- round-8 partial-oracle upgrades: former rows-only sketch
-    # entries whose exact deterministic columns now ride the hash gate
-    # (estimates collapse to in-band booleans the oracle asserts TRUE;
-    # the raw-estimate cores keep their bound pytests) ----
-    oracles["approx_distinct_counts"] = \
-        approx.ORACLE_APPROX_DISTINCT_CHECKED
-    oracles["approx_hll_union"] = approx.ORACLE_APPROX_HLL_UNION_CHECKED
-    oracles["vocab_kmv_distinct"] = approx.ORACLE_VOCAB_KMV_CHECKED
-    oracles["kmv_set_ops"] = approx.ORACLE_KMV_SET_OPS_CHECKED
-    oracles["corpus_token_countmin"] = approx.ORACLE_COUNTMIN_CHECKED
-    oracles["dedup_bloom_prefilter"] = \
-        dedup.ORACLE_BLOOM_PREFILTER_CHECKED
-    oracles["multimodal_phash_neardup"] = \
-        _mm6.ORACLE_PHASH_NEARDUP_CHECKED
-    # ---- round-9 partial-oracle upgrades (same pattern; the
-    # graph_pagerank_top oracle registers beside the graph family above)
-    oracles["dedup_simhash"] = dedup.ORACLE_SIMHASH_CHECKED
-    oracles["dedup_incremental_minhash"] = \
-        dedup.ORACLE_INCREMENTAL_MINHASH_CHECKED
-    oracles["approx_quantiles"] = approx.ORACLE_APPROX_QUANTILES_CHECKED
-    oracles["events_ema"] = eventtime.ORACLE_EVENTS_EMA_CHECKED
-    oracles["events_holt_linear"] = eventtime.ORACLE_EVENTS_HOLT_CHECKED
-    oracles["dedup_minhash_lsh"] = dedup.ORACLE_MINHASH_LSH_CHECKED
-    oracles["corpus_frequent_tokens_mg"] = \
-        approx.ORACLE_FREQUENT_TOKENS_MG_CHECKED
-    oracles["graph_kcore"] = graph.ORACLE_KCORE_CHECKED
-    oracles["events_cusum_drift"] = eventtime.ORACLE_EVENTS_CUSUM_CHECKED
-    oracles["multimodal_resize"] = ORACLE_MULTIMODAL_RESIZE
-    oracles["multimodal_frame_sample"] = ORACLE_MULTIMODAL_FRAME_SAMPLE
-    oracles["multimodal_features"] = ORACLE_MULTIMODAL_FEATURES
-    # streaming entries gated in round 9 (exact anchors + invariant
-    # booleans; see each _streaming_queries closure's docstring)
-    oracles["streaming_dedup"] = ORACLE_STREAMING_DEDUP
-    oracles["streaming_user_stats"] = ORACLE_STREAMING_USER_STATS
-    oracles["streaming_user_stats_v2"] = ORACLE_STREAMING_USER_STATS
-    oracles["streaming_p2_quantile"] = ORACLE_STREAMING_P2
-    oracles["streaming_cusum_alerts"] = ORACLE_STREAMING_CUSUM
-    oracles["streaming_heavy_hitters"] = ORACLE_STREAMING_MG
-    oracles["streaming_left_outer_join"] = ORACLE_STREAMING_LOJ
-    oracles["events_markov_stationary"] = \
-        behavior.ORACLE_MARKOV_STATIONARY_CHECKED
-    oracles["embedding_pca_project"] = \
-        similarity.ORACLE_PCA_PROJECT_CHECKED
-    oracles["embedding_triplet_margin"] = \
-        similarity.ORACLE_TRIPLET_MARGIN_CHECKED
-    oracles["diag_curve_locality"] = scale.ORACLE_CURVE_LOCALITY_CHECKED
-    for _ann in ("ann_lsh_topk", "ann_ivf_topk", "ann_pq_topk",
-                 "ann_ivf_pq_topk"):
-        oracles[_ann] = similarity.ORACLE_ANN_RECALL_GATE
-    # the final nine (r9): every registry entry now carries an oracle
-    oracles["bpe_train_merges"] = corpus.ORACLE_BPE_TRAIN_CHECKED
-    oracles["bpe_encode_stats"] = corpus.ORACLE_BPE_ENCODE_CHECKED
-    oracles["dedup_semdedup"] = dedup.ORACLE_SEMDEDUP_CHECKED
-    oracles["dedup_embedding_blocked"] = \
-        similarity.ORACLE_EMBEDDING_BLOCKED_CHECKED
-    oracles["ann_pq_encode"] = similarity.ORACLE_PQ_ENCODE_CHECKED
-    oracles["embedding_kmeans_clusters"] = similarity.ORACLE_KMEANS_CHECKED
-    oracles["multimodal_audio_energy"] = \
-        _mm6.ORACLE_AUDIO_ENERGY_CHECKED
-    oracles["multimodal_image_stats"] = _mm6.ORACLE_IMAGE_STATS_CHECKED
-    oracles["diag_parquet_rowgroup_stats"] = \
-        scale.ORACLE_ROWGROUP_STATS_CHECKED
-    oracles["corpus_top_tokens"] = corpus.ORACLE_TOP_TOKENS
-    oracles["corpus_tfidf_top_terms"] = corpus.ORACLE_TFIDF_TOP_TERMS
-    oracles["events_asof_tolerance"] = asof.ORACLE_EVENTS_ASOF_TOLERANCE
-    oracles["unpivot_nation_metrics"] = rel.ORACLE_UNPIVOT
-    oracles["scalar_regex_fns"] = rel.ORACLE_SCALAR_REGEX
-    oracles["scalar_variant_fns"] = rel.ORACLE_SCALAR_VARIANT
-    from .sources.pydatasource import ORACLE_PYDATASOURCE
-    oracles["source_pydatasource_agg"] = ORACLE_PYDATASOURCE
-    from .functions.tablefns import ORACLE_UDTF_SENTENCES
-    oracles["udtf_sentence_split"] = ORACLE_UDTF_SENTENCES
-    from .functions.tablefns import ORACLE_DEDUP_SENTENCES
-    oracles["dedup_sentences_exact"] = ORACLE_DEDUP_SENTENCES
-    oracles["agg_string_concat"] = rel.ORACLE_AGG_STRING_CONCAT
-    oracles["scalar_xml_fns"] = rel.ORACLE_SCALAR_XML
-    oracles["cdc_apply_customers"] = cdc.ORACLE_CDC_APPLY
-    oracles["scd2_apply_customers"] = cdc.ORACLE_SCD2_APPLY
-    oracles["profile_customer_stats"] = cdc.ORACLE_PROFILE_CUSTOMER
-    oracles["scd2_point_in_time_join"] = cdc.ORACLE_SCD2_PIT
-    from .streaming import events as _ev
-    oracles["streaming_hourly_rollup"] = _ev.ORACLE_STREAMING_HOURLY
-    oracles["streaming_sliding_rollup"] = _ev.ORACLE_STREAMING_SLIDING
-    oracles["streaming_session_windows"] = _ev.ORACLE_STREAMING_SESSIONS
-    # stream-static alerts drain to exactly the batch z-score rows
-    oracles["streaming_zscore_alerts"] = behavior.ORACLE_ZSCORE
-    oracles.update({
-        "q1_pricing_summary": rel.ORACLE_Q1,
-        "q3_shipping_priority": rel.ORACLE_Q3,
-        "q5_nation_revenue": rel.ORACLE_Q5,
-        "q6_forecast_revenue": rel.ORACLE_Q6,
-        "q10_returned_items": rel.ORACLE_Q10,
-        "q18_large_orders": rel.ORACLE_Q18,
-        "scan_filter_projection": rel.ORACLE_SCAN,
-        "filter_null_safe": rel.ORACLE_FILTER_NULLSAFE,
-        "join_inner_broadcast": rel.ORACLE_JOIN_INNER,
-        "join_left_outer": rel.ORACLE_JOIN_LEFT,
-        "join_semi": rel.ORACLE_JOIN_SEMI,
-        "join_anti": rel.ORACLE_JOIN_ANTI,
-        "join_full_outer": rel.ORACLE_JOIN_FULL,
-        "join_cross": rel.ORACLE_JOIN_CROSS,
-        "join_range_nonequi": rel.ORACLE_JOIN_RANGE,
-        "agg_distinct_counts": rel.ORACLE_AGG_DISTINCT,
-        "agg_rollup": rel.ORACLE_AGG_ROLLUP,
-        "agg_cube": rel.ORACLE_AGG_CUBE,
-        "agg_grouping_sets": rel.ORACLE_AGG_GROUPING_SETS,
-        "agg_stats": rel.ORACLE_AGG_STATS,
-        "agg_pivot": rel.ORACLE_AGG_PIVOT,
-        "case_when_bucketing": rel.ORACLE_CASE_WHEN,
-        "window_topk_per_group": rel.ORACLE_WINDOW_TOPK,
-        "window_rank_dense": rel.ORACLE_WINDOW_RANK,
-        "window_lag_lead": rel.ORACLE_WINDOW_LAG,
-        "window_running_sum": rel.ORACLE_WINDOW_RUNNING,
-        "window_ntile_percent": rel.ORACLE_WINDOW_NTILE_BOUNDED,
-        "window_ntile_scalable": rel.ORACLE_WINDOW_NTILE,
-        "corpus_token_histogram": corpus.ORACLE_TOKEN_HISTOGRAM,
-        "corpus_curate": corpus.ORACLE_CORPUS_CURATE,
-        "set_intersect_all": rel.ORACLE_SET_INTERSECT_ALL,
-        "dedup_ngram_jaccard_pruned": dedup.ORACLE_DEDUP_NGRAM_PRUNED,
-        "set_except_all": rel.ORACLE_SET_EXCEPT_ALL,
-        "source_roundtrip_formats": _ORACLE_SOURCE_ROUNDTRIP,
-        "embedding_covariance": corpus.ORACLE_EMBEDDING_COVARIANCE,
-        "dedup_keep_representatives": dedup.ORACLE_DEDUP_KEEP_REPRESENTATIVES,
-        "streaming_interval_join": rel.ORACLE_STREAMING_INTERVAL_JOIN,
-        "sort_limit_topk": rel.ORACLE_SORT_TOPK,
-        "set_union_all": rel.ORACLE_SET_UNION,
-        "set_intersect": rel.ORACLE_SET_INTERSECT,
-        "set_except": rel.ORACLE_SET_EXCEPT,
-        "distinct_pairs": rel.ORACLE_DISTINCT,
-        "scalar_string_fns": rel.ORACLE_SCALAR_STRING,
-        "scalar_date_fns": rel.ORACLE_SCALAR_DATE,
-        "scalar_math_fns": rel.ORACLE_SCALAR_MATH,
-        "scalar_json_fns": rel.ORACLE_SCALAR_JSON,
-        "events_tumbling_hourly": rel.ORACLE_EVENTS_HOURLY,
-        "events_sessionize": rel.ORACLE_EVENTS_SESSIONIZE,
-        "dedup_exact_docs": dedup.ORACLE_DEDUP_EXACT,
-        "dedup_ngram_jaccard": dedup.ORACLE_DEDUP_NGRAM,
-        "dedup_embedding_cosine": dedup.ORACLE_DEDUP_EMBEDDING,
-        "dedup_clusters": dedup.ORACLE_DEDUP_CLUSTERS,
-        "ann_brute_force_topk": similarity.ORACLE_ANN_BRUTE,
-        "events_asof_last_click": asof.ORACLE_EVENTS_ASOF,
-        # migration read→cast slice: DDL types CUSTOMER as (BIGINT,
-        # VARCHAR, INTEGER, DECIMAL(12,2), CHAR); correctly-rounded
-        # double→decimal conversion matches across engines
-        "migrate_customer_cast": """
-            SELECT c_custkey, c_name, c_nationkey,
-                   CAST(CAST(c_acctbal AS DECIMAL(12,2)) AS DOUBLE)
-                     AS c_acctbal,
-                   c_mktsegment
-            FROM customer ORDER BY c_custkey
-        """,
-        "text_normalize": textstats.ORACLE_TEXT_NORMALIZE,
-        "text_token_stats": textstats.ORACLE_TEXT_TOKENS,
-        "text_quality_score": textstats.ORACLE_TEXT_QUALITY,
-        "text_langid": textstats.ORACLE_TEXT_LANGID,
-        "text_fingerprint": textstats.ORACLE_TEXT_FINGERPRINT,
-        "multimodal_metadata": multimodal.ORACLE_MULTIMODAL_META,
-        # ddl_* catalog entries: fixed fixture corpus → the full expected
-        # output is a literal-VALUES oracle (round 9)
-        "ddl_schema_catalog": ORACLE_DDL_SCHEMA_CATALOG,
-        "ddl_assess_catalog": ORACLE_DDL_ASSESS_CATALOG,
-        "ddl_type_distribution": ORACLE_DDL_TYPE_DISTRIBUTION,
-        # (historical note: until round 9 this block listed the
-        # rows-only entries; all of them now carry oracles via their
-        # _checked wrappers — see build_oracles' round-9 section)
-    })
-    # ---- new round-4 entries ----
-    from .operators import rerank
-    oracles["rerank_ann_shortlist"] = rerank.ORACLE_RERANK_ANN
-    oracles["corpus_curation_report"] = corpus.ORACLE_CURATION_REPORT
-    oracles["export_training_shards"] = traindata.ORACLE_EXPORT_SHARDS
-    oracles["corpus_mixture_sample"] = traindata.ORACLE_MIXTURE_SAMPLE
-    oracles["merge_into_customers"] = cdc.ORACLE_MERGE_INTO
-    oracles["streaming_cdc_upsert"] = _ev.ORACLE_STREAMING_CDC_UPSERT
-    oracles["corpus_neardup_report"] = dedup.ORACLE_NEARDUP_REPORT
-    oracles["corpus_chunk_overlap"] = corpus.ORACLE_CHUNK_OVERLAP
-    oracles["corpus_doc_lm_coverage"] = corpus.ORACLE_DOC_LM_COVERAGE
-    oracles["events_linear_interp_daily"] = \
-        timeseries.ORACLE_EVENTS_LINEAR_INTERP
-    from .sources.registry import ORACLE_DPP_STAR_JOIN
-    oracles["source_dpp_star_join"] = ORACLE_DPP_STAR_JOIN
-    oracles["events_winsorize_clip"] = analytics.ORACLE_EVENTS_WINSORIZE
-    oracles["embedding_standardize"] = traindata.ORACLE_EMBEDDING_STANDARDIZE
-    # ---- new round-5 entries ----
-    oracles["corpus_build_pipeline"] = corpus.ORACLE_BUILD_PIPELINE
-    oracles["corpus_decontaminate"] = corpus.ORACLE_DECONTAMINATE
-    oracles["corpus_gopher_rules"] = corpus.ORACLE_GOPHER_RULES
-    oracles["corpus_pack_global_stream"] = \
-        traindata.ORACLE_PACK_GLOBAL_STREAM
-    from .sources.registry import ORACLE_BLOOM_RUNTIME_FILTER
-    oracles["source_bloom_runtime_filter"] = ORACLE_BLOOM_RUNTIME_FILTER
-    from .operators.scale import ORACLE_HISTOGRAM_EQUI_DEPTH
-    oracles["agg_histogram_equi_depth"] = ORACLE_HISTOGRAM_EQUI_DEPTH
-    from .operators.validate import ORACLE_GDPR_CASCADE
-    oracles["gdpr_delete_cascade"] = ORACLE_GDPR_CASCADE
-    oracles["corpus_lang_drift_chi2"] = corpus.ORACLE_LANG_DRIFT_CHI2
-    oracles["classifier_quality_linear"] = textstats.ORACLE_CLASSIFIER_QUALITY
-    oracles["classifier_gains_deciles"] = textstats.ORACLE_CLASSIFIER_GAINS
-    oracles["corpus_source_ks_drift"] = corpus.ORACLE_SOURCE_KS_DRIFT
-    from .operators.traindata import ORACLE_SPLIT_LEAKAGE_SAFE
-    oracles["split_leakage_safe"] = ORACLE_SPLIT_LEAKAGE_SAFE
-    oracles["corpus_source_similarity"] = corpus.ORACLE_SOURCE_SIMILARITY
-    # ---- new round-6 entries (ann_ivf_pq_topk is rows-only) ----
-    oracles["orders_cohort_retention"] = \
-        analytics.ORACLE_ORDERS_COHORT_RETENTION
-    oracles["events_user_lifecycle"] = analytics.ORACLE_EVENTS_USER_LIFECYCLE
-    from .operators.graph import ORACLE_TRIANGLE_STATS
-    oracles["graph_triangle_stats"] = ORACLE_TRIANGLE_STATS
-    oracles["text_readability_scores"] = textstats.ORACLE_TEXT_READABILITY
-    oracles["corpus_doc_commonness"] = corpus.ORACLE_DOC_COMMONNESS
-    from .operators.dedup import ORACLE_DEDUP_CONTAINMENT
-    oracles["dedup_containment"] = ORACLE_DEDUP_CONTAINMENT
-    oracles["corpus_dsir_importance"] = corpus.ORACLE_DSIR_IMPORTANCE
-    from .operators.traindata import (
-        ORACLE_CURRICULUM_PHASES,
-        ORACLE_TEMPERATURE_MIXTURE,
-    )
-    oracles["corpus_curriculum_phases"] = ORACLE_CURRICULUM_PHASES
-    oracles["corpus_temperature_mixture"] = ORACLE_TEMPERATURE_MIXTURE
-    oracles["corpus_ngram_novelty"] = corpus.ORACLE_NGRAM_NOVELTY
-    from .functions.tablefns import ORACLE_UDAF_TRIMMED_SUM
-    oracles["udaf_trimmed_sum"] = ORACLE_UDAF_TRIMMED_SUM
-    from .streaming.events import ORACLE_STREAMING_STATIC_ENRICH
-    oracles["streaming_static_enrich"] = ORACLE_STREAMING_STATIC_ENRICH
-    from .operators.validate import ORACLE_K_ANONYMITY
-    oracles["privacy_k_anonymity"] = ORACLE_K_ANONYMITY
-    from .operators.graph import ORACLE_SQL_RECURSIVE
-    oracles["sql_recursive_hierarchy"] = ORACLE_SQL_RECURSIVE
-    from .sources.pydatasource import ORACLE_SINK_PYDATASOURCE
-    oracles["sink_pydatasource_roundtrip"] = ORACLE_SINK_PYDATASOURCE
-    oracles["retrieval_bm25_topk"] = corpus.ORACLE_BM25_TOPK
-    from .operators.scale import (
-        ORACLE_DIAG_BLOCKING_PAIRS,
-        ORACLE_DIAG_JOIN_KEY_SKEW,
-    )
-    oracles["diag_join_key_skew"] = ORACLE_DIAG_JOIN_KEY_SKEW
-    oracles["diag_blocking_pair_census"] = ORACLE_DIAG_BLOCKING_PAIRS
-    from .operators.timeseries import ORACLE_EVENTS_ACF
-    oracles["events_acf_daily"] = ORACLE_EVENTS_ACF
-    from .operators.eventtime import ORACLE_EVENTS_INTERARRIVAL
-    oracles["events_interarrival_stats"] = ORACLE_EVENTS_INTERARRIVAL
-    oracles["corpus_token_cooccurrence"] = corpus.ORACLE_TOKEN_COOCCURRENCE
-    from .operators.timeseries import ORACLE_FORECAST_SEASONAL_NAIVE
-    oracles["forecast_seasonal_naive_eval"] = ORACLE_FORECAST_SEASONAL_NAIVE
-    from .operators.traindata import ORACLE_QUANTILE_CALIBRATE
-    oracles["quality_quantile_calibrate"] = ORACLE_QUANTILE_CALIBRATE
-    from .operators.behavior import ORACLE_TRIGRAM_JOURNEYS
-    oracles["events_trigram_journeys"] = ORACLE_TRIGRAM_JOURNEYS
-    from .operators.scale import ORACLE_DIAG_LAYOUT_ZONEMAP
-    oracles["diag_layout_zonemap"] = ORACLE_DIAG_LAYOUT_ZONEMAP
-    from .operators.analytics import ORACLE_CRAMERS_V, ORACLE_GINI_LORENZ
-    oracles["assoc_cramers_v"] = ORACLE_CRAMERS_V
-    from .operators.analytics import (
-        ORACLE_MANN_KENDALL, ORACLE_MANN_WHITNEY, ORACLE_SPEARMAN,
-    )
-    oracles["stat_mann_whitney_u"] = ORACLE_MANN_WHITNEY
-    oracles["stat_spearman_corr"] = ORACLE_SPEARMAN
-    oracles["stat_mann_kendall_trend"] = ORACLE_MANN_KENDALL
-    from .operators.analytics import ORACLE_KENDALL_TAU
-    oracles["stat_kendall_tau"] = ORACLE_KENDALL_TAU
-    from .operators.relational_ext import ORACLE_SQL_PIPE
-    oracles["sql_pipe_syntax_battery"] = ORACLE_SQL_PIPE
-    # events_holt_linear: iterative float recurrence → rows-only
-    oracles["revenue_gini_lorenz"] = ORACLE_GINI_LORENZ
-    oracles["corpus_heaps_law"] = corpus.ORACLE_HEAPS_LAW
-    from .operators.eventtime import ORACLE_PEAK_CONCURRENCY
-    oracles["events_peak_concurrency"] = ORACLE_PEAK_CONCURRENCY
-    from .operators.analytics import (
-        ORACLE_BENFORD,
-        ORACLE_WEIGHTED_PERCENTILES,
-    )
-    oracles["agg_weighted_percentiles"] = ORACLE_WEIGHTED_PERCENTILES
-    oracles["benford_price_audit"] = ORACLE_BENFORD
-    from .operators.behavior import ORACLE_USER_PREDICTABILITY
-    oracles["events_user_predictability"] = ORACLE_USER_PREDICTABILITY
-    from .operators.graph import ORACLE_DEGREE_DISTRIBUTION
-    oracles["graph_degree_distribution"] = ORACLE_DEGREE_DISTRIBUTION
-    oracles["corpus_distinctive_terms"] = corpus.ORACLE_DISTINCTIVE_TERMS
-    from .operators.similarity import ORACLE_EMBEDDING_SOURCE_DRIFT
-    oracles["embedding_source_drift"] = ORACLE_EMBEDDING_SOURCE_DRIFT
-    from .operators.validate import ORACLE_TYPE_FIT_AUDIT
-    oracles["migrate_type_fit_audit"] = ORACLE_TYPE_FIT_AUDIT
-    from .operators.analytics import (
-        ORACLE_FULFILLMENT_LATENCY,
-        ORACLE_MOM_CONTRIBUTION,
-    )
-    oracles["orders_fulfillment_latency"] = ORACLE_FULFILLMENT_LATENCY
-    oracles["orders_mom_contribution"] = ORACLE_MOM_CONTRIBUTION
-    from .functions.tablefns import ORACLE_SQL_SCALAR_UDF
-    oracles["sql_scalar_udf_battery"] = ORACLE_SQL_SCALAR_UDF
-    from .operators.validate import ORACLE_L_DIVERSITY
-    oracles["privacy_l_diversity"] = ORACLE_L_DIVERSITY
-    from .operators.relational_ext import ORACLE_NULL_SEMANTICS
-    oracles["scalar_null_semantics"] = ORACLE_NULL_SEMANTICS
-    # events_markov_stationary: iterative float math → rows-only
-    from .operators.eventtime import ORACLE_ID_GAP_AUDIT
-    oracles["events_id_gap_audit"] = ORACLE_ID_GAP_AUDIT
-    from .operators.cdc import ORACLE_IVM_JOIN_VIEW
-    oracles["ivm_join_view_delta"] = ORACLE_IVM_JOIN_VIEW
-    from .operators.analytics import ORACLE_MEDIAN_CI
-    oracles["agg_median_ci"] = ORACLE_MEDIAN_CI
-    from .operators.behavior import ORACLE_ERROR_CONVERSION
-    oracles["events_error_conversion"] = ORACLE_ERROR_CONVERSION
-    from .operators.analytics import ORACLE_THEILSEN
-    oracles["orders_theilsen_trend"] = ORACLE_THEILSEN
-    from .operators.eventtime import ORACLE_WEEKLY_SEASONALITY
-    oracles["events_weekly_seasonality_strength"] = \
-        ORACLE_WEEKLY_SEASONALITY
-    from .operators.analytics import ORACLE_COHORT_LTV
-    oracles["orders_cohort_ltv"] = ORACLE_COHORT_LTV
-    from .operators.scale import ORACLE_JOIN_SIZE_FORECAST
-    oracles["diag_join_size_forecast"] = ORACLE_JOIN_SIZE_FORECAST
-    # dedup_bloom_prefilter: xxhash64 probes → rows-only
-    from .operators.relational import ORACLE_EVENTS_SESSIONIZE
-    oracles["udtf_table_arg_sessionize"] = ORACLE_EVENTS_SESSIONIZE
-    from .operators.behavior import ORACLE_MULTITOUCH
-    oracles["events_multitouch_attribution"] = ORACLE_MULTITOUCH
-    # multimodal_phash_neardup: codec-derived hash bits → rows-only
-    return oracles
+    """Name -> DuckDB oracle SQL, in driver order."""
+    return {name: sql for name, _, sql in build_table()}

@@ -355,21 +355,25 @@ class TestRound3PlanShapes:
         """Every round-3 oracle-backed entry must compile to a pure-JVM
         plan: no Python row evaluation, no cartesian product (the PQ path
         is exempt — its Arrow stages are the point)."""
-        from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark.operators import (
-            traindata,
-            validate,
+        from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark.registry import (
+            build_queries,
         )
 
-        fns = {}
-        fns.update(behavior.QUERIES)
-        fns.update(traindata.QUERIES)
-        fns.update(validate.QUERIES)
-        fns["text_gopher_filters"] = textstats.text_gopher_filters
-        fns["text_repetition_metrics"] = textstats.text_repetition_metrics
-        fns["agg_histogram_equi_width"] = analytics.agg_histogram_equi_width
-        fns["join_salted_hot_key"] = scale.join_salted_hot_key
-        for name, fn in fns.items():
-            prof = plan_profile(fn(spark, sf_dir))
+        queries = build_queries()
+        for name in ("events_funnel_conversion", "events_retention_cohorts",
+                     "events_rolling_stats", "events_transition_matrix",
+                     "events_value_zscore", "data_split_assign",
+                     "dedup_incremental_exact", "sample_per_group_topn",
+                     "corpus_mix_weights", "corpus_token_budget_cut",
+                     "corpus_pack_sequences", "embedding_quantize_int8",
+                     "contamination_ngram_overlap",
+                     "validate_customer_constraints",
+                     "snapshot_diff_customers",
+                     "migrate_reconcile_customers",
+                     "validate_star_expectations", "text_gopher_filters",
+                     "text_repetition_metrics", "agg_histogram_equi_width",
+                     "join_salted_hot_key"):
+            prof = plan_profile(queries[name](spark, sf_dir))
             assert prof["python_evals"] == 0, name
             assert prof["cartesian_products"] == 0, name
 

@@ -129,7 +129,7 @@ class TestTriangleStats:
             graph,
         )
 
-        r = graph.QUERIES["graph_triangle_stats"](spark, SF_MED).first()
+        r = graph.graph_triangle_stats(spark, SF_MED).first()
         assert r.n_edges > 0
         assert 3 * r.n_triangles <= r.n_wedges
         assert 0.0 <= r.clustering_coeff <= 1.0
@@ -199,49 +199,23 @@ class TestCommonness:
 
 
 class TestRegistryGuard:
-    def test_duplicate_insert_raises(self):
-        from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark.registry import (
-            _ShadowGuardDict,
-        )
+    def test_duplicate_insert_raises(self, monkeypatch):
+        """A name registered twice in the table raises instead of one entry
+        silently shadowing the other, and the real table goes through
+        that check."""
+        from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark import registry
 
-        d = _ShadowGuardDict()
-        d["x"] = 1
-        with pytest.raises(ValueError, match="collision"):
-            d["x"] = 2
-        with pytest.raises(ValueError, match="collision"):
-            d.update({"x": 3})
+        def f(spark, sf_dir):
+            return None
 
-    def test_window_is_first_50_and_all_resolvable(self):
-        """Round-10 rotation superseded the r9 window (each round's
-        membership assertion lives on in its own twin as history): here
-        keep the invariants that outlive rotations — the first 50 keys
-        ARE the current window, unique, and every r6 debut stays
-        resolvable with its oracle."""
-        from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark.registry import (
-            _CANARIES_R06,
-            _ROUND6_NEW,
-            _window_r12,
-            build_oracles,
-            build_queries,
-        )
-
-        q = build_queries()
-        w = _window_r12()
-        assert list(q)[:50] == w
-        assert len(w) == 50
-        assert len(set(w)) == 50
-        # every canary exists and no round-6 debut is missing an oracle
-        # unless deliberately rows-only (the float-iterative /
-        # binary-decode group; the sketch entries went partial-oracle in
-        # round 8, graph_kcore / events_holt_linear in round 9)
-        rows_only = {"ann_ivf_pq_topk", "embedding_kmeans_clusters",
-                     "multimodal_audio_energy",
-                     "multimodal_image_stats"}
-        o = build_oracles()
-        assert all(k in q for k in _CANARIES_R06)
-        for k in _ROUND6_NEW:
-            assert k in q
-            assert k in o or k in rows_only
+        ok = [("x", f, "SELECT 1"), ("y", f, "SELECT 2")]
+        assert registry._unique_names(ok) is ok
+        with pytest.raises(ValueError, match="collision: 'x'"):
+            registry._unique_names([*ok, ("x", f, "SELECT 3")])
+        seen = []
+        monkeypatch.setattr(registry, "_unique_names",
+                            lambda table: seen.append(table) or table)
+        assert seen == [registry.build_table()]
 
 
 class TestPersistReplacesCheckpoint:
@@ -800,7 +774,7 @@ class TestKcore:
             expect[a] = expect.get(a, 0) + 1
             expect[b] = expect.get(b, 0) + 1
         got = {r.node: r.core_degree for r in
-               graph.QUERIES["graph_kcore"](spark, SF_MED).collect()}
+               graph.graph_kcore(spark, SF_MED).collect()}
         assert got == expect
         for d in got.values():
             assert d >= k

@@ -3,8 +3,7 @@ update-mode streaming drain (the r6 ADVICE bug class), the P² warm-up
 buffer restore fix, fixpoint semantics for every iterative loop
 (k-core, label propagation, pointer doubling — guardrails RAISE, never
 return partial answers), the overflow-safe 2×2 chi², the Iceberg write
-branch exercised without the runtime jar, the round-7 driver-window
-rotation pin, the rank-statistics debuts (replays + tie-heavy
+branch exercised without the runtime jar, the rank-statistics debuts (replays + tie-heavy
 hypothesis properties), the low-cardinality-window purge
 (grouped_ranks equivalence + zero-WindowExec plan pins), and
 ANSI-mode degenerate inputs returning NULL instead of job aborts."""
@@ -341,43 +340,6 @@ DISTRIBUTE BY HASH (SALE_ID);
         # the file fallback must NOT have been taken
         import os
         assert not os.path.exists(dest)
-
-
-class TestRound7Window:
-    def test_window_executes_recorded_rotation(self):
-        """Historical pin (round-8 rotation superseded the first-50
-        placement; the r8 twin in test_round8.py owns that now): the r7
-        window COMPOSITION stays _ROUND7_NEW debuts, then ALL 27
-        never-driver-checked late-r6 entries, then the recorded stale
-        canaries filling to 50 — the r6 verdict's top ask — and every r7
-        debut stays resolvable with its oracle."""
-        import json
-
-        from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark.registry import (
-            _CANARIES_R07,
-            _ROUND6_LATE,
-            _ROUND7_NEW,
-            _window_r07,
-            build_oracles,
-            build_queries,
-        )
-
-        q = build_queries()
-        w = _window_r07()
-        assert len(set(w)) == 50
-        assert all(k in q for k in w)
-        fill = 50 - len(_ROUND7_NEW) - len(_ROUND6_LATE)
-        assert w == [*_ROUND7_NEW, *_ROUND6_LATE, *_CANARIES_R07[:fill]]
-        o = build_oracles()
-        for k in _ROUND7_NEW:           # every r7 debut is oracle-backed
-            assert k in q and k in o
-        # cumulative driver coverage was completed by the r7 window:
-        # every entry not in it already has a CORRECTNESS row r01-r06
-        seen = set()
-        for r in range(1, 7):
-            seen |= set(json.load(open(f"CORRECTNESS_r0{r}.json")))
-        never = [k for k in q if k not in seen and k not in w]
-        assert never == []
 
 
 class TestRankStatistics:

@@ -313,51 +313,6 @@ class TestCheckpointRestart:
             assert final[et][1] == pytest.approx(est, abs=1e-12)
 
 
-class TestRound8Window:
-    def test_window_executes_recorded_rotation(self):
-        """First 50 queries() keys == _ROUND8_NEW debuts (zero this
-        round — the deliberate freshness-over-growth call), then the
-        recorded due list: the 41 unreached _CANARIES_R07 stale
-        canaries, then the r03-checked block in its exact
-        CORRECTNESS_r03.json order, filling to 50 — the r7 verdict's
-        task 1."""
-        import json
-
-        from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark.registry import (
-            _CANARIES_R07,
-            _CANARIES_R08,
-            _R03_CHECKED,
-            _ROUND6_LATE,
-            _ROUND7_NEW,
-            _ROUND8_NEW,
-            _window_r08,
-            build_oracles,
-            build_queries,
-        )
-
-        q = build_queries()
-        w = _window_r08()
-        assert len(w) == 50 and len(set(w)) == 50
-        # due-list construction arithmetic (the judge re-derives this);
-        # the first-50 == window assertion moved to the r9 twin when the
-        # round-9 rotation superseded this window (history stays pinned)
-        r7_fill = 50 - len(_ROUND7_NEW) - len(_ROUND6_LATE)
-        assert _CANARIES_R08 == [*_CANARIES_R07[r7_fill:], *_R03_CHECKED]
-        assert w == [*_ROUND8_NEW,
-                     *_CANARIES_R08[:50 - len(_ROUND8_NEW)]]
-        # the r03 block is exactly the CORRECTNESS_r03.json window order
-        assert _R03_CHECKED == list(json.load(open("CORRECTNESS_r03.json")))
-        # every window entry resolves, and the seven r8 partial-oracle
-        # upgrades all have oracle twins now
-        o = build_oracles()
-        assert all(k in q for k in w)
-        for k in ("approx_distinct_counts", "approx_hll_union",
-                  "vocab_kmv_distinct", "kmv_set_ops",
-                  "corpus_token_countmin", "dedup_bloom_prefilter",
-                  "multimodal_phash_neardup"):
-            assert k in o, k
-
-
 class TestGlobalPrefixWindowFuzz:
     def test_random_frames_match_window_formulation(self, spark):
         """Direct coverage for scale.global_prefix_window (previously only

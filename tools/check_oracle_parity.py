@@ -9,11 +9,18 @@ query protocol guarantees determinism, see operators/relational.py).
 Usage:
     python tools/check_oracle_parity.py              # all queries, sf0.01
     python tools/check_oracle_parity.py q1 dedup     # substring filter
+    python tools/check_oracle_parity.py --first 50   # the driver window
+    python tools/check_oracle_parity.py --sf-dir DIR # tables under DIR
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 python tools/check_oracle_parity.py
+
+``--first N`` keeps the first N registry entries, as the driver does;
+``--sf-dir DIR`` overrides ``SPARK_GRAFT_SF_DIR``. Flags and name filters
+may come in any order. An entry without an oracle fails.
 """
 
 from __future__ import annotations
 
+import argparse
 import hashlib
 import math
 import os
@@ -64,7 +71,7 @@ def spark_result(df):
     return cols, rows
 
 
-def driver_hazards(df, has_oracle: bool) -> list[str]:
+def driver_hazards(df) -> list[str]:
     """Columns the driver's pandas canonicalization cannot digest.
 
     Array/map/struct cells crash its sort-based canon (round 1:
@@ -80,7 +87,7 @@ def driver_hazards(df, has_oracle: bool) -> list[str]:
         if isinstance(f.dataType, (ArrayType, MapType, StructType)):
             problems.append(f"{f.name}: {f.dataType.simpleString()} "
                             "(crashes driver canon)")
-        elif has_oracle and isinstance(f.dataType, DecimalType):
+        elif isinstance(f.dataType, DecimalType):
             problems.append(f"{f.name}: {f.dataType.simpleString()} "
                             "(hash-mismatches vs DuckDB float64)")
     return problems
@@ -98,28 +105,23 @@ def duckdb_result(con, sql):
     return cols, res.fetchall(), hazards
 
 
-def main() -> int:
-    filters = sys.argv[1:]
-    first_n = None
+def parse_args(argv: list[str]) -> argparse.Namespace:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    if filters and filters[0] == "--first":       # replicate driver window
-        first_n = int(filters[1])
-        filters = filters[2:]
-    if filters and filters[0] == "--sf-dir":      # else it's a name filter!
-        sf_dir = filters[1]
-        filters = filters[2:]
-    unmatched = [f for f in filters if f.startswith("--")]
-    if unmatched:
-        print(f"unknown flag(s) {unmatched} — would be treated as name "
-              "filters; aborting")
-        return 2
+    ap = argparse.ArgumentParser(
+        description="Compare registry queries with their DuckDB oracles.")
+    ap.add_argument("filters", nargs="*",
+                    help="keep entries whose name contains any of these")
+    ap.add_argument("--first", type=int, metavar="N",
+                    help="keep the first N entries (the driver window)")
+    ap.add_argument("--sf-dir", metavar="DIR", default=sf_dir,
+                    help="directory of the parquet tables")
+    return ap.parse_intermixed_args(argv)
 
+
+def connect(sf_dir: str):
+    """DuckDB connection with one view per table under ``sf_dir``."""
     import duckdb
 
-    from __spark_entry__ import oracle_sql, queries
-    from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark.session import get_spark
-
-    spark = get_spark("oracle-parity")
     con = duckdb.connect()
     for t in TABLES:
         # driver testdata is one file per table; probe-built fixtures are
@@ -127,62 +129,72 @@ def main() -> int:
         path = f"{sf_dir}/{t}.parquet"
         pat = f"{path}/*.parquet" if os.path.isdir(path) else path
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{pat}')")
+    return con
 
+
+def check_entry(query, oracle: str | None, spark, sf_dir: str,
+                con) -> tuple[bool, str]:
+    """Run one registry entry on Spark and its oracle on DuckDB; return
+    whether they match and a one-line detail. An entry without an oracle
+    does not match."""
+    try:
+        df = query(spark, sf_dir)
+        hazards = driver_hazards(df)
+        scols, srows = spark_result(df)
+    except Exception as exc:
+        return False, f"spark error: {exc}"
+    if hazards:
+        return False, f"driver-hazard columns: {hazards}"
+    if oracle is None:
+        return False, f"no oracle ({len(srows)} rows)"
+    try:
+        dcols, drows, dhazards = duckdb_result(con, oracle)
+    except Exception as exc:
+        return False, f"duckdb error: {exc}"
+    if dhazards:
+        return False, f"oracle driver-hazard columns: {dhazards}"
+    problems = []
+    if len(srows) != len(drows):
+        problems.append(f"rows {len(srows)} vs {len(drows)}")
+    if sorted(scols) != sorted(dcols):
+        problems.append(f"cols {sorted(scols)} vs {sorted(dcols)}")
+    if not problems and value_hash(scols, srows) != value_hash(dcols, drows):
+        problems.append("value hash mismatch")
+    if not problems:
+        return True, f"{len(srows)} rows match"
+    # show a tiny sample diff to debug
+    s_set = {tuple(str(x) for x in r) for r in srows[:100000]}
+    d_set = {tuple(str(x) for x in r) for r in drows[:100000]}
+    only_s = list(s_set - d_set)[:3]
+    only_d = list(d_set - s_set)[:3]
+    if only_s:
+        problems.append(f"spark-only sample: {only_s}")
+    if only_d:
+        problems.append(f"duckdb-only sample: {only_d}")
+    return False, "; ".join(problems)
+
+
+def main(argv: list[str] | None = None) -> int:
+    args = parse_args(sys.argv[1:] if argv is None else argv)
+
+    from __spark_entry__ import oracle_sql, queries
+    from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark.session import get_spark
+
+    spark = get_spark("oracle-parity")
+    con = connect(args.sf_dir)
     qs, oracles = queries(), oracle_sql()
-    pool = list(qs)[:first_n] if first_n else list(qs)
-    names = [n for n in pool if not filters or any(f in n for f in filters)]
+    pool = list(qs)[:args.first] if args.first else list(qs)
+    names = [n for n in pool
+             if not args.filters or any(f in n for f in args.filters)]
     failures = []
     for name in names:
         t0 = time.time()
-        try:
-            df = qs[name](spark, sf_dir)
-            hazards = driver_hazards(df, has_oracle=name in oracles)
-            scols, srows = spark_result(df)
-        except Exception as exc:
+        ok, detail = check_entry(qs[name], oracles.get(name), spark,
+                                 args.sf_dir, con)
+        if not ok:
             failures.append(name)
-            print(f"FAIL  {name}: spark error: {exc}")
-            continue
-        if hazards:
-            failures.append(name)
-            print(f"FAIL  {name}: driver-hazard columns: {hazards}")
-            continue
-        if name not in oracles:
-            status = "ROWS-ONLY"
-            ok = len(srows) >= 0
-            print(f"{'ok   ' if ok else 'FAIL '} {name}: {len(srows)} rows "
-                  f"[{status}] ({time.time()-t0:.1f}s)")
-            continue
-        try:
-            dcols, drows, dhazards = duckdb_result(con, oracles[name])
-        except Exception as exc:
-            failures.append(name)
-            print(f"FAIL  {name}: duckdb error: {exc}")
-            continue
-        if dhazards:
-            failures.append(name)
-            print(f"FAIL  {name}: oracle driver-hazard columns: {dhazards}")
-            continue
-        problems = []
-        if len(srows) != len(drows):
-            problems.append(f"rows {len(srows)} vs {len(drows)}")
-        if sorted(scols) != sorted(dcols):
-            problems.append(f"cols {sorted(scols)} vs {sorted(dcols)}")
-        if not problems and value_hash(scols, srows) != value_hash(dcols, drows):
-            problems.append("value hash mismatch")
-        if problems:
-            failures.append(name)
-            print(f"FAIL  {name}: {'; '.join(problems)} ({time.time()-t0:.1f}s)")
-            # show a tiny sample diff to debug
-            s_set = {tuple(str(x) for x in r) for r in srows[:100000]}
-            d_set = {tuple(str(x) for x in r) for r in drows[:100000]}
-            only_s = list(s_set - d_set)[:3]
-            only_d = list(d_set - s_set)[:3]
-            if only_s:
-                print(f"      spark-only sample: {only_s}")
-            if only_d:
-                print(f"      duckdb-only sample: {only_d}")
-        else:
-            print(f"ok    {name}: {len(srows)} rows match ({time.time()-t0:.1f}s)")
+        print(f"{'ok   ' if ok else 'FAIL '} {name}: {detail} "
+              f"({time.time()-t0:.1f}s)")
 
     print(f"\n{len(names) - len(failures)}/{len(names)} queries match")
     spark.stop()
