@@ -214,16 +214,19 @@ def _split_top_level(s: str) -> list[str]:
 class DB2DdlParser:
     """Parses a DB2 DDL script into TableDef objects (parser.py:120-205).
 
-    ``decfloat_as_dec=True`` reproduces the reference's observed behavior of
-    tokenizing DECFLOAT as DEC (its alternation-order bug, parser.py:139);
-    the default implements the reference's *documented* semantics where
-    DECFLOAT reaches the DECFLOAT→DOUBLE rule (mapper.py:279-287, README).
+    DECFLOAT parses as DECFLOAT and so maps to DOUBLE with EWI 0007, the
+    reference's documented rule (mapper.py:279-287, README); see
+    ``_TYPE_RE`` for the reference tokenizer bug this departs from.
+
+    A table with no parsed columns, and each repeated column name
+    (compared case-insensitively, as ``migrate_table`` resolves source
+    columns), adds one entry to ``warnings``; the table is kept as
+    parsed.
     """
 
-    def __init__(self, decfloat_as_dec: bool = False) -> None:
+    def __init__(self) -> None:
         self.errors: list[str] = []
         self.warnings: list[str] = []
-        self.decfloat_as_dec = decfloat_as_dec
 
     def parse(self, ddl: str) -> list[TableDef]:
         self.errors = []
@@ -326,6 +329,16 @@ class DB2DdlParser:
                 col = self._column_from(part)
                 if col:
                     table.columns.append(col)
+        if not table.columns:
+            self.warnings.append(
+                f"Table {table.full_name} has no parsed columns")
+        seen: set[str] = set()
+        for col in table.columns:
+            key = col.name.lower()
+            if key in seen:
+                self.warnings.append(
+                    f"Duplicate column {col.name} in table {table.full_name}")
+            seen.add(key)
 
     @staticmethod
     def _looks_like_constraint(part: str) -> bool:
@@ -350,15 +363,11 @@ class DB2DdlParser:
         if not data_type.isalpha():  # a multi-word type: one space per gap
             data_type = _SPACES_RE.sub(" ", data_type)
         col = ColumnDef(name=name, data_type=data_type, raw_definition=col_def)
-        if data_type == "DECFLOAT" and self.decfloat_as_dec:
-            # reproduce the reference's parse: "DECFLOAT(16)" → DEC, no params
-            col.data_type = "DEC"
-        else:
-            if type_m.group(2):
-                col.length = int(type_m.group(2))
-                col.precision = col.length
-            if type_m.group(3):
-                col.scale = int(type_m.group(3))
+        if type_m.group(2):
+            col.length = int(type_m.group(2))
+            col.precision = col.length
+        if type_m.group(3):
+            col.scale = int(type_m.group(3))
         rest = rest[type_m.end():].strip()
         upper = rest.upper()
 

@@ -1,23 +1,23 @@
 """Similarity search over the ``embeddings`` table (array<float> column).
 
-Three tiers, mirroring how ANN is deployed at 100 TB:
+Every top-k search is one skeleton: candidate generation → one shared
+exact re-rank → (for the approximate members) a recall gate.
 
 1. **cosine_expr** — pure Catalyst dot-product/cosine (zip_with + aggregate
    fold). Deterministic (sequential fold) and bitwise-identical to DuckDB's
-   list_cosine_similarity, so brute-force results are oracle-checkable.
-2. **brute-force top-k** — exact baseline: broadcast the (small) query set
-   against all candidates, window top-k. At scale this is the re-rank stage,
-   not the search stage.
-3. **sign-LSH ANN** — random-hyperplane signatures (deterministic ±1
-   hyperplanes derived from a hash, no RNG state) bucket vectors; search
-   joins on bucket prefix, computes exact cosine only within buckets.
-   This is the candidate-generation stage for 100 TB: the cross product
-   never materializes.
-
-A vectorized numpy block path (mapInPandas) is provided for throughput
-benchmarking — Arrow-batched, one BLAS matmul per batch.
+   list_cosine_similarity, so exact results are oracle-checkable.
+2. **_exact_topk** — the one re-rank: cosine of each ``(query_id,
+   neighbor_id)`` candidate, top k. With no candidate frame every vector
+   is one: the brute force, ``ann_brute_force_topk``.
+3. **Candidate generation**, all each ANN member owns: the sign-LSH band
+   join (``ann_lsh_topk``), probed IVF cells (``ann_ivf_topk``), the PQ
+   ADC shortlist (``ann_pq_topk``) and the ADC shortlist of the probed
+   cells (``ann_ivf_pq_topk``); their query vectors come from one bounded
+   collect, ``_query_vectors``. At 100 TB this stage keeps the cross
+   product from materializing, and since every member re-ranks through
+   the same stage, ``_ann_recall_gate``'s ``shared_scores_exact`` holds
+   by construction.
 """
-
 from __future__ import annotations
 
 import hashlib
@@ -30,37 +30,20 @@ from pyspark.sql import functions as F
 from .relational import ld, ld_vecs, ld_vecs_dir
 
 
-def dot_expr(a: str | F.Column, b: str | F.Column,
-             dim: int | None = None) -> F.Column:
-    """Sequential-left-fold dot product of two array<float> columns.
-
-    Default (dim=None) is the HOF fold — compact plan, deterministic
-    left-to-right accumulation (the same sequential order DuckDB uses).
-    Passing ``dim`` unrolls the fold into a left-associated ``element_at``
-    chain with identical accumulation order; measured on this workload the
-    giant expression exceeds codegen method limits and is NOT faster, so it
-    exists for plan-shape experiments only. High-volume scoring belongs in
-    the numpy/Arrow block path (see ``_candidate_pairs_numpy``), with exact
-    fold verification reserved for the few survivors.
-    """
-    if dim is None:
-        prod = F.zip_with(a, b,
-                          lambda x, y: x.cast("double") * y.cast("double"))
-        return F.aggregate(prod, F.lit(0.0), lambda acc, v: acc + v)
-    acc = F.lit(0.0)
-    for i in range(1, dim + 1):
-        acc = acc + (F.element_at(a, i).cast("double")
-                     * F.element_at(b, i).cast("double"))
-    return acc
+def dot_expr(a: str | F.Column, b: str | F.Column) -> F.Column:
+    """Sequential-left-fold dot product of two array<float> columns: a
+    compact HOF plan with deterministic left-to-right accumulation (the
+    same sequential order DuckDB uses)."""
+    prod = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
+    return F.aggregate(prod, F.lit(0.0), lambda acc, v: acc + v)
 
 
-def norm_expr(a: str | F.Column, dim: int | None = None) -> F.Column:
+def norm_expr(a: str | F.Column) -> F.Column:
     """L2 norm with the same sequential accumulation order as ``dot_expr``."""
-    return F.sqrt(dot_expr(a, a, dim))
+    return F.sqrt(dot_expr(a, a))
 
 
 def cosine_expr(a: str | F.Column, b: str | F.Column,
-                dim: int | None = None,
                 na: F.Column | None = None,
                 nb: F.Column | None = None) -> F.Column:
     """Cosine similarity of two array<float> columns, JVM-side.
@@ -71,14 +54,14 @@ def cosine_expr(a: str | F.Column, b: str | F.Column,
     each vector's norm is computed once (n rows) instead of per pair (n²).
     """
     if na is None:
-        na = norm_expr(a, dim)
+        na = norm_expr(a)
     if nb is None:
-        nb = norm_expr(b, dim)
+        nb = norm_expr(b)
     # cosine is undefined against a zero vector (a failed/padded encoder
     # row in a real corpus): NULL, not an ANSI divide error — the guard
     # is all-true on any non-degenerate embedding table, so every
     # oracle hash-match is unchanged
-    return F.when(na * nb > 0, dot_expr(a, b, dim) / (na * nb))
+    return F.when(na * nb > 0, dot_expr(a, b) / (na * nb))
 
 
 def embedding_dim(df: DataFrame, vec_col: str = "embedding") -> int | None:
@@ -90,29 +73,62 @@ def embedding_dim(df: DataFrame, vec_col: str = "embedding") -> int | None:
     return int(row["d"]) if row else None
 
 
-def ann_brute_force_topk(spark, sf_dir, k: int = 5, n_queries: int = 10):
-    """Exact top-k neighbors for the first ``n_queries`` vectors.
+def _exact_topk(e: DataFrame, k: int, n_queries: int,
+                cands: DataFrame | None = None) -> DataFrame:
+    """The family's one exact stage: the cosine of every ``(query_id,
+    neighbor_id)`` pair in ``cands``, ranked by cosine descending then
+    ``neighbor_id`` (stable across engines), top ``k`` per query. The
+    queries are the vectors of ``e`` with ``vec_id < n_queries``.
 
-    The query side is tiny → broadcast; candidates stream through one scan.
-    Ties broken by candidate id so LIMIT/rank is stable across engines.
-    """
-    e = ld_vecs_dir(spark, sf_dir)
-    # per-row norm hoist — see embedding_triplet_margin (r12): bitwise
-    # unchanged, 3 interpreted folds per pair -> 1
+    ``cands=None`` makes every other vector a candidate: the tiny query
+    side broadcasts and the corpus streams through one scan. A member
+    whose candidates are bounded by its parameters passes them hinted,
+    ``F.broadcast(cands)``, so the corpus streams through a broadcast
+    hash join instead of being shuffled by vec_id. Norms are hoisted to
+    per-row columns (embedding_triplet_margin, r12): the same fold once
+    per row instead of once per pair, bitwise unchanged."""
     q = e.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"),
         norm_expr("embedding").alias("qn"))
     c = e.select(F.col("vec_id").alias("neighbor_id"),
                  F.col("embedding").alias("ce"),
                  norm_expr("embedding").alias("cn"))
+    if cands is None:
+        pairs = F.broadcast(q).join(
+            c, F.col("query_id") != F.col("neighbor_id"))
+    else:
+        pairs = cands.join(c, "neighbor_id").join(F.broadcast(q), "query_id")
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (F.broadcast(q).join(c, F.col("query_id") != F.col("neighbor_id"))
-            .select("query_id", "neighbor_id",
-                    cosine_expr("qe", "ce", na=F.col("qn"),
-                                nb=F.col("cn")).alias("cosine"))
+    return (pairs.select("query_id", "neighbor_id",
+                         cosine_expr("qe", "ce", na=F.col("qn"),
+                                     nb=F.col("cn")).alias("cosine"))
             .withColumn("nn_rank", F.row_number().over(w))
             .filter(F.col("nn_rank") <= k)
             .select("query_id", "neighbor_id", "cosine", "nn_rank"))
+
+
+def _query_vectors(e: DataFrame, n_queries: int):
+    """The family's one driver pull, bounded by ``n_queries``: ids and
+    unit-normalized (n × dim) matrix of the vectors with ``vec_id <
+    n_queries``. A query slice whose vectors all dropped at the scan
+    (NULL, non-finite or zero-norm) gives a (0 × dim) matrix: the probe
+    lists and ADC tables built from it are empty, so the member returns
+    no rows, as the brute force does."""
+    import numpy as np
+
+    rows = (e.filter(F.col("vec_id") < n_queries)
+            .select("vec_id", "embedding").collect())
+    if not rows:
+        return np.empty(0, dtype=np.int64), np.empty((0, embedding_dim(e)))
+    qn = np.array([r.embedding for r in rows], dtype=np.float64)
+    return (np.array([r.vec_id for r in rows], dtype=np.int64),
+            qn / np.linalg.norm(qn, axis=1, keepdims=True))
+
+
+def ann_brute_force_topk(spark, sf_dir, k: int = 5, n_queries: int = 10):
+    """Exact top-k neighbors for the first ``n_queries`` vectors: the
+    exact stage with every vector a candidate."""
+    return _exact_topk(ld_vecs_dir(spark, sf_dir), k, n_queries)
 
 
 ORACLE_ANN_BRUTE = """
@@ -143,37 +159,15 @@ def _hyperplane(dim: int, j: int) -> list[int]:
 
 
 def sign_lsh_signatures(df: DataFrame, vec_col: str = "embedding",
-                        n_planes: int = 16, dim: int = 64,
-                        impl: str = "arrow") -> DataFrame:
+                        n_planes: int = 16, dim: int = 64) -> DataFrame:
     """Random-hyperplane (sign) LSH: bit j = sign(v · h_j).
 
     Hyperplanes are ±1-valued so the projection is an exact integer-weighted
-    sum. Two implementations, same output:
-
-    - ``impl="arrow"`` (default): one Arrow-batched pandas_udf computing
-      all ``n_planes`` projections as a single (batch × dim)·(dim × planes)
-      BLAS matmul, then bit-packing the signs. The per-row work is one
-      matmul row instead of ``n_planes`` interpreted HOF lambda folds —
-      measured ~3× faster end-to-end on ``ann_lsh_topk`` at sf0.1 (round-1
-      verdict flagged the ×16 fold cost as the query's main local cost).
-    - ``impl="hof"``: the original pure-Catalyst zip_with/aggregate folds —
-      no Python workers, useful for plan-shape experiments and as the
-      fallback where Arrow is unavailable.
-
-    Sign flips between the two could only occur at |proj| below float
-    reassociation error (~1e-12 of the term magnitudes) — the equality of
-    both paths on the fixture corpus is pinned in tests.
+    sum. One Arrow-batched pandas_udf computes all ``n_planes`` projections
+    as a single (batch × dim)·(dim × planes) BLAS matmul, then bit-packs
+    the signs (measured ~3× faster end-to-end on ``ann_lsh_topk`` at sf0.1
+    than ``n_planes`` interpreted HOF folds per vector).
     """
-    if impl == "hof":
-        sig = F.lit(0)
-        for j in range(n_planes):
-            plane = F.array(*[F.lit(x) for x in _hyperplane(dim, j)])
-            proj = F.aggregate(
-                F.zip_with(vec_col, plane, lambda v, h: v.cast("double") * h),
-                F.lit(0.0), lambda acc, v: acc + v)
-            sig = sig + F.when(proj > 0, F.lit(1 << j)).otherwise(0)
-        return df.withColumn("lsh_sig", sig)
-
     import numpy as np
 
     # (dim × planes) ±1 matrix; KB-scale, ships in the task closure
@@ -193,7 +187,7 @@ def sign_lsh_signatures(df: DataFrame, vec_col: str = "embedding",
 def ann_lsh_topk(spark, sf_dir, k: int = 5, n_queries: int = 10,
                  n_planes: int = 16, n_bands: int = 4):
     """ANN via sign-LSH banding: candidates share at least one signature
-    band with the query; exact cosine re-ranks within candidates.
+    band with the query; the exact stage re-ranks them.
 
     Approximate by construction (rows-only driver check; pytest measures
     recall against the brute-force baseline). At 100 TB the band join is
@@ -201,45 +195,26 @@ def ann_lsh_topk(spark, sf_dir, k: int = 5, n_queries: int = 10,
     """
     bits_per_band = n_planes // n_bands
     mask = (1 << bits_per_band) - 1
-    e = sign_lsh_signatures(ld_vecs_dir(spark, sf_dir),
-                            n_planes=n_planes)
-    bands = e.select(
-        "vec_id", "embedding",
+    e = ld_vecs_dir(spark, sf_dir)
+    bands = sign_lsh_signatures(e, n_planes=n_planes).select(
+        "vec_id",
         F.explode(F.array(*[
             F.struct(F.lit(b).alias("band_idx"),
                      F.shiftright(F.col("lsh_sig"), b * bits_per_band)
                      .bitwiseAND(F.lit(mask)).alias("band_val"))
             for b in range(n_bands)
         ])).alias("b")
-    ).select("vec_id", "embedding", "b.band_idx", "b.band_val")
+    ).select("vec_id", "b.band_idx", "b.band_val")
     q = (bands.filter(F.col("vec_id") < n_queries)
          .select(F.col("vec_id").alias("query_id"), "band_idx", "band_val"))
     c = bands.select(F.col("vec_id").alias("neighbor_id"),
                      "band_idx", "band_val")
-    # dedupe candidates on the id pair ONLY — a distinct over rows that
-    # carry the 64-float embedding arrays hashes/compares the vectors for
-    # every bucket hit; re-attach embeddings once per surviving pair
+    # dedupe candidates on the id pair ONLY — the exact stage attaches
+    # the embeddings once per surviving pair, not once per bucket hit
     cands = (q.join(c, ["band_idx", "band_val"])
              .filter(F.col("query_id") != F.col("neighbor_id"))
              .select("query_id", "neighbor_id").distinct())
-    e = ld_vecs_dir(spark, sf_dir)
-    # per-row norm hoist — see embedding_triplet_margin (r12): bitwise
-    # unchanged, 3 interpreted folds per bucket hit -> 1
-    qe = e.select(F.col("vec_id").alias("query_id"),
-                  F.col("embedding").alias("qe"),
-                  norm_expr("embedding").alias("qn"))
-    ce = e.select(F.col("vec_id").alias("neighbor_id"),
-                  F.col("embedding").alias("ce"),
-                  norm_expr("embedding").alias("cn"))
-    scored = (cands.join(F.broadcast(qe), "query_id")
-              .join(ce, "neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (scored.select("query_id", "neighbor_id",
-                          cosine_expr("qe", "ce", na=F.col("qn"),
-                                      nb=F.col("cn")).alias("cosine"))
-            .withColumn("nn_rank", F.row_number().over(w))
-            .filter(F.col("nn_rank") <= k)
-            .select("query_id", "neighbor_id", "cosine", "nn_rank"))
+    return _exact_topk(e, k, n_queries, cands)
 
 
 def all_pairs_cosine_blocked(df: DataFrame, threshold: float,
@@ -403,6 +378,18 @@ def ivf_assign(df: DataFrame, centroids, vec_col: str = "embedding",
     return df.withColumn(cell_col, nearest_cell(F.col(vec_col)))
 
 
+def _ivf_probes(spark, qids, qn, C, nprobe: int) -> DataFrame:
+    """(query_id, cell) for the ``nprobe`` cells nearest each query —
+    n_queries × nprobe rows, computed on the driver and broadcast into
+    the candidate join."""
+    import numpy as np
+
+    order = np.argsort(-(qn @ C.T), axis=1)[:, :nprobe]
+    return spark.createDataFrame(
+        [(int(q), int(c)) for q, cells in zip(qids, order) for c in cells],
+        "query_id long, cell int")
+
+
 def ann_ivf_topk(spark, sf_dir, k: int = 5, n_queries: int = 10,
                  n_cells: int = 16, nprobe: int = 4):
     """IVF ANN: coarse-quantize the corpus into ``n_cells`` inverted lists,
@@ -416,76 +403,13 @@ def ann_ivf_topk(spark, sf_dir, k: int = 5, n_queries: int = 10,
     Approximate by construction → rows-only driver check; recall vs the
     brute-force baseline is pinned in tests/test_operators.py.
     """
-    import numpy as np
-
     e = ld_vecs_dir(spark, sf_dir)
     C = ivf_centroids(e, n_cells=n_cells)
-    tagged = ivf_assign(e, C)
-
-    # probe list per query: tiny (n_queries × nprobe) — computed on the
-    # driver from the query vectors and broadcast into the candidate join
-    qrows = (e.filter(F.col("vec_id") < n_queries)
-             .select("vec_id", "embedding").collect())
-    qn = np.array([r.embedding for r in qrows], dtype=np.float64)
-    qn /= np.linalg.norm(qn, axis=1, keepdims=True)
-    order = np.argsort(-(qn @ C.T), axis=1)[:, :nprobe]
-    probes = spark.createDataFrame(
-        [(int(r.vec_id), int(c)) for r, cells in zip(qrows, order)
-         for c in cells],
-        "query_id long, cell int")
-
-    qe = (spark.createDataFrame(
-        [(int(r.vec_id), list(map(float, r.embedding))) for r in qrows],
-        "query_id long, qe array<double>")
-        .select("query_id", "qe", norm_expr("qe").alias("qnrm")))
-    # per-row norm hoist — see embedding_triplet_margin (r12): bitwise
-    # unchanged; a candidate row probed by several queries folds its
-    # norm once, not once per query hit
-    scored = (tagged.withColumn("cnrm", norm_expr("embedding"))
-              .join(F.broadcast(probes), "cell")
-              .filter(F.col("query_id") != F.col("vec_id"))
-              .join(F.broadcast(qe), "query_id")
-              .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                      cosine_expr("qe", "embedding", na=F.col("qnrm"),
-                                  nb=F.col("cnrm")).alias("cosine")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (scored.withColumn("nn_rank", F.row_number().over(w))
-            .filter(F.col("nn_rank") <= k)
-            .select("query_id", "neighbor_id", "cosine", "nn_rank"))
-
-
-def ann_block_numpy_topk(spark, sf_dir, k: int = 5, n_queries: int = 10):
-    """Throughput path: Arrow-batched numpy matmul per partition
-    (mapInPandas). Same results as brute force up to float reassociation —
-    used for benchmarking, not oracle comparison."""
-    import numpy as np
-    import pandas as pd
-
-    e = ld_vecs_dir(spark, sf_dir)
-    qrows = e.filter(F.col("vec_id") < n_queries).collect()
-    qids = np.array([r.vec_id for r in qrows])
-    qmat = np.array([r.embedding for r in qrows], dtype=np.float64)
-    qnorm = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast((qids, qnorm))
-
-    def block(batches):
-        ids, qn = bc.value
-        for pdf in batches:
-            cmat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            cmat = cmat / np.linalg.norm(cmat, axis=1, keepdims=True)
-            sims = qn @ cmat.T  # one BLAS call per Arrow batch
-            out = pd.DataFrame({
-                "query_id": np.repeat(ids, len(pdf)),
-                "neighbor_id": np.tile(pdf["vec_id"].values, len(ids)),
-                "cosine": sims.ravel(),
-            })
-            yield out[out.query_id != out.neighbor_id]
-
-    scored = e.select("vec_id", "embedding").mapInPandas(
-        block, schema="query_id long, neighbor_id long, cosine double")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (scored.withColumn("nn_rank", F.row_number().over(w))
-            .filter(F.col("nn_rank") <= k))
+    probes = _ivf_probes(spark, *_query_vectors(e, n_queries), C, nprobe)
+    cands = (ivf_assign(e, C).join(F.broadcast(probes), "cell")
+             .filter(F.col("query_id") != F.col("vec_id"))
+             .select("query_id", F.col("vec_id").alias("neighbor_id")))
+    return _exact_topk(e, k, n_queries, cands)
 
 
 # ---------------------------------------------------------------------------
@@ -564,6 +488,27 @@ def pq_assign_codes(e: DataFrame, books, keep: tuple = ()) -> DataFrame:
     return e.select("vec_id", *keep, codes_udf("embedding").alias("codes"))
 
 
+def _pq_luts(qn, books):
+    """ADC lookup tables of the unit query vectors ``qn``:
+    ``LUT[q, b, j] = dot(q_b, books[b, j])`` — n_queries × m × n_cents
+    doubles, kilobytes, broadcast to the scoring pass."""
+    import numpy as np
+
+    m, _, sub = books.shape
+    return np.einsum("qbs,bjs->qbj", qn.reshape(len(qn), m, sub), books)
+
+
+def _adc_shortlist(scored: DataFrame, shortlist_k: int) -> DataFrame:
+    """The ``shortlist_k`` best ``approx_score`` neighbors per query of
+    ``scored`` — shortlist_k × n_queries rows, bounded by PARAMETERS,
+    not data."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("approx_score"),
+                                               "neighbor_id")
+    return (scored.withColumn("adc_rank", F.row_number().over(w))
+            .filter(F.col("adc_rank") <= shortlist_k)
+            .select("query_id", "neighbor_id"))
+
+
 def ann_pq_topk(spark, sf_dir, k: int = 5, n_queries: int = 10,
                 m: int = 8, n_cents: int = 16,
                 shortlist_k: int = 50) -> DataFrame:
@@ -577,9 +522,9 @@ def ann_pq_topk(spark, sf_dir, k: int = 5, n_queries: int = 10,
     upstream systems fetch separately.
 
     The ADC pass produces a ``shortlist_k`` candidate set per query;
-    an exact-cosine re-rank (the only stage that touches full-precision
-    vectors) emits the final top-k — the standard two-stage PQ serving
-    layout. Approximate by construction → rows-only driver check;
+    the exact stage (the only one that touches full-precision vectors)
+    emits the final top-k — the standard two-stage PQ serving layout.
+    Approximate by construction → rows-only driver check;
     tests/test_behavior.py pins recall vs the exact brute force.
     """
     import numpy as np
@@ -587,59 +532,27 @@ def ann_pq_topk(spark, sf_dir, k: int = 5, n_queries: int = 10,
 
     e = ld_vecs_dir(spark, sf_dir)
     books = pq_codebooks(e, m=m, n_cents=n_cents)
-    coded = pq_assign_codes(e, books)
-
-    qrows = (e.filter(F.col("vec_id") < n_queries)
-             .select("vec_id", "embedding").collect())
-    qn = np.array([r.embedding for r in qrows], dtype=np.float64)
-    qn /= np.linalg.norm(qn, axis=1, keepdims=True)
-    sub = qn.shape[1] // m
-    # LUT[q, b, j] = dot(q_b, C[b, j])
-    luts = np.einsum("qbs,bjs->qbj",
-                     qn.reshape(len(qrows), m, sub), books)
-    qids = np.array([int(r.vec_id) for r in qrows])
-    bc = spark.sparkContext.broadcast((qids, luts))
+    qids, qn = _query_vectors(e, n_queries)
+    bc = spark.sparkContext.broadcast(_pq_luts(qn, books))
 
     @pandas_udf("array<double>")
     def adc_scores(codes: pd.Series) -> pd.Series:
-        ids, L = bc.value
+        L = bc.value
         C = np.array(codes.tolist(), dtype=np.int64)      # (rows, m)
         # scores[r, q] = Σ_b L[q, b, C[r, b]]
         scores = L[:, np.arange(C.shape[1])[None, :], C].sum(axis=2)
         return pd.Series(list(scores.T))
 
-    scored = (coded.select("vec_id", adc_scores("codes").alias("s"))
+    scored = (pq_assign_codes(e, books)
+              .select("vec_id", adc_scores("codes").alias("s"))
               .select(F.col("vec_id").alias("neighbor_id"),
                       F.posexplode("s").alias("q_idx", "approx_score")))
     qmap = spark.createDataFrame(
         [(i, int(q)) for i, q in enumerate(qids)], "q_idx int, query_id long")
-    w = Window.partitionBy("query_id").orderBy(F.desc("approx_score"),
-                                               "neighbor_id")
-    shortlist = (scored.join(F.broadcast(qmap), "q_idx")
-                 .filter(F.col("neighbor_id") != F.col("query_id"))
-                 .withColumn("adc_rank", F.row_number().over(w))
-                 .filter(F.col("adc_rank") <= shortlist_k)
-                 .select("query_id", "neighbor_id"))
-    # exact re-rank of the ADC shortlist: only shortlist_k·n_queries float
-    # vectors are ever fetched — the full-precision column never streams
-    qe = spark.createDataFrame(
-        [(int(r.vec_id), list(map(float, r.embedding))) for r in qrows],
-        "query_id long, qe array<double>")
-    ce = e.select(F.col("vec_id").alias("neighbor_id"),
-                  F.col("embedding").alias("ce"))
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                                "neighbor_id")
-    # broadcast the shortlist (shortlist_k × n_queries rows, bounded by
-    # PARAMETERS, not data) so the corpus float column streams through a
-    # broadcast hash join instead of being shuffled by vec_id to serve a
-    # few hundred re-rank rows (r12 optimization round, guide §3.1)
-    return (ce.join(F.broadcast(shortlist), "neighbor_id")
-            .join(F.broadcast(qe), "query_id")
-            .select("query_id", "neighbor_id",
-                    cosine_expr("qe", "ce").alias("cosine"))
-            .withColumn("nn_rank", F.row_number().over(w2))
-            .filter(F.col("nn_rank") <= k)
-            .select("query_id", "neighbor_id", "cosine", "nn_rank"))
+    shortlist = _adc_shortlist(
+        scored.join(F.broadcast(qmap), "q_idx")
+        .filter(F.col("neighbor_id") != F.col("query_id")), shortlist_k)
+    return _exact_topk(e, k, n_queries, F.broadcast(shortlist))
 
 
 def pq_encode(spark, sf_dir, m: int = 8, n_cents: int = 16) -> DataFrame:
@@ -919,8 +832,8 @@ def _ann_recall_gate(ann_df: DataFrame, brute_df: DataFrame,
     index collapses to two oracle-asserted booleans — ``recall_in_band``
     (hits / true pairs ≥ the same floor the recall pytest pins) and
     ``shared_scores_exact`` (every pair the index shares with the exact
-    baseline carries a bitwise-identical cosine: both sides run the same
-    fold, and the PQ/IVFPQ paths re-rank on full precision). The
+    baseline carries a bitwise-identical cosine: both sides score
+    through ``_exact_topk`` on full-precision vectors). The
     brute-force side runs IN-PLAN — one broadcast-queries scan, the
     ann_brute_force_topk shape — so the gate needs no stored baseline."""
     b = brute_df.select("query_id", "neighbor_id",
@@ -1126,22 +1039,10 @@ def ann_ivf_pq_topk(spark, sf_dir, k: int = 5, n_queries: int = 10,
     # corpus scans re-attached by a corpus-wide vec_id shuffle join
     coded = pq_assign_codes(ivf_assign(e, C), books, keep=("cell",))
 
-    qrows = (e.filter(F.col("vec_id") < n_queries)
-             .select("vec_id", "embedding").collect())
-    qn = np.array([r.embedding for r in qrows], dtype=np.float64)
-    qn /= np.linalg.norm(qn, axis=1, keepdims=True)
-    qids = np.array([int(r.vec_id) for r in qrows])
-    sub = qn.shape[1] // m
-    luts = np.einsum("qbs,bjs->qbj", qn.reshape(len(qrows), m, sub), books)
-
-    # probe map: (query, cell) pairs — n_queries × nprobe rows, broadcast
-    order = np.argsort(-(qn @ C.T), axis=1)[:, :nprobe]
-    probes = spark.createDataFrame(
-        [(int(q), int(c)) for q, cells in zip(qids, order) for c in cells],
-        "query_id long, cell int")
-
+    qids, qn = _query_vectors(e, n_queries)
+    probes = _ivf_probes(spark, qids, qn, C, nprobe)
     qidx = {int(q): i for i, q in enumerate(qids)}
-    bc = spark.sparkContext.broadcast((qidx, luts))
+    bc = spark.sparkContext.broadcast((qidx, _pq_luts(qn, books)))
 
     @pandas_udf("double")
     def adc(codes: pd.Series, query: pd.Series) -> pd.Series:
@@ -1153,32 +1054,12 @@ def ann_ivf_pq_topk(spark, sf_dir, k: int = 5, n_queries: int = 10,
             lut[np.arange(len(Cm))[:, None],
                 np.arange(Cm.shape[1])[None, :], Cm].sum(axis=1))
 
-    cand = (coded.join(F.broadcast(probes), "cell")
-            .filter(F.col("query_id") != F.col("vec_id")))
-    scored = cand.select("query_id",
-                         F.col("vec_id").alias("neighbor_id"),
-                         adc("codes", "query_id").alias("approx_score"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("approx_score"),
-                                               "neighbor_id")
-    shortlist = (scored.withColumn("adc_rank", F.row_number().over(w))
-                 .filter(F.col("adc_rank") <= shortlist_k)
-                 .select("query_id", "neighbor_id"))
-
-    qe = spark.createDataFrame(
-        [(int(r.vec_id), list(map(float, r.embedding))) for r in qrows],
-        "query_id long, qe array<double>")
-    ce = e.select(F.col("vec_id").alias("neighbor_id"),
-                  F.col("embedding").alias("ce"))
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                                "neighbor_id")
-    # broadcast the parameter-bounded shortlist — see ann_pq_topk (r12)
-    return (ce.join(F.broadcast(shortlist), "neighbor_id")
-            .join(F.broadcast(qe), "query_id")
-            .select("query_id", "neighbor_id",
-                    cosine_expr("qe", "ce").alias("cosine"))
-            .withColumn("nn_rank", F.row_number().over(w2))
-            .filter(F.col("nn_rank") <= k)
-            .select("query_id", "neighbor_id", "cosine", "nn_rank"))
+    scored = (coded.join(F.broadcast(probes), "cell")
+              .filter(F.col("query_id") != F.col("vec_id"))
+              .select("query_id", F.col("vec_id").alias("neighbor_id"),
+                      adc("codes", "query_id").alias("approx_score")))
+    shortlist = _adc_shortlist(scored, shortlist_k)
+    return _exact_topk(e, k, n_queries, F.broadcast(shortlist))
 
 
 def kmeans_fit_distributed(df: DataFrame, k: int = 8, n_iters: int = 5,

@@ -184,6 +184,38 @@ def test_db2_inline_comment_inside_and_after_string():
     assert cols[1].raw_definition == "B CHAR(2) DEFAULT 'y'"
 
 
+def test_db2_table_without_columns_warns():
+    for ddl, column_warnings in (
+            ("CREATE TABLE S.T ()", []),
+            ("CREATE TABLE S.T (A)", ["Could not parse data type for column A"])):
+        parser = DB2DdlParser()
+        tables = parser.parse(ddl)
+        assert [(t.full_name, t.columns) for t in tables] == [("S.T", [])]
+        assert parser.warnings == column_warnings + [
+            "Table S.T has no parsed columns"]
+
+
+def test_db2_repeated_column_warns_case_insensitively():
+    parser = DB2DdlParser()
+    tables = parser.parse("CREATE TABLE S.T (A INT, B INT, A INT);\n"
+                          "CREATE TABLE S.U (C INT, c INT)")
+    assert [[c.name for c in t.columns] for t in tables] == [
+        ["A", "B", "A"], ["C", "c"]]
+    assert parser.warnings == ["Duplicate column A in table S.T",
+                               "Duplicate column c in table S.U"]
+
+
+def test_db2_malformed_table_warnings_leave_ddl_text_unchanged():
+    from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark.convert import (
+        IcebergDdlGenerator,
+    )
+
+    ddl = IcebergDdlGenerator().convert(
+        "CREATE TABLE S.T (A INT, a INT)").iceberg_ddl
+    assert "CREATE OR REPLACE ICEBERG TABLE S.T (\n" \
+           "    A INTEGER,\n    A INTEGER\n)" in ddl
+
+
 def test_db2_unbalanced_paren_is_an_error():
     parser = DB2DdlParser()
     tables = parser.parse("CREATE TABLE S.T (A INTEGER, B DECIMAL(10,2);")

@@ -728,10 +728,8 @@ class TestDriverSideInventory:
             ("operators/relational.py", "agg_pivot"): 1,
             ("operators/scale.py", "global_prefix_window"): 1,
             ("operators/scale.py", "global_ranks"): 1,
-            ("operators/similarity.py", "ann_block_numpy_topk"): 1,
-            ("operators/similarity.py", "ann_ivf_pq_topk"): 1,
-            ("operators/similarity.py", "ann_ivf_topk"): 1,
-            ("operators/similarity.py", "ann_pq_topk"): 1,
+            # the ANN family's one query-vector pull (n_queries rows)
+            ("operators/similarity.py", "_query_vectors"): 1,
             ("operators/similarity.py", "ivf_centroids"): 1,
             ("operators/similarity.py", "kmeans_fit_distributed"): 2,
             ("operators/similarity.py", "pca_components"): 1,
@@ -997,6 +995,51 @@ class TestNullPayloadContract:
             similarity.embedding_kmeans_clusters_checked(spark, null_dir)
         with pytest.raises(ValueError, match="empty embedding table"):
             similarity.embedding_pca_project(spark, null_dir)
+
+    @pytest.fixture(scope="class")
+    def dead_query_dir(self, spark, sf_dir, tmp_path_factory):
+        """Every vector of the query slice (vec_id < 10) is NULL,
+        non-finite or zero-norm; the rest of the corpus is intact."""
+        out = str(tmp_path_factory.mktemp("sf_deadq"))
+        e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        dead = (F.when(F.col("vec_id") % 3 == 0, F.lit(None))
+                .when(F.col("vec_id") % 3 == 1, F.array_repeat(
+                    F.lit(float("nan")).cast("float"), 64))
+                .otherwise(F.array_repeat(F.lit(0.0).cast("float"), 64)))
+        (e.withColumn("embedding", F.when(F.col("vec_id") < 10, dead)
+                      .otherwise(F.col("embedding")))
+         .write.mode("overwrite").parquet(f"{out}/embeddings.parquet"))
+        return out
+
+    def test_dead_query_slice_gives_what_brute_force_gives(
+            self, spark, dead_query_dir):
+        """Dead query vectors drop at the scan, so no member has a query
+        left: each returns what the brute force returns (no rows, not a
+        numpy AxisError), and each recall gate matches its oracle."""
+        import duckdb
+
+        from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark.operators import (
+            similarity,
+        )
+
+        brute = similarity.ann_brute_force_topk(spark, dead_query_dir)
+        assert brute.count() == 0
+        for member in ("ann_lsh_topk", "ann_ivf_topk", "ann_pq_topk",
+                       "ann_ivf_pq_topk"):
+            df = getattr(similarity, member)(spark, dead_query_dir)
+            assert df.columns == brute.columns, member
+            assert df.count() == 0, member
+        con = duckdb.connect()
+        con.sql("CREATE VIEW embeddings AS SELECT * FROM read_parquet("
+                f"'{dead_query_dir}/embeddings.parquet/*.parquet')")
+        expected = con.sql(similarity.ORACLE_ANN_RECALL_GATE).fetchall()
+        con.close()
+        assert expected == [(0, True, True)]
+        for member in ("ann_lsh_topk", "ann_ivf_topk", "ann_pq_topk",
+                       "ann_ivf_pq_topk"):
+            got = getattr(similarity, f"{member}_checked")(
+                spark, dead_query_dir).collect()
+            assert [tuple(r) for r in got] == expected, member
 
     def test_kmv_jaccard_null_not_div0(self, spark, null_dir):
         from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark.operators import (
