@@ -49,6 +49,8 @@ def cmd_convert(args) -> int:
     else:
         from .convert import IcebergDdlGenerator as Gen
     result = Gen().convert(_read(args.ddl))
+    for warning in getattr(result, "warnings", ()):
+        print(f"warning: {warning}", file=sys.stderr)
     if not result.success:
         print(getattr(result, "error_message", "conversion failed"),
               file=sys.stderr)

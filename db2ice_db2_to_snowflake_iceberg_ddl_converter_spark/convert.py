@@ -124,7 +124,8 @@ class IcebergDdlGenerator:
         """
         tables = self.parser.parse(ddl)
         result = ConversionResult(
-            iceberg_ddl="", assessment=self.assessor.assess_tables(tables))
+            iceberg_ddl="", assessment=self.assessor.assess_tables(tables),
+            warnings=list(self.parser.warnings))
         if not tables:
             result.success = False
             result.error_message = "No valid CREATE TABLE statements found"

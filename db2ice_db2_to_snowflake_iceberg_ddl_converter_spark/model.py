@@ -272,6 +272,7 @@ class ConversionResult:
     tables_converted: int = 0
     success: bool = True
     error_message: Optional[str] = None
+    warnings: list = field(default_factory=list)   # DB2DdlParser.warnings
 
 
 @dataclass

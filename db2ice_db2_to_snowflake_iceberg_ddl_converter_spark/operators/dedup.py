@@ -1,37 +1,46 @@
 """Deduplication operators over the ``documents`` table: exact, n-gram
-Jaccard, MinHash+LSH, SimHash, and embedding-cosine near-dup.
+Jaccard, containment, MinHash+LSH, SimHash, and embedding-cosine near-dup.
 
 These are the training-data-pipeline operators (task north star; the
-reference has no row plane). Scale design notes, per operator:
+reference has no row plane). Exact dedup is one hash-groupBy on a
+normalized key — Spark's partial aggregation emits one row per distinct
+key per executor before the shuffle. Every near-dup member is one
+skeleton, shingle → candidates → one exact verify → census or
+components:
 
-- **exact**: one hash-groupBy on a normalized key — the canonical 100 TB
-  dedup; Spark's partial aggregation means each executor emits one row per
-  distinct key before the shuffle.
-- **n-gram Jaccard (exact)**: inverted-index self-join on shingles (NOT an
-  O(n²) cross join): |pairs sharing a shingle| ≪ n². Hot shingles skew the
-  join — at scale, drop top-frequency shingles (stop-shingles) before the
-  join; AQE skew-join splits the rest.
-- **MinHash+LSH**: the scale path. Signatures are k=64 JVM-side xxhash64
-  min-aggregations (no shuffle), banding b=16×r=4 turns near-dup search into
-  an equi-join on (band_idx, band_hash) — only same-bucket pairs are ever
-  compared, and candidates are verified with exact Jaccard.
-- **SimHash**: 64-bit fingerprints from per-bit word-hash votes; near-dups
-  found by joining on 16-bit bands (pigeonhole: hamming ≤ 3 ⇒ some band
-  equal) then filtering on exact hamming distance via xor+bit_count.
-- **embedding cosine**: see operators/similarity.py for the ANN path.
+- **shingle**: ``doc_shingles`` — distinct word 3-grams per document, one
+  Arrow-batched pass (NULL text has no shingles and drops out).
+- **candidates**: either the inverted index (``_shingle_index``) self-
+  joined on the shingle — NOT an O(n²) cross join, only pairs sharing a
+  shingle meet — or LSH banding (``minhash_band_rows``: k=64 JVM-side
+  xxhash64 min-aggregations, b=16 × r=4 bands, an equi-join on
+  (band_idx, band_hash)). SimHash bands 64-bit fingerprints the same
+  way (pigeonhole: hamming ≤ 3 ⇒ some 16-bit band equal).
+- **verify**: the inverted-index members share ONE overlap-count stage,
+  ``_overlap_counts`` → ``(id1, id2, n1, n2, n_common)``; each supplies
+  only its pair predicate (with the size bound its score cut implies)
+  and its score — Jaccard (``_jaccard_pairs``, also over the stop-
+  shingle-pruned index) or containment. The banded members share ONE
+  exact Jaccard verify, ``_verify_jaccard`` (``array_intersect`` on
+  both joined-back shingle sets). SimHash verifies by exact hamming.
+- **census or components**: each ``*_checked`` gate reads the exact-
+  anchor census ``exact_anchor_census`` (Σ c·(c−1)/2 byte-identical
+  pairs, how many of them were found, total found — also used by the
+  pHash and embedding gates); the cluster entries run
+  ``connected_components`` over the exact-collapsed pair graph.
 
-Everything is built-in Catalyst expressions — no Python UDFs — so the whole
-pipeline stays in whole-stage codegen.
+Hot shingles skew the inverted-index join — at scale, drop top-frequency
+shingles (``dedup_ngram_jaccard_pruned``); AQE skew-join splits the rest.
+Embedding cosine: see operators/similarity.py for the ANN path.
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 from pyspark.sql.types import ArrayType, StringType
@@ -72,28 +81,13 @@ FROM documents GROUP BY TRIM(LOWER(text))
 
 
 # ---------------------------------------------------------------------------
-# shingling + exact n-gram jaccard
+# the skeleton's shared stages
 # ---------------------------------------------------------------------------
-
-def _shingle_expr(text_col: str, n: int = 3) -> F.Column:
-    """Distinct word n-grams as an array column (pure Catalyst HOFs).
-
-    Kept as the no-Python fallback; array-HOF lambdas run in the
-    interpreted evaluator, so the Arrow-batched UDF below beats this ~10×
-    on real documents — see ``doc_shingles``.
-    """
-    words = F.split(F.col(text_col), " ")
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size(words) - n),
-        lambda i: F.concat_ws(" ", *[F.element_at(words, i + j + 1)
-                                     for j in range(n)]))
-    return F.array_distinct(grams)
-
 
 def _shingle_udf(n: int):
     """Arrow-batched shingler: distinct word n-grams, first-occurrence order
-    (same output as ``_shingle_expr``; whitespace semantics match DuckDB's
-    ``string_split(text, ' ')`` — literal single-space split)."""
+    (whitespace semantics match DuckDB's ``string_split(text, ' ')`` —
+    literal single-space split)."""
 
     @F.pandas_udf(ArrayType(StringType()))
     def shingle(text: pd.Series) -> pd.Series:
@@ -114,36 +108,119 @@ def doc_shingles(spark, sf_dir, n: int = 3) -> DataFrame:
     return d.select("doc_id", _shingle_udf(n)("text").alias("shingles"))
 
 
-def _jaccard_pair_graph(sh: DataFrame, threshold: float = 0.5) -> DataFrame:
-    """Exact Jaccard ≥ ``threshold`` pairs over a pinned
-    ``(doc_id, shingles)`` frame via an inverted-index join.
-    Jaccard = |∩| / (|A|+|B|−|∩|) over distinct shingles — integer
-    counts, so the double division is bitwise-exact. Shared by
-    :func:`dedup_ngram_jaccard` (all docs) and the exact-collapsed
-    cluster entries (distinct shingle sets only)."""
-    sized = sh.withColumn("n_shingles", F.size("shingles"))
-    inv = sized.select("doc_id", "n_shingles",
-                       F.explode("shingles").alias("shingle"))
+def _shingle_index(sh: DataFrame) -> DataFrame:
+    """Inverted index ``(doc_id, n_shingles, shingle)`` of a
+    ``(doc_id, shingles)`` frame; ``n_shingles`` is the full set size."""
+    return (sh.withColumn("n_shingles", F.size("shingles"))
+            .select("doc_id", "n_shingles",
+                    F.explode("shingles").alias("shingle")))
+
+
+def _overlap_counts(inv: DataFrame, pair_pred: Column) -> DataFrame:
+    """The overlap-count stage: ``(id1, id2, n1, n2, n_common)`` for every
+    pair of index rows that shares a shingle and passes ``pair_pred``
+    (over ``id1, id2, n1, n2``). The predicate carries the caller's size
+    bound; evaluated at the join probe it prunes hopeless pairs before
+    the aggregation, so the stage stays exact whenever the bound is
+    implied by the caller's score cut. Integer counts keep every score
+    division bitwise-exact, so the DuckDB oracles hash-match."""
     a = inv.select(F.col("doc_id").alias("id1"),
                    F.col("n_shingles").alias("n1"), "shingle")
     b = inv.select(F.col("doc_id").alias("id2"),
                    F.col("n_shingles").alias("n2"), "shingle")
-    # Size-bound pushdown: J ≥ t ⇒ |∩| ≤ min(n1,n2) and |∩| ≥ t·union ⇒
-    # t·max(n1,n2) ≤ min(n1,n2). Evaluated at the join probe, it prunes
-    # hopeless pairs before the aggregation — exactness preserved.
-    pairs = (a.join(b, (a.shingle == b.shingle)
-                    & (F.col("id1") < F.col("id2"))
-                    & (F.lit(threshold) * F.col("n1") <= F.col("n2"))
-                    & (F.lit(threshold) * F.col("n2") <= F.col("n1")))
-             .groupBy("id1", "id2", "n1", "n2")
-             .agg(F.count(F.lit(1)).alias("n_common")))
-    return (pairs
-            .withColumn("jaccard",
-                        F.col("n_common").cast("double")
-                        / (F.col("n1") + F.col("n2") - F.col("n_common")))
-            .filter(F.col("jaccard") >= threshold)
-            .select("id1", "id2", "jaccard"))
+    # an inner join: the optimizer moves pair_pred into the join condition
+    return (a.join(b, "shingle").filter(pair_pred)
+            .groupBy("id1", "id2", "n1", "n2")
+            .agg(F.count(F.lit(1)).alias("n_common")))
 
+
+def _jaccard_pairs(inv: DataFrame, threshold: float,
+                   score: str = "jaccard") -> DataFrame:
+    """``(id1 < id2, score)`` pairs of the index ``inv`` with
+    |∩| / (n1 + n2 − |∩|) ≥ ``threshold``."""
+    t = F.lit(threshold)
+    # Size bound: J ≥ t, |∩| ≤ min(n1, n2) and |∩| ≥ t·union ⇒
+    # t·max(n1, n2) ≤ min(n1, n2).
+    counts = _overlap_counts(inv, (F.col("id1") < F.col("id2"))
+                             & (t * F.col("n1") <= F.col("n2"))
+                             & (t * F.col("n2") <= F.col("n1")))
+    jaccard = (F.col("n_common").cast("double")
+               / (F.col("n1") + F.col("n2") - F.col("n_common")))
+    return (counts.select("id1", "id2", jaccard.alias(score))
+            .filter(F.col(score) >= threshold))
+
+
+def _jaccard_pair_graph(sh: DataFrame, threshold: float = 0.5) -> DataFrame:
+    """Exact Jaccard ≥ ``threshold`` pairs ``(id1, id2, jaccard)`` over a
+    pinned ``(doc_id, shingles)`` frame. Shared by
+    :func:`dedup_ngram_jaccard` (all docs) and the exact-collapsed
+    cluster entries (distinct shingle sets only)."""
+    return _jaccard_pairs(_shingle_index(sh), threshold)
+
+
+def _verify_jaccard(cands: DataFrame, sh: DataFrame, threshold: float,
+                    ids: tuple = ("id1", "id2")) -> DataFrame:
+    """The exact Jaccard verify of banded candidates: ``(*ids, jaccard)``
+    for the candidate pairs whose shingle sets (joined back from ``sh``
+    on both sides) have exact Jaccard ≥ ``threshold``."""
+    sized = sh.select("doc_id", "shingles", F.size("shingles").alias("ns"))
+    j = cands
+    for side, i in enumerate(ids, start=1):
+        j = j.join(sized.select(F.col("doc_id").alias(i),
+                                F.col("shingles").alias(f"sh{side}"),
+                                F.col("ns").alias(f"n{side}")), i)
+    inter = F.size(F.array_intersect("sh1", "sh2"))
+    jaccard = inter.cast("double") / (F.col("n1") + F.col("n2") - inter)
+    return (j.select(*ids, jaccard.alias("jaccard"))
+            .filter(F.col("jaccard") >= threshold))
+
+
+def exact_anchor_census(universe: DataFrame, key: str, pairs: DataFrame,
+                        names: tuple = ("n_exact_text_pairs",
+                                        "near_ge_exact"),
+                        ids: tuple = ("id1", "id2"),
+                        id_col: str = "doc_id",
+                        anchor: Column | None = None,
+                        extra_aggs: tuple = ()) -> DataFrame:
+    """The exact-anchor census of the near-dup ``*_checked`` gates: rows
+    of ``universe`` with a byte-identical ``key`` are exact duplicates
+    that every correct near-dup method must pair, so a gate reduces its
+    hash-derived pair list to one oracle-checkable row:
+
+    - ``names[0]``: Σ c·(c−1)/2 over the key groups (the exact pairs,
+      group-wise — no all-pairs);
+    - ``all_exact_pairs_found``: every exact pair appears in ``pairs``
+      (restricted to ``anchor`` when given, e.g. hamming 0);
+    - ``names[1]``: found pairs ≥ exact pairs in count;
+    - one column per ``extra_aggs`` aggregate over ``pairs``.
+
+    ``pairs`` is read twice (pin it)."""
+    n_exact = (universe.groupBy(key).agg(F.count(F.lit(1)).alias("c"))
+               .agg(F.coalesce(F.sum(F.expr("c * (c - 1) / 2")
+                                     .cast("long")),
+                               F.lit(0)).alias("n_exact")))
+    keyed = [universe.select(F.col(id_col).alias(i),
+                             F.col(key).alias(f"k{s}"))
+             for s, i in enumerate(ids)]
+    found = pairs if anchor is None else pairs.filter(anchor)
+    found_exact = (found.join(keyed[0], ids[0]).join(keyed[1], ids[1])
+                   .filter(F.col("k0") == F.col("k1"))
+                   .agg(F.count(F.lit(1)).alias("n_found_exact")))
+    n_found = pairs.agg(F.count(F.lit(1)).alias("n_found_total"),
+                        *extra_aggs)
+    return (n_exact.crossJoin(F.broadcast(found_exact))
+            .crossJoin(F.broadcast(n_found))
+            .select(F.col("n_exact").alias(names[0]),
+                    (F.col("n_found_exact") == F.col("n_exact"))
+                    .alias("all_exact_pairs_found"),
+                    (F.col("n_found_total") >= F.col("n_exact"))
+                    .alias(names[1]),
+                    *n_found.columns[1:]))
+
+
+# ---------------------------------------------------------------------------
+# inverted-index members: exact n-gram Jaccard and containment
+# ---------------------------------------------------------------------------
 
 def dedup_ngram_jaccard(spark, sf_dir):
     """Exact 3-gram Jaccard near-dup pairs (threshold 0.5) via an
@@ -188,37 +265,23 @@ def dedup_containment(spark, sf_dir, threshold: float = 0.8):
     dedup-adjacent assessment paths size tables, not content — the data
     plane generalizes them).
 
-    Shape: same pruned inverted-index join as the Jaccard family — the
-    shared-shingle count is computed ONCE per candidate pair off the
-    shingle index, never an all-pairs scan. The containment-specific
-    pushdown: C ≥ t and |∩| ≤ min(n1, n2) ⇒ n2 ≥ |∩| ≥ t·n1, so pairs
-    with n2 < t·n1 are pruned AT THE JOIN PROBE before aggregation.
-    Integer |∩| and |A| make the double division bitwise-exact, so the
-    DuckDB oracle hash-matches.
+    Shape: the shared overlap-count stage (:func:`_overlap_counts`) with
+    the containment pair rule — id1 ≠ id2, and the size bound C ≥ t and
+    |∩| ≤ n2 ⇒ n2 ≥ t·n1, pruned AT THE JOIN PROBE before aggregation.
 
     Emits the directional pair (id1 contained-in id2, id1 ≠ id2, both
     directions possible) — downstream the containment graph feeds the
     same connected-components representative pick as the other families.
     """
-    sh = (doc_shingles(spark, sf_dir)
-          .withColumn("n_shingles", F.size("shingles"))
-          .persist(StorageLevel.DISK_ONLY))
-    inv = sh.select("doc_id", "n_shingles",
-                    F.explode("shingles").alias("shingle"))
-    a = inv.select(F.col("doc_id").alias("id1"),
-                   F.col("n_shingles").alias("n1"), "shingle")
-    b = inv.select(F.col("doc_id").alias("id2"),
-                   F.col("n_shingles").alias("n2"), "shingle")
-    pairs = (a.join(b, (a.shingle == b.shingle)
-                    & (F.col("id1") != F.col("id2"))
-                    # containment bound: |∩| ≥ t·n1 and |∩| ≤ n2
-                    & (F.col("n2").cast("double")
-                       >= F.lit(threshold) * F.col("n1")))
-             .groupBy("id1", "id2", "n1")
-             .agg(F.count(F.lit(1)).alias("inter")))
-    cont = F.col("inter").cast("double") / F.col("n1").cast("double")
-    return (pairs.filter(cont >= threshold)
-            .select("id1", "id2", cont.alias("containment"))
+    # one shingling pass feeds both join sides (see dedup_ngram_jaccard)
+    sh = doc_shingles(spark, sf_dir).persist(StorageLevel.DISK_ONLY)
+    counts = _overlap_counts(
+        _shingle_index(sh),
+        (F.col("id1") != F.col("id2"))
+        & (F.col("n2").cast("double") >= F.lit(threshold) * F.col("n1")))
+    cont = F.col("n_common").cast("double") / F.col("n1").cast("double")
+    return (counts.select("id1", "id2", cont.alias("containment"))
+            .filter(F.col("containment") >= threshold)
             .orderBy("id1", "id2"))
 
 
@@ -325,7 +388,8 @@ def minhash_lsh_candidates(signatures: DataFrame,
 
 
 def dedup_minhash_lsh(spark, sf_dir, threshold: float = 0.5):
-    """LSH candidates verified with exact Jaccard ≥ threshold.
+    """LSH candidates verified with exact Jaccard ≥ threshold
+    (:func:`_verify_jaccard`).
 
     Non-SQL-expressible op (checked rows-only by the driver; pytest verifies
     it recovers exactly the brute-force pair set on the fixture data).
@@ -340,19 +404,7 @@ def dedup_minhash_lsh(spark, sf_dir, threshold: float = 0.5):
     # materialization cost (measured +0.5 s at sf0.1).
     sh = doc_shingles(spark, sf_dir).persist(StorageLevel.DISK_ONLY)
     cands = minhash_lsh_candidates(minhash_signatures(sh))
-    sized = sh.select("doc_id", "shingles", F.size("shingles").alias("ns"))
-    j = (cands
-         .join(sized.select(F.col("doc_id").alias("id1"),
-                            F.col("shingles").alias("sh1"),
-                            F.col("ns").alias("n1")), "id1")
-         .join(sized.select(F.col("doc_id").alias("id2"),
-                            F.col("shingles").alias("sh2"),
-                            F.col("ns").alias("n2")), "id2"))
-    inter = F.size(F.array_intersect("sh1", "sh2"))
-    jaccard = inter.cast("double") / (F.col("n1") + F.col("n2") - inter)
-    return (j.select("id1", "id2", jaccard.alias("jaccard"))
-            .filter(F.col("jaccard") >= threshold)
-            .orderBy("id1", "id2"))
+    return _verify_jaccard(cands, sh, threshold).orderBy("id1", "id2")
 
 
 def dedup_minhash_lsh_checked(spark, sf_dir,
@@ -363,13 +415,14 @@ def dedup_minhash_lsh_checked(spark, sf_dir,
     xxhash64-derived, but byte-identical texts with a NON-EMPTY shingle
     set (≥ 3 space-split words) have identical signatures, every band
     colliding, and exact Jaccard 1 ≥ threshold — so each such
-    identical-text pair MUST be in the verified pair set. The census row carries ``n_exact_text_pairs``
-    (DuckDB: Σ c·(c−1)/2 over text groups) on the hash gate plus the two
+    identical-text pair MUST be in the verified pair set. The census row
+    (:func:`exact_anchor_census`) carries ``n_exact_text_pairs`` (DuckDB:
+    Σ c·(c−1)/2 over text groups) on the hash gate plus the two
     structural booleans the oracle asserts TRUE. The pair-list core
     stays as :func:`dedup_minhash_lsh` for the brute-force pair-set
     pytest (which pins full recall on fixtures — stronger than this
     gate, but not portable to the driver's hash compare)."""
-    # pin: two consumers below (the multi-consumer rule)
+    # pin: the census reads the pair list twice (the multi-consumer rule)
     pairs = pin(dedup_minhash_lsh(spark, sf_dir, threshold=threshold))
     # census over the SAME universe the core shingles: NULL-text rows are
     # dropped on both sides (degenerate-input contract), else a corrupted
@@ -381,23 +434,7 @@ def dedup_minhash_lsh_checked(spark, sf_dir,
     # gate on a corpus flooded with identical short docs.
     d = (ld_docs(spark, sf_dir).select("doc_id", "text")
          .filter(F.size(F.split("text", " ")) >= 3))
-    grp = d.groupBy("text").agg(F.count(F.lit(1)).alias("c"))
-    n_exact = grp.agg(
-        F.coalesce(F.sum(F.expr("c * (c - 1) / 2").cast("long")),
-                   F.lit(0)).alias("n_exact_text_pairs"))
-    ta = d.select(F.col("doc_id").alias("id1"), F.col("text").alias("txa"))
-    tb = d.select(F.col("doc_id").alias("id2"), F.col("text").alias("txb"))
-    found_exact = (pairs.join(ta, "id1").join(tb, "id2")
-                   .filter(F.col("txa") == F.col("txb"))
-                   .agg(F.count(F.lit(1)).alias("n_found_exact")))
-    n_found = pairs.agg(F.count(F.lit(1)).alias("n_found_total"))
-    return (n_exact.crossJoin(F.broadcast(found_exact))
-            .crossJoin(F.broadcast(n_found))
-            .select("n_exact_text_pairs",
-                    (F.col("n_found_exact") == F.col("n_exact_text_pairs"))
-                    .alias("all_exact_pairs_found"),
-                    (F.col("n_found_total") >= F.col("n_exact_text_pairs"))
-                    .alias("near_ge_exact")))
+    return exact_anchor_census(d, "text", pairs)
 
 
 ORACLE_MINHASH_LSH_CHECKED = """
@@ -494,32 +531,14 @@ def dedup_simhash_checked(spark, sf_dir, max_hamming: int = 3) -> DataFrame:
     TRUE by the oracle: ``all_exact_pairs_found`` and ``near_ge_exact``.
     The pair-list core stays as :func:`dedup_simhash` for the pigeonhole
     recall pytest."""
-    from .relational import ld
-
     # pin: the pair list (the expensive band join + verify) feeds TWO
-    # consumers below — without the pin each would replay the whole
-    # pipeline (the multi-consumer rule)
+    # consumers in the census — without the pin each would replay the
+    # whole pipeline (the multi-consumer rule)
     pairs = pin(dedup_simhash(spark, sf_dir, max_hamming=max_hamming))
     # same-universe census as the fingerprint path: NULL text drops
     d = ld_docs(spark, sf_dir).select("doc_id", "text")
-    grp = d.groupBy("text").agg(F.count(F.lit(1)).alias("c"))
-    n_exact = grp.agg(
-        F.coalesce(F.sum(F.expr("c * (c - 1) / 2").cast("long")),
-                   F.lit(0)).alias("n_exact_text_pairs"))
-    ta = d.select(F.col("doc_id").alias("id1"), F.col("text").alias("txa"))
-    tb = d.select(F.col("doc_id").alias("id2"), F.col("text").alias("txb"))
-    found_exact = (pairs.filter(F.col("hamming") == 0)
-                   .join(ta, "id1").join(tb, "id2")
-                   .filter(F.col("txa") == F.col("txb"))
-                   .agg(F.count(F.lit(1)).alias("n_found_exact")))
-    n_found = pairs.agg(F.count(F.lit(1)).alias("n_found_total"))
-    return (n_exact.crossJoin(F.broadcast(found_exact))
-            .crossJoin(F.broadcast(n_found))
-            .select("n_exact_text_pairs",
-                    (F.col("n_found_exact") == F.col("n_exact_text_pairs"))
-                    .alias("all_exact_pairs_found"),
-                    (F.col("n_found_total") >= F.col("n_exact_text_pairs"))
-                    .alias("near_ge_exact")))
+    return exact_anchor_census(d, "text", pairs,
+                               anchor=F.col("hamming") == 0)
 
 
 ORACLE_SIMHASH_CHECKED = """
@@ -994,6 +1013,8 @@ def dedup_ngram_jaccard_pruned(spark, sf_dir, threshold: float = 0.5,
     bound of true Jaccard: pruning trades bounded recall (pairs whose
     overlap hides in boilerplate) for join uniformity — never precision.
     Deterministic, so the DuckDB oracle replicates the pruning exactly.
+    The pruned index takes the same Jaccard stage as the full one
+    (:func:`_jaccard_pairs`), so its size bound follows ``threshold``.
 
     AT-SCALE POLICY (the r6 verdict's ask, decided round 7): this exact
     inverted-index path is the ≤~1 SF *auditing* tool; **MinHash+LSH
@@ -1012,34 +1033,16 @@ def dedup_ngram_jaccard_pruned(spark, sf_dir, threshold: float = 0.5,
     """
     # persist(DISK_ONLY), same contract as dedup_ngram_jaccard: corpus-
     # sized but one deterministic hop from the scan -> recoverable.
-    sh = (doc_shingles(spark, sf_dir)
-          .withColumn("n_shingles", F.size("shingles"))
-          .persist(StorageLevel.DISK_ONLY))
+    sh = doc_shingles(spark, sf_dir).persist(StorageLevel.DISK_ONLY)
     n_docs = sh.count()
-    inv = sh.select("doc_id", "n_shingles",
-                    F.explode("shingles").alias("shingle"))
+    inv = _shingle_index(sh)
     hot = (inv.groupBy("shingle")
            .agg(F.count(F.lit(1)).alias("df"))
            .filter(F.col("df") > max_df * n_docs)
            .select("shingle"))
     # broadcast anti-join: the hot list is tiny by construction
     pruned = inv.join(F.broadcast(hot), "shingle", "left_anti")
-    a = pruned.select(F.col("doc_id").alias("id1"),
-                      F.col("n_shingles").alias("n1"), "shingle")
-    b = pruned.select(F.col("doc_id").alias("id2"),
-                      F.col("n_shingles").alias("n2"), "shingle")
-    pairs = (a.join(b, (a.shingle == b.shingle)
-                    & (F.col("id1") < F.col("id2"))
-                    & (F.col("n1") <= 2 * F.col("n2"))
-                    & (F.col("n2") <= 2 * F.col("n1")))
-             .groupBy("id1", "id2", "n1", "n2")
-             .agg(F.count(F.lit(1)).alias("n_common")))
-    return (pairs
-            .withColumn("jaccard_lb",
-                        F.col("n_common").cast("double")
-                        / (F.col("n1") + F.col("n2") - F.col("n_common")))
-            .filter(F.col("jaccard_lb") >= threshold)
-            .select("id1", "id2", "jaccard_lb"))
+    return _jaccard_pairs(pruned, threshold, score="jaccard_lb")
 
 
 ORACLE_DEDUP_NGRAM_PRUNED = """
@@ -1634,18 +1637,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str,
     cands = (bband.join(cband, ["band_idx", "band_hash"])
              .select("new_doc", "cand").distinct())
 
-    sized = sh.select("doc_id", "shingles", F.size("shingles").alias("ns"))
-    verified = (cands
-                .join(sized.select(F.col("doc_id").alias("new_doc"),
-                                   F.col("shingles").alias("sh1"),
-                                   F.col("ns").alias("n1")), "new_doc")
-                .join(sized.select(F.col("doc_id").alias("cand"),
-                                   F.col("shingles").alias("sh2"),
-                                   F.col("ns").alias("n2")), "cand"))
-    inter = F.size(F.array_intersect("sh1", "sh2"))
-    jac = inter.cast("double") / (F.col("n1") + F.col("n2") - inter)
-    scored = (verified.select("new_doc", "cand", jac.alias("jaccard"))
-              .filter(F.col("jaccard") >= threshold))
+    scored = _verify_jaccard(cands, sh, threshold, ids=("new_doc", "cand"))
     w = Window.partitionBy("new_doc").orderBy(F.desc("jaccard"), "cand")
     best = (scored.withColumn("rk", F.row_number().over(w))
             .filter(F.col("rk") == 1)

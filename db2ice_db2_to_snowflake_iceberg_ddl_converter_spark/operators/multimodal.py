@@ -700,30 +700,14 @@ def multimodal_phash_neardup_checked(spark, sf_dir,
     (found pairs ⊇ exact pairs in count). The pair-list core stays for
     the brute-force pytests."""
     # pin (r9): the decode->hash->band->verify pair list feeds two
-    # consumers below (the multi-consumer rule)
+    # consumers in the census (the multi-consumer rule)
+    from .dedup import exact_anchor_census
     from .scale import pin
     pairs = pin(multimodal_phash_neardup(spark, sf_dir,
                                          max_hamming=max_hamming))
     d = ld_docs(spark, sf_dir).select("doc_id", "text")
-    # exact-text pairs (doc_a < doc_b), computed group-wise — no all-pairs
-    grp = d.groupBy("text").agg(F.count(F.lit(1)).alias("c"))
-    n_exact = grp.agg(
-        F.coalesce(F.sum(F.expr("c * (c - 1) / 2").cast("long")),
-                   F.lit(0)).alias("n_exact_text_pairs"))
-    ta = d.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("txa"))
-    tb = d.select(F.col("doc_id").alias("doc_b"), F.col("text").alias("txb"))
-    found_exact = (pairs.filter(F.col("hamming") == 0)
-                   .join(ta, "doc_a").join(tb, "doc_b")
-                   .filter(F.col("txa") == F.col("txb"))
-                   .agg(F.count(F.lit(1)).alias("n_found_exact")))
-    n_found = pairs.agg(F.count(F.lit(1)).alias("n_found_total"))
-    return (n_exact.crossJoin(F.broadcast(found_exact))
-            .crossJoin(F.broadcast(n_found))
-            .select("n_exact_text_pairs",
-                    (F.col("n_found_exact") == F.col("n_exact_text_pairs"))
-                    .alias("all_exact_pairs_found"),
-                    (F.col("n_found_total") >= F.col("n_exact_text_pairs"))
-                    .alias("near_ge_exact")))
+    return exact_anchor_census(d, "text", pairs, ids=("doc_a", "doc_b"),
+                               anchor=F.col("hamming") == 0)
 
 
 ORACLE_PHASH_NEARDUP_CHECKED = """

@@ -325,8 +325,9 @@ def ivf_centroids(df: DataFrame, n_cells: int = 16, sample_n: int = 2048,
     sample (lowest ``sample_n`` ids — the fixture ids are dense, and at
     100 TB this would be a TABLESAMPLE with a fixed seed).
 
-    Fully deterministic: init = the first ``n_cells`` sample vectors,
-    Lloyd iterations over L2-normalized vectors (assign by max dot,
+    Fully deterministic: init = the first ``n_cells`` non-zero sample
+    vectors (zero vectors have no direction and are not fitted), Lloyd
+    iterations over L2-normalized vectors (assign by max dot,
     recenter by mean, renormalize; empty cells keep their centroid).
     Returns a unit-normalized (n_cells × dim) numpy array — KB-sized, meant
     to be broadcast.
@@ -344,7 +345,11 @@ def ivf_centroids(df: DataFrame, n_cells: int = 16, sample_n: int = 2048,
             "fit on zero vectors (empty-input contract: fitters raise "
             "loudly; fix the upstream feed)")
     X = np.array([r[1] for r in rows], dtype=np.float64)
-    X /= np.linalg.norm(X, axis=1, keepdims=True)
+    norms = np.linalg.norm(X, axis=1)
+    X = X[norms > 0] / norms[norms > 0, None]   # no NaN centroid
+    if not len(X):
+        raise ValueError("ivf_centroids: every sampled vector is zero — "
+                         "a codebook needs at least one direction")
     C = X[:n_cells].copy()
     for _ in range(n_iters):
         assign = (X @ C.T).argmax(axis=1)
@@ -372,7 +377,8 @@ def ivf_assign(df: DataFrame, centroids, vec_col: str = "embedding",
     @pandas_udf("int")
     def nearest_cell(vecs: pd.Series) -> pd.Series:
         M = np.array(vecs.tolist(), dtype=np.float64)
-        M /= np.linalg.norm(M, axis=1, keepdims=True)
+        norms = np.linalg.norm(M, axis=1, keepdims=True)
+        M /= np.where(norms > 0, norms, 1.0)   # zero vectors stay zero
         return pd.Series((M @ C.T).argmax(axis=1).astype("int32"))
 
     return df.withColumn(cell_col, nearest_cell(F.col(vec_col)))
@@ -777,37 +783,20 @@ def dedup_embedding_blocked_checked(spark, sf_dir,
     ``scores_in_range`` (threshold ≤ cosine ≤ 1 + ε) booleans. The
     pair-set ≡ two-phase-exact-path equality stays pinned by its
     pytest."""
-    e = ld_vecs(spark, sf_dir)
+    from .dedup import exact_anchor_census
     from .scale import pin
+
+    e = ld_vecs(spark, sf_dir)
     pairs = pin(all_pairs_cosine_blocked(
-        e, threshold=threshold))          # 3 bounded consumers below
+        e, threshold=threshold))          # read twice by the census
     nz = e.filter(dot_expr("embedding", "embedding") > 0) \
           .select("vec_id", "embedding")
-    grp = nz.groupBy("embedding").agg(F.count(F.lit(1)).alias("c"))
-    n_exact = grp.agg(
-        F.coalesce(F.sum(F.expr("c * (c - 1) / 2").cast("long")),
-                   F.lit(0)).alias("n_exact_vec_pairs"))
-    va = nz.select(F.col("vec_id").alias("id1"),
-                   F.col("embedding").alias("ea"))
-    vb = nz.select(F.col("vec_id").alias("id2"),
-                   F.col("embedding").alias("eb"))
-    found_exact = (pairs.join(va, "id1").join(vb, "id2")
-                   .filter(F.col("ea") == F.col("eb"))
-                   .agg(F.count(F.lit(1)).alias("n_found_exact")))
-    stats = pairs.agg(
-        F.count(F.lit(1)).alias("n_found_total"),
-        F.max(((F.col("cosine") < threshold)
-               | (F.col("cosine") > 1.0 + 1e-9)).cast("int"))
-        .alias("any_oob"))
-    return (n_exact.crossJoin(F.broadcast(found_exact))
-            .crossJoin(F.broadcast(stats))
-            .select("n_exact_vec_pairs",
-                    (F.col("n_found_exact") == F.col("n_exact_vec_pairs"))
-                    .alias("all_exact_pairs_found"),
-                    (F.col("n_found_total") >= F.col("n_exact_vec_pairs"))
-                    .alias("found_ge_exact"),
-                    (F.coalesce("any_oob", F.lit(0)) == 0)
-                    .alias("scores_in_range")))
+    oob = (F.col("cosine") < threshold) | (F.col("cosine") > 1.0 + 1e-9)
+    return exact_anchor_census(
+        nz, "embedding", pairs, id_col="vec_id",
+        names=("n_exact_vec_pairs", "found_ge_exact"),
+        extra_aggs=((F.coalesce(F.max(oob.cast("int")), F.lit(0)) == 0)
+                    .alias("scores_in_range"),))
 
 
 ORACLE_EMBEDDING_BLOCKED_CHECKED = """

@@ -55,3 +55,28 @@ def test_assess_empty_fails(tmp_path, capsys):
     p = tmp_path / "empty.sql"
     p.write_text("-- nothing here")
     assert main(["assess", str(p)]) == 1
+
+
+@pytest.mark.parametrize("ddl, warning", [
+    ("CREATE TABLE T ();", "Table T has no parsed columns"),
+    ("CREATE TABLE T (A INT, A INT);", "Duplicate column A in table T"),
+])
+def test_convert_prints_parser_warnings(tmp_path, capsys, ddl, warning):
+    from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark.convert import (
+        IcebergDdlGenerator,
+    )
+
+    result = IcebergDdlGenerator().convert(ddl)
+    assert result.warnings == [warning]
+    p = tmp_path / "bad.sql"
+    p.write_text(ddl)
+    assert main(["convert", str(p)]) == 0
+    captured = capsys.readouterr()
+    assert captured.err.splitlines() == [f"warning: {warning}"]
+    # the DDL text is the conversion's, warning or not
+    assert captured.out == result.iceberg_ddl + "\n"
+
+
+def test_convert_clean_ddl_prints_no_warning(ddl_file, capsys):
+    assert main(["convert", ddl_file]) == 0
+    assert "warning" not in capsys.readouterr().err

@@ -152,6 +152,29 @@ class TestEmbeddingCosine:
         n_used = tagged.select("cell").distinct().count()
         assert n_used >= 4  # codebook not collapsed on the fixture
 
+    def test_zero_vector_never_becomes_a_centroid(self, spark):
+        """A zero vector among the first ``n_cells`` sample rows has no
+        direction: the codebook stays finite and unit-norm with no
+        divide warning, and assignment still tags every row."""
+        import warnings
+
+        import numpy as np
+
+        e = spark.createDataFrame(
+            [(0, [1.0, 0.0, 0.0]), (1, [0.0, 0.0, 0.0]),
+             (2, [0.0, 1.0, 0.0]), (3, [0.0, 0.0, 1.0]),
+             (4, [1.0, 1.0, 0.0]), (5, [0.0, 1.0, 1.0])],
+            "vec_id long, embedding array<double>")
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", RuntimeWarning)
+            C = similarity.ivf_centroids(e, n_cells=3)
+        assert np.isfinite(C).all()
+        assert np.allclose(np.linalg.norm(C, axis=1), 1.0)
+        cells = {r.vec_id: r.cell
+                 for r in similarity.ivf_assign(e, C).collect()}
+        assert sorted(cells) == list(range(6))
+        assert all(0 <= c < 3 for c in cells.values())
+
     def test_blocked_all_pairs_matches_two_phase(self, spark, sf_dir):
         """The no-driver-collect blocked path must find exactly the pair
         set of the broadcast two-phase path (scores equal to BLAS noise)."""
@@ -577,6 +600,47 @@ class TestStopShinglePruning:
         assert set(pruned) <= set(exact)
         for p, lb in pruned.items():
             assert lb <= exact[p] + 1e-12
+
+    @pytest.mark.parametrize("threshold", [0.3, 0.5])
+    def test_unpruned_matches_pure_python_at_threshold(self, spark, tmp_path,
+                                                       threshold):
+        """With nothing pruned (max_df=1.0) the pruned entry and the
+        Jaccard pair graph are exact Jaccard at any threshold: their size
+        bound follows ``threshold``. Docs 0 and 1 (10 and 25 trigrams,
+        10 shared, J = 0.4) pair at 0.3 and not at 0.5."""
+        base = [f"w{i}" for i in range(12)]
+        texts = [" ".join(base),
+                 " ".join(base + [f"x{i}" for i in range(15)]),
+                 " ".join(base[:8] + [f"y{i}" for i in range(6)]),
+                 " ".join(base[4:] + [f"x{i}" for i in range(4)]),
+                 "too short"]
+        df = spark.createDataFrame(
+            [(i, t, "en", "s", len(t)) for i, t in enumerate(texts)],
+            "doc_id long, text string, lang string, source string, "
+            "n_chars long")
+        sf = str(tmp_path)
+        df.write.parquet(f"{sf}/documents.parquet")
+        sets = {}
+        for i, t in enumerate(texts):
+            w = t.split(" ")
+            sets[i] = {" ".join(w[j:j + 3]) for j in range(len(w) - 2)}
+        expected = {}
+        for a in sets:
+            for b in sets:
+                if a < b and sets[a] and sets[b]:
+                    j = (len(sets[a] & sets[b])
+                         / len(sets[a] | sets[b]))
+                    if j >= threshold:
+                        expected[(a, b)] = j
+        assert ((0, 1) in expected) == (threshold <= 0.4)
+        pruned = {(r.id1, r.id2): r.jaccard_lb
+                  for r in dedup.dedup_ngram_jaccard_pruned(
+                      spark, sf, threshold=threshold, max_df=1.0).collect()}
+        graph = {(r.id1, r.id2): r.jaccard
+                 for r in dedup._jaccard_pair_graph(
+                     dedup.doc_shingles(spark, sf), threshold).collect()}
+        assert pruned == expected
+        assert graph == expected
 
 
 class TestPillowSeam:

@@ -253,7 +253,8 @@ class TestContainment:
     def test_matches_pure_python_on_low_ids(self, spark, sf_dir):
         """Exact cross-check: every directional pair among doc_id < 60
         must match a brute-force python computation of |A∩B|/|A| over
-        distinct word trigrams."""
+        distinct word trigrams, at the default threshold and a lower
+        one (the size bound follows the threshold)."""
         import duckdb
 
         from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark.operators import (
@@ -267,18 +268,20 @@ class TestContainment:
             w = text.split(" ")
             sets[doc_id] = {" ".join(w[i:i + 3])
                             for i in range(len(w) - 2)}
-        expected = {}
-        for a in sets:
-            for b in sets:
-                if a == b or not sets[a]:
-                    continue
-                c = len(sets[a] & sets[b]) / len(sets[a])
-                if c >= 0.8:
-                    expected[(a, b)] = c
-        got = {(r.id1, r.id2): r.containment
-               for r in dedup.dedup_containment(spark, sf_dir).collect()
-               if r.id1 < 60 and r.id2 < 60}
-        assert got == expected and expected, "containment pairs diverge"
+        for threshold in (0.8, 0.6):
+            expected = {}
+            for a in sets:
+                for b in sets:
+                    if a == b or not sets[a]:
+                        continue
+                    c = len(sets[a] & sets[b]) / len(sets[a])
+                    if c >= threshold:
+                        expected[(a, b)] = c
+            got = {(r.id1, r.id2): r.containment
+                   for r in dedup.dedup_containment(
+                       spark, sf_dir, threshold=threshold).collect()
+                   if r.id1 < 60 and r.id2 < 60}
+            assert got == expected and expected, threshold
 
     def test_asymmetry_catches_quote_expansion(self, spark, tmp_path):
         """A short doc fully quoted inside a long one: containment 1.0 in

@@ -790,12 +790,15 @@ class TestDriverSideInventory:
         # below — a new site changes both.
     }
 
+    # dedup.py 9 -> 7, similarity.py 4 -> 2, multimodal.py 2 -> 0: the
+    # four exact-anchor gates' census crossJoins are one pair inside
+    # dedup.exact_anchor_census
     CROSSJOIN_BY_FILE = {
         "operators/analytics.py": 13, "operators/approx.py": 13,
         "operators/behavior.py": 2, "operators/corpus.py": 5,
-        "operators/dedup.py": 9, "operators/graph.py": 7,
-        "operators/multimodal.py": 2, "operators/relational.py": 1,
-        "operators/scale.py": 2, "operators/similarity.py": 4,
+        "operators/dedup.py": 7, "operators/graph.py": 7,
+        "operators/relational.py": 1,
+        "operators/scale.py": 2, "operators/similarity.py": 2,
         "operators/textstats.py": 1, "operators/timeseries.py": 1,
         "operators/traindata.py": 3, "operators/validate.py": 2,
         "registry.py": 3,
