@@ -184,6 +184,47 @@ def test_db2_inline_comment_inside_and_after_string():
     assert cols[1].raw_definition == "B CHAR(2) DEFAULT 'y'"
 
 
+def _one_column(definition: str):
+    parser = DB2DdlParser()
+    tables = parser.parse(f"CREATE TABLE S.T (\n  {definition},\n  Z INT\n)")
+    assert parser.errors == [] and parser.warnings == []
+    assert [c.name for c in tables[0].columns][1:] == ["Z"]
+    return tables[0].columns[0]
+
+
+def test_db2_lower_case_multi_word_type_with_irregular_spaces():
+    col = _one_column("name character   varying ( 10 ) not null")
+    assert (col.name, col.data_type, col.length, col.precision, col.scale,
+            col.nullable) == ("name", "CHARACTER VARYING", 10, 10, None, False)
+    assert col.mapping.source_type == "VARCHAR(10)"
+    col = _one_column("b char\tvarying\n(4)")
+    assert (col.data_type, col.length) == ("CHAR VARYING", 4)
+
+
+def test_db2_quoted_default_with_comma_next_to_not_null():
+    for definition in ("A VARCHAR(5) DEFAULT 'a,b' NOT NULL",
+                       "A VARCHAR(5) NOT NULL DEFAULT 'a,b'"):
+        col = _one_column(definition)
+        assert (col.default, col.nullable) == ("'a,b'", False)
+        assert col.raw_definition == definition
+
+
+def test_db2_for_bit_data_ccsid_and_fieldproc_on_one_column():
+    col = _one_column("K CHAR(16) FOR BIT DATA CCSID 1208 FIELDPROC ENC.SCRAMBLE")
+    assert (col.for_bit_data, col.ccsid, col.fieldproc) == (
+        True, "1208", "ENC.SCRAMBLE")
+    assert col.mapping.source_type == "CHAR(16) FOR BIT DATA"
+
+
+def test_db2_generated_by_default_after_a_default():
+    col = _one_column("N INTEGER DEFAULT 0 GENERATED BY DEFAULT AS IDENTITY")
+    assert (col.default, col.generated, col.nullable) == ("0", "BY DEFAULT",
+                                                          True)
+    col = _one_column("N INTEGER NOT NULL WITH DEFAULT GENERATED ALWAYS")
+    assert (col.default, col.generated, col.nullable) == ("GENERATED",
+                                                          "ALWAYS", False)
+
+
 def test_db2_table_without_columns_warns():
     for ddl, column_warnings in (
             ("CREATE TABLE S.T ()", []),

@@ -1,6 +1,11 @@
 """Table-driven tests for the DB2 → Iceberg type rules (mapper semantics,
 reference db2ice/mapper.py:87-449 incl. the SURVEY §4 quirks)."""
 
+import hashlib
+import itertools
+import json
+import os
+
 import pytest
 
 from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark.mapping import (
@@ -91,3 +96,62 @@ def test_mapping_is_pure_and_cacheable():
 
 def test_case_insensitive_and_trimmed():
     assert map_db2_type(" integer ").target_type == "INTEGER"
+
+
+# tests/golden/mapping_grid.json pins every TypeMapping field that
+# map_db2_type returns over a grid: each type token the DB2 parser's
+# ``_TYPE_RE`` recognises (plus one unknown type), each (length, precision,
+# scale) drawn from the edge values below, with and without FOR BIT DATA.
+# Per token it stores the sha256 of the whole grid's records, in grid
+# order, and the sorted distinct outputs, so a diff shows what moved.
+# To rewrite it, write _dump_grid(_grid_pins()) to the file.
+
+GOLDEN_GRID = os.path.join(os.path.dirname(__file__), "golden",
+                           "mapping_grid.json")
+
+GRID_TOKENS = (
+    "SMALLINT", "INTEGER", "INT", "BIGINT", "DECFLOAT", "DECIMAL", "DEC",
+    "NUMERIC", "REAL", "FLOAT", "DOUBLE", "CHARACTER VARYING", "CHAR VARYING",
+    "VARCHAR", "LONG VARCHAR", "CHARACTER", "CHAR", "CLOB", "GRAPHIC",
+    "VARGRAPHIC", "LONG VARGRAPHIC", "DBCLOB", "BINARY VARYING", "VARBINARY",
+    "BINARY", "BLOB", "DATE", "TIMESTAMP", "TIME", "XML", "ROWID", "BOOLEAN",
+    "WEIRDTYPE")
+GRID_VALUES = (None, 0, 1, 5, 6, 24, 25, 38, 39, MAX_VARCHAR_SIZE + 1,
+               MAX_LOB_SIZE + 1)
+
+
+def _grid_pins() -> dict:
+    pins = {}
+    for token in GRID_TOKENS:
+        for for_bit_data in (False, True):
+            rows = []
+            for length, precision, scale in itertools.product(
+                    GRID_VALUES, repeat=3):
+                m = map_db2_type(token, length, precision, scale, for_bit_data)
+                rows.append([m.source_type, m.target_type, m.status.value,
+                             m.ewi_code, m.ewi_message, m.notes])
+            text = json.dumps(rows)
+            key = f"{token} FOR BIT DATA" if for_bit_data else token
+            pins[key] = {
+                "sha256": hashlib.sha256(text.encode("utf-8")).hexdigest(),
+                "outputs": [json.loads(r) for r in
+                            sorted({json.dumps(r) for r in rows})],
+            }
+    return pins
+
+
+def _dump_grid(pins: dict) -> str:
+    """The pins as JSON with one output record per line."""
+    lines = ["{"]
+    for i, (key, pin) in enumerate(pins.items()):
+        outputs = ",\n".join(f"   {json.dumps(r)}" for r in pin["outputs"])
+        lines.append(f' {json.dumps(key)}: {{"sha256": "{pin["sha256"]}", '
+                     f'"outputs": [\n{outputs}\n ]}}'
+                     + ("," if i < len(pins) - 1 else ""))
+    return "\n".join(lines + ["}"]) + "\n"
+
+
+def test_mapping_grid_matches_golden():
+    with open(GOLDEN_GRID, encoding="utf-8") as f:
+        want = json.load(f)
+    assert _grid_pins() == want
