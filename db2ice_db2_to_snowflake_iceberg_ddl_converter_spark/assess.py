@@ -13,11 +13,17 @@ Two deliberate engineering differences from the reference:
   converter.py:260-267);
 - the same assessment is also available as DataFrame aggregations over the
   schema-catalog/issues DataFrames (see catalog.py) for catalog-scale inputs.
+
+Each table is walked once: every issue goes to the table, to its report
+bucket and to its component sub-score as it is made, and the feature
+counters are taken in the same walk. A table ``table_findings`` flags gets
+one WARNING issue per finding (EWI 0021) and no penalty, so the score
+agrees with ``catalog.assess_catalog``.
 """
 
 from __future__ import annotations
 
-from .ddl.db2_parser import DB2DdlParser
+from .ddl.db2_parser import DB2DdlParser, table_findings
 from .mapping import EWI
 from .model import (
     AssessmentReport,
@@ -57,6 +63,47 @@ _CONSTRAINT_CODES = {EWI["CHECK_CONSTRAINT"], EWI["FOREIGN_KEY"]}
 _SPECIAL_CODES = {EWI["FIELDPROC"], EWI["EDITPROC"], EWI["VALIDPROC"],
                   EWI["GENERATED_COL"]}
 
+_CRITICAL, _WARNING, _INFO = Severity.CRITICAL, Severity.WARNING, Severity.INFO
+_UNSUPPORTED = ConversionStatus.UNSUPPORTED
+_LOSSY = ConversionStatus.LOSSY
+_COMPATIBLE = ConversionStatus.COMPATIBLE
+
+# Points an issue takes off its component's 0-100 sub-score, by severity
+# (assessor.py:432-465); a sub-score never falls below 0.
+_POINTS = {
+    "datatype": {_INFO: 5, _WARNING: 15, _CRITICAL: 30},
+    "constraint": {_INFO: 5, _WARNING: 10, _CRITICAL: 10},
+    "partition": {_INFO: 10, _WARNING: 20, _CRITICAL: 20},
+    "special": {_INFO: 10, _WARNING: 25, _CRITICAL: 50},
+}
+
+_FEATURES = ("editproc", "validproc", "fieldproc", "partitioning",
+             "generated_columns", "foreign_keys", "check_constraints",
+             "xml_columns", "graphic_columns", "lob_columns")
+# The feature counters a column type adds to
+_TYPE_FEATURES = {
+    "XML": ("xml_columns",),
+    "GRAPHIC": ("graphic_columns",),
+    "VARGRAPHIC": ("graphic_columns",),
+    "LONG VARGRAPHIC": ("graphic_columns",),
+    "DBCLOB": ("graphic_columns", "lob_columns"),
+    "CLOB": ("lob_columns",),
+    "BLOB": ("lob_columns",),
+}
+
+
+def _component(code: str):
+    """The sub-score an issue code counts against, or None."""
+    if "DATATYPE" in code or code in _DATATYPE_CODES:
+        return "datatype"
+    if code in _CONSTRAINT_CODES:
+        return "constraint"
+    if code == EWI["PARTITION_COMPLEX"]:
+        return "partition"
+    if code in _SPECIAL_CODES:
+        return "special"
+    return None
+
 
 def score_to_level(score: float) -> ReadinessLevel:
     """Traffic-light bucketing (assessor.py:467-474)."""
@@ -88,38 +135,31 @@ class Assessor:
             ))
             return report
 
-        report.tables_total = len(tables)
-        component_sums = {"datatype": 0.0, "constraint": 0.0,
-                          "partition": 0.0, "special": 0.0}
-
+        n = report.tables_total = len(tables)
+        sums = dict.fromkeys(WEIGHTS, 0.0)
+        buckets = {_CRITICAL: report.critical_issues, _WARNING: report.warnings,
+                   _INFO: report.info_items}
+        features = dict.fromkeys(_FEATURES, 0)
         for table in tables:
-            ta = self.assess_table(table)
+            ta, lost = self._assess(table, buckets, features)
             report.table_assessments.append(ta)
             report.total_columns += ta.column_count
             report.total_constraints += ta.constraint_count
-            for dtype, n in ta.type_distribution.items():
+            for dtype, k in ta.type_distribution.items():
                 report.type_distribution[dtype] = (
-                    report.type_distribution.get(dtype, 0) + n)
-            for issue in ta.issues:
-                bucket = {
-                    Severity.CRITICAL: report.critical_issues,
-                    Severity.WARNING: report.warnings,
-                }.get(issue.severity, report.info_items)
-                bucket.append(issue)
+                    report.type_distribution.get(dtype, 0) + k)
+            # every issue that blocks auto-conversion is critical
             if ta.can_auto_convert:
                 report.tables_auto += 1
-            elif any(i.severity == Severity.CRITICAL for i in ta.issues):
-                report.tables_blocked += 1
             else:
-                report.tables_manual += 1
-            for key, val in self.component_scores(ta).items():
-                component_sums[key] += val
+                report.tables_blocked += 1
+            for key in sums:
+                sums[key] += max(0, 100.0 - lost[key])
 
-        n = len(tables)
-        report.datatype_score = component_sums["datatype"] / n
-        report.constraint_score = component_sums["constraint"] / n
-        report.partition_score = component_sums["partition"] / n
-        report.special_features_score = component_sums["special"] / n
+        report.datatype_score = sums["datatype"] / n
+        report.constraint_score = sums["constraint"] / n
+        report.partition_score = sums["partition"] / n
+        report.special_features_score = sums["special"] / n
         report.overall_score = (
             report.datatype_score * WEIGHTS["datatype"]
             + report.constraint_score * WEIGHTS["constraint"]
@@ -127,172 +167,138 @@ class Assessor:
             + report.special_features_score * WEIGHTS["special"]
         )
         report.overall_level = score_to_level(report.overall_score)
-        report.features_used = self.feature_usage(tables)
+        report.features_used = features
         return report
 
     def assess_table(self, table: TableDef) -> TableAssessment:
         """Penalty accumulation for one table (assessor.py:276-430)."""
-        ta = TableAssessment(
-            table_name=table.name,
-            schema=table.schema,
-            column_count=len(table.columns),
-            constraint_count=len(table.constraints),
-        )
+        return self._assess(table)[0]
+
+    @staticmethod
+    def _assess(table: TableDef, buckets: dict = None,
+                features: dict = None) -> tuple[TableAssessment, dict]:
+        """One walk over the table: its assessment and the points each
+        component sub-score lost. Each issue also goes to its report bucket
+        and the table's features are counted, when those are given."""
+        full_name = table.full_name
+        ta = TableAssessment(table.name, table.schema, len(table.columns),
+                             len(table.constraints))
+        issues, dist = ta.issues, ta.type_distribution
+        lost = dict.fromkeys(WEIGHTS, 0)
         penalties = 0
+
+        def add(code, severity, message, column=None, suggestion=None):
+            issue = Issue(code, severity, message, full_name, column, suggestion)
+            issues.append(issue)
+            if buckets is not None:
+                buckets[severity].append(issue)
+            component = _component(code)
+            if component:
+                lost[component] += _POINTS[component][severity]
+            if severity is _CRITICAL:
+                ta.can_auto_convert = False
+
+        # a table that cannot be created as parsed: reported, no penalty
+        for finding in table_findings(table):
+            add(EWI["MALFORMED_TABLE"], _WARNING, finding)
 
         for col in table.columns:
             base_type = col.data_type.split("(")[0].strip()
-            ta.type_distribution[base_type] = ta.type_distribution.get(base_type, 0) + 1
+            dist[base_type] = dist.get(base_type, 0) + 1
 
             mapping = col.mapping
-            if mapping.status == ConversionStatus.UNSUPPORTED:
+            status = mapping.status
+            if status is _UNSUPPORTED:
                 penalties += PENALTIES["unsupported_type"]
-                ta.can_auto_convert = False
-                ta.issues.append(Issue(
-                    code=mapping.ewi_code or "SSC-EWI-DB2ICE-0099",
-                    severity=Severity.CRITICAL,
-                    message=mapping.ewi_message or f"Unsupported type: {col.data_type}",
-                    table_name=table.full_name, column_name=col.name,
-                    suggestion="Manual conversion required - consider alternative "
-                               "data model"))
-            elif mapping.status == ConversionStatus.LOSSY:
+                add(mapping.ewi_code or "SSC-EWI-DB2ICE-0099", _CRITICAL,
+                    mapping.ewi_message or f"Unsupported type: {col.data_type}",
+                    col.name, "Manual conversion required - consider "
+                              "alternative data model")
+            elif status is _LOSSY:
                 penalties += PENALTIES["lossy_conversion"]
-                ta.issues.append(Issue(
-                    code=mapping.ewi_code or "SSC-EWI-DB2ICE-0098",
-                    severity=Severity.WARNING,
-                    message=mapping.ewi_message or f"Lossy conversion: {col.data_type}",
-                    table_name=table.full_name, column_name=col.name,
-                    suggestion="Review data to ensure no precision/data loss"))
-            elif mapping.status == ConversionStatus.COMPATIBLE and mapping.ewi_code:
+                add(mapping.ewi_code or "SSC-EWI-DB2ICE-0098", _WARNING,
+                    mapping.ewi_message or f"Lossy conversion: {col.data_type}",
+                    col.name, "Review data to ensure no precision/data loss")
+            elif status is _COMPATIBLE and mapping.ewi_code:
                 penalties += PENALTIES["compatible_type"]
-                ta.issues.append(Issue(
-                    code=mapping.ewi_code, severity=Severity.INFO,
-                    message=mapping.ewi_message,
-                    table_name=table.full_name, column_name=col.name))
+                add(mapping.ewi_code, _INFO, mapping.ewi_message, col.name)
 
             if col.fieldproc:
                 penalties += PENALTIES["fieldproc"]
-                ta.can_auto_convert = False
-                ta.issues.append(Issue(
-                    code=EWI["FIELDPROC"], severity=Severity.CRITICAL,
-                    message=f"FIELDPROC {col.fieldproc} - column data may be "
-                            "encrypted/transformed",
-                    table_name=table.full_name, column_name=col.name,
-                    suggestion="Review FIELDPROC logic - data transformation "
-                               "required before migration"))
+                add(EWI["FIELDPROC"], _CRITICAL,
+                    f"FIELDPROC {col.fieldproc} - column data may be "
+                    "encrypted/transformed", col.name,
+                    "Review FIELDPROC logic - data transformation required "
+                    "before migration")
 
             if col.generated:
                 penalties += PENALTIES["generated_column"]
-                ta.issues.append(Issue(
-                    code=EWI["GENERATED_COL"], severity=Severity.WARNING,
-                    message=f"GENERATED {col.generated} column - Iceberg does not "
-                            "support generated columns",
-                    table_name=table.full_name, column_name=col.name,
-                    suggestion="Remove GENERATED clause or compute values during ETL"))
+                add(EWI["GENERATED_COL"], _WARNING,
+                    f"GENERATED {col.generated} column - Iceberg does not "
+                    "support generated columns", col.name,
+                    "Remove GENERATED clause or compute values during ETL")
+
+            if features is not None:  # assessor.py:476-517
+                features["fieldproc"] += bool(col.fieldproc)
+                features["generated_columns"] += bool(col.generated)
+                for key in _TYPE_FEATURES.get(col.data_type.upper(), ()):
+                    features[key] += 1
 
         for constraint in table.constraints:
             if constraint.kind == "FOREIGN KEY":
                 penalties += PENALTIES["foreign_key"]
-                ta.issues.append(Issue(
-                    code=EWI["FOREIGN_KEY"], severity=Severity.INFO,
-                    message="Foreign key constraint - not enforced in Iceberg tables",
-                    table_name=table.full_name,
-                    suggestion="Foreign key will be documented but not enforced"))
+                add(EWI["FOREIGN_KEY"], _INFO,
+                    "Foreign key constraint - not enforced in Iceberg tables",
+                    suggestion="Foreign key will be documented but not "
+                               "enforced")
             elif constraint.kind == "CHECK":
                 penalties += PENALTIES["check_constraint"]
-                ta.issues.append(Issue(
-                    code=EWI["CHECK_CONSTRAINT"], severity=Severity.INFO,
-                    message="CHECK constraint - not enforced in Iceberg tables",
-                    table_name=table.full_name,
-                    suggestion="CHECK constraint will be documented but not enforced"))
+                add(EWI["CHECK_CONSTRAINT"], _INFO,
+                    "CHECK constraint - not enforced in Iceberg tables",
+                    suggestion="CHECK constraint will be documented but not "
+                               "enforced")
 
         if table.editproc:
             penalties += PENALTIES["editproc"]
-            ta.can_auto_convert = False
-            ta.issues.append(Issue(
-                code=EWI["EDITPROC"], severity=Severity.CRITICAL,
-                message=f"EDITPROC {table.editproc} - table uses edit procedure "
-                        "for data transformation",
-                table_name=table.full_name,
-                suggestion="Review EDITPROC logic - data may require transformation "
-                           "before migration"))
+            add(EWI["EDITPROC"], _CRITICAL,
+                f"EDITPROC {table.editproc} - table uses edit procedure for "
+                "data transformation",
+                suggestion="Review EDITPROC logic - data may require "
+                           "transformation before migration")
 
         if table.validproc:
             penalties += PENALTIES["validproc"]
-            ta.can_auto_convert = False
-            ta.issues.append(Issue(
-                code=EWI["VALIDPROC"], severity=Severity.CRITICAL,
-                message=f"VALIDPROC {table.validproc} - table uses validation "
-                        "procedure",
-                table_name=table.full_name,
-                suggestion="Implement validation logic in application layer or "
-                           "Snowflake procedures"))
+            add(EWI["VALIDPROC"], _CRITICAL,
+                f"VALIDPROC {table.validproc} - table uses validation "
+                "procedure",
+                suggestion="Implement validation logic in application layer "
+                           "or Snowflake procedures")
 
         if table.partition:
             if table.partition.kind == "HASH":
                 penalties += PENALTIES["complex_partition"]
-                ta.issues.append(Issue(
-                    code=EWI["PARTITION_COMPLEX"], severity=Severity.WARNING,
-                    message="HASH partitioning not directly supported - will be "
-                            "removed",
-                    table_name=table.full_name,
-                    suggestion="Iceberg uses automatic micro-partitioning"))
+                add(EWI["PARTITION_COMPLEX"], _WARNING,
+                    "HASH partitioning not directly supported - will be "
+                    "removed",
+                    suggestion="Iceberg uses automatic micro-partitioning")
             elif table.partition.kind == "RANGE":
-                ta.issues.append(Issue(
-                    code=EWI["PARTITION_COMPLEX"], severity=Severity.INFO,
-                    message="RANGE partitioning will be removed - Iceberg uses "
-                            "automatic partitioning",
-                    table_name=table.full_name,
-                    suggestion="Consider Iceberg partition transforms if needed"))
+                add(EWI["PARTITION_COMPLEX"], _INFO,
+                    "RANGE partitioning will be removed - Iceberg uses "
+                    "automatic partitioning",
+                    suggestion="Consider Iceberg partition transforms if "
+                               "needed")
 
-        ta.readiness_score = max(0, 100 - penalties)
-        ta.readiness_level = score_to_level(ta.readiness_score)
-        return ta
-
-    @staticmethod
-    def component_scores(ta: TableAssessment) -> dict:
-        """Per-category 0-100 sub-scores from issue codes (assessor.py:432-465)."""
-        scores = {"datatype": 100.0, "constraint": 100.0,
-                  "partition": 100.0, "special": 100.0}
-        for issue in ta.issues:
-            code, sev = issue.code, issue.severity
-            if "DATATYPE" in code or code in _DATATYPE_CODES:
-                hit = 5 if sev == Severity.INFO else 15 if sev == Severity.WARNING else 30
-                scores["datatype"] = max(0, scores["datatype"] - hit)
-            elif code in _CONSTRAINT_CODES:
-                hit = 5 if sev == Severity.INFO else 10
-                scores["constraint"] = max(0, scores["constraint"] - hit)
-            elif code == EWI["PARTITION_COMPLEX"]:
-                hit = 10 if sev == Severity.INFO else 20
-                scores["partition"] = max(0, scores["partition"] - hit)
-            elif code in _SPECIAL_CODES:
-                hit = 10 if sev == Severity.INFO else 25 if sev == Severity.WARNING else 50
-                scores["special"] = max(0, scores["special"] - hit)
-        return scores
-
-    @staticmethod
-    def feature_usage(tables: list[TableDef]) -> dict:
-        """Feature counters across the corpus (assessor.py:476-517)."""
-        features = {k: 0 for k in (
-            "editproc", "validproc", "fieldproc", "partitioning",
-            "generated_columns", "foreign_keys", "check_constraints",
-            "xml_columns", "graphic_columns", "lob_columns")}
-        for table in tables:
+        if features is not None:
             features["editproc"] += bool(table.editproc)
             features["validproc"] += bool(table.validproc)
             features["partitioning"] += bool(table.partition)
-            for col in table.columns:
-                t = col.data_type.upper()
-                features["fieldproc"] += bool(col.fieldproc)
-                features["generated_columns"] += bool(col.generated)
-                features["xml_columns"] += t == "XML"
-                features["graphic_columns"] += t in (
-                    "GRAPHIC", "VARGRAPHIC", "DBCLOB", "LONG VARGRAPHIC")
-                features["lob_columns"] += t in ("CLOB", "BLOB", "DBCLOB")
             for c in table.constraints:
                 features["foreign_keys"] += c.kind == "FOREIGN KEY"
                 features["check_constraints"] += c.kind == "CHECK"
-        return features
+
+        ta.readiness_score = max(0, 100 - penalties)
+        ta.readiness_level = score_to_level(ta.readiness_score)
+        return ta, lost
 
 
 def assess_ddl(ddl: str) -> dict:

@@ -28,7 +28,7 @@ import re
 from typing import Optional
 
 from .assess import Assessor, score_to_level
-from .ddl.db2_parser import DB2DdlParser
+from .ddl.db2_parser import DB2DdlParser, table_findings
 from .ddl.snowflake_parser import SnowflakeDdlParser
 from .mapping import (
     EWI,
@@ -61,6 +61,9 @@ _RESERVED = {"ORDER", "GROUP", "SELECT", "FROM", "WHERE", "TABLE", "INDEX",
 
 _PLAIN_IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
+# Mapping statuses whose EWI is marked inline in the DDL text
+_MARKED = (ConversionStatus.UNSUPPORTED, ConversionStatus.LOSSY)
+
 
 def format_identifier(identifier: str) -> str:
     """Quote reserved/special identifiers, upper-case the rest
@@ -83,7 +86,10 @@ def _ewi(code: str, message: str) -> str:
 
 def _column_line(parts: list[str], markers: list[str]) -> str:
     """Space-joined column definition, then one indented line per marker."""
-    return "\n".join([" ".join(parts)] + [f"        {m}" for m in markers])
+    line = " ".join(parts)
+    if not markers:
+        return line
+    return "\n".join([line] + [f"        {m}" for m in markers])
 
 
 def _column_list(lines: list[str], pk: Optional[list]) -> list[str]:
@@ -143,9 +149,15 @@ class IcebergDdlGenerator:
         return result
 
     def table_ddl(self, table: TableDef) -> tuple[str, int]:
-        """One table → (DDL text, EWI marker count) (converter.py:103-183)."""
+        """One table → (DDL text, EWI marker count) (converter.py:103-183).
+
+        A table that cannot be created as parsed (``table_findings``) gets
+        one EWI 0021 marker per finding right above its CREATE line.
+        """
+        markers = [_ewi(EWI["MALFORMED_TABLE"], finding)
+                   for finding in table_findings(table)]
         if table.volatile or table.global_temporary:
-            return self._temp_table_ddl(table)
+            return self._temp_table_ddl(table, markers)
 
         body, ewi_count = self._column_block(table)
         lines = [f"-- Converted from DB2: {table.full_name}"]
@@ -153,7 +165,7 @@ class IcebergDdlGenerator:
             lines.append(f"-- WARNING: Original table had EDITPROC: {table.editproc}")
         if table.validproc:
             lines.append(f"-- WARNING: Original table had VALIDPROC: {table.validproc}")
-        lines += [f"CREATE OR REPLACE ICEBERG TABLE "
+        lines += [*markers, f"CREATE OR REPLACE ICEBERG TABLE "
                   f"{format_identifier(table.full_name)} (", *body, ")"]
 
         if table.partition and table.partition.columns:
@@ -168,9 +180,10 @@ class IcebergDdlGenerator:
         if comments:
             lines += ["", *comments]
         lines.append(";")
-        return "\n".join(lines), ewi_count
+        return "\n".join(lines), ewi_count + len(markers)
 
-    def _temp_table_ddl(self, table: TableDef) -> tuple[str, int]:
+    def _temp_table_ddl(self, table: TableDef,
+                        markers: list[str]) -> tuple[str, int]:
         """VOLATILE / GTT → Snowflake TEMPORARY, non-Iceberg
         (converter.py:185-242)."""
         origin = "VOLATILE" if table.volatile else "GLOBAL TEMPORARY"
@@ -180,6 +193,7 @@ class IcebergDdlGenerator:
             "-- Kept as Snowflake TEMPORARY (Iceberg doesn't support "
             "temporary tables)",
             "-- Table will remain session-scoped as originally intended",
+            *markers,
             f"CREATE OR REPLACE TEMPORARY TABLE "
             f"{format_identifier(table.full_name)} (",
             *body,
@@ -189,7 +203,7 @@ class IcebergDdlGenerator:
                          f"{origin} table kept as Snowflake TEMPORARY - Iceberg "
                          "doesn't support temporary tables"),
         ]
-        return "\n".join(lines), ewi_count + 1
+        return "\n".join(lines), ewi_count + len(markers) + 1
 
     def _column_block(self, table: TableDef) -> tuple[list[str], int]:
         """Column lines + trailing PK line, and their EWI marker count."""
@@ -209,8 +223,7 @@ class IcebergDdlGenerator:
         mapping = col.mapping
         parts = [f"    {format_identifier(col.name)}", mapping.target_type]
         markers: list[str] = []
-        if mapping.ewi_code and mapping.status in (
-                ConversionStatus.UNSUPPORTED, ConversionStatus.LOSSY):
+        if mapping.ewi_code and mapping.status in _MARKED:
             markers.append(_ewi(mapping.ewi_code, mapping.ewi_message))
         if not col.nullable:
             parts.append("NOT NULL")

@@ -12,9 +12,19 @@ The parse is linear in script size. Pass 1 classifies each statement once:
 CREATE/DECLARE statements become tables and ALTER/DISTRIBUTE bodies are kept,
 in script order, for pass 2, which finds ALTER targets through an index of
 upper-cased table names built once per parse (first declared match wins, as
-in the reference's left join). The scanners jump between delimiters with
-``re.finditer`` instead of walking characters; the quote rule is unchanged:
-a ``'`` toggles the string state unless the character before it is ``\\``.
+in the reference's left join). The scanners blank each string literal with
+one regex (the quote rule: a ``'`` toggles the string state unless the
+character before it is ``\\``) and then cut the text with ``str.split`` and
+paren counts per piece, instead of visiting each delimiter, to find the
+statements, a column block's closing paren and its top-level commas. Each
+column definition is read
+with one compiled pattern (name, type, length, scale); the DEFAULT, CCSID
+and FIELDPROC searches run only when one of those words appears. A
+``ColumnDef`` resolves its type mapping when it is built.
+
+``table_findings`` is the one rule for a table that cannot be created as
+parsed (no columns, or a repeated column name): the parser warns with it,
+the converter marks it with EWI 0021 and the assessment reports it.
 
 Parsing happens on the driver: DDL inputs are KB-scale text, so a distributed
 parse would be the wrong altitude. For bulk catalogs, ``parse_many`` accepts an
@@ -70,11 +80,19 @@ _TYPE_RE = re.compile(
 # space (matched against the upper-cased part).
 _CONSTRAINT_RE = re.compile(r'(?:^| )(?:PRIMARY KEY|FOREIGN KEY|UNIQUE|CHECK|CONSTRAINT)')
 
-_NAME_RE = re.compile(r'(["\w]+)')
-_SPACES_RE = re.compile(r"\s+")
+# The head of one column definition: its name and, after optional spaces, a
+# type token with its optional (length[, scale]). Groups: name, type,
+# length, scale.
+_COLUMN_RE = re.compile(r'(["\w]++)\s*(?>' + _TYPE_RE.pattern + ')',
+                        re.IGNORECASE)
+# The column options that carry a value; a definition without any of these
+# words skips their searches.
+_OPTION_RE = re.compile(r"DEFAULT|CCSID|FIELDPROC", re.IGNORECASE)
 _DEFAULT_RE = re.compile(r"DEFAULT\s+(\S+|'[^']*')", re.IGNORECASE)
 _COL_CCSID_RE = re.compile(r"CCSID\s+(\w+)", re.IGNORECASE)
 _FIELDPROC_RE = re.compile(r"FIELDPROC\s+(\S+)", re.IGNORECASE)
+_NAME_RE = re.compile(r'(["\w]+)')
+_SPACES_RE = re.compile(r"\s+")
 
 _CONSTRAINT_NAME_RE = re.compile(r'CONSTRAINT\s+(["\w]+)', re.IGNORECASE)
 _PK_RE = re.compile(r'PRIMARY\s+KEY\s*\(([^)]+)\)', re.IGNORECASE)
@@ -99,11 +117,9 @@ _ALTER_PK_RE = re.compile(
     r'ADD\s+CONSTRAINT\s+(["\w]+)\s+PRIMARY\s+KEY\s*\(([^)]+)\)', re.IGNORECASE)
 _DISTRIBUTE_RE = re.compile(r'DISTRIBUTE\s+BY\s+HASH\s*\(([^)]+)\)', re.IGNORECASE)
 
-# Delimiter sets of the scanners below.
-_STATEMENT_DELIMS = re.compile(r"[;@()']")
-_PAREN_DELIMS = re.compile(r"[()']")
-_PART_DELIMS = re.compile(r"[(),']")
-_COMMENT_DELIMS = re.compile(r"'|--")
+# A string literal runs from a ' to the next ' or to the end of the text; a
+# ' preceded by \ neither opens nor closes one (parser.py:292-331).
+_STRING_RE = re.compile(r"(?<!\\)'(?:[^']|(?<=\\)')*(?:(?<!\\)'|\Z)")
 
 
 def _unquote(ident: Optional[str]) -> str:
@@ -116,40 +132,41 @@ def _idents(csv: str) -> list[str]:
     return [_unquote(x.strip()) for x in csv.split(",")]
 
 
-def _code_delims(s: str, delims: re.Pattern, pos: int = 0):
-    """Yield ``(delimiter, index)`` for each match of ``delims`` (which must
-    include ``'``) outside string literals. A ``'`` toggles the string state
-    unless the character before it is ``\\`` (parser.py:292-331)."""
-    in_str = False
-    for m in delims.finditer(s, pos):
-        ch, i = m.group(), m.start()
-        if ch == "'":
-            if i == 0 or s[i - 1] != "\\":
-                in_str = not in_str
-        elif not in_str:
-            yield ch, i
+def _mask(s: str) -> str:
+    """``s`` with each string literal blanked to the same length, so that
+    the scanners below find only the delimiters outside strings."""
+    if "'" not in s:
+        return s
+    return _STRING_RE.sub(lambda m: "_" * (m.end() - m.start()), s)
+
+
+def _split_top_level(s: str, seps: str = ",") -> list[str]:
+    """Split on any of ``seps`` at paren-depth 0 outside strings
+    (parser.py:292-331, 472-498); the tail after the last cut is kept when
+    it is not empty."""
+    masked = _mask(s)
+    for sep in seps[1:]:
+        masked = masked.replace(sep, seps[0])
+    pieces = masked.split(seps[0])
+    parts: list[str] = []
+    start = end = depth = 0
+    for piece in pieces[:-1]:
+        end += len(piece)
+        depth += piece.count("(") - piece.count(")")
+        if depth == 0:
+            parts.append(s[start:end])
+            start = end + 1
+        end += 1
+    if start < len(s):
+        parts.append(s[start:])
+    return parts
 
 
 def _scan_statements(ddl: str) -> list[str]:
     """Split on ';' / '@' terminators, ignoring those inside strings/parens
     (parser.py:292-331)."""
-    out: list[str] = []
-    start = 0
-    depth = 0
-    for ch, i in _code_delims(ddl, _STATEMENT_DELIMS):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0:
-            stmt = ddl[start:i].strip()
-            if stmt:
-                out.append(stmt)
-            start = i + 1
-    tail = ddl[start:].strip()
-    if tail:
-        out.append(tail)
-    return out
+    return [stmt for stmt in map(str.strip, _split_top_level(ddl, ";@"))
+            if stmt]
 
 
 def _drop_leading_comments(stmt: str) -> str:
@@ -174,41 +191,22 @@ def _drop_inline_comments(s: str) -> str:
 
 
 def _cut_comment(line: str) -> str:
-    for _, i in _code_delims(line, _COMMENT_DELIMS):
-        return line[:i]
-    return line
+    at = _mask(line).find("--")
+    return line if at < 0 else line[:at]
 
 
 def _closing_paren(s: str, start: int) -> int:
     """Index of the ')' matching the '(' at ``start``; -1 if unbalanced
     (parser.py:412-431)."""
+    end = start
     depth = 0
-    for ch, i in _code_delims(s, _PAREN_DELIMS, start):
-        if ch == "(":
-            depth += 1
-        else:
-            depth -= 1
-            if depth == 0:
-                return i
+    for piece in _mask(s[start:]).split(")")[:-1]:
+        end += len(piece)
+        depth += piece.count("(") - 1
+        if depth == 0:
+            return end
+        end += 1
     return -1
-
-
-def _split_top_level(s: str) -> list[str]:
-    """Split on commas at paren-depth 0 outside strings (parser.py:472-498)."""
-    parts: list[str] = []
-    start = 0
-    depth = 0
-    for ch, i in _code_delims(s, _PART_DELIMS):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0:
-            parts.append(s[start:i])
-            start = i + 1
-    if start < len(s):
-        parts.append(s[start:])
-    return parts
 
 
 class DB2DdlParser:
@@ -218,10 +216,9 @@ class DB2DdlParser:
     reference's documented rule (mapper.py:279-287, README); see
     ``_TYPE_RE`` for the reference tokenizer bug this departs from.
 
-    A table with no parsed columns, and each repeated column name
-    (compared case-insensitively, as ``migrate_table`` resolves source
-    columns), adds one entry to ``warnings``; the table is kept as
-    parsed.
+    Each ``table_findings`` message of a table (no parsed columns, or a
+    column name repeated case-insensitively) adds one entry to
+    ``warnings``; the table is kept as parsed.
     """
 
     def __init__(self) -> None:
@@ -316,12 +313,11 @@ class DB2DdlParser:
         return table
 
     def _fill_columns(self, block: str, table: TableDef) -> None:
-        block = _drop_inline_comments(block)
-        for part in _split_top_level(block):
+        for part in _split_top_level(_drop_inline_comments(block)):
             part = part.strip()
             if not part:
                 continue
-            if self._looks_like_constraint(part):
+            if _CONSTRAINT_RE.search(part.upper()):
                 c = self._constraint_from(part)
                 if c:
                     table.constraints.append(c)
@@ -329,65 +325,46 @@ class DB2DdlParser:
                 col = self._column_from(part)
                 if col:
                     table.columns.append(col)
-        if not table.columns:
-            self.warnings.append(
-                f"Table {table.full_name} has no parsed columns")
-        seen: set[str] = set()
-        for col in table.columns:
-            key = col.name.lower()
-            if key in seen:
-                self.warnings.append(
-                    f"Duplicate column {col.name} in table {table.full_name}")
-            seen.add(key)
-
-    @staticmethod
-    def _looks_like_constraint(part: str) -> bool:
-        return _CONSTRAINT_RE.search(part.upper().strip()) is not None
+        self.warnings += table_findings(table)
 
     def _column_from(self, col_def: str) -> Optional[ColumnDef]:
-        col_def = col_def.strip()
-        if not col_def:
+        m = _COLUMN_RE.match(col_def)
+        if m is None:
+            name_m = _NAME_RE.match(col_def)
+            if not name_m:
+                self.warnings.append(
+                    f"Could not parse column name: {col_def[:50]}")
+            else:
+                self.warnings.append("Could not parse data type for column "
+                                     f"{_unquote(name_m.group(1))}")
             return None
-        name_m = _NAME_RE.match(col_def)
-        if not name_m:
-            self.warnings.append(f"Could not parse column name: {col_def[:50]}")
-            return None
-        name = _unquote(name_m.group(1))
-        rest = col_def[name_m.end():].strip()
-
-        type_m = _TYPE_RE.match(rest)
-        if not type_m:
-            self.warnings.append(f"Could not parse data type for column {name}")
-            return None
-        data_type = type_m.group(1).upper()
+        name, data_type, length, scale = m.groups()
+        data_type = data_type.upper()
         if not data_type.isalpha():  # a multi-word type: one space per gap
             data_type = _SPACES_RE.sub(" ", data_type)
-        col = ColumnDef(name=name, data_type=data_type, raw_definition=col_def)
-        if type_m.group(2):
-            col.length = int(type_m.group(2))
-            col.precision = col.length
-        if type_m.group(3):
-            col.scale = int(type_m.group(3))
-        rest = rest[type_m.end():].strip()
+        if length:
+            length = int(length)
+        if scale:
+            scale = int(scale)
+        rest = col_def[m.end():]
         upper = rest.upper()
-
-        col.nullable = "NOT NULL" not in upper
-        if "DEFAULT" in upper:
-            dflt = _DEFAULT_RE.search(rest)
-            if dflt:
-                col.default = dflt.group(1)
-        if "GENERATED ALWAYS" in upper:
-            col.generated = "ALWAYS"
-        elif "GENERATED BY DEFAULT" in upper:
-            col.generated = "BY DEFAULT"
-        col.for_bit_data = "FOR BIT DATA" in upper
-        ccsid = _COL_CCSID_RE.search(rest)
-        if ccsid:
-            col.ccsid = ccsid.group(1)
-        fproc = _FIELDPROC_RE.search(rest)
-        if fproc:
-            col.fieldproc = fproc.group(1)
-        return col
+        default = ccsid = fieldproc = None
+        if _OPTION_RE.search(rest):
+            if "DEFAULT" in upper:
+                default = _DEFAULT_RE.search(rest)
+                default = default and default.group(1)
+            ccsid = _COL_CCSID_RE.search(rest)
+            ccsid = ccsid and ccsid.group(1)
+            fieldproc = _FIELDPROC_RE.search(rest)
+            fieldproc = fieldproc and fieldproc.group(1)
+        generated = ("ALWAYS" if "GENERATED ALWAYS" in upper else
+                     "BY DEFAULT" if "GENERATED BY DEFAULT" in upper else None)
+        # a name holds no ' or `, so stripping '"' unquotes it; the
+        # arguments follow ColumnDef's field order, length twice as the
+        # precision too
+        return ColumnDef(name.strip('"'), data_type, length, length, scale,
+                         "NOT NULL" not in upper, default, generated, ccsid,
+                         "FOR BIT DATA" in upper, fieldproc, col_def)
 
     def _constraint_from(self, text: str) -> Optional[ConstraintDef]:
         upper = text.upper()
@@ -490,6 +467,26 @@ class DB2DdlParser:
         m = _DISTRIBUTE_RE.search(stmt)
         if m and tables:
             tables[-1].distribute_by_hash = _unquote(m.group(1).strip())
+
+
+def table_findings(table: TableDef) -> list[str]:
+    """One message per reason the table cannot be created as parsed: it has
+    no parsed columns, or a column name repeats (compared
+    case-insensitively, as ``migrate_table`` resolves source columns). The
+    parser warns with these messages, the converter marks each with EWI
+    0021 and the assessment reports each as a warning."""
+    if not table.columns:
+        return [f"Table {table.full_name} has no parsed columns"]
+    if len({col.name.lower() for col in table.columns}) == len(table.columns):
+        return []
+    seen: set[str] = set()
+    out = []
+    for col in table.columns:
+        key = col.name.lower()
+        if key in seen:
+            out.append(f"Duplicate column {col.name} in table {table.full_name}")
+        seen.add(key)
+    return out
 
 
 def _partition_from(m: re.Match) -> PartitionSpec:

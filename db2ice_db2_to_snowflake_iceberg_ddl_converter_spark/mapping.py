@@ -9,18 +9,19 @@ defaults precision 0 while TIMESTAMP defaults 6, FLOAT(p>24) → DOUBLE.
 
 Design differs from the reference on purpose: instead of one method per type,
 the rules live in a dispatch table of small pure functions. Each parsed column
-is mapped once, through ``ColumnDef.mapping`` (model.py), and that one
+is mapped once, when its ``ColumnDef`` is built (model.py), and that one
 ``TypeMapping`` drives (a) the readiness assessment, (b) DDL text generation,
 (c) StructType construction and (d) the per-column ``cast`` expressions of the
 Spark migration job (the reference re-runs its mapper per column per phase).
-This module imports nothing from the package, so ``model.py`` can import it.
+``TypeMapping`` is an immutable named tuple, cheap to build; the plain DIRECT
+renames return one shared instance per type. This module imports nothing
+from the package, so ``model.py`` can import it.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
 from enum import Enum
-from typing import Callable, Optional
+from typing import Callable, NamedTuple, Optional
 
 
 class ConversionStatus(Enum):
@@ -32,9 +33,10 @@ class ConversionStatus(Enum):
     UNSUPPORTED = "unsupported"
 
 
-@dataclass(frozen=True)
-class TypeMapping:
-    """Outcome of mapping one source column type (mapper.py:18-26)."""
+class TypeMapping(NamedTuple):
+    """Outcome of mapping one source column type (mapper.py:18-26).
+
+    Immutable, so one instance can serve every column of a constant rule."""
 
     source_type: str
     target_type: str
@@ -69,6 +71,7 @@ EWI = {
     "CCSID_ENCODING": _PREFIX + "0018",
     "LONG_VARCHAR": _PREFIX + "0019",
     "BINARY_CONVERT": _PREFIX + "0020",
+    "MALFORMED_TABLE": _PREFIX + "0021",
     "UNKNOWN_TYPE": _PREFIX + "0099",
 }
 
@@ -77,36 +80,39 @@ MAX_VARCHAR_SIZE = 16 * 1024 * 1024
 MAX_BINARY_SIZE = 8 * 1024 * 1024
 MAX_LOB_SIZE = 128 * 1024 * 1024
 
-# Plain renames with DIRECT status (mapper.py:43-52)
-_DIRECT = {
-    "SMALLINT": "INTEGER",  # Iceberg has no SMALLINT — reference widens
-    "INTEGER": "INTEGER",
-    "INT": "INTEGER",
-    "BIGINT": "BIGINT",
-    "REAL": "FLOAT",
-    "DOUBLE": "DOUBLE",
-    "DATE": "DATE",
-    "BOOLEAN": "BOOLEAN",
-}
+# Plain renames with DIRECT status (mapper.py:43-52), built once
+_DIRECT = {src: TypeMapping(src, target, ConversionStatus.DIRECT)
+           for src, target in (
+               ("SMALLINT", "INTEGER"),  # Iceberg has no SMALLINT — widened
+               ("INTEGER", "INTEGER"),
+               ("INT", "INTEGER"),
+               ("BIGINT", "BIGINT"),
+               ("REAL", "FLOAT"),
+               ("DOUBLE", "DOUBLE"),
+               ("DATE", "DATE"),
+               ("BOOLEAN", "BOOLEAN"))}
 
 
 def _src(base: str, length: Optional[int]) -> str:
     return f"{base}({length})" if length else base
 
 
+_DIRECT_S = ConversionStatus.DIRECT
+_COMPATIBLE_S = ConversionStatus.COMPATIBLE
+_LOSSY_S = ConversionStatus.LOSSY
+
+
 def _direct(src: str, target: str, notes: str = None) -> TypeMapping:
-    return TypeMapping(src, target, ConversionStatus.DIRECT, notes=notes)
+    return TypeMapping(src, target, _DIRECT_S, None, None, notes)
 
 
 def _compat(src: str, target: str, code: str = None, msg: str = None,
             notes: str = None) -> TypeMapping:
-    return TypeMapping(src, target, ConversionStatus.COMPATIBLE,
-                       ewi_code=code, ewi_message=msg, notes=notes)
+    return TypeMapping(src, target, _COMPATIBLE_S, code, msg, notes)
 
 
 def _lossy(src: str, target: str, code: str, msg: str) -> TypeMapping:
-    return TypeMapping(src, target, ConversionStatus.LOSSY,
-                       ewi_code=code, ewi_message=msg)
+    return TypeMapping(src, target, _LOSSY_S, code, msg, None)
 
 
 # --- per-family rules (each mirrors one _map_* in mapper.py:187-449) --------
@@ -292,8 +298,8 @@ def map_db2_type(db2_type: str, length: Optional[int] = None,
                  for_bit_data: bool = False) -> TypeMapping:
     """Map one DB2 column type to its Iceberg target (mapper.py:87-185).
 
-    Pure function. Parsed columns reach it through ``ColumnDef.mapping``,
-    which calls it once per column and keeps the result.
+    Pure function. Each parsed column calls it once, when it is built, and
+    keeps the result as ``ColumnDef.mapping``.
     """
     t = db2_type.upper().strip()
 
@@ -303,8 +309,9 @@ def map_db2_type(db2_type: str, length: Optional[int] = None,
         return _compat(src, "BINARY", EWI["FOR_BIT_DATA"],
                        "FOR BIT DATA converted to BINARY type")
 
-    if t in _DIRECT:
-        return _direct(t, _DIRECT[t])
+    direct = _DIRECT.get(t)
+    if direct is not None:
+        return direct
 
     rule = _RULES.get(t)
     if rule is not None:

@@ -6,14 +6,15 @@ db2ice/assessor.py:29-149). These objects live on the driver (they are
 KB-scale schema artifacts); the data plane consumes them as StructTypes /
 cast plans / DataFrame rows (see catalog.py). ``ConversionStatus`` and
 ``TypeMapping`` are defined next to the rules in mapping.py and re-exported
-here.
+here. A ``ColumnDef`` maps its type once, when it is built, and keeps the
+result as the plain attribute ``mapping``; ``Issue`` uses slots, since an
+assessment makes one per finding.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 from enum import Enum
-from functools import cached_property
 from typing import Optional
 import json
 
@@ -38,7 +39,14 @@ class Severity(Enum):
 
 @dataclass
 class ColumnDef:
-    """One parsed DB2 column (parser.py:57-72)."""
+    """One parsed DB2 column (parser.py:57-72).
+
+    ``mapping`` is this column's Iceberg ``TypeMapping``, resolved once when
+    the column is built and shared by the assessment, the DDL text, the
+    StructType and the cast plan. It is a plain attribute, not a field, so
+    ``asdict``, ``==`` and ``repr`` see the parsed column only; build a new
+    column (or ``dataclasses.replace``) to change the type fields.
+    """
 
     name: str
     data_type: str
@@ -53,14 +61,10 @@ class ColumnDef:
     fieldproc: Optional[str] = None
     raw_definition: str = ""
 
-    @cached_property
-    def mapping(self) -> TypeMapping:
-        """This column's Iceberg mapping, resolved on first use and shared by
-        the assessment, the DDL text, the StructType and the cast plan.
-        It is not recomputed, so the type fields must be final before the
-        first read (the parser sets them all before it returns)."""
-        return map_db2_type(self.data_type, self.length, self.precision,
-                            self.scale, self.for_bit_data)
+    def __post_init__(self) -> None:
+        self.mapping: TypeMapping = map_db2_type(
+            self.data_type, self.length, self.precision, self.scale,
+            self.for_bit_data)
 
 
 @dataclass
@@ -153,7 +157,7 @@ class SnowflakeTableDef:
         return ".".join(parts)
 
 
-@dataclass
+@dataclass(slots=True)
 class Issue:
     """One assessment finding (assessor.py:29-37)."""
 

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import zlib
 from functools import lru_cache
+from itertools import repeat
 
 from .model import AssessmentReport, ReadinessLevel
 
@@ -102,9 +103,14 @@ class MiniPdf:
     replaced with the total page count at output time.
 
     The setters look up the colour (``rg``) and font (``Tf``) operators of
-    the new state, formatted once per distinct state, and ``cell`` emits
-    them as stored, so a cell formats only its positions. Every cell still
+    the new state, formatted once per distinct state. A text cell writes one
+    template: a head holding ``BT``, the colour and font operators and the
+    start of the text matrix, built once after each state change, then its
+    positions and text. A left-aligned cell at the left margin reuses its
+    x formatted once, so it formats one float, its y. Every cell still
     writes its own colour and font operators: the output is unchanged.
+    ``line(h, txt)`` is ``cell(0, h, txt, ln=True)``, the report's usual
+    cell.
     """
 
     def __init__(self) -> None:
@@ -120,7 +126,11 @@ class MiniPdf:
         self._size = 10.0
         self._font_op = "/F1 10.00 Tf"
         self._text_op = self._fill_op = _rg(0, 0, 0)
+        self._text_head = ""   # BT + colour + font + matrix start; "" = stale
         self._in_footer = False
+        # a left-aligned text cell at the left margin starts at this x
+        self._margin_x = self.l_margin
+        self._margin_tx = f"{(self._margin_x + 1.0) * _K:.2f}"
 
     # -- state ------------------------------------------------------------
 
@@ -135,11 +145,13 @@ class MiniPdf:
         if size is not None:
             self._size = float(size)
         self._style, self._font_op = _font_state(style, self._size)
+        self._text_head = ""
 
     def set_text_color(self, r: int, g: int = None, b: int = None) -> None:  # type: ignore[assignment]
         if g is None:
             g = b = r
         self._text_op = _rg(r, g, b)
+        self._text_head = ""
 
     def set_fill_color(self, r: int, g: int = None, b: int = None) -> None:  # type: ignore[assignment]
         if g is None:
@@ -178,14 +190,14 @@ class MiniPdf:
         self._in_footer = False
         (self.x, self.y, self._style, self._size, self._font_op,
          self._text_op) = saved
+        self._text_head = ""
 
     def ln(self, h: float | None = None) -> None:
         self.y += h if h is not None else self._size / _K
         self.x = self.l_margin
 
     def _text_width(self, txt: str) -> float:
-        widths = _FONTS[self._style][2]
-        units = sum(widths.get(ch, 556) for ch in txt)
+        units = sum(map(_FONTS[self._style][2].get, txt, repeat(556)))
         return units * self._size / 1000.0 / _K  # mm
 
     def cell(self, w: float, h: float, txt: str = "", ln: int = 0,
@@ -193,31 +205,55 @@ class MiniPdf:
         if (not self._in_footer
                 and self.y + h > _PAGE_H_MM - self.b_margin):
             self.add_page()
-        if w == 0:
-            w = self.epw - (self.x - self.l_margin)
+        x = self.x
+        if w == 0:  # to the right margin, as epw - (x - l_margin)
+            w = (_PAGE_W_MM - self.l_margin - self.r_margin
+                 - (x - self.l_margin))
         # one buffer entry may hold several lines: pages join on "\n"
         if fill:
-            self._buf.append(f"{self._fill_op}\n{self.x * _K:.2f} "
+            self._buf.append(f"{self._fill_op}\n{x * _K:.2f} "
                              f"{(_PAGE_H_MM - self.y - h) * _K:.2f} "
                              f"{w * _K:.2f} {h * _K:.2f} re f")
         if txt:
             if align == "C":
-                tx = self.x + (w - self._text_width(txt)) / 2.0
+                tx = f"{(x + (w - self._text_width(txt)) / 2.0) * _K:.2f}"
             elif align == "R":
-                tx = self.x + w - self._text_width(txt) - 1.0
+                tx = f"{(x + w - self._text_width(txt) - 1.0) * _K:.2f}"
             else:
-                tx = self.x + 1.0
-            # baseline: vertical center plus the usual 0.3em descender shim
-            ty = self.y + 0.5 * h + 0.3 * self._size / _K
-            self._buf.append(f"BT\n{self._text_op}\n{self._font_op}\n"
-                             f"1 0 0 1 {tx * _K:.2f} "
-                             f"{(_PAGE_H_MM - ty) * _K:.2f} Tm\n"
-                             f"({_esc(txt)}) Tj\nET")
+                tx = None
+            self._text(tx, h, txt)
         if ln:
             self.y += h
             self.x = self.l_margin
         else:
             self.x += w
+
+    def line(self, h: float, txt: str) -> None:
+        """``cell(0, h, txt, ln=True)``: one left-aligned line of text to
+        the right margin, then move to the next line."""
+        if (not self._in_footer
+                and self.y + h > _PAGE_H_MM - self.b_margin):
+            self.add_page()
+        if txt:
+            self._text(None, h, txt)
+        self.y += h
+        self.x = self.l_margin
+
+    def _text(self, tx: str | None, h: float, txt: str) -> None:
+        """One text object in a cell of height ``h`` at the current y. ``tx``
+        is its formatted x; None puts it 1 mm right of the current x."""
+        if tx is None:
+            x = self.x
+            tx = (self._margin_tx if x == self._margin_x
+                  else f"{(x + 1.0) * _K:.2f}")
+        # baseline: vertical center plus the usual 0.3em descender shim
+        ty = self.y + 0.5 * h + 0.3 * self._size / _K
+        head = self._text_head
+        if not head:  # colour and font as set now
+            head = self._text_head = (
+                f"BT\n{self._text_op}\n{self._font_op}\n1 0 0 1 ")
+        self._buf.append(f"{head}{tx} {(_PAGE_H_MM - ty) * _K:.2f} Tm\n"
+                         f"({_esc(txt)}) Tj\nET")
 
     # -- assembly ---------------------------------------------------------
 
@@ -318,20 +354,19 @@ def _issue_block(pdf: MiniPdf, issue) -> None:
     """One issue: [CODE] / message / location / suggestion
     (reference `app.py:130-160`)."""
     pdf.set_font("B", 9)
-    pdf.cell(0, 5, f"[{issue.code}]", ln=True)
+    pdf.line(5, f"[{issue.code}]")
     pdf.set_font("", 9)
-    pdf.cell(0, 4, f"  {_trunc(issue.message, 100)}", ln=True)
+    pdf.line(4, f"  {_trunc(issue.message, 100)}")
     if issue.table_name:
         location = f"  Location: {issue.table_name}"
         if issue.column_name:
             location += f" -> {issue.column_name}"
         pdf.set_text_color(100, 116, 139)
-        pdf.cell(0, 4, location, ln=True)
+        pdf.line(4, location)
         pdf.set_text_color(15, 23, 42)
     if issue.suggestion:
         pdf.set_text_color(22, 101, 52)
-        pdf.cell(0, 4, f"  Suggestion: {_trunc(issue.suggestion, 80)}",
-                 ln=True)
+        pdf.line(4, f"  Suggestion: {_trunc(issue.suggestion, 80)}")
         pdf.set_text_color(15, 23, 42)
     pdf.ln(2)
 
@@ -351,7 +386,7 @@ def generate_assessment_pdf(report: AssessmentReport,
 
     pdf.set_font("B", 16)
     pdf.set_text_color(15, 23, 42)
-    pdf.cell(0, 10, "Migration Readiness Score", ln=True)
+    pdf.line(10, "Migration Readiness Score")
 
     color, status, _ = _LEVEL_STYLE[report.overall_level]
     pdf.set_fill_color(*color)
@@ -360,22 +395,22 @@ def generate_assessment_pdf(report: AssessmentReport,
     pdf.cell(50, 20, f"{report.overall_score:.0f}%", align="C", fill=True)
     pdf.set_font("B", 12)
     pdf.set_text_color(15, 23, 42)
-    pdf.cell(0, 20, f"  {status}", ln=True)
+    pdf.line(20, f"  {status}")
     pdf.ln(5)
 
     pdf.set_font("B", 12)
-    pdf.cell(0, 8, "Score Breakdown:", ln=True)
+    pdf.line(8, "Score Breakdown:")
     pdf.set_font("", 10)
     for name, score in (("Data Types", report.datatype_score),
                         ("Constraints", report.constraint_score),
                         ("Partitions", report.partition_score),
                         ("Special Features", report.special_features_score)):
         pdf.cell(60, 6, f"  {name}:")
-        pdf.cell(0, 6, f"{score:.0f}%", ln=True)
+        pdf.line(6, f"{score:.0f}%")
     pdf.ln(5)
 
     pdf.set_font("B", 14)
-    pdf.cell(0, 10, "Summary Statistics", ln=True)
+    pdf.line(10, "Summary Statistics")
     pdf.set_font("", 10)
     for name, value in (("Total Tables", report.tables_total),
                         ("Auto-convertible (Green)", report.tables_auto),
@@ -384,17 +419,16 @@ def generate_assessment_pdf(report: AssessmentReport,
                         ("Total Columns", report.total_columns),
                         ("Total Constraints", report.total_constraints)):
         pdf.cell(70, 6, f"  {name}:")
-        pdf.cell(0, 6, str(value), ln=True)
+        pdf.line(6, str(value))
     pdf.ln(5)
 
     if report.critical_issues:
         pdf.set_font("B", 14)
         pdf.set_text_color(239, 68, 68)
-        pdf.cell(0, 10, f"Critical Issues ({len(report.critical_issues)})",
-                 ln=True)
+        pdf.line(10, f"Critical Issues ({len(report.critical_issues)})")
         pdf.set_font("I", 9)
         pdf.set_text_color(100, 116, 139)
-        pdf.cell(0, 5, "These must be resolved before migration", ln=True)
+        pdf.line(5, "These must be resolved before migration")
         pdf.ln(2)
         pdf.set_text_color(15, 23, 42)
         for issue in report.critical_issues:
@@ -404,7 +438,7 @@ def generate_assessment_pdf(report: AssessmentReport,
     if report.warnings:
         pdf.set_font("B", 14)
         pdf.set_text_color(245, 158, 11)
-        pdf.cell(0, 10, f"Warnings ({len(report.warnings)})", ln=True)
+        pdf.line(10, f"Warnings ({len(report.warnings)})")
         pdf.set_text_color(15, 23, 42)
         for issue in report.warnings:
             _issue_block(pdf, issue)
@@ -413,19 +447,18 @@ def generate_assessment_pdf(report: AssessmentReport,
     if report.info_items:
         pdf.set_font("B", 14)
         pdf.set_text_color(99, 102, 241)
-        pdf.cell(0, 10, f"Information ({len(report.info_items)})", ln=True)
+        pdf.line(10, f"Information ({len(report.info_items)})")
         pdf.set_font("", 9)
         pdf.set_text_color(15, 23, 42)
         for issue in report.info_items:
-            pdf.cell(0, 4, _trunc(f"[{issue.code}] {issue.message}", 110),
-                     ln=True)
+            pdf.line(4, _trunc(f"[{issue.code}] {issue.message}", 110))
         pdf.ln(3)
 
     if report.table_assessments:
         pdf.add_page()
         pdf.set_font("B", 16)
         pdf.set_text_color(15, 23, 42)
-        pdf.cell(0, 10, "Table-by-Table Analysis", ln=True)
+        pdf.line(10, "Table-by-Table Analysis")
         pdf.ln(3)
         for ta in report.table_assessments:
             if pdf.get_y() > 250:
@@ -437,22 +470,19 @@ def generate_assessment_pdf(report: AssessmentReport,
             pdf.cell(0, 8, f"  {ta.full_name}", ln=True, fill=True)
             pdf.set_text_color(15, 23, 42)
             pdf.set_font("", 9)
-            pdf.cell(0, 5,
-                     f"    Score: {ta.readiness_score:.0f}% | "
+            pdf.line(5, f"    Score: {ta.readiness_score:.0f}% | "
                      f"Status: {status_text} | Columns: {ta.column_count} | "
-                     f"Constraints: {ta.constraint_count}", ln=True)
+                     f"Constraints: {ta.constraint_count}")
             if ta.issues:
                 pdf.set_font("", 8)
-                pdf.cell(0, 4, f"    Issues ({len(ta.issues)}):", ln=True)
+                pdf.line(4, f"    Issues ({len(ta.issues)}):")
                 for issue in ta.issues:
-                    pdf.cell(0, 3.5,
-                             _trunc(f"      - [{issue.code}] "
-                                    f"{issue.message}", 90), ln=True)
+                    pdf.line(3.5, _trunc(f"      - [{issue.code}] "
+                                         f"{issue.message}", 90))
                     if issue.suggestion:
                         pdf.set_text_color(22, 101, 52)
-                        pdf.cell(0, 3.5,
-                                 _trunc(f"        Suggestion: "
-                                        f"{issue.suggestion}", 80), ln=True)
+                        pdf.line(3.5, _trunc(f"        Suggestion: "
+                                             f"{issue.suggestion}", 80))
                         pdf.set_text_color(15, 23, 42)
             pdf.ln(2)
 

@@ -79,9 +79,9 @@ def get_spark(app_name: str = "db2ice-spark", master: str | None = None,
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
-        # Keep stdout/stderr machine-readable: harness output (bench.py's
-        # JSON line, the parity checker) is parsed from a captured tail,
-        # and stage progress bars corrupt it.
+        # Keep stdout/stderr machine-readable: harness output (the
+        # benchmark's JSON lines, the parity checker) is parsed from a
+        # captured tail, and stage progress bars corrupt it.
         .config("spark.ui.showConsoleProgress", "false")
     )
     return builder.getOrCreate()

@@ -246,15 +246,43 @@ def test_db2_repeated_column_warns_case_insensitively():
                                "Duplicate column c in table S.U"]
 
 
-def test_db2_malformed_table_warnings_leave_ddl_text_unchanged():
+def test_db2_malformed_table_warnings_add_ewi_markers():
+    from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark.assess import (
+        Assessor,
+    )
     from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark.convert import (
         IcebergDdlGenerator,
     )
 
-    ddl = IcebergDdlGenerator().convert(
-        "CREATE TABLE S.T (A INT, a INT)").iceberg_ddl
-    assert "CREATE OR REPLACE ICEBERG TABLE S.T (\n" \
-           "    A INTEGER,\n    A INTEGER\n)" in ddl
+    marker = "!!!RESOLVE EWI!!! /*** SSC-EWI-DB2ICE-0021 - {} ***/!!!"
+    for ddl, findings in (
+            ("CREATE TABLE S.T ()", ["Table S.T has no parsed columns"]),
+            ("CREATE TABLE S.T (A INT, a INT, B INT, A INT)",
+             ["Duplicate column a in table S.T",
+              "Duplicate column A in table S.T"])):
+        result = IcebergDdlGenerator().convert(ddl)
+        assert result.warnings == findings
+        assert result.ewi_count == len(findings)
+        lines = result.iceberg_ddl.split("\n")
+        create = lines.index("CREATE OR REPLACE ICEBERG TABLE S.T (")
+        assert lines[1:create] == [marker.format(f) for f in findings]
+        # reported as warnings with no penalty, so the score is unchanged
+        report = Assessor().assess(ddl)
+        assert [(i.code, i.message) for i in report.warnings] == [
+            ("SSC-EWI-DB2ICE-0021", f) for f in findings]
+        assert report.table_assessments[0].readiness_score == 100
+        assert report.table_assessments[0].can_auto_convert
+
+
+def test_db2_clean_table_has_no_ewi_0021():
+    from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark.convert import (
+        IcebergDdlGenerator,
+    )
+
+    result = IcebergDdlGenerator().convert(
+        "DECLARE GLOBAL TEMPORARY TABLE S.T (A INT, B INT)")
+    assert "0021" not in result.iceberg_ddl
+    assert result.ewi_count == 1 and result.warnings == []
 
 
 def test_db2_unbalanced_paren_is_an_error():
