@@ -17,10 +17,10 @@ one regex (the quote rule: a ``'`` toggles the string state unless the
 character before it is ``\\``) and then cut the text with ``str.split`` and
 paren counts per piece, instead of visiting each delimiter, to find the
 statements, a column block's closing paren and its top-level commas. Each
-column definition is read
-with one compiled pattern (name, type, length, scale); the DEFAULT, CCSID
-and FIELDPROC searches run only when one of those words appears. A
-``ColumnDef`` resolves its type mapping when it is built.
+column definition is read with one compiled pattern (name, type, length,
+scale); the DEFAULT, CCSID and FIELDPROC searches run only when one of
+those words appears. A ``ColumnDef`` resolves its type mapping when it is
+built.
 
 ``table_findings`` is the one rule for a table that cannot be created as
 parsed (no columns, or a repeated column name): the parser warns with it,
