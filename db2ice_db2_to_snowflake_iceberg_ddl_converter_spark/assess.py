@@ -172,14 +172,15 @@ class Assessor:
 
     def assess_table(self, table: TableDef) -> TableAssessment:
         """Penalty accumulation for one table (assessor.py:276-430)."""
-        return self._assess(table)[0]
+        return self._assess(table, {_CRITICAL: [], _WARNING: [], _INFO: []},
+                            dict.fromkeys(_FEATURES, 0))[0]
 
     @staticmethod
-    def _assess(table: TableDef, buckets: dict = None,
-                features: dict = None) -> tuple[TableAssessment, dict]:
+    def _assess(table: TableDef, buckets: dict,
+                features: dict) -> tuple[TableAssessment, dict]:
         """One walk over the table: its assessment and the points each
-        component sub-score lost. Each issue also goes to its report bucket
-        and the table's features are counted, when those are given."""
+        component sub-score lost. Each issue also goes to its report
+        bucket, and the table's features are added to ``features``."""
         full_name = table.full_name
         ta = TableAssessment(table.name, table.schema, len(table.columns),
                              len(table.constraints))
@@ -190,8 +191,7 @@ class Assessor:
         def add(code, severity, message, column=None, suggestion=None):
             issue = Issue(code, severity, message, full_name, column, suggestion)
             issues.append(issue)
-            if buckets is not None:
-                buckets[severity].append(issue)
+            buckets[severity].append(issue)
             component = _component(code)
             if component:
                 lost[component] += _POINTS[component][severity]
@@ -238,11 +238,11 @@ class Assessor:
                     "support generated columns", col.name,
                     "Remove GENERATED clause or compute values during ETL")
 
-            if features is not None:  # assessor.py:476-517
-                features["fieldproc"] += bool(col.fieldproc)
-                features["generated_columns"] += bool(col.generated)
-                for key in _TYPE_FEATURES.get(col.data_type.upper(), ()):
-                    features[key] += 1
+            # assessor.py:476-517
+            features["fieldproc"] += bool(col.fieldproc)
+            features["generated_columns"] += bool(col.generated)
+            for key in _TYPE_FEATURES.get(col.data_type.upper(), ()):
+                features[key] += 1
 
         for constraint in table.constraints:
             if constraint.kind == "FOREIGN KEY":
@@ -288,13 +288,12 @@ class Assessor:
                     suggestion="Consider Iceberg partition transforms if "
                                "needed")
 
-        if features is not None:
-            features["editproc"] += bool(table.editproc)
-            features["validproc"] += bool(table.validproc)
-            features["partitioning"] += bool(table.partition)
-            for c in table.constraints:
-                features["foreign_keys"] += c.kind == "FOREIGN KEY"
-                features["check_constraints"] += c.kind == "CHECK"
+        features["editproc"] += bool(table.editproc)
+        features["validproc"] += bool(table.validproc)
+        features["partitioning"] += bool(table.partition)
+        for c in table.constraints:
+            features["foreign_keys"] += c.kind == "FOREIGN KEY"
+            features["check_constraints"] += c.kind == "CHECK"
 
         ta.readiness_score = max(0, 100 - penalties)
         ta.readiness_level = score_to_level(ta.readiness_score)

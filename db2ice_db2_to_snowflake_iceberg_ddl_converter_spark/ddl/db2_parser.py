@@ -82,8 +82,10 @@ _CONSTRAINT_RE = re.compile(r'(?:^| )(?:PRIMARY KEY|FOREIGN KEY|UNIQUE|CHECK|CON
 
 # The head of one column definition: its name and, after optional spaces, a
 # type token with its optional (length[, scale]). Groups: name, type,
-# length, scale.
-_COLUMN_RE = re.compile(r'(["\w]++)\s*(?>' + _TYPE_RE.pattern + ')',
+# length, scale. The lookahead keeps the name whole, as ``_NAME_RE`` took
+# it, instead of backtracking to a shorter name; nothing follows the type,
+# so it never backtracks.
+_COLUMN_RE = re.compile(r'(["\w]+)(?!["\w])\s*(?:' + _TYPE_RE.pattern + ')',
                         re.IGNORECASE)
 # The column options that carry a value; a definition without any of these
 # words skips their searches.

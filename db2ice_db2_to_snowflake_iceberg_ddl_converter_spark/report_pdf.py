@@ -106,11 +106,8 @@ class MiniPdf:
     the new state, formatted once per distinct state. A text cell writes one
     template: a head holding ``BT``, the colour and font operators and the
     start of the text matrix, built once after each state change, then its
-    positions and text. A left-aligned cell at the left margin reuses its
-    x formatted once, so it formats one float, its y. Every cell still
-    writes its own colour and font operators: the output is unchanged.
-    ``line(h, txt)`` is ``cell(0, h, txt, ln=True)``, the report's usual
-    cell.
+    positions and text. Every cell still writes its own colour and font
+    operators: the output is unchanged.
     """
 
     def __init__(self) -> None:
@@ -128,9 +125,6 @@ class MiniPdf:
         self._text_op = self._fill_op = _rg(0, 0, 0)
         self._text_head = ""   # BT + colour + font + matrix start; "" = stale
         self._in_footer = False
-        # a left-aligned text cell at the left margin starts at this x
-        self._margin_x = self.l_margin
-        self._margin_tx = f"{(self._margin_x + 1.0) * _K:.2f}"
 
     # -- state ------------------------------------------------------------
 
@@ -205,55 +199,34 @@ class MiniPdf:
         if (not self._in_footer
                 and self.y + h > _PAGE_H_MM - self.b_margin):
             self.add_page()
-        x = self.x
-        if w == 0:  # to the right margin, as epw - (x - l_margin)
-            w = (_PAGE_W_MM - self.l_margin - self.r_margin
-                 - (x - self.l_margin))
+        if w == 0:
+            w = self.epw - (self.x - self.l_margin)
         # one buffer entry may hold several lines: pages join on "\n"
         if fill:
-            self._buf.append(f"{self._fill_op}\n{x * _K:.2f} "
+            self._buf.append(f"{self._fill_op}\n{self.x * _K:.2f} "
                              f"{(_PAGE_H_MM - self.y - h) * _K:.2f} "
                              f"{w * _K:.2f} {h * _K:.2f} re f")
         if txt:
             if align == "C":
-                tx = f"{(x + (w - self._text_width(txt)) / 2.0) * _K:.2f}"
+                tx = self.x + (w - self._text_width(txt)) / 2.0
             elif align == "R":
-                tx = f"{(x + w - self._text_width(txt) - 1.0) * _K:.2f}"
+                tx = self.x + w - self._text_width(txt) - 1.0
             else:
-                tx = None
-            self._text(tx, h, txt)
+                tx = self.x + 1.0
+            # baseline: vertical center plus the usual 0.3em descender shim
+            ty = self.y + 0.5 * h + 0.3 * self._size / _K
+            head = self._text_head
+            if not head:  # colour and font as set now
+                head = self._text_head = (
+                    f"BT\n{self._text_op}\n{self._font_op}\n1 0 0 1 ")
+            self._buf.append(f"{head}{tx * _K:.2f} "
+                             f"{(_PAGE_H_MM - ty) * _K:.2f} Tm\n"
+                             f"({_esc(txt)}) Tj\nET")
         if ln:
             self.y += h
             self.x = self.l_margin
         else:
             self.x += w
-
-    def line(self, h: float, txt: str) -> None:
-        """``cell(0, h, txt, ln=True)``: one left-aligned line of text to
-        the right margin, then move to the next line."""
-        if (not self._in_footer
-                and self.y + h > _PAGE_H_MM - self.b_margin):
-            self.add_page()
-        if txt:
-            self._text(None, h, txt)
-        self.y += h
-        self.x = self.l_margin
-
-    def _text(self, tx: str | None, h: float, txt: str) -> None:
-        """One text object in a cell of height ``h`` at the current y. ``tx``
-        is its formatted x; None puts it 1 mm right of the current x."""
-        if tx is None:
-            x = self.x
-            tx = (self._margin_tx if x == self._margin_x
-                  else f"{(x + 1.0) * _K:.2f}")
-        # baseline: vertical center plus the usual 0.3em descender shim
-        ty = self.y + 0.5 * h + 0.3 * self._size / _K
-        head = self._text_head
-        if not head:  # colour and font as set now
-            head = self._text_head = (
-                f"BT\n{self._text_op}\n{self._font_op}\n1 0 0 1 ")
-        self._buf.append(f"{head}{tx} {(_PAGE_H_MM - ty) * _K:.2f} Tm\n"
-                         f"({_esc(txt)}) Tj\nET")
 
     # -- assembly ---------------------------------------------------------
 
@@ -354,19 +327,20 @@ def _issue_block(pdf: MiniPdf, issue) -> None:
     """One issue: [CODE] / message / location / suggestion
     (reference `app.py:130-160`)."""
     pdf.set_font("B", 9)
-    pdf.line(5, f"[{issue.code}]")
+    pdf.cell(0, 5, f"[{issue.code}]", ln=True)
     pdf.set_font("", 9)
-    pdf.line(4, f"  {_trunc(issue.message, 100)}")
+    pdf.cell(0, 4, f"  {_trunc(issue.message, 100)}", ln=True)
     if issue.table_name:
         location = f"  Location: {issue.table_name}"
         if issue.column_name:
             location += f" -> {issue.column_name}"
         pdf.set_text_color(100, 116, 139)
-        pdf.line(4, location)
+        pdf.cell(0, 4, location, ln=True)
         pdf.set_text_color(15, 23, 42)
     if issue.suggestion:
         pdf.set_text_color(22, 101, 52)
-        pdf.line(4, f"  Suggestion: {_trunc(issue.suggestion, 80)}")
+        pdf.cell(0, 4, f"  Suggestion: {_trunc(issue.suggestion, 80)}",
+                 ln=True)
         pdf.set_text_color(15, 23, 42)
     pdf.ln(2)
 
@@ -386,7 +360,7 @@ def generate_assessment_pdf(report: AssessmentReport,
 
     pdf.set_font("B", 16)
     pdf.set_text_color(15, 23, 42)
-    pdf.line(10, "Migration Readiness Score")
+    pdf.cell(0, 10, "Migration Readiness Score", ln=True)
 
     color, status, _ = _LEVEL_STYLE[report.overall_level]
     pdf.set_fill_color(*color)
@@ -395,22 +369,22 @@ def generate_assessment_pdf(report: AssessmentReport,
     pdf.cell(50, 20, f"{report.overall_score:.0f}%", align="C", fill=True)
     pdf.set_font("B", 12)
     pdf.set_text_color(15, 23, 42)
-    pdf.line(20, f"  {status}")
+    pdf.cell(0, 20, f"  {status}", ln=True)
     pdf.ln(5)
 
     pdf.set_font("B", 12)
-    pdf.line(8, "Score Breakdown:")
+    pdf.cell(0, 8, "Score Breakdown:", ln=True)
     pdf.set_font("", 10)
     for name, score in (("Data Types", report.datatype_score),
                         ("Constraints", report.constraint_score),
                         ("Partitions", report.partition_score),
                         ("Special Features", report.special_features_score)):
         pdf.cell(60, 6, f"  {name}:")
-        pdf.line(6, f"{score:.0f}%")
+        pdf.cell(0, 6, f"{score:.0f}%", ln=True)
     pdf.ln(5)
 
     pdf.set_font("B", 14)
-    pdf.line(10, "Summary Statistics")
+    pdf.cell(0, 10, "Summary Statistics", ln=True)
     pdf.set_font("", 10)
     for name, value in (("Total Tables", report.tables_total),
                         ("Auto-convertible (Green)", report.tables_auto),
@@ -419,16 +393,17 @@ def generate_assessment_pdf(report: AssessmentReport,
                         ("Total Columns", report.total_columns),
                         ("Total Constraints", report.total_constraints)):
         pdf.cell(70, 6, f"  {name}:")
-        pdf.line(6, str(value))
+        pdf.cell(0, 6, str(value), ln=True)
     pdf.ln(5)
 
     if report.critical_issues:
         pdf.set_font("B", 14)
         pdf.set_text_color(239, 68, 68)
-        pdf.line(10, f"Critical Issues ({len(report.critical_issues)})")
+        pdf.cell(0, 10, f"Critical Issues ({len(report.critical_issues)})",
+                 ln=True)
         pdf.set_font("I", 9)
         pdf.set_text_color(100, 116, 139)
-        pdf.line(5, "These must be resolved before migration")
+        pdf.cell(0, 5, "These must be resolved before migration", ln=True)
         pdf.ln(2)
         pdf.set_text_color(15, 23, 42)
         for issue in report.critical_issues:
@@ -438,7 +413,7 @@ def generate_assessment_pdf(report: AssessmentReport,
     if report.warnings:
         pdf.set_font("B", 14)
         pdf.set_text_color(245, 158, 11)
-        pdf.line(10, f"Warnings ({len(report.warnings)})")
+        pdf.cell(0, 10, f"Warnings ({len(report.warnings)})", ln=True)
         pdf.set_text_color(15, 23, 42)
         for issue in report.warnings:
             _issue_block(pdf, issue)
@@ -447,18 +422,19 @@ def generate_assessment_pdf(report: AssessmentReport,
     if report.info_items:
         pdf.set_font("B", 14)
         pdf.set_text_color(99, 102, 241)
-        pdf.line(10, f"Information ({len(report.info_items)})")
+        pdf.cell(0, 10, f"Information ({len(report.info_items)})", ln=True)
         pdf.set_font("", 9)
         pdf.set_text_color(15, 23, 42)
         for issue in report.info_items:
-            pdf.line(4, _trunc(f"[{issue.code}] {issue.message}", 110))
+            pdf.cell(0, 4, _trunc(f"[{issue.code}] {issue.message}", 110),
+                     ln=True)
         pdf.ln(3)
 
     if report.table_assessments:
         pdf.add_page()
         pdf.set_font("B", 16)
         pdf.set_text_color(15, 23, 42)
-        pdf.line(10, "Table-by-Table Analysis")
+        pdf.cell(0, 10, "Table-by-Table Analysis", ln=True)
         pdf.ln(3)
         for ta in report.table_assessments:
             if pdf.get_y() > 250:
@@ -470,19 +446,22 @@ def generate_assessment_pdf(report: AssessmentReport,
             pdf.cell(0, 8, f"  {ta.full_name}", ln=True, fill=True)
             pdf.set_text_color(15, 23, 42)
             pdf.set_font("", 9)
-            pdf.line(5, f"    Score: {ta.readiness_score:.0f}% | "
+            pdf.cell(0, 5,
+                     f"    Score: {ta.readiness_score:.0f}% | "
                      f"Status: {status_text} | Columns: {ta.column_count} | "
-                     f"Constraints: {ta.constraint_count}")
+                     f"Constraints: {ta.constraint_count}", ln=True)
             if ta.issues:
                 pdf.set_font("", 8)
-                pdf.line(4, f"    Issues ({len(ta.issues)}):")
+                pdf.cell(0, 4, f"    Issues ({len(ta.issues)}):", ln=True)
                 for issue in ta.issues:
-                    pdf.line(3.5, _trunc(f"      - [{issue.code}] "
-                                         f"{issue.message}", 90))
+                    pdf.cell(0, 3.5,
+                             _trunc(f"      - [{issue.code}] "
+                                    f"{issue.message}", 90), ln=True)
                     if issue.suggestion:
                         pdf.set_text_color(22, 101, 52)
-                        pdf.line(3.5, _trunc(f"        Suggestion: "
-                                             f"{issue.suggestion}", 80))
+                        pdf.cell(0, 3.5,
+                                 _trunc(f"        Suggestion: "
+                                        f"{issue.suggestion}", 80), ln=True)
                         pdf.set_text_color(15, 23, 42)
             pdf.ln(2)
 

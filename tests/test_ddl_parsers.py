@@ -225,6 +225,28 @@ def test_db2_generated_by_default_after_a_default():
                                                           "ALWAYS", False)
 
 
+def test_db2_column_name_is_never_cut_to_find_a_type():
+    parser = DB2DdlParser()
+    (table,) = parser.parse("CREATE TABLE T (A INT, MYINT, B\"INT\" INT)")
+    assert [(c.name, c.data_type) for c in table.columns] == [
+        ("A", "INT"), ('B"INT', "INT")]
+    assert parser.warnings == ["Could not parse data type for column MYINT"]
+
+
+def test_db2_patterns_compile_on_python_3_10():
+    # possessive quantifiers and atomic groups need Python 3.11's re
+    import re
+
+    from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark.ddl import (
+        db2_parser,
+    )
+    only_311 = re.compile(r"\(\?>|(?<!\\)[*+?}]\+")
+    patterns = [v.pattern for v in vars(db2_parser).values()
+                if isinstance(v, re.Pattern)]
+    assert db2_parser._COLUMN_RE.pattern in patterns
+    assert [p for p in patterns if only_311.search(p)] == []
+
+
 def test_db2_table_without_columns_warns():
     for ddl, column_warnings in (
             ("CREATE TABLE S.T ()", []),
