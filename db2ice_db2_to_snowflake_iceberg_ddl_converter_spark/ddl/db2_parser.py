@@ -90,7 +90,6 @@ _COLUMN_RE = re.compile(r'(["\w]+)(?!["\w])\s*(?:' + _TYPE_RE.pattern + ')',
 # The column options that carry a value; a definition without any of these
 # words skips their searches.
 _OPTION_RE = re.compile(r"DEFAULT|CCSID|FIELDPROC", re.IGNORECASE)
-_DEFAULT_RE = re.compile(r"DEFAULT\s+(\S+|'[^']*')", re.IGNORECASE)
 _COL_CCSID_RE = re.compile(r"CCSID\s+(\w+)", re.IGNORECASE)
 _FIELDPROC_RE = re.compile(r"FIELDPROC\s+(\S+)", re.IGNORECASE)
 _NAME_RE = re.compile(r'(["\w]+)')
@@ -122,6 +121,13 @@ _DISTRIBUTE_RE = re.compile(r'DISTRIBUTE\s+BY\s+HASH\s*\(([^)]+)\)', re.IGNORECA
 # A string literal runs from a ' to the next ' or to the end of the text; a
 # ' preceded by \ neither opens nor closes one (parser.py:292-331).
 _STRING_RE = re.compile(r"(?<!\\)'(?:[^']|(?<=\\)')*(?:(?<!\\)'|\Z)")
+# A DEFAULT column option and its value: one word, in which each string
+# literal (the rule above) counts whole, spaces and all. The DEFAULT of
+# GENERATED BY DEFAULT matches without a value, and a DEFAULT followed by
+# GENERATED (WITH DEFAULT GENERATED ALWAYS) does not match: neither names a
+# default value.
+_DEFAULT_RE = re.compile(r"BY\s+DEFAULT|DEFAULT\s+(?!GENERATED\b)((?:"
+                         + _STRING_RE.pattern + r"|\S)+)", re.IGNORECASE)
 
 
 def _unquote(ident: Optional[str]) -> str:
@@ -353,8 +359,10 @@ class DB2DdlParser:
         default = ccsid = fieldproc = None
         if _OPTION_RE.search(rest):
             if "DEFAULT" in upper:
-                default = _DEFAULT_RE.search(rest)
-                default = default and default.group(1)
+                m = _DEFAULT_RE.search(rest)
+                while m and m.group(1) is None:  # GENERATED BY DEFAULT
+                    m = _DEFAULT_RE.search(rest, m.end())
+                default = m and m.group(1)
             ccsid = _COL_CCSID_RE.search(rest)
             ccsid = ccsid and ccsid.group(1)
             fieldproc = _FIELDPROC_RE.search(rest)

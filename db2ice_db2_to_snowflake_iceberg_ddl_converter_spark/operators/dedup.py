@@ -36,8 +36,6 @@ Embedding cosine: see operators/similarity.py for the ANN path.
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -700,9 +698,7 @@ def exact_collapse_shingles(sh: DataFrame) -> tuple:
         # 6.5 s end-to-end split_leakage_safe — skipping the pin makes
         # every member consumer replay the probe lineage after the
         # finally-unpersist, which costs more than the 16-byte
-        # checkpoint at every measured size). The sf0.1 r9→r10 bench
-        # delta lives in the per-round CC checkpoints + the collide
-        # scalar job, not here; the collapse-memo seam is the remedy.
+        # checkpoint at every measured size).
         probe = pin(sized.select("doc_id", "h"))
         collide = (grouped.groupBy("h")
                    .agg(F.count(F.lit(1)).alias("n_sets"))
@@ -740,170 +736,45 @@ def exact_collapse_shingles(sh: DataFrame) -> tuple:
     return member, reps
 
 
-#: Active collapse-rail memo, or None when the seam is off (the default:
-#: every registry entry runs standalone, the driver correctness contract).
-_COLLAPSE_MEMO = None
-
-
-class collapse_memo_scope:
-    """Opt-in session-scoped reuse of the exact-collapse rail (r11, the
-    r10 verdict's task 5). The rail's four consumers — ``dedup_clusters``,
-    ``dedup_keep_representatives``, ``split_leakage_safe`` (via
-    ``dedup_clusters``), and ``corpus_neardup_report`` — each recompute
-    the corpus collapse, the rep-level Jaccard pair graph, and (the
-    first three) the component labels from scratch: ~19 s of repeated
-    subplans in the r10 full-registry record. Inside this scope those
-    three frames are computed once per (sf_dir, threshold) and shared —
-    shared frames are checkpoint-backed (``pin``), so reuse is a cached
-    scan, and the registry entries themselves stay byte-identical in
-    output (the seam only swaps WHEN a subplan runs, never what it
-    computes; pinned by the seam-parity pytest).
-
-    The DRIVER correctness gate and ``check_oracle_parity`` never enter
-    the scope (standalone contract); ``bench.py`` wraps the collapse
-    consumers in it, mirroring how a real curation pipeline runs these
-    reports back-to-back over one corpus snapshot. Not reentrant, not
-    thread-safe — the bench loop is single-threaded.
-    """
-
-    def __enter__(self):
-        global _COLLAPSE_MEMO
-        if _COLLAPSE_MEMO is not None:
-            raise RuntimeError("collapse_memo_scope is not reentrant")
-        _COLLAPSE_MEMO = {"frames": {}}
-        return self
-
-    def __exit__(self, exc_type, exc, tb):
-        # Release the pinned frames' storage NOW instead of waiting for
-        # the ContextCleaner's GC cycle (r12, ADVICE): a long-lived
-        # session running repeated scopes would otherwise hold executor
-        # blocks / checkpoint files well past scope exit. Frames (and
-        # anything lazily derived from them) must not be used after
-        # exit — the scope contract already requires consumers to run
-        # inside it.
-        global _COLLAPSE_MEMO
-        frames = (_COLLAPSE_MEMO or {}).get("frames", {})
-        _COLLAPSE_MEMO = None
-        for v in frames.values():
-            # the collapse key memoizes a (member, reps) tuple
-            for df in (v if isinstance(v, (tuple, list)) else (v,)):
-                _release_pin(df)
-        frames.clear()
-        return False
-
-
-def _release_pin(df) -> None:
-    """Best-effort storage release for a ``pin()``-backed frame (r12,
-    ADVICE): a pinned frame's analyzed plan is a single ``LogicalRDD``
-    node holding the checkpointed internal RDD — unpersist it (frees
-    localCheckpoint executor blocks immediately) and, when it was a
-    RELIABLE checkpoint, delete its checkpoint files (the
-    ContextCleaner would do both eventually, but only after a GC cycle
-    notices the dropped reference). Every step is wrapped: a frame that
-    is not pin-shaped, a stopped session, or a mocked JVM must never
-    turn scope exit into an error."""
-    try:
-        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-        for i in range(leaves.length()):
-            node = leaves.apply(i)
-            if node.getClass().getSimpleName() != "LogicalRDD":
-                continue
-            rdd = node.rdd()
-            rdd.unpersist(False)
-            ckpt = rdd.getCheckpointFile()
-            if ckpt.isDefined():
-                sc = df.sparkSession.sparkContext
-                jvm = sc._jvm
-                path = jvm.org.apache.hadoop.fs.Path(ckpt.get())
-                fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
-                fs.delete(path, True)
-    except Exception:
-        pass
-
-
-def _memo_get(key, build):
-    """Return the memoized frame for ``key``, building it on first use —
-    or just build it when the seam is off."""
-    if _COLLAPSE_MEMO is None:
-        return build()
-    frames = _COLLAPSE_MEMO["frames"]
-    if key not in frames:
-        frames[key] = build()
-    return frames[key]
-
-
-def _pairs_cached(reps, threshold: float, dir_key: str) -> DataFrame:
-    """The rep-level Jaccard pair graph, shared and checkpoint-pinned
-    inside a :class:`collapse_memo_scope` (every later consumer reads
-    the pinned blocks instead of replaying the inverted-index join),
-    plain and lazy when standalone (callers keep their own persist
-    discipline)."""
-    if _COLLAPSE_MEMO is None:
-        return _jaccard_pair_graph(reps, threshold).select("id1", "id2")
-    return _memo_get(
-        ("pairs", dir_key, threshold),
-        lambda: pin(_jaccard_pair_graph(reps, threshold)
-                    .select("id1", "id2")))
-
-
 def _collapsed_component_labels(spark, sf_dir,
                                 threshold: float = 0.5) -> DataFrame:
     """(doc_id, rep_id, label) for every document: exact-collapse by
     shingle set, run the Jaccard pair graph + connected components over
     representatives only, then expand labels back over the membership.
     See :func:`exact_collapse_shingles` for the output-exactness
-    argument (requires threshold ≤ 1.0, asserted). Inside a
-    :class:`collapse_memo_scope` the finished frame is checkpoint-pinned
-    and shared across consumers keyed by (sf_dir, threshold)."""
+    argument (requires threshold ≤ 1.0, asserted)."""
     if threshold > 1.0:
         raise ValueError(
             f"exact-collapse requires threshold <= 1.0 (got {threshold}): "
             "identical shingle sets must always form an edge")
-    dir_key = os.path.abspath(sf_dir)
-
-    def build() -> DataFrame:
-        # member (doc_id, rep_id) has ONE consumer (the label expansion)
-        # and reps rides the collapse's pinned quotient frame — the r9
-        # member/reps DISK_ONLY persists are gone with the r10
-        # hash-probe collapse (shingle arrays cross one map-side-
-        # combined shuffle inside it).
-        member, reps = _memo_get(
-            ("collapse", dir_key),
-            lambda: exact_collapse_shingles(doc_shingles(spark, sf_dir)))
-        # reps feeds the pair graph AND the CC node list: persist, then
-        # release as soon as the EAGER connected_components returns
-        # (r10, ADVICE — persist without unpersist leaks for the
-        # session).
-        reps_p = reps.persist(StorageLevel.DISK_ONLY)
-        pairs = _pairs_cached(reps_p, threshold, dir_key)
-        labels = connected_components(reps_p.select("doc_id"), pairs,
-                                      node_col="doc_id")
-        reps_p.unpersist()
-        expanded = (member.join(
-            labels.select(F.col("node").alias("rep_id"), "label"),
-            "rep_id"))
-        # The node universe is EVERY document, not just the shingled
-        # ones: doc_shingles drops NULL-text rows (degenerate-input
-        # contract), but the cluster entries have always emitted those
-        # docs as singletons (own doc_id as label) and the naive oracles
-        # seed reach from the full documents table — left-join them back
-        # (r9 self-review find).
-        full = ld(spark, sf_dir, "documents").select("doc_id")
-        # Docs absent from member (empty/NULL shingle sets — the
-        # collapse never sees them) coalesce to their own id here,
-        # exactly the singleton semantics the pre-r10 in-frame form gave
-        # them.
-        out = (full.join(expanded, "doc_id", "left")
-               .select("doc_id",
-                       F.coalesce("rep_id", F.col("doc_id"))
-                       .alias("rep_id"),
-                       F.coalesce("label", F.col("doc_id"))
-                       .alias("label")))
-        # shared across consumers → checkpoint once so each later entry
-        # reads blocks instead of replaying expand + CC lineage
-        return pin(out) if _COLLAPSE_MEMO is not None else out
-
-    return _memo_get(("labels", dir_key, threshold), build)
+    # member (doc_id, rep_id) has ONE consumer (the label expansion) and
+    # reps rides the collapse's pinned quotient frame — the r9 member/reps
+    # DISK_ONLY persists are gone with the r10 hash-probe collapse
+    # (shingle arrays cross one map-side-combined shuffle inside it).
+    member, reps = exact_collapse_shingles(doc_shingles(spark, sf_dir))
+    # reps feeds the pair graph AND the CC node list: persist, then
+    # release as soon as the EAGER connected_components returns (r10,
+    # ADVICE — persist without unpersist leaks for the session).
+    reps_p = reps.persist(StorageLevel.DISK_ONLY)
+    pairs = _jaccard_pair_graph(reps_p, threshold).select("id1", "id2")
+    labels = connected_components(reps_p.select("doc_id"), pairs,
+                                  node_col="doc_id")
+    reps_p.unpersist()
+    expanded = (member.join(
+        labels.select(F.col("node").alias("rep_id"), "label"), "rep_id"))
+    # The node universe is EVERY document, not just the shingled ones:
+    # doc_shingles drops NULL-text rows (degenerate-input contract), but
+    # the cluster entries have always emitted those docs as singletons
+    # (own doc_id as label) and the naive oracles seed reach from the
+    # full documents table — left-join them back (r9 self-review find).
+    full = ld(spark, sf_dir, "documents").select("doc_id")
+    # Docs absent from member (empty/NULL shingle sets — the collapse
+    # never sees them) coalesce to their own id here, exactly the
+    # singleton semantics the pre-r10 in-frame form gave them.
+    return (full.join(expanded, "doc_id", "left")
+            .select("doc_id",
+                    F.coalesce("rep_id", F.col("doc_id")).alias("rep_id"),
+                    F.coalesce("label", F.col("doc_id")).alias("label")))
 
 
 def dedup_clusters(spark, sf_dir, threshold: float = 0.5):
@@ -1259,13 +1130,8 @@ def corpus_neardup_report(spark, sf_dir) -> "DataFrame":
     # DISK_ONLY persist is gone with the r10 hash-probe collapse.
     # Shingle-less docs are absent from member now; they were singleton
     # sz=1 groups before, contributing zero to every within/cross term
-    # and never passing the paired filter — output-identical. Inside a
-    # collapse_memo_scope the quotient is shared with the cluster
-    # entries (r11 seam).
-    dir_key = os.path.abspath(sf_dir)
-    member, reps = _memo_get(
-        ("collapse", dir_key),
-        lambda: exact_collapse_shingles(doc_shingles(spark, sf_dir)))
+    # and never passing the paired filter — output-identical.
+    member, reps = exact_collapse_shingles(doc_shingles(spark, sf_dir))
     # c[g, s]: per-(group, source) member counts — at most corpus-sized,
     # in practice |distinct texts| × |sources|; the hub every term reads.
     c = (member.join(docs, "doc_id")
@@ -1295,15 +1161,8 @@ def corpus_neardup_report(spark, sf_dir) -> "DataFrame":
     csn = cn.join(szn, "rep_id")
     # rep-level pair graph: pair-sized over DISTINCT texts; two consumers
     # (term expansion + paired-degree), deterministic from the scan.
-    # Memo-shared (checkpoint-pinned) inside a collapse_memo_scope —
-    # the cluster entries run the SAME 0.5-threshold graph; standalone,
-    # the local DISK_ONLY persist/unpersist discipline stands.
-    memo_shared = _COLLAPSE_MEMO is not None
-    if memo_shared:
-        p = _pairs_cached(reps, 0.5, dir_key)
-    else:
-        p = (_jaccard_pair_graph(reps, 0.5).select("id1", "id2")
-             .persist(StorageLevel.DISK_ONLY))
+    p = (_jaccard_pair_graph(reps, 0.5).select("id1", "id2")
+         .persist(StorageLevel.DISK_ONLY))
     # per-(pair, source) counts for both sides, zero-filled via union-sum
     u = (p.join(csn.select(F.col("rep_id").alias("id1"), "source",
                            F.col("c").alias("c1")), "id1")
@@ -1373,8 +1232,7 @@ def corpus_neardup_report(spark, sf_dir) -> "DataFrame":
     # ADVICE item closed).
     out = pin(out)
     c.unpersist()
-    if not memo_shared:        # memo-pinned pairs are checkpoint-scoped
-        p.unpersist()
+    p.unpersist()
     return out
 
 

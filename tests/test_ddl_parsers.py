@@ -202,10 +202,12 @@ def test_db2_lower_case_multi_word_type_with_irregular_spaces():
 
 
 def test_db2_quoted_default_with_comma_next_to_not_null():
-    for definition in ("A VARCHAR(5) DEFAULT 'a,b' NOT NULL",
-                       "A VARCHAR(5) NOT NULL DEFAULT 'a,b'"):
+    for definition, default in (
+            ("A VARCHAR(5) DEFAULT 'a,b' NOT NULL", "'a,b'"),
+            ("A VARCHAR(5) NOT NULL DEFAULT 'a,b'", "'a,b'"),
+            ("A VARCHAR(5) DEFAULT 'a b' NOT NULL", "'a b'")):
         col = _one_column(definition)
-        assert (col.default, col.nullable) == ("'a,b'", False)
+        assert (col.default, col.nullable) == (default, False)
         assert col.raw_definition == definition
 
 
@@ -221,8 +223,11 @@ def test_db2_generated_by_default_after_a_default():
     assert (col.default, col.generated, col.nullable) == ("0", "BY DEFAULT",
                                                           True)
     col = _one_column("N INTEGER NOT NULL WITH DEFAULT GENERATED ALWAYS")
-    assert (col.default, col.generated, col.nullable) == ("GENERATED",
-                                                          "ALWAYS", False)
+    assert (col.default, col.generated, col.nullable) == (None, "ALWAYS",
+                                                          False)
+    col = _one_column("ID INTEGER NOT NULL GENERATED BY DEFAULT AS IDENTITY")
+    assert col.default is None
+    assert (col.generated, col.nullable) == ("BY DEFAULT", False)
 
 
 def test_db2_column_name_is_never_cut_to_find_a_type():

@@ -1,9 +1,8 @@
 """Round-11 closures.
 
 1. The four r10 ADVICE items.
-2. The collapse-rail memo seam (verdict task 5).
-3. Size-derived drain state partitioning (verdict task 3).
-4. The corrupted-DOCUMENTS gate (verdict task 8): the FIFTH standing
+2. Size-derived drain state partitioning (verdict task 3).
+3. The corrupted-DOCUMENTS gate (verdict task 8): the FIFTH standing
    adversarial oracle fixture (NULL/empty text, NULL source/lang, NULL
    embedding/label) and the 30 formerly-divergent entries it exposed,
    each now hash-matching DuckDB on the corrupted corpus.
@@ -202,63 +201,6 @@ class TestCollisionBranchExactness:
             monkeypatch.setattr(dedup.F, "xxhash64", real_xxhash64)
         assert got_member == want_member
         assert got_reps == want_reps
-
-class TestCollapseMemoSeam:
-    """r10 verdict task 5: the collapse rail's consumers share one
-    collapse + pair graph + label pass inside collapse_memo_scope, with
-    byte-identical outputs to their standalone runs (the seam only
-    changes WHEN subplans execute, never what they compute)."""
-
-    ENTRIES = ("dedup_clusters", "dedup_keep_representatives",
-               "corpus_neardup_report", "split_leakage_safe")
-
-    def _run_all(self, spark, sf_dir):
-        from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark.operators import (
-            dedup,
-        )
-        from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark.operators.traindata import (  # noqa: E501
-            split_leakage_safe,
-        )
-
-        fns = {"dedup_clusters": dedup.dedup_clusters,
-               "dedup_keep_representatives":
-                   dedup.dedup_keep_representatives,
-               "corpus_neardup_report": dedup.corpus_neardup_report,
-               "split_leakage_safe": split_leakage_safe}
-        return {k: sorted(map(tuple, fns[k](spark, sf_dir).collect()))
-                for k in self.ENTRIES}
-
-    def test_seam_outputs_match_standalone(self, spark, sf_dir):
-        from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark.operators.dedup import (  # noqa: E501
-            collapse_memo_scope,
-        )
-
-        standalone = self._run_all(spark, sf_dir)
-        with collapse_memo_scope():
-            seamed = self._run_all(spark, sf_dir)
-        assert seamed == standalone
-
-    def test_memo_reuses_frames_and_scopes_cleanly(self, spark, sf_dir):
-        from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark.operators import (
-            dedup,
-        )
-
-        assert dedup._COLLAPSE_MEMO is None       # seam off by default
-        with dedup.collapse_memo_scope():
-            l1 = dedup._collapsed_component_labels(spark, sf_dir)
-            l2 = dedup._collapsed_component_labels(spark, sf_dir)
-            assert l1 is l2                       # identity ⇒ real reuse
-            with pytest.raises(RuntimeError, match="not reentrant"):
-                with dedup.collapse_memo_scope():
-                    pass
-            keys = set(dedup._COLLAPSE_MEMO["frames"])
-            assert any(k[0] == "collapse" for k in keys)
-            assert any(k[0] == "pairs" for k in keys)
-            assert any(k[0] == "labels" for k in keys)
-        assert dedup._COLLAPSE_MEMO is None       # off again after exit
-        # standalone call after the scope builds fresh (no stale reuse)
-        l3 = dedup._collapsed_component_labels(spark, sf_dir)
-        assert l3 is not l1
 
 
 class TestDrainStatePartitions:

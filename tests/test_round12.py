@@ -202,7 +202,7 @@ class TestNullfactSemanticsUnits:
 
 
 class TestAdviceClosuresR12:
-    """The five r11 ADVICE items, closed in round 12."""
+    """The r11 ADVICE items closed in round 12 whose code remains."""
 
     def test_vec_filter_sql_mirror_agrees_with_ld_vecs(self, spark,
                                                        tmp_path):
@@ -255,38 +255,6 @@ class TestAdviceClosuresR12:
         assert "ld_docs(spark, sf_dir)" in src
         assert 'ld(spark, sf_dir, "documents")' not in src
 
-    def test_collapse_memo_exit_releases_pins(self, spark, sf_dir):
-        """ADVICE 3: scope exit must release the pinned frames' storage
-        (localCheckpoint blocks) instead of waiting for a GC cycle."""
-        from db2ice_db2_to_snowflake_iceberg_ddl_converter_spark.operators import (
-            dedup,
-        )
-
-        def pin_rdds(v):
-            out = []
-            for df in (v if isinstance(v, (tuple, list)) else (v,)):
-                leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-                for i in range(leaves.length()):
-                    node = leaves.apply(i)
-                    if node.getClass().getSimpleName() == "LogicalRDD":
-                        out.append(node.rdd())
-            return out
-
-        with dedup.collapse_memo_scope():
-            dedup.dedup_clusters(spark, sf_dir).collect()
-            frames = dict(dedup._COLLAPSE_MEMO["frames"])
-            assert frames, "seam never engaged"
-            rdds = [r for v in frames.values() for r in pin_rdds(v)]
-            assert rdds, "no pin-backed memo frames found"
-            assert all(r.getStorageLevel().useMemory()
-                       or r.getStorageLevel().useDisk() for r in rdds)
-        assert dedup._COLLAPSE_MEMO is None
-        # every memoized pin's storage was released at scope exit
-        leaked = [r.id() for r in rdds
-                  if r.getStorageLevel().useMemory()
-                  or r.getStorageLevel().useDisk()]
-        assert not leaked, f"scope exit leaked pinned RDDs: {leaked}"
-
     def test_provider_check_skips_static_init(self):
         """ADVICE 4: the capability check resolves classes with the
         three-arg Class.forName (initialize=false) so checking never
@@ -303,10 +271,10 @@ class TestAdviceClosuresR12:
 
     def test_persist_inventory_uses_qualified_names(self):
         """ADVICE 5: nested closures key the driver-side inventory by
-        outer.inner so two nested 'build's stay distinguishable."""
+        outer.inner so two nested 'sink's stay distinguishable."""
         from tests.test_round9 import TestDriverSideInventory
 
         inv, _ = TestDriverSideInventory._inventory()
         keys = {k[1] for k in inv}
-        assert "_collapsed_component_labels.build" in keys
-        assert "build" not in keys
+        assert "upsert_latest_state.sink" in keys
+        assert "sink" not in keys

@@ -749,14 +749,10 @@ class TestDriverSideInventory:
             # finally — never leaves the function alive
             ("operators/dedup.py", "exact_collapse_shingles"): 1,
             # exact-collapse-first cluster path (r9 dupflood rail, r10
-            # hash-probe rewrite; r11: body moved into the nested
-            # ``build`` closure for the collapse-memo seam; r12: keyed
-            # by the qualified outer.inner name): only the rep frame
-            # persists (pair graph + CC nodes), DISK_ONLY, released
-            # right after the eager CC returns; member rides the
-            # collapse's pin
-            ("operators/dedup.py",
-             "_collapsed_component_labels.build"): 1,
+            # hash-probe rewrite): only the rep frame persists (pair
+            # graph + CC nodes), DISK_ONLY, released right after the
+            # eager CC returns; member rides the collapse's pin
+            ("operators/dedup.py", "_collapsed_component_labels"): 1,
             # flood-linear neardup report (r9; r10 dropped the member
             # persist): the c[group, source] count hub and the rep-level
             # pair graph — DISK_ONLY, released before return
